@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.config.LakeConfig
@@ -32,6 +33,14 @@ final case class PipelineResult(
   *   read → validate (profile) → fillna(Phone) → dropna → dropDuplicates
   *   → register temp view → [dead branch: age + filter]
   *   → spark.sql(config.psQuery) → format-flipped overwrite write → notify
+  *
+  * The profile and the write overlap: the profile's action runs on a
+  * thread of its own while the clean → register → query → write chain
+  * runs on the caller's, and it is joined before the notification. The
+  * profile only reads the input and nothing in the chain reads the
+  * profile, so callers see the same outputs, notifications and thrown
+  * errors as in the listed order. The profile thread carries the
+  * caller's job group and properties, and no job of it outlives `run`.
   *
   * CRITICAL: the temp view is registered BEFORE the age transform, so the
   * SQL (and the sink) see the cleaned-but-untransformed data. The age
@@ -76,22 +85,30 @@ final class Pipeline(spark: SparkSession, notifier: Notifier = LogNotifier) {
     try {
       scratchDir.foreach(cleanScratch)
       val raw = Sources.read(spark, config.fileType, inputPath)
-      val profile = Validator.profile(raw)
-      val cleaned = Cleaner.clean(raw)
+      val profiling = new Overlapped(spark.sparkContext)(Validator.profile(raw))
+      val (result, outFmt) =
+        try {
+          val cleaned = Cleaner.clean(raw)
 
-      QueryRunner.register(cleaned, config.tableName)
+          QueryRunner.register(cleaned, config.tableName)
 
-      // Dead branch, reference `:108-109`: plan built, never executed.
-      // The reference builds it UNCONDITIONALLY and would fail analysis on a
-      // dataset lacking the `Date of Birth` column; we guard so the engine is
-      // strictly MORE permissive (the branch is dead either way — its result
-      // is discarded). Deliberate divergence, pinned in PipelineSpec.
-      if (cleaned.columns.exists(_.equalsIgnoreCase("Date of Birth"))) {
-        val _ = Derive.adultsOver(Derive.age(cleaned))
-      }
+          // Dead branch, reference `:108-109`: plan built, never executed.
+          // The reference builds it UNCONDITIONALLY and would fail analysis on a
+          // dataset lacking the `Date of Birth` column; we guard so the engine is
+          // strictly MORE permissive (the branch is dead either way — its result
+          // is discarded). Deliberate divergence, pinned in PipelineSpec.
+          if (cleaned.columns.exists(_.equalsIgnoreCase("Date of Birth"))) {
+            val _ = Derive.adultsOver(Derive.age(cleaned))
+          }
 
-      val result = QueryRunner.run(spark, config.psQuery)
-      val outFmt = Sinks.writeFlipped(result, config.fileType, outputPath)
+          val result = QueryRunner.run(spark, config.psQuery)
+          (result, Sinks.writeFlipped(result, config.fileType, outputPath))
+        } catch {
+          case e: Throwable =>
+            profiling.cancel()
+            throw e
+        }
+      val profile = profiling.join()
 
       notifier.send(
         "Glue Job Success",
@@ -101,5 +118,38 @@ final class Pipeline(spark: SparkSession, notifier: Notifier = LogNotifier) {
       case e: Throwable =>
         notifier.send("Glue Job Failure", s"Pipeline failed: ${e.getMessage}")
         throw e
+    }
+}
+
+/** `body` on a fresh thread, whose Spark jobs carry a job tag of their
+  * own. The thread inherits a clone of the creating thread's Spark local
+  * properties (job group, description, scheduler pool), so tagging its
+  * jobs neither loses nor clobbers the creator's. A new thread per use,
+  * not a pool: a pooled thread would carry the properties of whichever
+  * thread created it.
+  */
+private final class Overlapped[A](sc: SparkContext)(body: => A) {
+  private val tag = s"graft-overlapped-${java.util.UUID.randomUUID()}"
+  private var outcome: Either[Throwable, A] = _
+  private val thread = new Thread(() => {
+    outcome = try { sc.addJobTag(tag); Right(body) } catch { case e: Throwable => Left(e) }
+  }, "graft-overlapped")
+  thread.setDaemon(true)
+  thread.start()
+
+  /** Waits for `body`; returns its value or rethrows what it threw. */
+  def join(): A = {
+    thread.join()
+    outcome.fold(e => throw e, identity)
+  }
+
+  /** Cancels `body`'s jobs and waits for the thread to end. The cancel
+    * repeats while the thread lives, so a job submitted after the first
+    * cancel cannot outlive this call either.
+    */
+  def cancel(): Unit =
+    while (thread.isAlive) {
+      sc.cancelJobsWithTag(tag)
+      thread.join(50)
     }
 }

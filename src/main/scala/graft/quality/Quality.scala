@@ -1,7 +1,7 @@
 package graft.quality
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, count, lit, sum}
+import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
 
 /** Data-profile snapshot — reference validation block
   * (`scripts/...pyspark.py:86-98`): row count, column count, duplicate-row
@@ -16,28 +16,54 @@ final case class Profile(
 
 object Validator {
 
-  /** Single job computing rows + dup-rows; one more for per-column nulls.
+  /** The whole profile from ONE action over ONE scan of `df`.
     *
-    * Reference computes `df.count() - df.distinct().count()` (`:90-91`) —
-    * two jobs — and the per-column null vector as ONE single-pass
-    * aggregation (`:93-95`), which we keep: n columns → n partial sums in
-    * one shuffle-free reduce, scale-safe at any width.
+    * The reference computes `df.count() - df.distinct().count()`
+    * (`:90-91`) and a per-column null vector (`:93-95`): three actions,
+    * each re-reading the input. Here the duplicate count and the null
+    * vector both come from the distinct rows with their multiplicities,
+    * which [[profileRow]] folds into one row. Its rows and distinct rows
+    * equal `count` and `distinct().count` exactly: grouping normalizes
+    * NULL, NaN and -0.0 the same way `distinct` does.
+    *
+    * Column names are quoted, so dotted or backticked CSV headers
+    * profile like any other.
     */
   def profile(df: DataFrame): Profile = {
     val columns = df.columns
-    val rows = df.count()
-    val distinctRows = df.distinct().count()
-    val nullRow = df
-      .select(columns.map(c => sum(col(c).isNull.cast("int")).as(c)).toIndexedSeq: _*)
-      .na.fill(0L)
-      .collect()
-      .headOption
-    val nullCounts = nullRow match {
-      case Some(r) => columns.zipWithIndex.map { case (c, i) => c -> r.getLong(i) }.toMap
-      case None    => columns.map(_ -> 0L).toMap
-    }
-    Profile(rows, columns.length, rows - distinctRows, nullCounts)
+    val r = profileRow(df).head()
+    val rows = r.getLong(0)
+    Profile(rows, columns.length, rows - r.getLong(1),
+      columns.zipWithIndex.map { case (c, i) => c -> r.getLong(i + 2) }.toMap)
   }
+
+  /** The one-row aggregate behind [[profile]]: `rows`, `distinct_rows`,
+    * then `nulls_<i>`, the null count of the i-th input column.
+    *
+    * The input is grouped by all of its columns with a multiplicity `n`
+    * (one shuffle, map-side partial counts), and the groups fold into one
+    * row: rows = Σn, distinct = the number of groups, nulls_i =
+    * Σ n·[column i IS NULL]. Only groups with n > 0 count as distinct:
+    * a zero-column frame groups globally, into one group even when
+    * empty. Nothing is cached; the grouped rows stream into the fold.
+    */
+  def profileRow(df: DataFrame): DataFrame = {
+    val keys = df.columns.indices.map(i => s"__c$i")
+    val n = col("__n")
+    val nulls = keys.zipWithIndex.map { case (k, i) =>
+      coalesce(sum(when(col(k).isNull, n)), lit(0L)).as(s"nulls_$i")
+    }
+    df.select(df.columns.zip(keys).map { case (c, k) => col(quoted(c)).as(k) }.toIndexedSeq: _*)
+      .groupBy(keys.map(col): _*)
+      .agg(count(lit(1)).as("__n"))
+      .agg(coalesce(sum(n), lit(0L)).as("rows"),
+        count(when(n > 0, 1)).as("distinct_rows") +: nulls: _*)
+  }
+
+  /** `name` as a column reference that resolves to exactly that column,
+    * dots and backticks included.
+    */
+  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
 
   /** Functional-dependency VIOLATION audit: the groups where the claimed
     * dependency lhs → rhs does NOT hold — the classic warehouse

@@ -1,11 +1,16 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.config.LakeConfig
 import graft.io.{Sinks, Sources, UnsupportedFormatException}
-import graft.quality.{Cleaner, Validator}
+import graft.quality.{Cleaner, Profile, Validator}
 import graft.transform.Derive
 
 /** End-to-end pipeline semantics (SURVEY.md §2.A, §5): CSV all-string
@@ -114,6 +119,105 @@ class PipelineSpec extends SparkSpec {
     val res = new Pipeline(spark).run(
       cfg, csvPath, out, scratchDir = Some("badscheme://nope/x"))
     assert(res.outputFormat == "parquet")
+  }
+
+  test("dotted and backticked CSV headers profile, clean and write") {
+    val dir = Files.createTempDirectory("pipeline_dotted")
+    val csv = dir.resolve("in.csv")
+    Files.writeString(csv, "l.price,a`b,plain\n1.5,x,p\n1.5,x,p\n,y,z\n2.0,w,\n")
+    val cfg = LakeConfig("csv", "dotted", "SELECT * FROM dotted")
+    val out = dir.resolve("result").toString
+    val res = new Pipeline(spark).run(cfg, csv.toString, out)
+    assert(res.profile == Profile(4, 3, 1, Map("l.price" -> 1L, "a`b" -> 0L, "plain" -> 1L)))
+    val back = Sources.parquet(spark, out)
+    assert(back.columns.toSeq == Seq("l.price", "a`b", "plain"))
+    assert(back.count() == 1)
+  }
+
+  /** Every job that ran under `group`, with its tags and end time. */
+  private final class JobLog(group: String) extends SparkListener {
+    val tags = new ConcurrentHashMap[Int, String]
+    val ended = new ConcurrentHashMap[Int, java.lang.Long]
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+        tags.put(e.jobId, Option(e.properties.getProperty("spark.job.tags")).getOrElse(""))
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      ended.put(e.jobId, e.time)
+
+    /** Waits until every logged job's end event has been delivered. */
+    def settle(): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!tags.keySet.asScala.forall(ended.containsKey) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    }
+
+    /** The logged jobs that ended after `t` or have not ended. */
+    def endedAfter(t: Long): Set[Int] =
+      tags.keySet.asScala.toSet.filter(j => Option(ended.get(j)).forall(_ > t))
+  }
+
+  /** Runs `body` under a fresh caller job group, and checks what the
+    * caller sees afterwards: its job group still set, no job tag added,
+    * no thread or job of the run still running or ended after `body`
+    * returned. Returns the tags of the run's jobs.
+    */
+  private def underJobGroup(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"caller-${java.util.UUID.randomUUID()}"
+    val log = new JobLog(group)
+    sc.addSparkListener(log)
+    sc.setJobGroup(group, "caller's description")
+    try {
+      body
+      val returnedAt = System.currentTimeMillis()
+      assert(sc.getLocalProperty("spark.jobGroup.id") == group)
+      assert(sc.getLocalProperty("spark.job.description") == "caller's description")
+      assert(sc.getJobTags().isEmpty)
+      val alive = Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-overlapped")
+      assert(alive.isEmpty, "the run's profile thread outlived it")
+      log.settle()
+      val late = log.endedAfter(returnedAt)
+      assert(late.isEmpty, s"jobs $late of the run ended after it returned")
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(sc.statusTracker.getActiveJobIds.isEmpty)
+      log.tags.values.asScala.toSeq
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(log)
+    }
+  }
+
+  test("the overlapped profile keeps the caller's job group and ends with run") {
+    val cfg = LakeConfig("csv", "people_group", "SELECT * FROM people_group")
+    val out = Files.createTempDirectory("pipeline_group").resolve("result").toString
+    var res: PipelineResult = null
+    val tags = underJobGroup { res = new Pipeline(spark).run(cfg, csvPath, out) }
+    assert(res.profile.rows == 7 && res.profile.dupRows == 1)
+    // the profile's jobs ran in the caller's group, under a tag of their own
+    assert(tags.exists(_.contains("graft-overlapped-")), s"untagged profile jobs: $tags")
+    assert(tags.exists(!_.contains("graft-overlapped-")), s"no write jobs: $tags")
+  }
+
+  test("a ps_query failing at execution fails the run and leaves no job behind") {
+    var got = Seq.empty[String]
+    val notifier = new Notifier {
+      def send(subject: String, message: String): Unit = got :+= subject
+    }
+    // the query fails within milliseconds, while the profile of 300k
+    // distinct rows is still running: the run must cancel it, not leave it
+    val in = Files.createTempDirectory("pipeline_fail").resolve("in").toString
+    spark.range(300000).selectExpr("id", "id % 7 AS k", "CAST(id AS STRING) AS s")
+      .write.parquet(in)
+    val cfg = LakeConfig("parquet", "ids_fail",
+      "SELECT CAST(raise_error('ps_query failed') AS STRING) AS x FROM range(1)")
+    val out = Files.createTempDirectory("pipeline_fail").resolve("result").toString
+    underJobGroup {
+      val e = intercept[Exception](new Pipeline(spark, notifier).run(cfg, in, out))
+      assert(e.getMessage.contains("ps_query failed"), e.getMessage)
+    }
+    assert(got == Seq("Glue Job Failure"))
   }
 
   test("notifier receives failure on bad format") {

@@ -1108,6 +1108,19 @@ class PlanShapeSpec extends SparkSpec {
     assert("Exchange rangepartitioning".r.findAllIn(p).length <= 1, s"q257 sorts once:\n$p")
   }
 
+  test("profile: one scan, one hash shuffle, then the one-row gather") {
+    val p = planString(
+      graft.quality.Validator.profileRow(spark.read.parquet(s"$sf/lineitem.parquet")))
+    assert("Scan parquet".r.findAllIn(p).length == 1,
+      s"the profile must scan its input exactly once:\n$p")
+    assert("Exchange hashpartitioning".r.findAllIn(p).length == 1,
+      s"the profile must shuffle once (the group by all columns):\n$p")
+    assert("Exchange SinglePartition".r.findAllIn(p).length == 1,
+      s"the profile's other exchange is the one-row fold's gather:\n$p")
+    assert(!p.contains("Join") && !p.contains("Union"),
+      s"the profile must not combine separate passes:\n$p")
+  }
+
   test("q258: the correlation matrix is ONE aggregation over ONE scan — no second pass") {
     val p = planString(run("q258_correlation_matrix"))
     assert("Scan parquet".r.findAllIn(p).length == 1,

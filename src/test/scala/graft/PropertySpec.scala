@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-import graft.quality.{Cleaner, Validator}
+import graft.quality.{Cleaner, Profile, Validator}
 
 /** Property-based invariants from SURVEY.md §5, over generated
   * people-shaped frames (spaced column names, nulls, duplicates).
@@ -66,12 +66,36 @@ class PropertySpec extends SparkSpec {
     })
   }
 
-  test("profile null-count vector equals brute-force per-column scan") {
-    check("null vector", Prop.forAll(framesGen) { rows =>
+  /** The reference's three-action profile (`count`, `count - distinct
+    * count`, a null scan per column): the oracle of the one-pass one.
+    */
+  private def threeActionProfile(df: DataFrame): Profile = {
+    val rows = df.count()
+    Profile(rows, df.columns.length, rows - df.distinct().count(),
+      df.columns.map(c => c -> df.filter(col(c).isNull).count()).toMap)
+  }
+
+  test("one-pass profile equals the three-action profile") {
+    check("profile parity", Prop.forAll(framesGen) { rows =>
       val df = toDf(rows)
-      val prof = Validator.profile(df)
-      cols.forall(c => prof.nullCounts(c) == df.filter(col(c).isNull).count())
+      Validator.profile(df) == threeActionProfile(df)
     })
+  }
+
+  test("one-pass profile equals the three-action profile on edge frames") {
+    import spark.implicits._
+    val nanAndZeros = Seq(Some(0.0), Some(-0.0), Some(Double.NaN), Some(Double.NaN),
+      Some(1.0), None, None).toDF("x")
+    val edges = Seq(
+      "empty" -> spark.emptyDataFrame,
+      "zero columns" -> spark.range(3).select(),
+      "all-null row" -> toDf(List(Seq(null, null, null), Seq("a", null, "b"))),
+      "NaN and -0.0" -> nanAndZeros)
+    for ((name, df) <- edges)
+      assert(Validator.profile(df) == threeActionProfile(df), name)
+    assert(Validator.profile(spark.emptyDataFrame) == Profile(0, 0, 0, Map()))
+    // 0.0 and -0.0 are one value, and so are the two NaNs
+    assert(Validator.profile(nanAndZeros) == Profile(7, 1, 3, Map("x" -> 2L)))
   }
 
   test("clean = fill(Phone) then dropna then dropDuplicates, in that order") {
