@@ -16,6 +16,10 @@ import graft.queries.Inventory
   * Queries that drive actions during CONSTRUCTION (store-building
   * composites) still work: construction runs, and the dumped plan is the
   * final returned frame's.
+  *
+  * Besides declared queries it knows one pseudo-query,
+  * `pagerank_iteration`: the loop body of `GraphOps.pageRank`, which the
+  * declared graph queries' barriers hide.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -32,42 +36,7 @@ object PlanDump {
     // graph queries' dumps never show the loop body (r14 verdict #6);
     // this dump is the standing plan evidence for the hoisted degree
     // join (ONE adjacency join per iteration).
-    // The q275–q278 edge chains sit behind localCheckpoint barriers, so
-    // their declared-query dumps never show the resolve/canonicalize
-    // projection shape — these two pseudo queries dump the SUBTREE both
-    // ways (the r14 fused composition vs the shipped split projection)
-    // so the plan diff is a committed artifact, not a prose claim.
-    def edgesSubtree(splitProj: Boolean): org.apache.spark.sql.DataFrame = {
-      import org.apache.spark.sql.functions._
-      import graft.operators.{HtmlText, WebOps}
-      val d = spark.read.parquet(s"$sfDir/documents.parquet")
-      val did = col("doc_id").cast("string")
-      val base = concat(lit("https://"), col("source"),
-        lit(".example.com/doc/"), did)
-      val html = concat(
-        lit("<html><body><a href=\"/doc/"), (col("doc_id") + 20).cast("string"),
-        lit("?utm_source=x\">next</a><a href=\"related/"),
-        (col("doc_id") + 2).cast("string"), lit("\">rel</a></body></html>"))
-      val exploded = d
-        .select(col("doc_id"), col("source"))
-        .repartition(spark.sparkContext.defaultParallelism)
-        .select(col("doc_id"), base.as("__base"),
-          HtmlText.extractLinks(html).as("__hrefs"))
-        .select(col("doc_id"), col("__base"), explode(col("__hrefs")).as("__href"))
-      val withUrl =
-        if (splitProj)
-          exploded
-            .select(col("doc_id"),
-              WebOps.resolveHref(col("__base"), col("__href")).as("__r"))
-            .select(col("doc_id"), WebOps.canonicalizeUrl(col("__r")).as("url"))
-        else
-          exploded.select(col("doc_id"), WebOps.canonicalizeUrl(
-            WebOps.resolveHref(col("__base"), col("__href"))).as("url"))
-      withUrl.filter(col("url").isNotNull && col("url") =!= "")
-    }
     val pseudo: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "edges_resolve_canonical_fused" -> (() => edgesSubtree(splitProj = false)),
-      "edges_resolve_canonical_split" -> (() => edgesSubtree(splitProj = true)),
       "pagerank_iteration" -> { () =>
         import org.apache.spark.sql.functions._
         val d = spark.read.parquet(s"$sfDir/documents.parquet")

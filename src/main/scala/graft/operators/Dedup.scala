@@ -656,10 +656,8 @@ object Dedup {
     val candidates = screened
       .join(shingles.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(shingles.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = (size(col("sh_a")) + size(col("sh_b"))).cast("double") - inter
     candidates
-      .withColumn("jaccard", round(when(union === 0, 1.0).otherwise(inter / union), 6))
+      .withColumn("jaccard", round(jaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -791,24 +789,6 @@ object Dedup {
     *                  longer counts as similarity — usually the wanted
     *                  semantics for training-data dedup). Docs left with
     *                  zero shingles drop out of near-dup detection.
-    * @param eagerRelease when true, runs the LSH job NOW and returns the
-    *                  (bounded, candidate-sized) pair list materialized via
-    *                  `localCheckpoint(true)`. Default false: the returned
-    *                  plan is lazy and composes into the caller's job
-    *                  (intermediate signature blocks are shared via lazy
-    *                  localCheckpoint either way and are GC-released, never
-    *                  CacheManager-pinned). COMPAT NOTE: the default
-    *                  flipped from true to false in round 3 — external
-    *                  callers that materialize the returned pair list in
-    *                  SEVERAL separate actions now re-run the band join
-    *                  and verification joins per action (only the
-    *                  signature blocks are shared); pass eagerRelease=true
-    *                  or checkpoint the result yourself for that pattern.
-    *                  Caveat: localCheckpoint blocks are not recomputable
-    *                  after executor loss — under dynamic allocation /
-    *                  decommissioning, wrap the call site with a reliable
-    *                  `Dataset.checkpoint` instead of passing
-    *                  eagerRelease=true.
     * @param oneperm   swap the k-permutation signature kernel for
     *                  ONE-PERMUTATION hashing with rotation densification
     *                  ([[graft.functions.MinHash.signatureOneperm]]) —
@@ -830,7 +810,6 @@ object Dedup {
       seed: Long = 42L,
       maxBucket: Int = 1024,
       excludeShingles: Array[Long] = Array.empty,
-      eagerRelease: Boolean = false,
       oneperm: Boolean = false): DataFrame = {
     val (withSig, pairIds) = minHashCandidates(
       df, idCol, textCol, k, bands, w, seed, maxBucket, excludeShingles, oneperm)
@@ -838,15 +817,11 @@ object Dedup {
     val candidates = pairIds
       .join(shingles.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(shingles.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-
     // exact Jaccard verification on the shingle sets (arrays already distinct)
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = (size(col("sh_a")) + size(col("sh_b"))).cast("double") - inter
-    val verified = candidates
-      .withColumn("jaccard", round(when(union === 0, 1.0).otherwise(inter / union), 6))
+    candidates
+      .withColumn("jaccard", round(jaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    if (eagerRelease) verified.localCheckpoint(true) else verified
   }
 
   /** Jaccard estimate from two 1-bit minhash sketches (Li & König,
@@ -916,10 +891,8 @@ object Dedup {
     val candidates = screened
       .join(shingles.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
       .join(shingles.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-    val union = (size(col("sh_a")) + size(col("sh_b"))).cast("double") - inter
     candidates
-      .withColumn("jaccard", round(when(union === 0, 1.0).otherwise(inter / union), 6))
+      .withColumn("jaccard", round(jaccard(col("sh_a"), col("sh_b")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
@@ -2098,11 +2071,13 @@ object Dedup {
           .as("mean_jaccard"))
   }
 
-  def ngramJaccard(a: Column, b: Column, n: Int = 3): Column = {
-    val sa = shingleHashes(a, n)
-    val sb = shingleHashes(b, n)
-    val inter = size(array_intersect(sa, sb)).cast("double")
-    val union = (size(sa) + size(sb)).cast("double") - inter
+  /** Exact Jaccard |a∩b| / |a∪b| of two DISTINCT hash arrays (shingle
+    * sets), 1.0 when both are empty. Unrounded: each caller applies the
+    * rounding its output contract needs.
+    */
+  def jaccard(a: Column, b: Column): Column = {
+    val inter = size(array_intersect(a, b)).cast("double")
+    val union = (size(a) + size(b)).cast("double") - inter
     when(union === 0, 1.0).otherwise(inter / union)
   }
 
@@ -2219,12 +2194,10 @@ object Dedup {
     // into ~|set| postings rows (the first formulation; 3× slower at
     // sf0.1).
     val sets = toks.groupBy("__id").agg(collect_list(col("__tok")).as("__set"))
-    val inter = size(array_intersect(col("__seta"), col("__setb"))).cast("double")
-    val union = (size(col("__seta")) + size(col("__setb"))).cast("double") - inter
     cand
       .join(sets.select(col("__id").as("id_a"), col("__set").as("__seta")), "id_a")
       .join(sets.select(col("__id").as("id_b"), col("__set").as("__setb")), "id_b")
-      .withColumn("jac", round(inter / union, roundScale))
+      .withColumn("jac", round(jaccard(col("__seta"), col("__setb")), roundScale))
       .filter(col("jac") >= threshold)
       .select("id_a", "id_b", "jac")
   }

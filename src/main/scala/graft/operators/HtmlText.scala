@@ -102,9 +102,8 @@ object HtmlText {
 
   /** Outlink hrefs of a page, in document order: every quoted
     * `href="…"` / `href='…'` attribute value of an `<a>` tag — the raw
-    * frontier-expansion surface (compose `WebOps.resolveHref` +
-    * `canonicalizeUrl` to turn them into graph edges; q275 pins the
-    * chain). Values are returned verbatim (relative refs, fragments,
+    * frontier-expansion surface (`WebOps.outlinkEdges` turns them into
+    * graph edges). Values are returned verbatim (relative refs, fragments,
     * mailto: — the resolver decides what survives). Unquoted href
     * values are out of scope — negligible in served HTML and ambiguous
     * to delimit.

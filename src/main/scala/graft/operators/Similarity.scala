@@ -43,21 +43,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** Exact top-k neighbors of an in-corpus vector (excluding itself).
-    * The single-row query lookup is a driver-side fetch of ONE vector —
-    * a parameter fetch, not a data collect.
-    */
-  def topKNeighborsOf(
-      df: DataFrame,
-      idCol: String,
-      vecCol: String,
-      queryId: Long,
-      k: Int): DataFrame = {
-    val q = df.filter(col(idCol) === queryId).select(vecCol).head()
-      .getSeq[Float](0).toArray
-    bruteForceTopK(df.filter(col(idCol) =!= queryId), idCol, vecCol, q, k)
-  }
-
   /** Deterministic centroid seed: the `c` vectors with the smallest
     * ids (cheap, reproducible). Returns (cell_id, centroid) rows collected
     * to the driver — C is small (≤ thousands), this is broadcast state,
@@ -674,9 +659,14 @@ object Similarity {
     * (the q145/q153 discipline) so the fusion replays bit-identically in
     * any engine — q174 carries a full DuckDB oracle.
     *
-    * Scale note: the unpartitioned rank window runs over a retriever's
-    * pool (≤ poolK rows), never data-sized — the corpus scans / ANN
-    * probes already happened inside the retrievers being fused.
+    * Scale note: a rank is 1 + the number of pool rows strictly ahead
+    * under (score desc, id asc), which is a row number while ids are
+    * unique within a pool. It is computed as a broadcast inequality
+    * self-join of the pool plus an id-keyed count. No single-partition
+    * window appears, so no step moves a pool to one task; the join
+    * makes at most poolK² pairs, partitioned across the cluster. Every
+    * input is a retriever's pool (≤ poolK rows), never data-sized: the
+    * corpus scans and ANN probes already happened in the retrievers.
     */
   def rrfFuse(
       rankings: Seq[(DataFrame, String)],
@@ -686,14 +676,7 @@ object Similarity {
     require(rankings.nonEmpty, "rrfFuse needs at least one ranking")
     import org.apache.spark.sql.types.DecimalType
     val contribs = rankings.map { case (df, scoreCol) =>
-      // rank = 1 + |rows strictly ahead| under the total order
-      // (score desc, id asc) — identical to the former unpartitioned
-      // row_number window (ids are unique within a retriever's pool),
-      // but computed as a broadcast inequality self-join + an id-keyed
-      // count, so NO single-partition WindowExec appears in any query
-      // path (the r14-verdict scale hazard: a global window moves the
-      // whole pool to one task; the join's pair count is poolK² —
-      // bounded, and partitioned across the cluster)
+      // rank = 1 + |rows strictly ahead| (see the scale note)
       val pool = df.select(col(idCol), col(scoreCol).as("__s"))
       val peers = pool.select(col(idCol).as("__pid"), col("__s").as("__ps"))
       pool

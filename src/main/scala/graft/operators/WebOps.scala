@@ -523,6 +523,44 @@ object WebOps {
       .otherwise(concat(root, dir, h))
   }
 
+  /** The outlink edges of a page frame, `(keep…, dst)`: one row per
+    * fetchable href, `dst` its canonical absolute URL. The chain is
+    * [[HtmlText.extractLinks]] over `html` → explode → [[resolveHref]]
+    * against `base` → [[canonicalizeUrl]] → lazy barrier → drop NULL
+    * or empty `dst` (fragments and non-fetchable schemes resolve to
+    * NULL, unparseable URLs canonicalize to ""). `base` and `html` are
+    * expressions over `pages`; `keep` names columns of `pages` carried
+    * onto every edge. Map-only; any scan fan-out is the caller's.
+    *
+    * Two plan rules, both measured at sf0.1:
+    *  - Resolve runs in its own projection. canonicalizeUrl reads its
+    *    input ~10× (the [[urlParts]] extractions), and composing it
+    *    straight over resolveHref inlines the whole resolve CASE into
+    *    every read: ~3× the regex work (0.96 s → 2.7 s warm). Across
+    *    the projection boundary the non-cheap alias stays an attribute.
+    *  - The filter runs after the barrier. Before it, the optimizer
+    *    pushes the filter below both projections and re-inlines resolve
+    *    into canonicalize, the fused form the first rule removes. The
+    *    barrier itself makes the chain run once for every downstream
+    *    consumer (the filter, joins, a range sort's sampling pass),
+    *    which otherwise re-run it ~4× (1.1 s vs 6.6 s warm).
+    */
+  def outlinkEdges(pages: DataFrame, base: Column, html: Column, keep: String*): DataFrame =
+    outlinkChain(pages, base, html, keep: _*)
+      .localCheckpoint(false)
+      .filter(col("dst").isNotNull && col("dst") =!= "")
+
+  /** [[outlinkEdges]] up to its barrier, exposed for the plan pin. */
+  private[graft] def outlinkChain(
+      pages: DataFrame, base: Column, html: Column, keep: String*): DataFrame = {
+    val k = keep.map(col)
+    pages
+      .select(k :+ base.as("__base") :+ HtmlText.extractLinks(html).as("__hrefs"): _*)
+      .select(k :+ col("__base") :+ explode(col("__hrefs")).as("__href"): _*)
+      .select(k :+ resolveHref(col("__base"), col("__href")).as("__r"): _*)
+      .select(k :+ canonicalizeUrl(col("__r")).as("dst"): _*)
+  }
+
   // ---------------------------------------------------------- robots.txt
 
   /** The characters the robots path-pattern → regex translation must

@@ -50,16 +50,18 @@ object Inventory {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Scan fan-out for the single-row-group parquet fixtures (SCALE.md):
-    * a parquet row group is indivisible, so a one-row-group file gives
-    * scan parallelism 1 no matter what maxPartitionBytes says, and
-    * map-heavy first stages must fan out explicitly. Derived from the
-    * session (local[N] → N; a cluster → its registered cores) — never a
-    * literal core count, which would cap those stages at the literal
-    * on any larger cluster. Real lakes have thousands of row groups
-    * and skip the repartition entirely.
+  /** `df` repartitioned across the session's cores, ahead of a
+    * map-heavy first stage (regex chains, explodes, model builds). The
+    * parquet fixtures are one row group each, and a row group is
+    * indivisible, so their scans run as ONE task whatever
+    * maxPartitionBytes says (SCALE.md): without this the whole map
+    * chain runs single-threaded. The count comes from the session
+    * (local[N] → N; a cluster → its registered cores), never a literal,
+    * which would cap the stage on a larger cluster. A fixture artifact:
+    * real lakes have thousands of row groups and need no fan-out.
     */
-  private def fanout(s: SparkSession): Int = s.sparkContext.defaultParallelism
+  private def fannedOut(df: DataFrame): DataFrame =
+    df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
   /** Scratch directory for queries that materialize persisted-state
     * parquet (the q149–q161 lake convention, q188, q193): registered
@@ -1694,6 +1696,43 @@ object Inventory {
     s"('^' || replace($chain, '*', '.*') || (CASE WHEN $c LIKE '%$$' THEN '$$' ELSE '' END))"
   }
 
+  /** The crawl fixture q276–q278 share, over the documents table `d`.
+    * Every document is a crawled page at `pageUrl`, which is both the
+    * resolve base of its links and a member of the crawled set. Its
+    * six anchors (`html`): an external partner URL (no robots entry ⇒
+    * allowed, never crawled), a shared CDN asset, a same-host next-doc
+    * link at +20 (same host because source = doc_id % 20, so the
+    * crawled-set anti-join fires for all but the last 20 docs), a
+    * related/ path (allowed, new), a /deep/internal/ link (dropped by
+    * a robots prefix disallow) and a .pdf link (dropped by the
+    * $-anchored wildcard). `rules` is each page host's effective robots
+    * rule table for the graftbot agent.
+    */
+  private final class CrawlFixture(d: DataFrame) {
+    private val did = col("doc_id").cast("string")
+    private val robotsTxt = Seq(
+      "User-agent: *", "Disallow: /", "",
+      "User-agent: graftbot", "Disallow: /deep/", "Allow: /deep/pub",
+      "Disallow: /*.pdf$", "Allow: /mixed", "Disallow: /mixed")
+      .mkString("\n")
+    val rules: DataFrame = WebOps.robotsRules(
+      d.select(concat(col("source"), lit(".example.com")).as("host")).distinct()
+        .withColumn("robots_txt", lit(robotsTxt)),
+      "host", "robots_txt", "graftbot/1.3")
+    val pageUrl: Column =
+      concat(lit("https://"), col("source"), lit(".example.com/doc/"), did)
+    val html: Column = concat(
+      lit("<html><body><a href=\"https://ext.partner.org/a/"), did,
+      lit("\">partner</a>"),
+      lit("<a href='//Cdn.Example.COM/widget'>cdn</a>"),
+      lit("<a href=\"/doc/"), (col("doc_id") + 20).cast("string"),
+      lit("?utm_source=x\">next</a>"),
+      lit("<a href=\"related/"), (col("doc_id") + 2).cast("string"),
+      lit("\">rel</a>"),
+      lit("<a href=\"/deep/internal/"), did, lit("\">private</a>"),
+      lit("<a href=\"/files/n"), did, lit(".pdf\">pdf</a></body></html>"))
+  }
+
   private val extensions = Seq(
     Q("q80_dedup_exact",
       (s, dir) =>
@@ -1909,10 +1948,8 @@ object Inventory {
           t(s, dir, "documents"), "q83_ngram_jaccard")
         val a = d.select(col("doc_id").as("id_a"), Dedup.shingleHashes(col("text"), 3).as("sh_a"))
         val b = d.select(col("doc_id").as("id_b"), Dedup.shingleHashes(col("text"), 3).as("sh_b"))
-        val inter = size(array_intersect(col("sh_a"), col("sh_b"))).cast("double")
-        val union = (size(col("sh_a")) + size(col("sh_b"))).cast("double") - inter
         a.join(b, col("id_a") < col("id_b"))
-          .withColumn("jac", round(when(union === 0, 1.0).otherwise(inter / union), 6))
+          .withColumn("jac", round(Dedup.jaccard(col("sh_a"), col("sh_b")), 6))
           .filter(col("jac") >= 0.3)
           .select("id_a", "id_b", "jac")
           .orderBy("id_a", "id_b")
@@ -3430,9 +3467,7 @@ object Inventory {
         // ntile window). head = least-perplexing third. The oracle
         // replays the LM score through q153's CTEs, the cuts through
         // percentile_disc, and the same fixed-order bucket CASE.
-        // one-row-group fixture artifact (q277's note): parallelize the
-        // model-build explode + scoring map instead of one scan task
-        TextAnalysis.ccnetBuckets(t(s, dir, "documents").repartition(fanout(s)))
+        TextAnalysis.ccnetBuckets(fannedOut(t(s, dir, "documents")))
           .orderBy("doc_id"),
       Some("""WITH norm AS (
           SELECT doc_id, lower(trim(text)) AS t FROM documents),
@@ -5746,9 +5781,7 @@ object Inventory {
         // Gumbel-top-k. Every number — both LM averages, the weight,
         // the md5-derived Gumbel, the selection itself — is replayable
         // arithmetic, so SAMPLING carries a full hash oracle.
-        // one-row-group fixture artifact (q277's note): both model
-        // builds explode trigrams map-side — fan across the cores
-        val d = t(s, dir, "documents").repartition(fanout(s))
+        val d = fannedOut(t(s, dir, "documents"))
         ScaleOps.importanceResample(
           d.filter(pmod(col("doc_id"), lit(7)) =!= 0),
           d.filter(pmod(col("doc_id"), lit(7)) === 0),
@@ -6060,10 +6093,7 @@ object Inventory {
         // DECIMAL(18,6) exact sums make the score engine-independent;
         // the char-ngram vocabulary is bounded, so the model broadcasts
         // at any corpus scale and scoring stays map-side.
-        // one-row-group fixture artifact: the model build's trigram
-        // explode+partial-agg otherwise runs in the scan's single task
-        // (q277's note) — fan the corpus across the cores first
-        TextAnalysis.selfPerplexity(t(s, dir, "documents").repartition(fanout(s)))
+        TextAnalysis.selfPerplexity(fannedOut(t(s, dir, "documents")))
           .orderBy("doc_id"),
       Some("""WITH norm AS (
           SELECT doc_id, lower(trim(text)) AS t FROM documents),
@@ -8071,12 +8101,11 @@ object Inventory {
           graft.lake.VersionedTable(root + "/split_conflicts", "cluster_rep")
         val nstore = graft.lake.VersionedTable(root + "/nov_store", "__h")
         val scores = graft.lake.VersionedTable(root + "/nov_scores", "doc_id")
-        // NO scan fan-out here, deliberately: tried
-        // repartition(fanout(s)) (15.6 s) and the barriered variant
-        // (14.5 s) against 10.4 s without — the protocol is ~40 small
-        // jobs and the extra tasks/shuffles cost more than the
-        // single-task shingle passes (q277's fan-out note does NOT
-        // generalize to many-small-job protocols)
+        // NO scan fan-out here, deliberately: tried fannedOut (15.6 s)
+        // and the barriered variant (14.5 s) against 10.4 s without —
+        // the protocol is ~40 small jobs and the extra tasks/shuffles
+        // cost more than the single-task shingle passes (the fan-out
+        // does NOT generalize to many-small-job protocols)
         val d = t(s, dir, "documents")
         val batch1 = d.filter(col("doc_id") < 300)
         val batch2 = d.filter(col("doc_id") >= 300)
@@ -8883,10 +8912,7 @@ object Inventory {
         // (label, pred) cell counts, row-normalized shares, diagonal
         // flag; margins derive from the checkpointed cell frame.
         TextAnalysis
-          .langIdConfusion(
-            t(s, dir, "documents")
-              .repartition(fanout(s)), // one-row-group fixture artifact (q277's note)
-            "lang", "text")
+          .langIdConfusion(fannedOut(t(s, dir, "documents")), "lang", "text")
           .orderBy("label", "pred"),
       Some("""WITH s AS (
           SELECT doc_id, lang,
@@ -8971,9 +8997,7 @@ object Inventory {
         // threshold-independent), never |grid| pipeline re-runs. Same
         // exhaustive oracle + recall contract as q81/q239.
         Dedup.thresholdSensitivity(
-          t(s, dir, "documents")
-            .repartition(fanout(s)), // one-row-group fixture artifact (q277's note)
-          "doc_id", "text",
+          fannedOut(t(s, dir, "documents")), "doc_id", "text",
           thresholds = Seq(0.5, 0.6, 0.7, 0.8, 0.9),
           k = 128, bands = 32, w = 3)
           .orderBy("threshold"),
@@ -9024,10 +9048,7 @@ object Inventory {
         val encIds = graft.operators.Bpe
           .encodeToIds(s, fertilityMerges, fertilityVocab.zipWithIndex)
         TextAnalysis
-          .vocabCoverage(
-            t(s, dir, "documents")
-              .repartition(fanout(s)), // one-row-group fixture artifact (q277's note)
-            "lang", "text", encIds)
+          .vocabCoverage(fannedOut(t(s, dir, "documents")), "lang", "text", encIds)
           .orderBy("lang")
       },
       Some(raw"""WITH RECURSIVE ws AS (
@@ -9374,13 +9395,7 @@ object Inventory {
           lit("<footer><a href=\"/tos\">Terms</a> <a href=\"/p\">Privacy</a></footer>"),
           lit("<script>track()</script></body></html>"))
         // 1. extraction  2. mojibake repair
-        // one-row-group fixture artifact (q277's note): without the
-        // fan-out the whole extract→repair→C4→Gopher map chain runs in
-        // the scan's SINGLE task (probed: c4Clean alone 3.5 s warm on
-        // one task at sf0.1) — q279 gained this in r14, q272 had not
-        val repaired = crawl
-          .select(col("doc_id"), col("source"), col("text"))
-          .repartition(fanout(s))
+        val repaired = fannedOut(crawl.select(col("doc_id"), col("source"), col("text")))
           .select(col("doc_id"),
             org.apache.spark.sql.graft.NativeExprs.fixMojibake(
               HtmlText.extractText(html)).as("text"))
@@ -9507,8 +9522,7 @@ object Inventory {
         // per-day advance() closure (8 checkpoint materializations →
         // 4) without moving a single row differently; measured 13.2 →
         // ~7 s at sf0.1, ledger rows identical (OPTIMIZATION_r14.md).
-        val batch = crawl.select("doc_id", "source", "text", "lang")
-          .repartition(fanout(s)) // one-row-group fixture artifact (q277's note)
+        val batch = fannedOut(crawl.select("doc_id", "source", "text", "lang"))
         val repaired = batch
           .select(col("doc_id"),
             org.apache.spark.sql.graft.NativeExprs.fixMojibake(
@@ -9710,31 +9724,8 @@ object Inventory {
           lit("<a href=\"related/"), (col("doc_id") + 2).cast("string"),
           lit("\">rel</a>"),
           lit("<a href=\"#top\">t</a><a href=\"mailto:a@b.co\">m</a></body></html>"))
-        d
-          // one-row-group fixture artifact: fan the 2-column input
-          // across the cores before the regex chain (q277's note)
-          .select(col("doc_id"), col("source")).repartition(fanout(s))
-          .select(col("doc_id"), base.as("__base"),
-            HtmlText.extractLinks(html).as("__hrefs"))
-          .select(col("doc_id"), col("__base"), explode(col("__hrefs")).as("__href"))
-          // resolve in its OWN projection: canonicalizeUrl reads its
-          // input ~10× (urlParts field extractions), and inlining the
-          // resolve when-chain into each read multiplies the regex work
-          // ~3× (probed 2.7 → 0.96 s warm at sf0.1; CollapseProject
-          // keeps the non-cheap multi-referenced alias separate)
-          .select(col("doc_id"),
-            WebOps.resolveHref(col("__base"), col("__href")).as("__r"))
-          .select(col("doc_id"), WebOps.canonicalizeUrl(col("__r")).as("dst"))
-          // The q272 composition rule applies to the engine's own newest
-          // query: without a barrier the canonical chain (extract →
-          // explode → resolve → canonicalize) evaluates ~4× — the dst
-          // filter pushes the expression below the project (2×) and the
-          // presentation range-sort's sampling pass re-executes the
-          // child (2×). Lazily checkpoint the computed frame so the
-          // chain runs ONCE (probed 1.1 s warm vs 6.6 s un-barriered,
-          // SCALE.md round 13).
-          .localCheckpoint(false)
-          .filter(col("dst").isNotNull && col("dst") =!= "")
+        WebOps.outlinkEdges(fannedOut(d.select(col("doc_id"), col("source"))),
+            base, html, "doc_id")
           .orderBy("doc_id", "dst")
       },
       Some("""WITH e AS (
@@ -9755,60 +9746,17 @@ object Inventory {
         // (q275) → canonical dedup keys → robots-gate the DESTINATIONS
         // (q274's policy, graftbot agent) → anti-join the already-
         // crawled canonical set → the ranked frontier (new URL,
-        // reference count). Link mix per page: an external partner URL
-        // (no robots entry ⇒ allowed, never crawled), a shared CDN
-        // asset (one frontier row referenced by every page), a same-
-        // host next-doc link at +20 (same host because source =
-        // doc_id % 20, so the anti-join FIRES for all but the last 20
-        // docs — the already-crawled exclusion demonstrably works), a
-        // related/ path (allowed, new), a /deep/internal/ link (robots
-        // prefix disallow drops it) and a .pdf link (the $-anchored
-        // wildcard drops it). The oracle derives the frontier
-        // INDEPENDENTLY (construction, not replay).
+        // reference count), over the shared CrawlFixture's link mix.
+        // The oracle derives the frontier INDEPENDENTLY (construction,
+        // not replay).
         val d = t(s, dir, "documents")
-        val did = col("doc_id").cast("string")
-        val robotsTxt = Seq(
-          "User-agent: *", "Disallow: /", "",
-          "User-agent: graftbot", "Disallow: /deep/", "Allow: /deep/pub",
-          "Disallow: /*.pdf$", "Allow: /mixed", "Disallow: /mixed")
-          .mkString("\n")
-        val robots = d
-          .select(concat(col("source"), lit(".example.com")).as("host")).distinct()
-          .withColumn("robots_txt", lit(robotsTxt))
-        val rules = WebOps.robotsRules(robots, "host", "robots_txt", "graftbot/1.3")
-        val base = concat(lit("https://"), col("source"), lit(".example.com/doc/"), did)
-        val html = concat(
-          lit("<html><body><a href=\"https://ext.partner.org/a/"), did,
-          lit("\">partner</a>"),
-          lit("<a href='//Cdn.Example.COM/widget'>cdn</a>"),
-          lit("<a href=\"/doc/"), (col("doc_id") + 20).cast("string"),
-          lit("?utm_source=x\">next</a>"),
-          lit("<a href=\"related/"), (col("doc_id") + 2).cast("string"),
-          lit("\">rel</a>"),
-          lit("<a href=\"/deep/internal/"), did, lit("\">private</a>"),
-          lit("<a href=\"/files/n"), did, lit(".pdf\">pdf</a></body></html>"))
-        val edges = d
-          // one-row-group fixture artifact: fan the 2-column input
-          // across the cores before the regex chain (q277's note)
-          .select(col("doc_id"), col("source")).repartition(fanout(s))
-          .select(col("doc_id"), base.as("__base"),
-            HtmlText.extractLinks(html).as("__hrefs"))
-          .select(col("__base"), explode(col("__hrefs")).as("__href"))
-          // split projections: see q275's resolve/canonicalize note
-          .select(WebOps.resolveHref(col("__base"), col("__href")).as("__r"))
-          .select(WebOps.canonicalizeUrl(col("__r")).as("dst"))
-          // q272 composition rule (see q275): barrier the computed dst
-          // so the canonical chain evaluates once — downstream the
-          // filter, the robots decision's urlParts, and the anti-join
-          // all re-derive it otherwise.
-          .localCheckpoint(false)
-          .filter(col("dst").isNotNull && col("dst") =!= "")
-        val gated = WebOps.robotsDecision(edges, "dst", rules)
+        val crawl = new CrawlFixture(d)
+        val edges = WebOps.outlinkEdges(
+          fannedOut(d.select(col("doc_id"), col("source"))), crawl.pageUrl, crawl.html)
+        val gated = WebOps.robotsDecision(edges, "dst", crawl.rules)
           .filter(col("allowed"))
           .select("dst")
-        val crawled = d.select(
-          concat(lit("https://"), col("source"), lit(".example.com/doc/"), did)
-            .as("dst"))
+        val crawled = d.select(crawl.pageUrl.as("dst"))
         gated.join(crawled, Seq("dst"), "left_anti")
           .groupBy("dst").agg(count(lit(1)).as("n_refs"))
           .orderBy("dst")
@@ -9849,65 +9797,31 @@ object Inventory {
         // and the cap is a pure emission-time function of the store)
         // with the politeness cap replayed as a plain window.
         val d = t(s, dir, "documents")
-        val did = col("doc_id").cast("string")
-        val robotsTxt = Seq(
-          "User-agent: *", "Disallow: /", "",
-          "User-agent: graftbot", "Disallow: /deep/", "Allow: /deep/pub",
-          "Disallow: /*.pdf$", "Allow: /mixed", "Disallow: /mixed")
-          .mkString("\n")
-        val robots = d
-          .select(concat(col("source"), lit(".example.com")).as("host")).distinct()
-          .withColumn("robots_txt", lit(robotsTxt))
+        val crawl = new CrawlFixture(d)
         // both advances gate against the same rule table — barrier it
         // so the line-parse windows run once, not once per day
-        val rules = WebOps.robotsRules(robots, "host", "robots_txt", "graftbot/1.3")
-          .localCheckpoint(false)
+        val rules = crawl.rules.localCheckpoint(false)
         // ONE chain execution over the whole fixture, split into the
         // two days' edge frames afterwards (same edges either way; a
         // production day-2 harvest runs over day-2 pages only, which
         // costs the same rows — this just keeps the DECLARED query's
-        // cost at one chain pass, the q272/q275 composition rule)
-        val base = concat(lit("https://"), col("source"),
-          lit(".example.com/doc/"), did)
-        val html = concat(
-          lit("<html><body><a href=\"https://ext.partner.org/a/"), did,
-          lit("\">partner</a>"),
-          lit("<a href='//Cdn.Example.COM/widget'>cdn</a>"),
-          lit("<a href=\"/doc/"), (col("doc_id") + 20).cast("string"),
-          lit("?utm_source=x\">next</a>"),
-          lit("<a href=\"related/"), (col("doc_id") + 2).cast("string"),
-          lit("\">rel</a>"),
-          lit("<a href=\"/deep/internal/"), did, lit("\">private</a>"),
-          lit("<a href=\"/files/n"), did, lit(".pdf\">pdf</a></body></html>"))
-        val edges = d
-          // the sf0.1 fixture is one parquet row group (scan parallelism
-          // 1 — a corpus artifact, SCALE.md); the regex chain is the
-          // expensive part, so fan the 2-column input across the cores
-          // before it. Real lakes have thousands of row groups and skip
-          // this.
-          .select(col("doc_id"), col("source")).repartition(fanout(s))
-          .select(pmod(col("doc_id"), lit(3)).as("__day"), base.as("__base"),
-            HtmlText.extractLinks(html).as("__hrefs"))
-          .select(col("__day"), col("__base"), explode(col("__hrefs")).as("__href"))
-          // split projections: see q275's resolve/canonicalize note
-          .select(col("__day"),
-            WebOps.resolveHref(col("__base"), col("__href")).as("__r"))
-          .select(col("__day"), WebOps.canonicalizeUrl(col("__r")).as("url"))
-          .filter(col("url").isNotNull && col("url") =!= "")
-          .localCheckpoint(false)
-        def pages(docs: org.apache.spark.sql.DataFrame) =
-          docs.select(concat(lit("https://"), col("source"),
-            lit(".example.com/doc/"), did).as("url"))
+        // cost at one chain pass)
+        val edges = WebOps.outlinkEdges(
+          fannedOut(d.select(col("doc_id"), col("source")))
+            .withColumn("__day", pmod(col("doc_id"), lit(3))),
+          crawl.pageUrl, crawl.html, "__day")
+        def urls(day: Column) = edges.filter(day).select(col("dst").as("url"))
+        def pages(docs: DataFrame) = docs.select(crawl.pageUrl.as("url"))
         val b1 = d.filter(pmod(col("doc_id"), lit(3)) =!= 2)
         val b2 = d.filter(pmod(col("doc_id"), lit(3)) === 2)
         val (f1, v1) = WebOps.frontierAdvance(
-          edges.filter(col("__day") =!= 2).select("url"), pages(b1), rules,
+          urls(col("__day") =!= 2), pages(b1), rules,
           WebOps.emptyFrontierStore(s), WebOps.emptyVisitedStore(s))
         // a real day-2 run reads the stores back from disk; the barrier
         // stands in for that read and keeps day 1 from re-executing
         // under day 2's plan
         val (f2, _) = WebOps.frontierAdvance(
-          edges.filter(col("__day") === 2).select("url"), pages(b2), rules,
+          urls(col("__day") === 2), pages(b2), rules,
           f1.localCheckpoint(false), v1.localCheckpoint(false))
         // barrier before emission: the cap's window + the presentation
         // range-sort would otherwise re-run the day-2 merge per pass
@@ -9962,44 +9876,19 @@ object Inventory {
         // identical three unrolled decimal iterations over URL-string
         // node ids (pageRankIterSql — shared text with q139's oracle).
         val d = t(s, dir, "documents")
-        val did = col("doc_id").cast("string")
-        val robotsTxt = Seq(
-          "User-agent: *", "Disallow: /", "",
-          "User-agent: graftbot", "Disallow: /deep/", "Allow: /deep/pub",
-          "Disallow: /*.pdf$", "Allow: /mixed", "Disallow: /mixed")
-          .mkString("\n")
-        val robots = d
-          .select(concat(col("source"), lit(".example.com")).as("host")).distinct()
-          .withColumn("robots_txt", lit(robotsTxt))
-        val rules = WebOps.robotsRules(robots, "host", "robots_txt", "graftbot/1.3")
-        val base = concat(lit("https://"), col("source"),
-          lit(".example.com/doc/"), did)
-        val html = concat(
-          lit("<html><body><a href=\"https://ext.partner.org/a/"), did,
-          lit("\">partner</a>"),
-          lit("<a href='//Cdn.Example.COM/widget'>cdn</a>"),
-          lit("<a href=\"/doc/"), (col("doc_id") + 20).cast("string"),
-          lit("?utm_source=x\">next</a>"),
-          lit("<a href=\"related/"), (col("doc_id") + 2).cast("string"),
-          lit("\">rel</a>"),
-          lit("<a href=\"/deep/internal/"), did, lit("\">private</a>"),
-          lit("<a href=\"/files/n"), did, lit(".pdf\">pdf</a></body></html>"))
-        val edges = d
-          .select(col("doc_id"), col("source")).repartition(fanout(s)) // q277's note
-          .select(base.as("id_a"), HtmlText.extractLinks(html).as("__hrefs"))
-          .select(col("id_a"), explode(col("__hrefs")).as("__href"))
-          // split projections: see q275's resolve/canonicalize note
-          .select(col("id_a"),
-            WebOps.resolveHref(col("id_a"), col("__href")).as("__r"))
-          .select(col("id_a"), WebOps.canonicalizeUrl(col("__r")).as("id_b"))
-          .filter(col("id_b").isNotNull && col("id_b") =!= "")
-          .localCheckpoint(false) // chain once: pagerank + frontier read it
+        val crawl = new CrawlFixture(d)
+        // the barrier inside outlinkEdges runs the chain once for both
+        // readers: pagerank and the frontier
+        val edges = WebOps.outlinkEdges(
+            fannedOut(d.select(col("doc_id"), col("source")))
+              .withColumn("id_a", crawl.pageUrl),
+            col("id_a"), crawl.html, "id_a")
+          .withColumnRenamed("dst", "id_b")
         val ranks = graft.operators.GraphOps.pageRank(edges, iterations = 3)
         val cand = edges.select(col("id_b").as("dst")).distinct()
-        val gated = WebOps.robotsDecision(cand, "dst", rules)
+        val gated = WebOps.robotsDecision(cand, "dst", crawl.rules)
           .filter(col("allowed")).select("dst")
-        val crawled = d.select(concat(lit("https://"), col("source"),
-          lit(".example.com/doc/"), did).as("dst"))
+        val crawled = d.select(crawl.pageUrl.as("dst"))
         gated.join(crawled, Seq("dst"), "left_anti")
           .join(ranks.withColumnRenamed("id", "dst"), Seq("dst"))
           .select(col("dst").as("url"), col("rank"))

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.lake.VersionedTable
 import graft.operators.{Dedup, ScaleOps, TextAnalysis}
@@ -47,8 +46,8 @@ import graft.operators.{Dedup, ScaleOps, TextAnalysis}
   */
 object StreamingFlagship {
 
-  /** Apply ONE batch exactly once (the foreachBatch body, public so a
-    * driver-orchestrated daily job can reuse the identical protocol).
+  /** Apply ONE batch exactly once: the body of a `foreachBatch` sink or
+    * of a driver-orchestrated daily job, the identical protocol either way.
     * `batch` is the batch-local stages' output: one row per document
     * that SURVIVED extract→repair→C4→Gopher, columns (idCol, langCol,
     * textCol).
@@ -111,26 +110,4 @@ object StreamingFlagship {
         mixed.select(idCol, "n_tok"), idCol, "n_tok", budget = shardBudget)
       .orderBy("shard")
   }
-
-  /** Start the exactly-once streaming sink: each micro-batch carries
-    * batch-local-staged documents (idCol, langCol, textCol) → the
-    * maintained (fps, ledger) tables.
-    */
-  def flagshipStream(
-      updates: DataFrame,
-      fps: VersionedTable,
-      ledger: VersionedTable,
-      benchShingles: DataFrame,
-      idCol: String,
-      textCol: String,
-      langCol: String,
-      appId: String,
-      checkpoint: String): StreamingQuery =
-    updates.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        advanceBatch(fps, ledger, batch.toDF(), benchShingles,
-          idCol, textCol, langCol, appId = appId, batchId = batchId)
-      }
-      .start()
 }

@@ -1335,6 +1335,50 @@ class PlanShapeSpec extends SparkSpec {
       s"q275 must not join:\n$p")
   }
 
+  test("outlinkEdges: resolve is its own projection; the dst filter sits above the barrier") {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, CaseWhen}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Project}
+    import org.apache.spark.sql.execution.LogicalRDD
+    import graft.operators.WebOps
+    val pages = spark.read.parquet(s"$sf/documents.parquet")
+      .select(col("doc_id"), col("source"))
+    val base = concat(lit("https://"), col("source"), lit(".example.com/doc/"),
+      col("doc_id").cast("string"))
+    val html = concat(lit("<a href=\"related/"), col("doc_id").cast("string"),
+      lit("\">rel</a><a href=\"#top\">t</a>"))
+
+    // resolve's CASE is the one holding the non-fetchable-scheme arm;
+    // inlined into canonicalize it would appear once per urlParts read
+    val chain = WebOps.outlinkChain(pages, base, html, "doc_id").queryExecution.optimizedPlan
+    val resolveCases = chain.flatMap(_.expressions).flatMap(_.collect {
+      case c: CaseWhen if c.toString.contains("mailto") => c
+    })
+    assert(resolveCases.length == 1,
+      s"resolve must be computed once, not inlined into canonicalize:\n$chain")
+    val dstProject = chain.collectFirst {
+      case p: Project if p.projectList.exists {
+        case a: Alias => a.name == "dst"
+        case _ => false
+      } => p
+    }.get
+    assert(dstProject.references.exists(_.name == "__r"),
+      s"canonicalize must read the resolved URL as an attribute:\n$chain")
+    // the optimizer's own non-empty-array guard below the explode is
+    // the only filter allowed before the barrier
+    val generate = chain.collectFirst { case g: Generate => g }.get
+    assert(chain.collect { case f: Filter => f } ==
+        generate.child.collect { case f: Filter => f },
+      s"nothing may filter the edges before their barrier:\n$chain")
+
+    val edges = WebOps.outlinkEdges(pages, base, html, "doc_id").queryExecution.optimizedPlan
+    val filters = edges.collect { case f: Filter => f }
+    assert(filters.length == 1 && filters.head.child.isInstanceOf[LogicalRDD],
+      s"the dst filter must read the barrier directly:\n$edges")
+    val barrier = filters.head.child.asInstanceOf[LogicalRDD]
+    assert(!barrier.constraints.exists(_.references.exists(_.name == "dst")),
+      s"no dst predicate may run below the barrier: ${barrier.constraints}")
+  }
+
   test("q276: frontier composition — broadcast rule gate, anti-join, no all-pairs") {
     val p = planString(run("q276_crawl_frontier"))
     assert(p.contains("BroadcastHashJoin"),
