@@ -1,7 +1,6 @@
 package graft.lake
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -40,14 +39,8 @@ final class MaterializedAgg(
   private def marker(v: Int): Path = Paths.get(root, f"v$v%05d.ok")
 
   /** The TABLE version the materialized state reflects (0 = none). */
-  def currentVersion(): Int = {
-    val p = Paths.get(root)
-    if (!Files.isDirectory(p)) return 0
-    Files.list(p).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d{5}\\.ok") => s.substring(1, 6).toInt }
-      .foldLeft(0)(math.max)
-  }
+  def currentVersion(): Int =
+    VersionDirs.versions(Paths.get(root), ".ok").lastOption.getOrElse(0)
 
   /** Read the current materialized state (one row per group with `cnt`
     * and `sum_<col>` columns). Requires at least one [[refresh]].
@@ -77,29 +70,17 @@ final class MaterializedAgg(
     // overwrite tolerates a torn prior attempt's leftovers; only the
     // marker makes the state visible
     next.write.mode("overwrite").parquet(dir(tv))
-    Files.createDirectories(Paths.get(root))
-    val tmp = Files.createTempFile(Paths.get(root), s"v$tv-", ".tmp")
-    try Files.createLink(marker(tv), tmp)
-    catch { case _: java.nio.file.FileAlreadyExistsException => () // racer won; same state
-    } finally Files.deleteIfExists(tmp)
-    prune(tv)
+    VersionDirs.publish(marker(tv), "") // false: a racer won with the same state
+    prune()
     spark.read.parquet(dir(tv))
   }
 
   /** Keep current + previous state; drop older (markers first, so a
     * concurrent reader never sees a marked version vanish mid-read).
     */
-  private def prune(cur: Int): Unit = {
-    val versions = Files.list(Paths.get(root)).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d{5}\\.ok") => s.substring(1, 6).toInt }
-      .toSeq.sorted
-    versions.dropRight(2).foreach { v =>
+  private def prune(): Unit =
+    VersionDirs.versions(Paths.get(root), ".ok").dropRight(2).foreach { v =>
       Files.deleteIfExists(marker(v))
-      val d = Paths.get(dir(v))
-      if (Files.exists(d))
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
+      VersionDirs.deleteTree(Paths.get(dir(v)))
     }
-  }
 }

@@ -1,0 +1,50 @@
+package graft.lake
+
+import java.nio.file.{FileAlreadyExistsException, Files, Path}
+import scala.jdk.CollectionConverters._
+
+/** Versioned directories on a local or mounted filesystem: the one
+  * primitive under [[VersionedTable]]'s manifests and
+  * [[MaterializedAgg]]'s state markers. An entry `v00007<suffix>` is
+  * version 7; it becomes visible only through [[publish]], so a reader
+  * never sees a half-written entry.
+  */
+private[lake] object VersionDirs {
+
+  /** The versions published under `dir` with `suffix`, ascending; none
+    * when `dir` does not exist yet.
+    */
+  def versions(dir: Path, suffix: String): Seq[Int] = {
+    if (!Files.isDirectory(dir)) return Seq.empty
+    val entry = ("v(\\d{5})" + java.util.regex.Pattern.quote(suffix)).r
+    val names = Files.list(dir)
+    try names.iterator().asScala.map(_.getFileName.toString)
+      .collect { case entry(v) => v.toInt }.toSeq.sorted
+    finally names.close()
+  }
+
+  /** Atomic create-if-absent: write `body` to a temp file beside
+    * `target`, hard-link it into place, drop the temp. Returns false
+    * when another writer published `target` first — the link fails
+    * atomically, so two racers produce one winner and no torn file.
+    */
+  def publish(target: Path, body: String): Boolean = {
+    val dir = target.getParent
+    Files.createDirectories(dir)
+    val tmp = Files.createTempFile(dir, s"${target.getFileName}-", ".tmp")
+    try {
+      Files.writeString(tmp, body)
+      Files.createLink(target, tmp)
+      true
+    } catch { case _: FileAlreadyExistsException => false }
+    finally Files.deleteIfExists(tmp)
+  }
+
+  /** Delete the tree under `dir`, deepest entries first; absent is fine. */
+  def deleteTree(dir: Path): Unit = if (Files.exists(dir)) {
+    val paths = Files.walk(dir)
+    try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(p => Files.deleteIfExists(p))
+    finally paths.close()
+  }
+}

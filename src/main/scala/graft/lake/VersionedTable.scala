@@ -1,11 +1,14 @@
 package graft.lake
 
-import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** One data file of a table snapshot, with its zone-map stats: the key
   * zone always, plus optional [lo, hi] zones for the table's declared
@@ -90,13 +93,7 @@ final class VersionedTable private (
   // ------------------------------------------------------------ manifest
 
   /** Latest committed version, 0 if the table is empty of commits. */
-  def currentVersion(): Int = {
-    if (!Files.isDirectory(logDir)) return 0
-    Files.list(logDir).iterator().asScala
-      .map(_.getFileName.toString)
-      .collect { case s if s.matches("v\\d{5}\\.json") => s.substring(1, 6).toInt }
-      .foldLeft(0)(math.max)
-  }
+  def currentVersion(): Int = VersionDirs.versions(logDir, ".json").lastOption.getOrElse(0)
 
   /** The file list and txn state of a committed version. Manifest lines
     * are discriminated by field: `path` → a FileEntry, `txns` → the
@@ -112,31 +109,51 @@ final class VersionedTable private (
     Files.readAllLines(p).asScala.filter(_.nonEmpty).foreach { line =>
       val n = mapper.readTree(line)
       if (n.has("path")) {
-        var stats = Map.empty[String, (Double, Double)]
-        if (n.has("stats")) {
-          val st = n.get("stats")
-          st.fieldNames().asScala.foreach { c =>
-            val arr = st.get(c)
-            stats += c -> (arr.get(0).asDouble(), arr.get(1).asDouble())
-          }
+        val stats = entries(n, "stats").map { case (c, lohi) =>
+          c -> (lohi.get(0).asDouble(), lohi.get(1).asDouble())
         }
-        var blooms = Map.empty[String, String]
-        if (n.has("blooms")) {
-          val bl = n.get("blooms")
-          bl.fieldNames().asScala.foreach(c => blooms += c -> bl.get(c).asText())
-        }
+        val blooms = entries(n, "blooms").map { case (c, b64) => c -> b64.asText() }
         files += FileEntry(n.get("path").asText(), n.get("rows").asLong(),
-          n.get("minKey").asLong(), n.get("maxKey").asLong(), stats, blooms)
+          n.get("minKey").asLong(), n.get("maxKey").asLong(), stats.toMap, blooms.toMap)
       }
       else {
-        if (n.has("txns")) {
-          val t = n.get("txns")
-          t.fieldNames().asScala.foreach(app => txns += app -> t.get(app).asLong())
-        }
+        txns ++= entries(n, "txns").map { case (app, id) => app -> id.asLong() }
         if (n.has("schemaDdl")) schemaDdl = Some(n.get("schemaDdl").asText())
       }
     }
     Snapshot(version, files.result(), txns, schemaDdl)
+  }
+
+  /** A manifest line's object field as (name, value) pairs; none if absent. */
+  private def entries(line: JsonNode, field: String): Seq[(String, JsonNode)] =
+    Option(line.get(field)).toSeq.flatMap(o => o.fieldNames().asScala.map(k => k -> o.get(k)))
+
+  /** Write a map as an object field, keys sorted so a manifest renders
+    * deterministically; an empty map writes no field.
+    */
+  private def putSorted[V](line: ObjectNode, field: String, m: Map[String, V])(
+      put: (ObjectNode, String, V) => Unit): Unit =
+    if (m.nonEmpty) {
+      val o = line.putObject(field)
+      m.toSeq.sortBy(_._1).foreach { case (k, v) => put(o, k, v) }
+    }
+
+  /** `version`'s snapshot, or the empty version 0 that the first commit
+    * builds on.
+    */
+  private def snapshotOrEmpty(version: Int): Snapshot =
+    if (version == 0) Snapshot(0, Seq.empty) else snapshot(version)
+
+  /** The latest snapshot — the base of every write. */
+  private def latest(): Snapshot = snapshotOrEmpty(currentVersion())
+
+  /** The snapshot a read sees: `asOf`, or the latest commit. */
+  private def resolve(asOf: Option[Int]): Snapshot = asOf match {
+    case Some(v) => snapshot(v)
+    case None =>
+      val snap = latest()
+      require(snap.version >= 1, s"no version has been committed under $root")
+      snap
   }
 
   /** Atomic commit: render the manifest to a temp file, publish it with
@@ -149,16 +166,11 @@ final class VersionedTable private (
       files: Seq[FileEntry],
       txns: Map[String, Long] = Map.empty,
       schemaDdl: Option[String] = None): Snapshot = {
-    Files.createDirectories(logDir)
-    val tmp = Files.createTempFile(logDir, s"v$version-", ".tmp")
     val metaLine =
       if (txns.isEmpty && schemaDdl.isEmpty) Seq.empty
       else {
         val o = mapper.createObjectNode()
-        if (txns.nonEmpty) {
-          val t = o.putObject("txns")
-          txns.toSeq.sortBy(_._1).foreach { case (app, id) => t.put(app, id) }
-        }
+        putSorted(o, "txns", txns)((t, app, id) => t.put(app, id))
         schemaDdl.foreach(s => o.put("schemaDdl", s))
         Seq(o.toString)
       }
@@ -166,26 +178,27 @@ final class VersionedTable private (
       val o = mapper.createObjectNode()
       o.put("path", f.path); o.put("rows", f.rows)
       o.put("minKey", f.minKey); o.put("maxKey", f.maxKey)
-      if (f.colStats.nonEmpty) {
-        val st = o.putObject("stats")
-        f.colStats.toSeq.sortBy(_._1).foreach { case (c, (lo, hi)) =>
-          val arr = st.putArray(c); arr.add(lo); arr.add(hi)
-        }
-      }
-      if (f.blooms.nonEmpty) {
-        val bl = o.putObject("blooms")
-        f.blooms.toSeq.sortBy(_._1).foreach { case (c, b64) => bl.put(c, b64) }
-      }
+      putSorted(o, "stats", f.colStats) { case (st, c, (lo, hi)) => st.putArray(c).add(lo).add(hi) }
+      putSorted(o, "blooms", f.blooms)((bl, c, b64) => bl.put(c, b64))
       o.toString
     }).mkString("", "\n", "\n")
-    Files.writeString(tmp, body, StandardOpenOption.TRUNCATE_EXISTING)
-    try Files.createLink(manifestPath(version), tmp)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new java.util.ConcurrentModificationException(
-          s"version $version was committed by another writer")
-    } finally Files.deleteIfExists(tmp)
+    if (!VersionDirs.publish(manifestPath(version), body))
+      throw new java.util.ConcurrentModificationException(
+        s"version $version was committed by another writer")
     Snapshot(version, files, txns, schemaDdl)
+  }
+
+  /** Commit the version after `base`: the `carried` files by reference
+    * plus `df` written as new files. Every write commits through here.
+    */
+  private def commitNext(
+      base: Snapshot,
+      carried: Seq[FileEntry],
+      df: DataFrame,
+      txn: Option[(String, Long)],
+      schemaDdl: Option[String]): Snapshot = {
+    val next = base.version + 1
+    commit(next, carried ++ writeFiles(df, next), base.txns ++ txn, schemaDdl)
   }
 
   /** Additive schema evolution: existing fields keep their position and
@@ -196,8 +209,7 @@ final class VersionedTable private (
     */
   private def evolveSchema(
       prev: Option[String],
-      incoming: org.apache.spark.sql.types.StructType): String = {
-    import org.apache.spark.sql.types.StructType
+      incoming: StructType): String = {
     prev match {
       case None => incoming.toDDL
       case Some(ddl) =>
@@ -255,10 +267,7 @@ final class VersionedTable private (
       .map { case (c, i) => c -> perFile.map(_.getLong(checkBase + i)).sum }
       .filter(_._2 > 0)
     if (violated.nonEmpty) {
-      val d = Paths.get(dir)
-      if (Files.exists(d))
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
+      VersionDirs.deleteTree(Paths.get(dir))
       throw new IllegalArgumentException(
         "CHECK constraint violation, commit aborted: " +
           violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
@@ -285,11 +294,8 @@ final class VersionedTable private (
   def append(df: DataFrame): Snapshot = appendTxn(df, None)
 
   private def appendTxn(df: DataFrame, txn: Option[(String, Long)]): Snapshot = {
-    val prev = currentVersion()
-    val base = if (prev == 0) Snapshot(0, Seq.empty) else snapshot(prev)
-    val next = prev + 1
-    val schema = evolveSchema(base.schemaDdl, df.schema)
-    commit(next, base.files ++ writeFiles(df, next), base.txns ++ txn, Some(schema))
+    val base = latest()
+    commitNext(base, base.files, df, txn, Some(evolveSchema(base.schemaDdl, df.schema)))
   }
 
   /** Overwrite-commit: the new files replace everything (prior versions
@@ -298,12 +304,10 @@ final class VersionedTable private (
     * frame's (overwrite replaces the table; evolution rules apply to
     * append/merge).
     */
-  def overwrite(df: DataFrame): Snapshot = {
-    val prev = currentVersion()
-    val txns = if (prev == 0) Map.empty[String, Long] else snapshot(prev).txns
-    val next = prev + 1
-    commit(next, writeFiles(df, next), txns, Some(df.schema.toDDL))
-  }
+  def overwrite(df: DataFrame): Snapshot = overwriteTxn(df, None)
+
+  private def overwriteTxn(df: DataFrame, txn: Option[(String, Long)]): Snapshot =
+    commitNext(latest(), Seq.empty, df, txn, Some(df.schema.toDDL))
 
   /** Copy-on-write MERGE (upsert, latest-wins by whole row): rows of
     * `updates` replace current rows with the same key; unmatched update
@@ -317,7 +321,7 @@ final class VersionedTable private (
     * magnitude smaller than the table; a batch too large to collect is
     * a full rewrite anyway — call `overwrite`).
     */
-  def merge(updates: DataFrame): Snapshot = mergeTxn(materialized(updates), None)
+  def merge(updates: DataFrame): Snapshot = withBarrier(updates)(mergeTxn(_, None))
 
   /** Barrier for update frames that feed SEVERAL actions of one commit
     * (the emptiness probe, [[merge]]'s update-key collect, and the data
@@ -326,17 +330,22 @@ final class VersionedTable private (
     * (guide §7.2 duplicate work across actions; measured on
     * q238_streaming_governance: the split/novelty advance chains ran
     * 2-3× per commit). Lazy localCheckpoint: materializes inside the
-    * first action, later actions read the cached rows.
+    * first action, later actions read the cached rows. Only `write`
+    * reads them, so their blocks are released when it returns or
+    * throws. Losing an executor between the emptiness probe and the
+    * write fails the commit loudly and leaves the manifest unchanged.
     */
-  private def materialized(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
+  private def withBarrier(df: DataFrame)(write: DataFrame => Snapshot): Snapshot = {
+    val barrier = df.localCheckpoint(eager = false)
+    try write(barrier)
+    finally barrier.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
+      .foreach(_.unpersist(blocking = true))
+  }
 
   private def mergeTxn(updates: DataFrame, txn: Option[(String, Long)]): Snapshot = {
     val spark = updates.sparkSession
-    val prev = currentVersion()
-    require(prev >= 1, "merge into an empty table — use append")
-    val base = snapshot(prev)
-    val cur = base.files
+    val base = latest()
+    require(base.version >= 1, "merge into an empty table — use append")
 
     val updKeys = updates.select(col(keyCol).cast("long")).distinct()
       .collect().map(_.getLong(0)).sorted
@@ -353,8 +362,7 @@ final class VersionedTable private (
       lo < updKeys.length && updKeys(lo) <= f.maxKey
     }
 
-    val (touched, untouched) = cur.partition(overlaps)
-    val next = prev + 1
+    val (touched, untouched) = base.files.partition(overlaps)
     val schema = evolveSchema(base.schemaDdl, updates.schema)
     val survivors =
       if (touched.isEmpty) updates
@@ -362,13 +370,11 @@ final class VersionedTable private (
         // touched files are read under the EVOLVED schema (columns the
         // old files lack come back null), and evolved updates likewise
         // fill columns they lack — additive evolution without rewrites
-        val old = spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(schema))
-          .parquet(touched.map(_.path): _*)
-        old.join(updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
+        readFiles(spark, touched, Some(schema))
+          .join(updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
           .unionByName(updates, allowMissingColumns = true)
       }
-    commit(next, untouched ++ writeFiles(survivors, next), base.txns ++ txn, Some(schema))
+    commitNext(base, untouched, survivors, txn, Some(schema))
   }
 
   /** Copy-on-write range DELETE: remove all rows with key in [lo, hi].
@@ -382,28 +388,21 @@ final class VersionedTable private (
     */
   def deleteRange(spark: SparkSession, lo: Long, hi: Long): Snapshot = {
     require(lo <= hi, s"empty range [$lo, $hi]")
-    val prev = currentVersion()
-    require(prev >= 1, "delete from an empty table")
-    val base = snapshot(prev)
+    val base = latest()
+    require(base.version >= 1, "delete from an empty table")
     val (touched, untouched) = base.files.partition(f => f.maxKey >= lo && f.minKey <= hi)
     if (touched.isEmpty) return base // nothing in range: no new version
-    val next = prev + 1
-    val survivors = readFiles(spark, base, touched)
+    val survivors = readFiles(spark, touched, base.schemaDdl)
       .filter(!col(keyCol).cast("long").between(lo, hi))
-    commit(next, untouched ++ writeFiles(survivors, next), base.txns, base.schemaDdl)
+    commitNext(base, untouched, survivors, None, base.schemaDdl)
   }
 
   /** Compaction-commit: rewrite the CURRENT snapshot as `targetFiles`
     * files (small-file mitigation after many appends/merges). Data is
     * unchanged — only the file layout.
     */
-  def compact(spark: SparkSession, targetFiles: Int): Snapshot = {
-    val prev = currentVersion()
-    val base = if (prev == 0) Snapshot(0, Seq.empty) else snapshot(prev)
-    val next = prev + 1
-    commit(next, writeFiles(read(spark).repartition(targetFiles), next),
-      base.txns, base.schemaDdl)
-  }
+  def compact(spark: SparkSession, targetFiles: Int): Snapshot =
+    relayout(spark)(_.repartition(targetFiles))
 
   /** Layout-maintenance compaction: rewrite the current snapshot RANGE-
     * partitioned on the key, so file zones come out (nearly) disjoint
@@ -413,24 +412,25 @@ final class VersionedTable private (
     * "optimize + cluster" move). Plain [[compact]] fixes file COUNT;
     * this fixes pruning POWER.
     */
-  def compactByRange(spark: SparkSession, targetFiles: Int): Snapshot = {
-    val prev = currentVersion()
-    val base = if (prev == 0) Snapshot(0, Seq.empty) else snapshot(prev)
-    val next = prev + 1
-    val clustered = read(spark)
-      .repartitionByRange(targetFiles, col(keyCol))
-      .sortWithinPartitions(col(keyCol))
-    commit(next, writeFiles(clustered, next), base.txns, base.schemaDdl)
+  def compactByRange(spark: SparkSession, targetFiles: Int): Snapshot =
+    relayout(spark)(
+      _.repartitionByRange(targetFiles, col(keyCol)).sortWithinPartitions(col(keyCol)))
+
+  /** Layout-only commit: the latest snapshot's rows rewritten through
+    * `layout`; txn markers and schema carry over unchanged.
+    */
+  private def relayout(spark: SparkSession)(layout: DataFrame => DataFrame): Snapshot = {
+    val base = resolve(None)
+    commitNext(base, Seq.empty, layout(readFiles(spark, base.files, base.schemaDdl)),
+      None, base.schemaDdl)
   }
 
   /** Metadata-only row count: the sum of per-file row stats in the
     * manifest — answers `count(*)` without scanning a byte of data
     * (the zone-map trick applied to the most common query there is).
     */
-  def tableCount(asOf: Option[Int] = None): Long = {
-    val v = asOf.getOrElse(currentVersion())
-    if (v == 0) 0L else snapshot(v).files.map(_.rows).sum
-  }
+  def tableCount(asOf: Option[Int] = None): Long =
+    snapshotOrEmpty(asOf.getOrElse(currentVersion())).files.map(_.rows).sum
 
   // ------------------------------------------------- idempotent upsert
 
@@ -438,10 +438,32 @@ final class VersionedTable private (
     * CURRENT manifest only (txn state is snapshot state, carried
     * forward by every commit).
     */
-  def lastTxn(appId: String): Option[Long] = {
-    val v = currentVersion()
-    if (v == 0) None else snapshot(v).txns.get(appId)
+  def lastTxn(appId: String): Option[Long] = latest().txns.get(appId)
+
+  /** The replay guard of the `*IfNew` writes: a batch at or below the
+    * writer's committed marker was already applied, so the latest
+    * snapshot returns without a commit; a new batch goes to `write`
+    * with its marker.
+    */
+  private def ifNew(appId: String, batchId: Long)(
+      write: Option[(String, Long)] => Snapshot): Snapshot = {
+    require(appId.nonEmpty, "appId must be non-empty")
+    val base = latest()
+    if (base.txns.get(appId).exists(_ >= batchId)) base // replay — already applied
+    else write(Some(appId -> batchId))
   }
+
+  /** [[ifNew]] for batches that may be empty. The barrier comes BEFORE
+    * the emptiness probe: probe, key collect and write all read the one
+    * materialization (see [[withBarrier]]). An empty batch applied zero
+    * times IS exactly once; skipping the commit keeps the log free of
+    * no-op versions and leaves the marker where it was.
+    */
+  private def ifNewNonEmpty(df: DataFrame, appId: String, batchId: Long)(
+      write: (DataFrame, Option[(String, Long)]) => Snapshot): Snapshot =
+    ifNew(appId, batchId) { txn =>
+      withBarrier(df)(d => if (d.isEmpty) latest() else write(d, txn))
+    }
 
   /** Idempotent upsert: apply `updates` as a MERGE (or the first append
     * into an empty table) EXACTLY ONCE per (appId, batchId). A replayed
@@ -453,27 +475,10 @@ final class VersionedTable private (
     *
     * Returns the resulting (or unchanged) snapshot.
     */
-  def upsertIfNew(updates: DataFrame, appId: String, batchId: Long): Snapshot = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    lastTxn(appId) match {
-      case Some(last) if last >= batchId =>
-        snapshot(currentVersion()) // replay — already applied, no commit
-      case _ =>
-        // barrier BEFORE the emptiness probe: probe + key collect +
-        // write all read the one materialization (see [[materialized]])
-        val u = materialized(updates)
-        if (u.isEmpty) {
-          // an empty batch applied zero times IS exactly once; skipping
-          // the commit keeps the log free of no-op versions
-          val v = currentVersion()
-          if (v == 0) Snapshot(0, Seq.empty) else snapshot(v)
-        } else {
-          val txn = Some(appId -> batchId)
-          if (currentVersion() == 0) appendTxn(u, txn)
-          else mergeTxn(u, txn)
-        }
+  def upsertIfNew(updates: DataFrame, appId: String, batchId: Long): Snapshot =
+    ifNewNonEmpty(updates, appId, batchId) { (u, txn) =>
+      if (currentVersion() == 0) appendTxn(u, txn) else mergeTxn(u, txn)
     }
-  }
 
   /** Idempotent append: add `df`'s rows EXACTLY ONCE per
     * (appId, batchId) — the append-only twin of [[upsertIfNew]] for
@@ -482,20 +487,8 @@ final class VersionedTable private (
     * never rewritten. An empty batch skips the commit (zero
     * applications IS exactly once) without advancing the marker.
     */
-  def appendIfNew(df: DataFrame, appId: String, batchId: Long): Snapshot = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    lastTxn(appId) match {
-      case Some(last) if last >= batchId =>
-        snapshot(currentVersion()) // replay — already applied, no commit
-      case _ =>
-        // same barrier as [[upsertIfNew]]: probe + write, one compute
-        val d = materialized(df)
-        if (d.isEmpty) {
-          val v = currentVersion()
-          if (v == 0) Snapshot(0, Seq.empty) else snapshot(v)
-        } else appendTxn(d, Some(appId -> batchId))
-    }
-  }
+  def appendIfNew(df: DataFrame, appId: String, batchId: Long): Snapshot =
+    ifNewNonEmpty(df, appId, batchId)(appendTxn)
 
   /** Idempotent overwrite: replace the table EXACTLY ONCE per
     * (appId, batchId) — the overwrite-shaped twin of [[upsertIfNew]]
@@ -504,56 +497,53 @@ final class VersionedTable private (
     * same atomic manifest commit as the data files, so a replayed
     * batch after checkpoint recovery is recognized and skipped.
     */
-  def overwriteIfNew(df: DataFrame, appId: String, batchId: Long): Snapshot = {
-    require(appId.nonEmpty, "appId must be non-empty")
-    lastTxn(appId) match {
-      case Some(last) if last >= batchId =>
-        snapshot(currentVersion()) // replay — already applied, no commit
-      case _ =>
-        val prev = currentVersion()
-        val txns = (if (prev == 0) Map.empty[String, Long] else snapshot(prev).txns) +
-          (appId -> batchId)
-        commit(prev + 1, writeFiles(df, prev + 1), txns, Some(df.schema.toDDL))
-    }
-  }
+  def overwriteIfNew(df: DataFrame, appId: String, batchId: Long): Snapshot =
+    ifNew(appId, batchId)(overwriteTxn(df, _))
 
   // -------------------------------------------------------------- reads
 
   /** Snapshot read: the latest version, or `asOf` for time travel. */
   def read(spark: SparkSession, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.getOrElse(currentVersion())
-    val snap = snapshot(v)
-    if (snap.files.isEmpty) spark.emptyDataFrame
-    else readFiles(spark, snap, snap.files)
+    val snap = resolve(asOf)
+    readFiles(spark, snap.files, snap.schemaDdl)
   }
 
   /** Reads under the MANIFEST schema when present: files predating an
     * additive evolution return null for columns they lack, and no
     * footer-merging pass (`mergeSchema`) is ever needed — the manifest
-    * is the single source of schema truth, resolved on the driver.
+    * is the single source of schema truth, resolved on the driver. It
+    * also gives an empty file list the table's columns, so a snapshot
+    * with no files, or one pruned to none, reads as 0 rows of them.
+    * (Every write records the schema; only a manifest committed without
+    * one falls back to the files' footers.)
     */
-  private def readFiles(spark: SparkSession, snap: Snapshot, files: Seq[FileEntry]): DataFrame =
-    snap.schemaDdl match {
-      case Some(ddl) => spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(ddl))
-        .parquet(files.map(_.path): _*)
-      case None => spark.read.parquet(files.map(_.path): _*)
-    }
+  private def readFiles(
+      spark: SparkSession,
+      files: Seq[FileEntry],
+      schemaDdl: Option[String]): DataFrame =
+    schemaDdl.fold(spark.read)(ddl => spark.read.schema(StructType.fromDDL(ddl)))
+      .parquet(files.map(_.path): _*)
+
+  /** Every pruned read: the files of the snapshot that `keep` admits,
+    * then the `residual` row filter, which still pushes down into the
+    * surviving scans.
+    */
+  private def readPruned(
+      spark: SparkSession,
+      asOf: Option[Int],
+      keep: FileEntry => Boolean,
+      residual: Column): DataFrame = {
+    val snap = resolve(asOf)
+    readFiles(spark, snap.files.filter(keep), snap.schemaDdl).filter(residual)
+  }
 
   /** Zone-map-pruned range read: files whose [minKey, maxKey] zone is
     * disjoint from [lo, hi] are never handed to Spark at all; the
     * residual row filter still pushes down into the surviving scans.
     */
-  def readRange(spark: SparkSession, lo: Long, hi: Long, asOf: Option[Int] = None): DataFrame = {
-    val v = asOf.getOrElse(currentVersion())
-    val snap = snapshot(v)
-    val live = snap.files.filter(f => f.maxKey >= lo && f.minKey <= hi)
-    if (live.isEmpty)
-      read(spark, asOf).filter(lit(false)) // schema-preserving empty
-    else
-      readFiles(spark, snap, live)
-        .filter(col(keyCol).cast("long").between(lo, hi))
-  }
+  def readRange(spark: SparkSession, lo: Long, hi: Long, asOf: Option[Int] = None): DataFrame =
+    readPruned(spark, asOf, f => f.maxKey >= lo && f.minKey <= hi,
+      col(keyCol).cast("long").between(lo, hi))
 
   /** Zone-map-pruned range read on a DECLARED stats column: files whose
     * recorded [lo, hi] for `column` is disjoint from the range never
@@ -566,22 +556,13 @@ final class VersionedTable private (
       column: String,
       lo: Double,
       hi: Double,
-      asOf: Option[Int] = None): DataFrame = {
+      asOf: Option[Int] = None): DataFrame =
     if (column == keyCol)
-      return readRange(spark, math.ceil(lo).toLong, math.floor(hi).toLong, asOf)
-    val snap = snapshot(asOf.getOrElse(currentVersion()))
-    val live = snap.files.filter { f =>
-      f.colStats.get(column) match {
-        case Some((flo, fhi)) => fhi >= lo && flo <= hi
-        case None => true // no zone recorded — must scan
-      }
-    }
-    if (live.isEmpty)
-      read(spark, asOf).filter(lit(false))
+      readRange(spark, math.ceil(lo).toLong, math.floor(hi).toLong, asOf)
     else
-      readFiles(spark, snap, live)
-        .filter(col(column).cast("double").between(lo, hi))
-  }
+      readPruned(spark, asOf,
+        f => f.colStats.get(column).forall { case (flo, fhi) => fhi >= lo && flo <= hi },
+        col(column).cast("double").between(lo, hi))
 
   /** Bloom-pruned point read on a DECLARED bloom column: files whose
     * bitset says the value is DEFINITELY absent never reach Spark —
@@ -599,20 +580,10 @@ final class VersionedTable private (
       value: String,
       asOf: Option[Int] = None): DataFrame = {
     require(value != null, "a bloom cannot answer IS NULL — filter read() instead")
-    val snap = snapshot(asOf.getOrElse(currentVersion()))
-    val live = snap.files.filter { f =>
-      f.blooms.get(column) match {
-        case Some(b64) =>
-          graft.functions.BloomSketch.mightContain(
-            graft.functions.BloomSketch.fromBase64(b64), value)
-        case None => true // no bitset recorded — must scan
-      }
-    }
-    if (live.isEmpty)
-      read(spark, asOf).filter(lit(false))
-    else
-      readFiles(spark, snap, live)
-        .filter(col(column).cast("string") === value)
+    import graft.functions.BloomSketch.{fromBase64, mightContain}
+    readPruned(spark, asOf,
+      f => f.blooms.get(column).forall(b64 => mightContain(fromBase64(b64), value)),
+      col(column).cast("string") === value)
   }
 
   /** Multi-dimensional clustering compaction: rewrite the current
@@ -629,14 +600,8 @@ final class VersionedTable private (
       spark: SparkSession,
       cols: Seq[String],
       targetFiles: Int,
-      bits: Int = 8): Snapshot = {
-    val prev = currentVersion()
-    val base = if (prev == 0) Snapshot(0, Seq.empty) else snapshot(prev)
-    val next = prev + 1
-    val clustered = graft.operators.ScaleOps.zOrderBy(
-      read(spark), cols, bits, numPartitions = targetFiles)
-    commit(next, writeFiles(clustered, next), base.txns, base.schemaDdl)
-  }
+      bits: Int = 8): Snapshot =
+    relayout(spark)(graft.operators.ScaleOps.zOrderBy(_, cols, bits, numPartitions = targetFiles))
 
   /** Mix-refresh maintenance commit: overwrite the CURRENT snapshot
     * with its token-budgeted weighted sample
@@ -694,7 +659,6 @@ final class VersionedTable private (
       fromV: Int,
       toV: Int,
       preImages: Boolean = false): DataFrame = {
-    require(fromV >= 1 && toV >= 1, "versions start at 1")
     val from = snapshot(fromV)
     val to = snapshot(toV)
     val fromPaths = from.files.map(_.path).toSet
@@ -702,14 +666,10 @@ final class VersionedTable private (
     val removed = from.files.filterNot(f => toPaths(f.path))
     val added = to.files.filterNot(f => fromPaths(f.path))
 
-    val dataCols = readFiles(spark, to, to.files).columns.toSeq
-    def side(files: Seq[FileEntry], name: String): DataFrame = {
-      val df =
-        if (files.isEmpty) readFiles(spark, to, to.files).filter(lit(false))
-        else readFiles(spark, to, files) // toV schema: evolution-aligned
-      df.select(col(keyCol).cast("long").as("__k"),
-        struct(dataCols.map(col): _*).as(name))
-    }
+    val dataCols = readFiles(spark, to.files, to.schemaDdl).columns.toSeq
+    def side(files: Seq[FileEntry], name: String): DataFrame =
+      readFiles(spark, files, to.schemaDdl) // toV schema: evolution-aligned
+        .select(col(keyCol).cast("long").as("__k"), struct(dataCols.map(col): _*).as(name))
     def tagged(tag: String, row: Column): Column =
       struct(lit(tag).as("_change_type"), row.as("__row"))
     val updateImages =
@@ -743,8 +703,7 @@ final class VersionedTable private (
   }
 
   /** Files referenced by the version (for plan/pruning assertions). */
-  def liveFiles(asOf: Option[Int] = None): Seq[String] =
-    snapshot(asOf.getOrElse(currentVersion())).files.map(_.path)
+  def liveFiles(asOf: Option[Int] = None): Seq[String] = resolve(asOf).files.map(_.path)
 
   // ------------------------------------------------------------- vacuum
 

@@ -1279,12 +1279,11 @@ object Dedup {
       w: Int = 3,
       threshold: Double = 0.8,
       maxBucket: Int = 1024,
-      excludeShingles: Array[Long] = Array.empty,
-      maxIter: Int = 25): DataFrame = {
+      excludeShingles: Array[Long] = Array.empty): DataFrame = {
     val pairs = minHashNearDups(
       df, idCol, textCol, k, bands, w, threshold,
       maxBucket = maxBucket, excludeShingles = excludeShingles)
-    val losers = nearDupClusters(pairs, maxIter)
+    val losers = nearDupClusters(pairs)
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as("__loser"))
     df.join(losers, df(idCol) === col("__loser"), "left_anti")
@@ -1307,9 +1306,8 @@ object Dedup {
       pairs: DataFrame,
       docs: DataFrame,
       idCol: String,
-      rankCol: String,
-      maxIter: Int = 25): DataFrame = {
-    val clusters = nearDupClusters(pairs, maxIter)
+      rankCol: String): DataFrame = {
+    val clusters = nearDupClusters(pairs)
     val ranked = clusters.join(
       docs.select(col(idCol).cast("long").as("id"), col(rankCol).as("__rank")),
       "id")
@@ -2416,11 +2414,10 @@ object Dedup {
       threshold: Double,
       roundScale: Int = 4,
       maxCell: Int = 65536,
-      maxIter: Int = 25,
       probes: Int = 1): DataFrame = {
     val pairs = semanticNearDupPairs(
       df, idCol, vecCol, cents, threshold, roundScale, maxCell, probes)
-    val losers = nearDupClusters(pairs.select("id_a", "id_b"), maxIter)
+    val losers = nearDupClusters(pairs.select("id_a", "id_b"))
       .filter(col("id") =!= col("cluster"))
       .select(col("id").as("__loser"))
     df.join(losers, df(idCol) === col("__loser"), "left_anti")

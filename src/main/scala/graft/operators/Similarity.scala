@@ -655,6 +655,9 @@ object Similarity {
     * top-k pool of a retriever, not a corpus-sized frame. Ranks are
     * assigned by (score desc, id asc) within each list; a document's
     * fused score is Σ 1/(kRrf + rank) over the lists containing it.
+    * A row with a NULL score is dropped from its list before ranking:
+    * it has no place in the order (in the rank join it matches no peer,
+    * so it would otherwise take rank 1).
     * Contributions are rounded at 6dp and summed as exact DECIMAL(18,6)
     * (the q145/q153 discipline) so the fusion replays bit-identically in
     * any engine — q174 carries a full DuckDB oracle.
@@ -677,7 +680,7 @@ object Similarity {
     import org.apache.spark.sql.types.DecimalType
     val contribs = rankings.map { case (df, scoreCol) =>
       // rank = 1 + |rows strictly ahead| (see the scale note)
-      val pool = df.select(col(idCol), col(scoreCol).as("__s"))
+      val pool = df.select(col(idCol), col(scoreCol).as("__s")).filter(col("__s").isNotNull)
       val peers = pool.select(col(idCol).as("__pid"), col("__s").as("__ps"))
       pool
         .join(broadcast(peers),

@@ -486,7 +486,10 @@ object TextAnalysis {
     * no UDF; it composes with [[dedupLines]] / [[removeBoilerplate]]
     * (which shuffle line text) as the cheap first cut. Every rule is
     * a deterministic string predicate, so the operator carries a full
-    * DuckDB oracle (q206).
+    * DuckDB oracle (q206). Being stateless (no watermark, no state
+    * store), it runs unchanged on a streaming frame between
+    * `StreamingCorpus.ingestCrawl` and `StreamingCorpus.clean`, with
+    * `carry` keeping the watermark column.
     */
   def c4Clean(
       df: DataFrame,

@@ -125,24 +125,6 @@ object StreamingCorpus {
     else graft.operators.WebOps.blockDomains(recs, "canonical_url", blockedDomains)
   }
 
-  /** Streaming twin of [[graft.operators.TextAnalysis.c4Clean]]: the
-    * C4 line/document rules continuously. Every rule is a stateless
-    * scalar predicate or a filter HOF over the in-row line array — no
-    * watermark, no state store, no explode — so this composes between
-    * [[ingestCrawl]] (which produces the multi-line text) and [[clean]]
-    * (where stateful dedup begins), at input rate.
-    */
-  def c4CleanStream(
-      docs: DataFrame,
-      idCol: String = "doc_id",
-      textCol: String = "text",
-      sep: String = "\n",
-      minLineWords: Int = 5,
-      minDocSentences: Int = 3,
-      carry: Seq[String] = Seq("ts")): DataFrame =
-    TextAnalysis.c4Clean(docs, idCol, textCol, sep, minLineWords,
-      minDocSentences, carry)
-
   /** Streaming scrub-and-chunk: PII redaction then token-window
     * chunking, continuously. Both stages are STATELESS (regexp chains
     * and a per-row explode — no watermark, no state store), so this

@@ -434,6 +434,67 @@ class LakeSpec extends SparkSpec {
     assert(t.currentVersion() == 3 && t.read(spark).count() == 10)
   }
 
+  test("zero-file snapshots keep the manifest schema on every read") {
+    val t = VersionedTable(Files.createTempDirectory("graft-lake-zero").toString, "k",
+      statsCols = Seq("v"), bloomCols = Seq("tag"))
+    assert(intercept[IllegalArgumentException](t.read(spark)).getMessage
+      .contains("no version has been committed"))
+    t.append(rows(1 to 20, "a").repartition(2))
+    val cols = t.read(spark).columns.toSeq
+    def assertEmptyWithSchema(when: String): Unit = {
+      assert(t.liveFiles().isEmpty, s"$when: no file should stay live")
+      Seq(
+        "read" -> t.read(spark),
+        "readRange" -> t.readRange(spark, 1, 100),
+        "readRangeOn" -> t.readRangeOn(spark, "v", 0.0, 1000.0),
+        "readEquals" -> t.readEquals(spark, "tag", "a")).foreach { case (name, df) =>
+        assert(df.columns.toSeq == cols, s"$when: $name lost the manifest schema")
+        assert(df.select("k").count() == 0, s"$when: $name returned rows")
+      }
+    }
+    def deletedKeys(fromV: Int): Seq[Long] = {
+      val feed = t.changes(spark, fromV, fromV + 1)
+      assert(feed.filter($"_change_type" =!= "delete").count() == 0)
+      feed.select("k").as[Long].collect().sorted.toSeq
+    }
+
+    t.deleteRange(spark, 1, 20) // v2: every key removed
+    assertEmptyWithSchema("after deleteRange")
+    assert(deletedKeys(1) == (1L to 20L))
+    t.append(rows(21 to 25, "b")) // v3
+    assert(t.read(spark).select("k").as[Long].collect().sorted.toSeq == (21L to 25L))
+
+    t.overwrite(rows(1 to 0, "x")) // v4: an empty frame
+    assertEmptyWithSchema("after an empty overwrite")
+    assert(deletedKeys(3) == (21L to 25L))
+    t.append(rows(30 to 32, "c")) // v5
+    assert(t.read(spark).select("k", "tag").as[(Long, String)].collect().sorted.toSeq ==
+      Seq((30L, "c"), (31L, "c"), (32L, "c")))
+  }
+
+  test("commit barriers release their cached blocks when the commit ends") {
+    // RDDs holding blocks that the commits added: earlier suites' cached
+    // RDDs may be cleaned meanwhile, but never added
+    def cachedRdds(): Set[Int] =
+      org.apache.spark.sql.graft.BlockProbe.cachedRdds(spark.sparkContext)
+    val t = freshTable()
+    t.append(rows(1 to 50, "a"))
+    val before = cachedRdds()
+    def kept(): Set[Int] = cachedRdds() -- before
+    t.merge(rows(40 to 60, "m").repartition(2))
+    assert(kept().isEmpty, "merge kept its barrier's blocks")
+    t.upsertIfNew(rows(55 to 70, "u").repartition(2), "up", 1L)
+    assert(kept().isEmpty, "upsertIfNew kept its barrier's blocks")
+    t.appendIfNew(rows(100 to 110, "x").repartition(2), "ap", 1L)
+    assert(kept().isEmpty, "appendIfNew kept its barrier's blocks")
+    t.appendIfNew(rows(1 to 0, "e"), "ap", 2L) // empty: probed, not committed
+    assert(kept().isEmpty, "an empty batch kept its probe's blocks")
+    // a commit that throws after materializing (a column type change)
+    intercept[IllegalArgumentException](t.merge(rows(1 to 5, "bad").withColumn("v", lit("s"))))
+    assert(kept().isEmpty, "a failed merge kept its barrier's blocks")
+    assert(t.read(spark).count() == 81)
+  }
+
   test("empty update batch and merge-into-empty are rejected loudly") {
     val t = freshTable()
     intercept[IllegalArgumentException](t.merge(rows(1 to 5, "u")))

@@ -414,6 +414,21 @@ class SimilaritySpec extends SparkSpec {
     assert(fused(0).getDouble(1) > fused(1).getDouble(1))
   }
 
+  test("rrfFuse drops NULL-score rows before ranking: they never take rank 1") {
+    import spark.implicits._
+    // lexical ranks: a(1), b(2), n unranked; semantic ranks: b(1), n(2)
+    val lex = Seq[(String, Option[Double])](("n", None), ("a", Some(2.0)), ("b", Some(1.0)))
+      .toDF("id", "s")
+    val sem = Seq(("b", 0.9), ("n", 0.8)).toDF("id", "s")
+    val fused = Similarity.rrfFuse(Seq((lex, "s"), (sem, "s")), "id", kRrf = 60, topK = 10)
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2))).toSeq
+    def c(r: Int) = BigDecimal(1.0 / (60 + r)).setScale(6, BigDecimal.RoundingMode.HALF_UP)
+    assert(fused == Seq(
+      ("b", (c(2) + c(1)).toDouble, 2L),
+      ("a", c(1).toDouble, 1L),
+      ("n", c(2).toDouble, 1L)))
+  }
+
   test("hybridTopK: IVF semantic pool at nprobe=C fuses identically to brute force") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val q = emb.filter(col("vec_id") === 1).select("embedding").head.getSeq[Float](0).toArray

@@ -182,7 +182,8 @@ class StreamingCorpusSpec extends SparkSpec {
       (2L, good + "\nno punctuation here", new java.sql.Timestamp(2000L)),
       (3L, "short { brace } doc.", new java.sql.Timestamp(3000L)))
     val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = StreamingCorpus.c4CleanStream(in.toDF.toDF("doc_id", "text", "ts"))
+    val q = graft.operators.TextAnalysis.c4Clean(
+        in.toDF.toDF("doc_id", "text", "ts"), "doc_id", "text", carry = Seq("ts"))
       .writeStream.format("memory").queryName("c4_out").outputMode("append").start()
     try {
       in.addData(docs: _*)

@@ -1,0 +1,16 @@
+package org.apache.spark.sql.graft
+
+import org.apache.spark.SparkContext
+
+/** Test-side reach into the application's block manager master, which is
+  * private to Spark (the same placement as [[SparkBridge]]).
+  */
+object BlockProbe {
+
+  /** Ids of the RDDs that hold blocks anywhere in the application, after
+    * asking every storage endpoint.
+    */
+  def cachedRdds(sc: SparkContext): Set[Int] =
+    sc.env.blockManager.master.getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
+      .flatMap(_.asRDDId).map(_.rddId).toSet
+}
