@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end training-corpus cleaning pipeline — the composite operator a
@@ -11,13 +11,27 @@ import org.apache.spark.sql.functions._
   *
   *   annotate (token/quality/language, map-only)
   *     → filter (quality + language + length gates, map-only)
-  *     → exact dedup on the order-sensitive fingerprint (one hash agg)
+  *     → exact dedup on the order-sensitive fingerprint (one hash
+  *       exchange, which the keep-min window reuses)
   *     → MinHash-LSH near-dup removal (signature → band join → verify)
   *
+  * THE GATE RULE. Every gate filter sits on a fence ([[gate]]) whose
+  * child computes all the columns the gate reads. Without it Catalyst
+  * pushes the filter below the projection that computes its input and
+  * copies the projected expression into each conjunct; FilterExec
+  * shares no subexpression across conjuncts or with the projection
+  * above, so the text kernels under a gate (the PII regex chain,
+  * repetition, text profile, html extraction, blocklist hits) ran once
+  * per conjunct plus once for the projection. With the fences each
+  * kernel runs once per row.
+  *
   * Scale shape (measured; see SCALE.md): annotation and gating are
-  * map-only; the shuffles are the fingerprint window, the LSH band join
-  * and candidate re-attach joins, and the final anti-join — each carries
-  * ids/keys only, never document payloads. No driver-side data movement.
+  * map-only; the shuffles are the fingerprint exchange, the LSH band
+  * join and candidate re-attach joins, and the final anti-join — each
+  * carries ids/keys only, never document payloads. No driver-side data
+  * movement. Calling [[clean]] runs the jobs of the stages below its
+  * shared barrier (the fingerprint exchange and the window over it);
+  * the near-dup stages run when the result is executed.
   */
 object CorpusPipeline {
 
@@ -39,26 +53,52 @@ object CorpusPipeline {
     * intermediate sharing uses lazy `localCheckpoint` blocks, which the
     * ContextCleaner frees once the result is unreferenced (a long-lived
     * session can call clean() in a loop without accumulating caches).
-    * Under AQE (GraftSession's default) planning the checkpoint RDD may
-    * materialize UPSTREAM shuffle stages — the annotate/gate/window
-    * exchanges — as real jobs when clean() is called, and downstream
-    * operators see a frozen LogicalRDD leaf at that boundary rather
-    * than the full logical subtree. localCheckpoint blocks are not
-    * recomputable after executor loss; on clusters with dynamic
-    * allocation, set a checkpoint dir and swap in reliable
-    * `Dataset.checkpoint` at this boundary.
+    * Under AQE (GraftSession's default) planning the checkpoint RDD
+    * materializes the UPSTREAM shuffle stage — the fingerprint exchange,
+    * with annotation and gating on its map side — as a real job when
+    * clean() is called, and downstream operators see a frozen LogicalRDD
+    * leaf at that boundary rather than the full logical subtree.
+    * localCheckpoint blocks are not recomputable after executor loss; on
+    * clusters with dynamic allocation, set a checkpoint dir and swap in
+    * reliable `Dataset.checkpoint` at this boundary.
     */
   def clean(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-      cfg: Config = Config()): DataFrame = {
-    val annotated = TextAnalysis.annotate(docs, textCol)
-    val gated = annotated.filter(
+      cfg: Config = Config()): DataFrame =
+    dedup(gated(docs, textCol, cfg), idCol, textCol, cfg)
+
+  /** annotate → fence → the quality, language and length gates, with
+    * `extra` (a row-local conjunct over columns computed below the
+    * fence) filtered in the same pass. Shared with the streaming twin.
+    */
+  private[graft] def gated(docs: DataFrame, textCol: String, cfg: Config,
+      extra: Column = lit(true)): DataFrame =
+    gate(TextAnalysis.annotate(docs, textCol), "gates",
       col("n_tokens") >= cfg.minTokens &&
         col("quality") >= cfg.minQuality &&
-        col("lang_pred").isin(cfg.langs: _*))
+        col("lang_pred").isin(cfg.langs: _*) && extra)
+
+  /** Exact then near-dup removal over the gated frame.
+    *
+    * THE PARTITION FLOOR. The gated frame is hash-partitioned on
+    * `fingerprint` to the session's shuffle-partition count before the
+    * keep-min window, which reuses that exchange (no shuffle is added).
+    * A plain window exchange is one AQE coalesces by bytes: when the
+    * gated corpus is under the advisory partition size (1 MB by
+    * default), it collapses to ONE partition, and the barrier over it —
+    * and so the CPU-bound MinHash signature, banding and verify stages
+    * that read the barrier — runs on one core. A repartition to an explicit
+    * count is not coalesced. At lake scale the exchange is far larger
+    * than partitions × advisory size, AQE would not coalesce it either,
+    * and the floor changes nothing.
+    */
+  private def dedup(gatedDocs: DataFrame, idCol: String, textCol: String,
+      cfg: Config): DataFrame = {
+    val floor = gatedDocs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Lazily block-shared: the near-dup stage scans this frame twice
     // (signature branch + the keep side of the anti-join); without the
     // sharing the annotate+window chain runs twice per materialization.
-    val exactDeduped = Dedup.exactKeepMin(gated, Seq("fingerprint"), idCol)
+    val exactDeduped = Dedup.exactKeepMin(
+        gatedDocs.repartition(floor, col("fingerprint")), Seq("fingerprint"), idCol)
       .localCheckpoint(eager = false)
     val stopShingles = cfg.stopShingleMinDf
       .map(minDf => Dedup.hotShingles(exactDeduped, textCol, minDf = minDf))
@@ -66,6 +106,55 @@ object CorpusPipeline {
     Dedup.minHashDedup(exactDeduped, idCol, textCol,
       threshold = cfg.nearDupThreshold, excludeShingles = stopShingles)
   }
+
+  /** [[prepare]]'s frame before dedup: every document that passes all
+    * of its gates, scrubbed and annotated.
+    */
+  private[graft] def admitted(docs: DataFrame, textCol: String, cfg: Config,
+      maxRepetition: Double, htmlInput: Boolean, blocklist: Seq[String]): DataFrame = {
+    val textual = if (htmlInput) extracted(docs, textCol) else docs
+    // C4's doc-level bad-words gate, right after extraction: the
+    // cheapest whole-document drop runs before any annotation or
+    // fingerprinting spends work on a page that cannot ship
+    val allowed = unblocked(textual, textCol, blocklist)
+    // the repetition ratio is computed beside the scrub and gated with
+    // clean's gates: every gate is a row-local, deterministic conjunct
+    val scrubbed = allowed.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
+      .withColumn("__rep", TextAnalysis.repetitionRatio(col(textCol)))
+    gated(scrubbed, textCol, cfg, col("__rep") <= maxRepetition).drop("__rep")
+  }
+
+  /** Stage 0 of a crawl: markup → main text (map-only, HtmlText's
+    * block-segmented link-density extraction); pages whose every block
+    * was boilerplate vanish here, before any text gate.
+    */
+  private[graft] def extracted(pages: DataFrame, textCol: String): DataFrame =
+    gate(pages.withColumn(textCol, HtmlText.extractText(col(textCol))),
+      "html", length(col(textCol)) > 0)
+
+  /** The doc-level bad-words gate (map-only; a no-op for an empty list).
+    * The audit columns don't ride — the corpus paths return the corpus,
+    * not the rejection report; run wordBlocklistGate standalone for that.
+    */
+  private[graft] def unblocked(df: DataFrame, textCol: String, blocklist: Seq[String]): DataFrame =
+    if (blocklist.isEmpty) df
+    else gate(TextAnalysis.wordBlocklistGate(df, textCol, blocklist), "blocklist", !col("blocked"))
+      .drop("bad_terms", "n_bad_tokens", "blocked")
+
+  private val fences = new java.util.concurrent.atomic.AtomicLong
+
+  /** `df` behind a fence, filtered by `keep` — the one way a corpus
+    * gate is applied (see THE GATE RULE above). The fence is a
+    * CollectMetrics node (`observe`): no pushdown rule crosses it, it
+    * materializes nothing, and it counts the rows reaching the gate.
+    * Observation names must be unique within one analyzed plan, and
+    * composed calls (a stream front feeding [[clean]], clean over
+    * clean's output) nest fences, so each name carries a sequence
+    * number.
+    */
+  private[graft] def gate(df: DataFrame, stage: String, keep: Column): DataFrame =
+    df.observe(s"corpus_${stage}_${fences.incrementAndGet()}", count(lit(1)).as("rows"))
+      .filter(keep)
 
   /** The FULL preparation pipeline — [[clean]] plus the remaining stages
     * a corpus passes on its way to a training run:
@@ -103,27 +192,8 @@ object CorpusPipeline {
       splitBy: Option[(String, Seq[(String, Double)])] = None,
       htmlInput: Boolean = false,
       blocklist: Seq[String] = Nil): DataFrame = {
-    // stage 0 when the input is a crawl: markup → main text (map-only,
-    // HtmlText's block-segmented link-density extraction); pages whose
-    // every block was boilerplate vanish here, before any text gate
-    val textual =
-      if (!htmlInput) docs
-      else docs.withColumn(textCol, HtmlText.extractText(col(textCol)))
-        .filter(length(col(textCol)) > 0)
-    // C4's doc-level bad-words gate, right after extraction: the
-    // cheapest whole-document drop runs before any annotation or
-    // fingerprinting spends work on a page that cannot ship (map-only;
-    // the audit columns don't ride — prepare's contract is the corpus,
-    // not the rejection report; run wordBlocklistGate standalone for
-    // that)
-    val admitted =
-      if (blocklist.isEmpty) textual
-      else TextAnalysis.wordBlocklistGate(textual, textCol, blocklist)
-        .filter(!col("blocked"))
-        .drop("bad_terms", "n_bad_tokens", "blocked")
-    val scrubbed = admitted.withColumn(textCol, TextAnalysis.redactPii(col(textCol)))
-      .filter(TextAnalysis.repetitionRatio(col(textCol)) <= maxRepetition)
-    val cleaned = clean(scrubbed, idCol, textCol, cfg)
+    val cleaned = dedup(
+      admitted(docs, textCol, cfg, maxRepetition, htmlInput, blocklist), idCol, textCol, cfg)
     val decontaminated = evalDocs
       .map(e => Dedup.decontaminate(cleaned, e, idCol, textCol))
       .getOrElse(cleaned)

@@ -670,6 +670,9 @@ object Similarity {
     * makes at most poolK² pairs, partitioned across the cluster. Every
     * input is a retriever's pool (≤ poolK rows), never data-sized: the
     * corpus scans and ANN probes already happened in the retrievers.
+    * Each pool is a lazy `localCheckpoint` that both sides of the
+    * self-join read, so each retriever runs once; its jobs run when
+    * rrfFuse is called.
     */
   def rrfFuse(
       rankings: Seq[(DataFrame, String)],
@@ -681,6 +684,7 @@ object Similarity {
     val contribs = rankings.map { case (df, scoreCol) =>
       // rank = 1 + |rows strictly ahead| (see the scale note)
       val pool = df.select(col(idCol), col(scoreCol).as("__s")).filter(col("__s").isNotNull)
+        .localCheckpoint(eager = false)
       val peers = pool.select(col(idCol).as("__pid"), col("__s").as("__ps"))
       pool
         .join(broadcast(peers),

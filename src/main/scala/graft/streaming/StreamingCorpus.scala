@@ -19,7 +19,8 @@ import graft.operators.{CorpusPipeline, TextAnalysis}
   *    over the accumulated output (CorpusPipeline.clean on the sink
   *    directory), not in the hot path.
   *
-  * Everything before the dedup is map-only (TextProfileExpr), so the
+  * Everything before the dedup is map-only (TextProfileExpr), and the
+  * gates are the batch path's own fenced `CorpusPipeline.gated`, so the
   * stream scales exactly like the batch annotate stage.
   */
 object StreamingCorpus {
@@ -35,11 +36,7 @@ object StreamingCorpus {
       tsCol: String = "ts",
       watermark: String = "1 hour",
       cfg: CorpusPipeline.Config = CorpusPipeline.Config()): DataFrame =
-    TextAnalysis.annotate(docs, textCol)
-      .filter(
-        col("n_tokens") >= cfg.minTokens &&
-          col("quality") >= cfg.minQuality &&
-          col("lang_pred").isin(cfg.langs: _*))
+    CorpusPipeline.gated(docs, textCol, cfg)
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark("fingerprint")
 
@@ -66,9 +63,9 @@ object StreamingCorpus {
       maxNoise: Double = 5.0,
       repairEncoding: Boolean = false,
       blocklist: Seq[String] = Nil): DataFrame = {
-    val extracted = pages
-      .withColumn(textCol, graft.operators.HtmlText.extractText(col(textCol)))
-      .filter(length(col(textCol)) > 0)
+    // every gate sits on its own fence (CorpusPipeline's gate rule), so
+    // extraction, repair and the blocklist kernel each run once per row
+    val extracted = CorpusPipeline.extracted(pages, textCol)
     val repaired =
       if (repairEncoding)
         extracted.withColumn(textCol,
@@ -77,13 +74,9 @@ object StreamingCorpus {
     // doc-level bad-words gate (the batch prepare's round-9 arm):
     // stateless whole-token filter, same placement — right after
     // extraction/repair, before anything spends work on the page
-    val admitted =
-      if (blocklist.isEmpty) repaired
-      else TextAnalysis.wordBlocklistGate(repaired, textCol, blocklist)
-        .filter(!col("blocked"))
-        .drop("bad_terms", "n_bad_tokens", "blocked")
-    admitted
-      .filter(TextAnalysis.encodingNoiseScore(col(textCol)) <= maxNoise)
+    val admitted = CorpusPipeline.unblocked(repaired, textCol, blocklist)
+    CorpusPipeline.gate(admitted, "noise",
+        TextAnalysis.encodingNoiseScore(col(textCol)) <= maxNoise)
       .withColumn(textCol, TextAnalysis.redactCards(col(textCol)))
   }
 

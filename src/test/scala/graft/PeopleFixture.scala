@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Reference-faithful `people` fixture (FIXTURES.md §1): spaced column
@@ -31,11 +31,10 @@ object PeopleFixture {
     spark.createDataFrame(data, schema)
   }
 
-  /** Write the fixture as CSV and parquet under a temp dir; returns
+  /** Write the fixture as CSV and parquet under `dir`; returns
     * (csvPath, parquetPath).
     */
-  def writeBoth(spark: SparkSession): (String, String) = {
-    val dir: Path = Files.createTempDirectory("people_fixture")
+  def writeBoth(spark: SparkSession, dir: Path): (String, String) = {
     val csv = dir.resolve("csv").toString
     val pq = dir.resolve("parquet").toString
     val d = df(spark)

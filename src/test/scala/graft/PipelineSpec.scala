@@ -19,7 +19,7 @@ import graft.transform.Derive
   */
 class PipelineSpec extends SparkSpec {
 
-  lazy val (csvPath, pqPath) = PeopleFixture.writeBoth(spark)
+  lazy val (csvPath, pqPath) = PeopleFixture.writeBoth(spark, scratchDir("people_fixture"))
 
   test("CSV source reads header with all-string columns (no inference)") {
     val df = Sources.csv(spark, csvPath)
@@ -67,7 +67,7 @@ class PipelineSpec extends SparkSpec {
     val cfg = LakeConfig(
       "parquet", "data_lake_query",
       "SELECT * FROM data_lake_query WHERE `Date of birth` BETWEEN '2000-01-01' AND '2024-12-31'")
-    val out = Files.createTempDirectory("pipeline_out").resolve("result").toString
+    val out = scratchDir("pipeline_out").resolve("result").toString
     val res = new Pipeline(spark).run(cfg, pqPath, out)
     // SQL ran against the snapshot: no age column, no age>30 filter
     assert(!res.result.columns.contains("age"))
@@ -83,7 +83,7 @@ class PipelineSpec extends SparkSpec {
 
   test("csv input direction flips to parquet output") {
     val cfg = LakeConfig("csv", "people_csv", "SELECT * FROM people_csv")
-    val out = Files.createTempDirectory("pipeline_out2").resolve("result").toString
+    val out = scratchDir("pipeline_out2").resolve("result").toString
     val res = new Pipeline(spark).run(cfg, csvPath, out)
     assert(res.outputFormat == "parquet")
     assert(Sources.parquet(spark, out).count() == 5)
@@ -99,14 +99,14 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("scratch-cleanup prologue clears pre-existing scratch files (A23)") {
-    val scratch = Files.createTempDirectory("pipeline_scratch")
+    val scratch = scratchDir("pipeline_scratch")
     Files.writeString(scratch.resolve("stale1.tmp"), "old")
     Files.createDirectory(scratch.resolve("sub"))
     Files.writeString(scratch.resolve("sub").resolve("stale2.tmp"), "old")
     assert(Files.list(scratch).count() == 2)
 
     val cfg = LakeConfig("csv", "people_scratch", "SELECT * FROM people_scratch")
-    val out = Files.createTempDirectory("pipeline_out3").resolve("result").toString
+    val out = scratchDir("pipeline_out3").resolve("result").toString
     new Pipeline(spark).run(cfg, csvPath, out, scratchDir = Some(scratch.toString))
 
     assert(Files.list(scratch).count() == 0, "scratch dir should be emptied before the run")
@@ -115,14 +115,14 @@ class PipelineSpec extends SparkSpec {
 
   test("scratch cleanup is best-effort: bogus path does not fail the run") {
     val cfg = LakeConfig("csv", "people_scratch2", "SELECT * FROM people_scratch2")
-    val out = Files.createTempDirectory("pipeline_out4").resolve("result").toString
+    val out = scratchDir("pipeline_out4").resolve("result").toString
     val res = new Pipeline(spark).run(
       cfg, csvPath, out, scratchDir = Some("badscheme://nope/x"))
     assert(res.outputFormat == "parquet")
   }
 
   test("dotted and backticked CSV headers profile, clean and write") {
-    val dir = Files.createTempDirectory("pipeline_dotted")
+    val dir = scratchDir("pipeline_dotted")
     val csv = dir.resolve("in.csv")
     Files.writeString(csv, "l.price,a`b,plain\n1.5,x,p\n1.5,x,p\n,y,z\n2.0,w,\n")
     val cfg = LakeConfig("csv", "dotted", "SELECT * FROM dotted")
@@ -191,7 +191,7 @@ class PipelineSpec extends SparkSpec {
 
   test("the overlapped profile keeps the caller's job group and ends with run") {
     val cfg = LakeConfig("csv", "people_group", "SELECT * FROM people_group")
-    val out = Files.createTempDirectory("pipeline_group").resolve("result").toString
+    val out = scratchDir("pipeline_group").resolve("result").toString
     var res: PipelineResult = null
     val tags = underJobGroup { res = new Pipeline(spark).run(cfg, csvPath, out) }
     assert(res.profile.rows == 7 && res.profile.dupRows == 1)
@@ -207,12 +207,12 @@ class PipelineSpec extends SparkSpec {
     }
     // the query fails within milliseconds, while the profile of 300k
     // distinct rows is still running: the run must cancel it, not leave it
-    val in = Files.createTempDirectory("pipeline_fail").resolve("in").toString
+    val in = scratchDir("pipeline_fail").resolve("in").toString
     spark.range(300000).selectExpr("id", "id % 7 AS k", "CAST(id AS STRING) AS s")
       .write.parquet(in)
     val cfg = LakeConfig("parquet", "ids_fail",
       "SELECT CAST(raise_error('ps_query failed') AS STRING) AS x FROM range(1)")
-    val out = Files.createTempDirectory("pipeline_fail").resolve("result").toString
+    val out = scratchDir("pipeline_fail").resolve("result").toString
     underJobGroup {
       val e = intercept[Exception](new Pipeline(spark, notifier).run(cfg, in, out))
       assert(e.getMessage.contains("ps_query failed"), e.getMessage)

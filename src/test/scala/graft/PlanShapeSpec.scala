@@ -528,7 +528,7 @@ class PlanShapeSpec extends SparkSpec {
     // inject the dim's filter result into the fact scan's partition
     // filters, so only the matching directories are read — without it
     // the scan reads EVERY partition and the layout is wasted.
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = scratchDir("graft_dpp").toString
     try {
       val orders = spark.read.parquet(s"$sf/orders.parquet")
         .withColumn("om", date_format(col("o_orderdate").cast("date"), "yyyy-MM"))
@@ -559,7 +559,7 @@ class PlanShapeSpec extends SparkSpec {
     // not data. The v2 parquet source pushes these aggregates into the
     // scan (PushedAggregation) when no filter blocks it; pin the plan
     // and the values against the v1 computed twin.
-    val dir = java.nio.file.Files.createTempDirectory("graft_aggpd").toString
+    val dir = scratchDir("graft_aggpd").toString
     val prevV1 = spark.conf.get("spark.sql.sources.useV1SourceList")
     try {
       spark.read.parquet(s"$sf/orders.parquet")
@@ -716,7 +716,7 @@ class PlanShapeSpec extends SparkSpec {
       // the persisted-store path: history round-trips through parquet as
       // k-long sketches — text is structurally unreachable by the advance
       val docs = spark.read.parquet(s"$sf/documents.parquet")
-      val dir = java.nio.file.Files.createTempDirectory("graft-kmvstore").toString
+      val dir = scratchDir("graft-kmvstore").toString
       try {
         graft.operators.ScaleOps.kmvSketches(
             docs.filter(pmod(col("doc_id"), lit(2)) === 0), "source", "text",
@@ -780,7 +780,7 @@ class PlanShapeSpec extends SparkSpec {
     // column from it — the ledger's doc_id/batch metadata (and a fortiori
     // any history text, which the ledger never stores) stays out of the
     // replay guard's scan
-    val root = java.nio.file.Files.createTempDirectory("graft-q229pin").toString
+    val root = scratchDir("graft-q229pin").toString
     val dir = root + "/ledger" // must not pre-exist (empty-dir parquet read)
     try {
       val day1 = Seq((1L, "alpha text one"), (2L, "beta text two"))
@@ -813,7 +813,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q230: IVF append touches only assigned cells; the probe prunes partitions") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-q230pin").toString
+    val dir = scratchDir("graft-q230pin").toString
     try {
       // four fixed cells on the unit circle; base covers all of them
       val cents = Array(
@@ -1450,6 +1450,159 @@ class PlanShapeSpec extends SparkSpec {
       s"q282's budget cap must be a per-host window:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"q282 must not plan an all-pairs join:\n$p")
+  }
+
+  /** Every expression node the plan computes: one text kernel run per
+    * row is one node.
+    */
+  private def exprs(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+    plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+
+  private def kernels(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      name: String): Int =
+    exprs(plan).count(_.getClass.getSimpleName == name)
+
+  private def kernels(df: DataFrame, name: String): Int =
+    kernels(df.queryExecution.optimizedPlan, name)
+
+  /** The first step of redactPii's chain: one per chain. */
+  private def piiChains(df: DataFrame): Int =
+    exprs(df.queryExecution.optimizedPlan).count(e =>
+      e.getClass.getSimpleName == "RegExpReplace" && e.children(2).toString == "<EMAIL>")
+
+  test("corpus gates: prepare and clean run every text kernel once per row") {
+    import graft.operators.CorpusPipeline
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val cfg = CorpusPipeline.Config()
+    val prepared = CorpusPipeline.admitted(docs, "text", cfg, 0.9,
+      htmlInput = false, blocklist = Nil)
+    val p = prepared.queryExecution.optimizedPlan
+    // redactPii is a chain of four regexp_replace: one chain is four
+    assert(kernels(prepared, "RegExpReplace") == 4, s"the PII chain must run once:\n$p")
+    assert(kernels(prepared, "RepetitionRatioExpr") == 1, s"repetition_ratio must run once:\n$p")
+    assert(kernels(prepared, "TextProfileExpr") == 1, s"text_profile must run once:\n$p")
+    val cleaned = CorpusPipeline.gated(docs, "text", cfg)
+    assert(kernels(cleaned, "TextProfileExpr") == 1,
+      s"clean's text_profile must run once:\n${cleaned.queryExecution.optimizedPlan}")
+    // the html and blocklist arms: extraction (one array_join over the
+    // kept blocks) and the blocklist kernel run once each as well
+    val crawl = CorpusPipeline.admitted(docs, "text", cfg, 0.9,
+      htmlInput = true, blocklist = Seq("slow"))
+    val c = crawl.queryExecution.optimizedPlan
+    assert(kernels(crawl, "ArrayJoin") == 1, s"extractText must run once:\n$c")
+    assert(kernels(crawl, "WordBlocklistExpr") == 1, s"the blocklist kernel must run once:\n$c")
+    assert(piiChains(crawl) == 1 && kernels(crawl, "RepetitionRatioExpr") == 1 &&
+      kernels(crawl, "TextProfileExpr") == 1,
+      s"the html arm must not copy the scrub, repetition or profile kernels:\n$c")
+  }
+
+  test("corpus gates: the streaming twin runs text_profile and extractText once per row") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import graft.streaming.StreamingCorpus
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val text = "the quick brown fox jumps over the lazy dog and the cat watches it today"
+    /** The optimized plan of the stream's one micro-batch (no empty
+      * batch follows it to advance the watermark).
+      */
+    def batchPlan(out: DataFrame, feed: () => Unit) = {
+      val noData = "spark.sql.streaming.noDataMicroBatches.enabled"
+      val prev = spark.conf.get(noData)
+      spark.conf.set(noData, "false")
+      val q = out.writeStream.format("noop").start()
+      try {
+        feed()
+        q.processAllAvailable()
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+      } finally {
+        q.stop()
+        spark.conf.set(noData, prev)
+      }
+    }
+    val docs = MemoryStream[(Long, String, java.sql.Timestamp)]
+    val front = batchPlan(StreamingCorpus.clean(docs.toDF.toDF("doc_id", "text", "ts")),
+      () => docs.addData((1L, text, new java.sql.Timestamp(0L))))
+    assert(kernels(front, "TextProfileExpr") == 1,
+      s"the stream's gates must share one text_profile:\n$front")
+    val pages = MemoryStream[(Long, String)]
+    val html = s"<html><body><p>$text</p></body></html>"
+    val crawl = batchPlan(
+      StreamingCorpus.ingestCrawl(pages.toDF.toDF("doc_id", "text"),
+        repairEncoding = true, blocklist = Seq("slow")),
+      () => pages.addData((1L, html)))
+    assert(kernels(crawl, "ArrayJoin") == 1, s"ingestCrawl must extract once:\n$crawl")
+    assert(kernels(crawl, "FixMojibakeExpr") == 1 && kernels(crawl, "WordBlocklistExpr") == 1,
+      s"repair and blocklist must run once:\n$crawl")
+    // two composed calls nest fences without an observation-name clash
+    val more = MemoryStream[(Long, String)]
+    val both = batchPlan(
+      StreamingCorpus.clean(StreamingCorpus.ingestCrawl(more.toDF.toDF("doc_id", "text"))
+        .withColumn("ts", current_timestamp())),
+      () => more.addData((1L, html)))
+    assert(kernels(both, "TextProfileExpr") == 1 && kernels(both, "ArrayJoin") == 1,
+      s"composed stream fronts must not copy kernels:\n$both")
+  }
+
+  test("corpus dedup: the fingerprint exchange keeps the shuffle-partition count after AQE") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val cleaned = graft.operators.CorpusPipeline.clean(
+      spark.read.parquet(s"$sf/documents.parquet"))
+    // the barrier over the keep-min window is the frame the MinHash
+    // signature, banding and verify stages read: its partitions are
+    // their tasks
+    val barriers = cleaned.queryExecution.optimizedPlan.collect {
+      case l: LogicalRDD if l.output.exists(_.name == "fingerprint") => l.rdd.getNumPartitions
+    }
+    assert(barriers.nonEmpty, s"no fingerprint barrier:\n${cleaned.queryExecution.optimizedPlan}")
+    assert(barriers.forall(_ == n),
+      s"the exact-dedup barrier must keep $n partitions, got $barriers")
+  }
+
+  test("q174: rrfFuse runs each retriever once — documents scanned 2 times, not 4") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(funcName -> qe.executedPlan)
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    /** The parquet scans of a plan: as built (what `explain` shows), or
+      * as run (adaptive stage reuse reruns no reused exchange).
+      */
+    def scans(p: SparkPlan, asRun: Boolean): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => scans(if (asRun) a.executedPlan else a.initialPlan, asRun)
+      case s: QueryStageExec => scans(s.plan, asRun)
+      case _: ReusedExchangeExec => Nil
+      case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
+      case other => other.children.flatMap(scans(_, asRun))
+    }
+    spark.listenerManager.register(listener)
+    try {
+      run("q174_hybrid_rrf").collect()
+      org.apache.spark.sql.graft.ListenerProbe.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // the fused rows come from the final collect and the pool barriers
+    // it reads (the corpus-statistics `head` inside bm25 and q174's
+    // query-vector `head` are separate lookups). BM25 scans documents
+    // twice (term and document frequencies); the cosine pool scans the
+    // embeddings once. Adaptive stage reuse shares BM25's exchanges
+    // between the two sides of an unbarriered self-join at run time,
+    // but the cosine pool has no exchange to reuse: it ran twice.
+    val fused = plans.toArray.toSeq.collect {
+      case (f: String, p: SparkPlan) if f == "collect" || f == "localCheckpoint" => f -> p
+    }
+    def count(table: String, asRun: Boolean): Int =
+      fused.map(fp => scans(fp._2, asRun).count(_ == table)).sum
+    val report = Seq("documents.parquet", "embeddings.parquet").map(t =>
+      s"$t: ${count(t, asRun = false)} built, ${count(t, asRun = true)} run").mkString("; ")
+    assert(count("documents.parquet", asRun = false) == 2, report)
+    assert(count("embeddings.parquet", asRun = false) == 1, report)
+    assert(count("embeddings.parquet", asRun = true) == 1, report)
   }
 
   test("whole-stage codegen covers the aggregation pipeline of q01") {

@@ -117,7 +117,7 @@ class PropertySpec extends SparkSpec {
       // actually writes; empty string is EXCLUDED (Spark CSV cannot
       // distinguish "" from null on read — a real, documented limitation)
       val cleaned = Cleaner.clean(toDf(rows)).filter(cols.map(c => col(c) =!= "").reduce(_ && _))
-      val dir = java.nio.file.Files.createTempDirectory("roundtrip").toString
+      val dir = scratchDir("roundtrip").toString
       cleaned.write.option("header", "true").mode("overwrite").csv(s"$dir/c1")
       val c1 = spark.read.option("header", "true").csv(s"$dir/c1")
       c1.write.mode("overwrite").parquet(s"$dir/p")

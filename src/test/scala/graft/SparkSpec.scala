@@ -1,6 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session keeps
@@ -22,9 +25,32 @@ object SparkSpec {
   val sf: String = sys.env.getOrElse("GRAFT_TEST_SF", "/root/testdata/sf0.001")
 }
 
-abstract class SparkSpec extends AnyFunSuite {
+abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf: String = SparkSpec.sf
+
+  private var scratchRoot: Option[Path] = None
+  private var scratchDirs = 0
+
+  /** A fresh directory for the suite's scratch files (tables, stream
+    * checkpoints, written outputs). All of them live under one `graft-*`
+    * tree in the temp dir, deleted after the suite. Paths stay short:
+    * plan strings abbreviate a scan's location to 100 characters, and
+    * some plan pins look for a directory name in it.
+    */
+  def scratchDir(prefix: String): Path = synchronized {
+    val root = scratchRoot.getOrElse {
+      val r = Files.createTempDirectory("graft-")
+      scratchRoot = Some(r)
+      r
+    }
+    scratchDirs += 1
+    Files.createDirectory(root.resolve(s"$prefix-$scratchDirs"))
+  }
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally synchronized(scratchRoot).foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
 
   /** Epoch seconds from the events table's `ts`, whichever physical
     * type the fixture generation stored (TIMESTAMP(NANOS) read as nanos

@@ -9,7 +9,7 @@ import graft.SparkSpec
 class SinksSpec extends SparkSpec {
 
   test("partitioned parquet write prunes partitions at planning time") {
-    val dir = Files.createTempDirectory("part_sink").toString
+    val dir = scratchDir("part_sink").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .withColumn("lang_part", coalesce(col("lang"), lit("und")))
     Sinks.parquetPartitioned(docs, dir, Seq("lang_part"))
@@ -32,10 +32,10 @@ class SinksSpec extends SparkSpec {
   test("format flip: row formats -> parquet, columnar formats -> csv") {
     import spark.implicits._
     val df = Seq(("a", 1L), ("b", 2L)).toDF("k", "v")
-    val d1 = Files.createTempDirectory("flip1").toString
-    val d2 = Files.createTempDirectory("flip2").toString
-    val d3 = Files.createTempDirectory("flip3").toString
-    val d4 = Files.createTempDirectory("flip4").toString
+    val d1 = scratchDir("flip1").toString
+    val d2 = scratchDir("flip2").toString
+    val d3 = scratchDir("flip3").toString
+    val d4 = scratchDir("flip4").toString
     assert(Sinks.writeFlipped(df, "csv", d1) == "parquet")
     assert(Sinks.writeFlipped(df, "parquet", d2) == "csv")
     assert(Sinks.writeFlipped(df, "json", d3) == "parquet")
@@ -48,8 +48,8 @@ class SinksSpec extends SparkSpec {
   test("json and orc sources/sinks round-trip through the format dispatch") {
     import spark.implicits._
     val df = Seq(("a", 1L, 1.5), ("b", 2L, 2.5)).toDF("k", "v", "x")
-    val dj = Files.createTempDirectory("io_json").toString
-    val do_ = Files.createTempDirectory("io_orc").toString
+    val dj = scratchDir("io_json").toString
+    val do_ = scratchDir("io_orc").toString
     Sinks.json(df, dj)
     Sinks.orc(df, do_)
     val viaJson = Sources.read(spark, "json", dj)
@@ -63,7 +63,7 @@ class SinksSpec extends SparkSpec {
 
   test("text and binary sources: raw-corpus lines and whole-file bytes through the dispatch") {
     import java.nio.file.{Files => JFiles, Paths}
-    val d = Files.createTempDirectory("io_raw").toString
+    val d = scratchDir("io_raw").toString
     JFiles.write(Paths.get(d, "a.txt"), "line one\nline two\n".getBytes("UTF-8"))
     JFiles.write(Paths.get(d, "b.txt"), "line three\n".getBytes("UTF-8"))
     val lines = Sources.read(spark, "text", d)
@@ -82,7 +82,7 @@ class SinksSpec extends SparkSpec {
   }
 
   test("compact rewrites a fragmented directory to the target file count, data intact") {
-    val dir = Files.createTempDirectory("compact").toString
+    val dir = scratchDir("compact").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     docs.repartition(64).write.mode("overwrite").parquet(dir)
     def dataFiles() = new java.io.File(dir).listFiles()

@@ -32,7 +32,7 @@ class WarcSourceSpec extends SparkSpec {
     Files.write(new java.io.File(dir, name).toPath, bytes)
 
   test("multi-record file: http responses unwrap, non-http records pass through") {
-    val dir = Files.createTempDirectory("warcspec").toFile
+    val dir = scratchDir("warcspec").toFile
     // multibyte body: content-length counts BYTES, not chars
     val bodyA = "<html><body>café € page</body></html>"
     val warc =
@@ -76,7 +76,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test(".warc.gz: concatenated per-record gzip members decode as one stream") {
-    val dir = Files.createTempDirectory("warcgz").toFile
+    val dir = scratchDir("warcgz").toFile
     def gz(s: String): Array[Byte] = {
       val bo = new java.io.ByteArrayOutputStream()
       val g = new java.util.zip.GZIPOutputStream(bo)
@@ -134,7 +134,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("warcStreamed: constant-memory path emits byte-identical rows to warc (plain + gz)") {
-    val dir = Files.createTempDirectory("warcstream").toFile
+    val dir = scratchDir("warcstream").toFile
     def gz(s: String): Array[Byte] = {
       val bo = new java.io.ByteArrayOutputStream()
       val g = new java.util.zip.GZIPOutputStream(bo)
@@ -167,7 +167,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("framing errors through the sources name the offending FILE") {
-    val dir = Files.createTempDirectory("warcbadfile").toFile
+    val dir = scratchDir("warcbadfile").toFile
     writeFile(dir, "ok.warc",
       record("response", Some("https://e.example.com/1"),
         httpBlock("<p>fine</p>")).getBytes(UTF_8))
@@ -190,7 +190,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("warcStreamed: an abandoned iterator (limit plan) completes cleanly") {
-    val dir = Files.createTempDirectory("warcabandon").toFile
+    val dir = scratchDir("warcabandon").toFile
     // many records in one file so a limit(1) abandons the stream mid-file;
     // the task-completion hook owns the close — no error, no hang
     val many = (1 to 50).map(i =>
@@ -202,7 +202,7 @@ class WarcSourceSpec extends SparkSpec {
   }
 
   test("format dispatch: 'warc' routes, unknown still fails typed") {
-    val dir = Files.createTempDirectory("warcdisp").toFile
+    val dir = scratchDir("warcdisp").toFile
     writeFile(dir, "seg.warc",
       record("response", Some("https://d.example.com/1"),
         httpBlock("<p>x</p>")).getBytes(UTF_8))

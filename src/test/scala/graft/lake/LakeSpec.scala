@@ -10,7 +10,7 @@ class LakeSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): VersionedTable = {
-    val root = Files.createTempDirectory("graft-lake-spec").toString
+    val root = scratchDir("graft-lake-spec").toString
     VersionedTable(root, "k")
   }
 
@@ -130,7 +130,7 @@ class LakeSpec extends SparkSpec {
     assert(t.tableCount() == t.read(spark).count())
     assert(t.tableCount(asOf = Some(1)) == 123)
     assert(VersionedTable(
-      Files.createTempDirectory("graft-lake-empty").toString, "k").tableCount() == 0L)
+      scratchDir("graft-lake-empty").toString, "k").tableCount() == 0L)
   }
 
   test("compactByRange restores pruning power after interleaved appends") {
@@ -154,7 +154,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("compactZOrder + declared stats: zone pruning works on BOTH dimensions") {
-    val root = Files.createTempDirectory("graft-lake-z").toString
+    val root = scratchDir("graft-lake-z").toString
     val t = VersionedTable(root, "k", statsCols = Seq("v"))
     // k and v deliberately anti-correlated so one-dimensional range
     // clustering cannot serve both
@@ -179,7 +179,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("stats columns absent from a batch (pre-evolution) scan conservatively") {
-    val root = Files.createTempDirectory("graft-lake-st").toString
+    val root = scratchDir("graft-lake-st").toString
     val t = VersionedTable(root, "k", statsCols = Seq("w"))
     t.append(rows(1 to 50, "a")) // (k, tag, v): no `w` column yet
     t.append((51 to 60).map(i => (i.toLong, "b", 0.0, i * 1.0))
@@ -191,7 +191,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("bloom index: point reads skip files the value never landed in") {
-    val root = Files.createTempDirectory("graft-lake-bloom").toString
+    val root = scratchDir("graft-lake-bloom").toString
     val t = VersionedTable(root, "k", bloomCols = Seq("tag"))
     // 4096 rows over 1024 distinct tags in a random 8-file layout:
     // each tag lands in at most 4 files, but every file's key/value
@@ -208,7 +208,7 @@ class LakeSpec extends SparkSpec {
     assert(t.readEquals(spark, "tag", "no-such-tag").inputFiles.isEmpty)
 
     // files committed before the bloom declaration scan conservatively
-    val root2 = Files.createTempDirectory("graft-lake-bloom2").toString
+    val root2 = scratchDir("graft-lake-bloom2").toString
     VersionedTable(root2, "k").append(rows(1 to 50, "old"))
     val t2 = VersionedTable(root2, "k", bloomCols = Seq("tag"))
     t2.append(rows(51 to 60, "new"))
@@ -221,7 +221,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("refreshMix: budgets attained, idempotent, re-attained across upserts") {
-    val root = Files.createTempDirectory("graft-lake-mix").toString
+    val root = scratchDir("graft-lake-mix").toString
     val t = VersionedTable(root, "k")
     // two strata with token counts 10..~400; budgets well under supply
     def feed(r: Range) = r.map { i =>
@@ -325,7 +325,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("CHECK constraints: violating commits abort with no version and no orphans") {
-    val root = Files.createTempDirectory("graft-lake-ck").toString
+    val root = scratchDir("graft-lake-ck").toString
     val t = VersionedTable(root, "k", checks = Seq("v >= 0", "length(tag) > 0"))
     t.append(rows(1 to 50, "ok"))
     assert(t.currentVersion() == 1)
@@ -355,7 +355,7 @@ class LakeSpec extends SparkSpec {
 
   test("materialized aggregate: incremental refresh tracks the table exactly") {
     val t = freshTable()
-    val aggRoot = Files.createTempDirectory("graft-lake-magg").toString
+    val aggRoot = scratchDir("graft-lake-magg").toString
     val m = new MaterializedAgg(t, aggRoot, Seq("tag"), Seq("v"))
     def recompute() = IncrementalAgg.init(t.read(spark), Seq("tag"), Seq("v"))
     def snap(df: org.apache.spark.sql.DataFrame) =
@@ -380,7 +380,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("deleteRange rewrites only overlapping files; feed and time travel agree") {
-    val root = Files.createTempDirectory("graft-lake-del").toString
+    val root = scratchDir("graft-lake-del").toString
     val t = VersionedTable(root, "k")
     t.append(rows(1 to 100, "a").repartitionByRange(4, $"k")
       .sortWithinPartitions($"k"))
@@ -435,7 +435,7 @@ class LakeSpec extends SparkSpec {
   }
 
   test("zero-file snapshots keep the manifest schema on every read") {
-    val t = VersionedTable(Files.createTempDirectory("graft-lake-zero").toString, "k",
+    val t = VersionedTable(scratchDir("graft-lake-zero").toString, "k",
       statsCols = Seq("v"), bloomCols = Seq("tag"))
     assert(intercept[IllegalArgumentException](t.read(spark)).getMessage
       .contains("no version has been committed"))

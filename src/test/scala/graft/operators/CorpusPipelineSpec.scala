@@ -115,6 +115,67 @@ class CorpusPipelineSpec extends SparkSpec {
     assert(survivors.nonEmpty, "the fixture must keep some clean docs")
   }
 
+  /** prepare as a chain of plain filters, one per gate, with no fence
+    * and no partition floor — the formulation the optimizer rewrites
+    * into per-conjunct kernel copies. The reference for the fenced path.
+    */
+  private def unfencedPrepare(in: org.apache.spark.sql.DataFrame, maxRepetition: Double,
+      htmlInput: Boolean, blocklist: Seq[String], evalDocs: Option[org.apache.spark.sql.DataFrame],
+      chunk: Option[(Int, Int)]): org.apache.spark.sql.DataFrame = {
+    val cfg = CorpusPipeline.Config()
+    val textual =
+      if (!htmlInput) in
+      else in.withColumn("text", HtmlText.extractText(col("text")))
+        .filter(length(col("text")) > 0)
+    val admitted =
+      if (blocklist.isEmpty) textual
+      else TextAnalysis.wordBlocklistGate(textual, "text", blocklist)
+        .filter(!col("blocked")).drop("bad_terms", "n_bad_tokens", "blocked")
+    val scrubbed = admitted.withColumn("text", TextAnalysis.redactPii(col("text")))
+      .filter(TextAnalysis.repetitionRatio(col("text")) <= maxRepetition)
+    val gated = TextAnalysis.annotate(scrubbed, "text")
+      .filter(col("n_tokens") >= cfg.minTokens && col("quality") >= cfg.minQuality &&
+        col("lang_pred").isin(cfg.langs: _*))
+    val exact = Dedup.exactKeepMin(gated, Seq("fingerprint"), "doc_id")
+    val cleaned = Dedup.minHashDedup(exact, "doc_id", "text", threshold = cfg.nearDupThreshold)
+    val decontaminated = evalDocs
+      .map(e => Dedup.decontaminate(cleaned, e, "doc_id", "text")).getOrElse(cleaned)
+    chunk match {
+      case Some((size, overlap)) => TextAnalysis.chunk(decontaminated, "doc_id", "text",
+        size, overlap, carry = Seq("lang_pred", "quality"))
+      case None => decontaminated
+    }
+  }
+
+  test("prepare keeps the ids of the unfenced filter-by-filter formulation on every arm") {
+    val evalSet = docs.orderBy("doc_id").limit(3)
+      .select((col("doc_id") + 1000000).as("doc_id"), col("text"))
+    // the fixture is plain text: wrap it in markup (with a nav block
+    // extraction must drop) so the html arm keeps documents
+    val pages = docs.withColumn("text", concat(
+      lit("<html><body><nav><a href='/'>home</a></nav><p>"), col("text"), lit("</p></body></html>")))
+    val arms = Seq(
+      ("default", docs, 0.9, false, Nil, None, None),
+      ("htmlInput", pages, 0.9, true, Nil, None, None),
+      ("blocklist", docs, 0.9, false, Seq("slow"), None, None),
+      ("maxRepetition = 0.5", docs, 0.5, false, Nil, None, None),
+      // the fixture's repetition ratios stay under 0.05, so only a
+      // tighter bound makes the repetition conjunct drop documents
+      ("maxRepetition = 0.01", docs, 0.01, false, Nil, None, None),
+      ("evalDocs + chunk", docs, 0.9, false, Nil, Some(evalSet), Some((40, 10))))
+    for ((arm, in, maxRep, html, block, evalDocs, chunk) <- arms) {
+      def keys(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
+        df.select(col("doc_id"),
+            (if (chunk.isDefined) col("chunk_idx") else lit(0)).cast("int"))
+          .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
+      val got = keys(CorpusPipeline.prepare(in, maxRepetition = maxRep, htmlInput = html,
+        blocklist = block, evalDocs = evalDocs, chunk = chunk))
+      val want = keys(unfencedPrepare(in, maxRep, html, block, evalDocs, chunk))
+      assert(want.nonEmpty, s"$arm: the fixture must keep some documents")
+      assert(got == want, s"$arm: fenced prepare kept different rows")
+    }
+  }
+
   test("clean() pins nothing in the CacheManager (leak-free composition)") {
     val cm = spark.sharedState.cacheManager
     cm.clearCache()

@@ -9,7 +9,7 @@ class DedupLedgerSpec extends SparkSpec {
   import spark.implicits._
 
   test("ledger ingest: in-batch dedup, cross-batch dedup, idempotence") {
-    val ledger = Files.createTempDirectory("dedup_ledger").resolve("ledger").toString
+    val ledger = scratchDir("dedup_ledger").resolve("ledger").toString
 
     // batch 1: one internal duplicate pair (2 ~ normalization of 1)
     val b1 = Seq(
@@ -41,7 +41,7 @@ class DedupLedgerSpec extends SparkSpec {
   }
 
   test("filterNew is pure: does not grow the ledger") {
-    val ledger = Files.createTempDirectory("dedup_ledger2").resolve("ledger").toString
+    val ledger = scratchDir("dedup_ledger2").resolve("ledger").toString
     val b = Seq((1L, "doc one"), (2L, "doc two")).toDF("doc_id", "text")
     assert(DedupLedger.filterNew(spark, ledger, b).count() == 2)
     assert(DedupLedger.read(spark, ledger).count() == 0, "filterNew must not write")

@@ -102,7 +102,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("persisted IVF index prunes partitions and matches in-memory results") {
-    val dir = java.nio.file.Files.createTempDirectory("ivf_idx").toString
+    val dir = scratchDir("ivf_idx").toString
     val cents = Similarity.centroids(emb, "vec_id", "embedding", 16)
     val q = emb.filter(col("vec_id") === 1).select("embedding").head.getSeq[Float](0).toArray
     val rest = emb.filter(col("vec_id") =!= 1)
@@ -122,7 +122,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("appendIvfIndex: appended index is row-identical to a full rebuild; drift gates retrain") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ivf_app").toString
+    val dir = scratchDir("ivf_app").toString
     val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8, iters = 2)
     // split the corpus: first half is the initial index, second half the batch
     val initial = emb.filter(col("vec_id") % 2 === 0)
@@ -158,7 +158,7 @@ class SimilaritySpec extends SparkSpec {
     // spacing) must raise the retrain flag
     val shifted = batch.withColumn("embedding",
       transform(col("embedding"), x => x + lit(10.0f)))
-    val dir2 = java.nio.file.Files.createTempDirectory("ivf_app2").toString
+    val dir2 = scratchDir("ivf_app2").toString
     Similarity.writeIvfIndex(Similarity.ivfIndex(initial, "vec_id", "embedding", cents), dir2)
     val drift2 = Similarity.appendIvfIndex(shifted, "vec_id", "embedding", cents, dir2)
     assert(drift2.retrain, s"shifted batch should signal retrain, got ${drift2.maxRelativeShift}")

@@ -95,8 +95,8 @@ class StreamingCorpusSpec extends SparkSpec {
           "HTTP/1.1 200 OK\r\nContent-Type: image/png\r\n\r\nPNG") // non-html drops
     val seg2 = rec("https://other.example.com/b",
       http("<p>page two body carries enough visible words to clear the block gate.</p>"))
-    val dir = java.nio.file.Files.createTempDirectory("warcstreamspec").toFile
-    val ckpt = java.nio.file.Files.createTempDirectory("warcstreamckpt").toFile
+    val dir = scratchDir("warcstreamspec").toFile
+    val ckpt = scratchDir("warcstreamckpt").toFile
     java.nio.file.Files.write(new java.io.File(dir, "seg1.warc").toPath,
       seg1.getBytes("UTF-8"))
     // the binaryFile STREAMING source requires the schema up front
@@ -351,9 +351,9 @@ class StreamingCorpusSpec extends SparkSpec {
   }
 
   test("file-source pipeline survives checkpointed restart without duplicating output") {
-    val srcDir = Files.createTempDirectory("sc_src").toString
-    val outDir = Files.createTempDirectory("sc_out").toString
-    val ckpt = Files.createTempDirectory("sc_ckpt").toString
+    val srcDir = scratchDir("sc_src").toString
+    val outDir = scratchDir("sc_out").toString
+    val ckpt = scratchDir("sc_ckpt").toString
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("ts", TimestampType)))
@@ -391,7 +391,7 @@ class StreamingCorpusSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.Similarity
-    val dir = Files.createTempDirectory("semstream").toFile.getAbsolutePath
+    val dir = scratchDir("semstream").toFile.getAbsolutePath
     val store = s"$dir/store"
     val seeds = Seq((0L, Array(1f, 0f, 0f, 0f)), (1L, Array(0f, 1f, 0f, 0f)))
       .toDF("id", "v")
@@ -433,7 +433,7 @@ class StreamingCorpusSpec extends SparkSpec {
   test("winnowDedupStream: passage dedup vs the fp store; replayed ids are no-ops") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("winstream").toFile.getAbsolutePath
+    val dir = scratchDir("winstream").toFile.getAbsolutePath
     val store = s"$dir/store"
     val passage = "the copied passage rides along unchanged through every plagiarized document"
     val emitted = scala.collection.mutable.ArrayBuffer[(Long, Long)]()
@@ -487,7 +487,7 @@ class StreamingCorpusSpec extends SparkSpec {
 
   test("winnowAdvanceBatch: every crash/replay interleaving recovers exactly once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("winreplay").toFile.getAbsolutePath
+    val dir = scratchDir("winreplay").toFile.getAbsolutePath
     val fps = StreamingCorpus.winnowFpTable(s"$dir/store")
     val dfs = StreamingCorpus.winnowDfTable(s"$dir/store")
     val passage = "the copied passage rides along unchanged through every plagiarized document"
@@ -549,7 +549,7 @@ class StreamingCorpusSpec extends SparkSpec {
 
   test("spanAdvanceBatch: span-cut vs history; time-traveled replay re-delivers identically") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("spanstream").toFile.getAbsolutePath
+    val dir = scratchDir("spanstream").toFile.getAbsolutePath
     val store = StreamingCorpus.spanStoreTable(s"$dir/store")
     val run = "alpha beta gamma delta epsilon zeta eta theta" // 8 tokens = one w=8 shingle+
     val cleanedLog = scala.collection.mutable.ArrayBuffer[(Long, Long, String)]()

@@ -40,8 +40,8 @@ class StreamingCrawlSpec extends SparkSpec {
     Seq("https://a.com/p3", "https://a.com/x").toDF("url")
 
   private def freshTables(): (VersionedTable, VersionedTable) = (
-    VersionedTable(Files.createTempDirectory("graft-crawl-ledger").toString, "url_key"),
-    VersionedTable(Files.createTempDirectory("graft-crawl-visited").toString, "url_key"))
+    VersionedTable(scratchDir("graft-crawl-ledger").toString, "url_key"),
+    VersionedTable(scratchDir("graft-crawl-visited").toString, "url_key"))
 
   /** The batch operator run over the same two batches — the parity
     * reference (advance ∘ advance, exactly the q277 shape).
@@ -80,7 +80,7 @@ class StreamingCrawlSpec extends SparkSpec {
   test("one foreachBatch stream advances both tables; parity with the batch operator") {
     implicit val sqlCtx = spark.sqlContext
     val (ledger, visited) = freshTables()
-    val ckpt = Files.createTempDirectory("graft-crawl-ckpt").toString
+    val ckpt = scratchDir("graft-crawl-ckpt").toString
     val in = MemoryStream[(String, String)]
     val q = StreamingCrawl.frontierStream(
       in.toDF.toDF("url", "kind"), ledger, visited, rules, "crawl-s", ckpt)

@@ -41,8 +41,8 @@ class StreamingErSpec extends SparkSpec {
     newestFields = Seq(("price", "ver")))
 
   private def freshTables(): (VersionedTable, VersionedTable) = (
-    VersionedTable(Files.createTempDirectory("graft-ser-rows").toString, "id"),
-    VersionedTable(Files.createTempDirectory("graft-ser-state").toString, "__ent"))
+    VersionedTable(scratchDir("graft-ser-rows").toString, "id"),
+    VersionedTable(scratchDir("graft-ser-state").toString, "__ent"))
 
   private def rebuildGolden(all: DataFrame): Seq[org.apache.spark.sql.Row] =
     EntityResolution.goldenRecord(
@@ -53,7 +53,7 @@ class StreamingErSpec extends SparkSpec {
   test("streamed batches equal the batch rebuild, including a bridging merge") {
     implicit val sqlCtx = spark.sqlContext
     val (rows, state) = freshTables()
-    val ckpt = Files.createTempDirectory("graft-ser-ckpt").toString
+    val ckpt = scratchDir("graft-ser-ckpt").toString
     val in = MemoryStream[(Long, String, String, String, Double, Long)]
     val q = StreamingEr.resolveStream(
       in.toDF.toDF("id", "blk", "f1", "f2", "price", "ver"),

@@ -40,8 +40,8 @@ class StreamingFlagshipSpec extends SparkSpec {
   private def benchStore = Dedup.heldOutShingles(bench, "doc_id", "text", w = 8)
 
   private def freshTables(): (VersionedTable, VersionedTable) = (
-    VersionedTable(Files.createTempDirectory("graft-flag-fps").toString, "id"),
-    VersionedTable(Files.createTempDirectory("graft-flag-ledger").toString, "doc_id"))
+    VersionedTable(scratchDir("graft-flag-fps").toString, "id"),
+    VersionedTable(scratchDir("graft-flag-ledger").toString, "doc_id"))
 
   /** The one-shot batch composition over the union — the parity
     * reference (q272 stages 5–9 on the same staged input).

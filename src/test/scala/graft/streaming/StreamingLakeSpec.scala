@@ -12,7 +12,7 @@ class StreamingLakeSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshTable(): VersionedTable =
-    VersionedTable(Files.createTempDirectory("graft-slake").toString, "k")
+    VersionedTable(scratchDir("graft-slake").toString, "k")
 
   test("upsertIfNew applies a batch once; the replay is a version-less no-op") {
     val t = freshTable()
@@ -46,7 +46,7 @@ class StreamingLakeSpec extends SparkSpec {
   test("streamed upserts equal the same batches applied by batch merge") {
     implicit val sqlCtx = spark.sqlContext
     val t = freshTable()
-    val ckpt = Files.createTempDirectory("slake-ckpt").toString
+    val ckpt = scratchDir("slake-ckpt").toString
     val in = MemoryStream[(Long, String)]
     val q = StreamingLake.upsertStream(
       in.toDF.toDF("k", "v"), t, "stream-a", ckpt)
@@ -70,9 +70,9 @@ class StreamingLakeSpec extends SparkSpec {
   test("streamed upserts maintain the materialized aggregate batch by batch") {
     implicit val sqlCtx = spark.sqlContext
     val t = freshTable()
-    val aggRoot = Files.createTempDirectory("slake-magg").toString
+    val aggRoot = scratchDir("slake-magg").toString
     val m = new graft.lake.MaterializedAgg(t, aggRoot, Seq("g"), Seq("x"))
-    val ckpt = Files.createTempDirectory("slake-ckpt3").toString
+    val ckpt = scratchDir("slake-ckpt3").toString
     val in = MemoryStream[(Long, String, Double)]
     val q = StreamingLake.upsertStreamMaintaining(
       in.toDF.toDF("k", "g", "x"), t, m, "stream-m", ckpt)
@@ -94,8 +94,8 @@ class StreamingLakeSpec extends SparkSpec {
   }
 
   test("checkpointed restart re-delivers the last batch; the table does not double-apply") {
-    val srcDir = Files.createTempDirectory("slake-src").toString
-    val ckpt = Files.createTempDirectory("slake-ckpt2").toString
+    val srcDir = scratchDir("slake-src").toString
+    val ckpt = scratchDir("slake-ckpt2").toString
     val t = freshTable()
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
@@ -126,12 +126,12 @@ class StreamingLakeSpec extends SparkSpec {
 
   test("maintenance loop end-to-end: stream → CHECK → IVM → z-order → vacuum → time travel") {
     implicit val sqlCtx = spark.sqlContext
-    val rootDir = Files.createTempDirectory("slake-loop").toString
+    val rootDir = scratchDir("slake-loop").toString
     val t = VersionedTable(rootDir, "k",
       statsCols = Seq("x"), checks = Seq("x >= 0", "g IS NOT NULL"))
     val m = new graft.lake.MaterializedAgg(
-      t, Files.createTempDirectory("slake-loop-agg").toString, Seq("g"), Seq("x"))
-    val ckpt = Files.createTempDirectory("slake-loop-ckpt").toString
+      t, scratchDir("slake-loop-agg").toString, Seq("g"), Seq("x"))
+    val ckpt = scratchDir("slake-loop-ckpt").toString
 
     // 1) streamed exactly-once feed maintaining the aggregate: three
     // micro-batches, keys interleaved so every file's x-zone spans the

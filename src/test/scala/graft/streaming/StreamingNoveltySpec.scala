@@ -32,8 +32,8 @@ class StreamingNoveltySpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   private def freshTables(): (VersionedTable, VersionedTable) = (
-    VersionedTable(Files.createTempDirectory("graft-snv-store").toString, "__h"),
-    VersionedTable(Files.createTempDirectory("graft-snv-scores").toString, "doc_id"))
+    VersionedTable(scratchDir("graft-snv-store").toString, "__h"),
+    VersionedTable(scratchDir("graft-snv-scores").toString, "doc_id"))
 
   private def fullNovelty: Map[Long, (Long, Long, Double)] =
     Dedup.ngramNovelty(batch1.unionByName(batch2), "doc_id", "text", w = 8)
@@ -43,7 +43,7 @@ class StreamingNoveltySpec extends SparkSpec {
   test("streamed arrival-time scores equal the batch operator; store equals full minima") {
     implicit val sqlCtx = spark.sqlContext
     val (store, scores) = freshTables()
-    val ckpt = Files.createTempDirectory("graft-snv-ckpt").toString
+    val ckpt = scratchDir("graft-snv-ckpt").toString
     val in = MemoryStream[(Long, String)]
     val q = StreamingNovelty.noveltyStream(
       in.toDF.toDF("doc_id", "text"), store, scores, "doc_id", "text", 8,

@@ -51,8 +51,8 @@ class StreamingSplitSpec extends SparkSpec {
           col("id_b") === col("__b"), "left_semi"))
 
   private def freshTables(): (VersionedTable, VersionedTable) = (
-    VersionedTable(Files.createTempDirectory("graft-ssp-store").toString, "doc_id"),
-    VersionedTable(Files.createTempDirectory("graft-ssp-conf").toString, "cluster_rep"))
+    VersionedTable(scratchDir("graft-ssp-store").toString, "doc_id"),
+    VersionedTable(scratchDir("graft-ssp-conf").toString, "cluster_rep"))
 
   /** Day-0 assignment (what the stream's bootstrap batch must produce)
     * and three reps chosen so batch 2 can exercise every arm: repA/repB
@@ -85,7 +85,7 @@ class StreamingSplitSpec extends SparkSpec {
     val pairsOf: (DataFrame, DataFrame) => DataFrame = bridgedPairs(bridges)
 
     val (store, conflicts) = freshTables()
-    val ckpt = Files.createTempDirectory("graft-ssp-ckpt").toString
+    val ckpt = scratchDir("graft-ssp-ckpt").toString
     val in = MemoryStream[Long]
     val q = StreamingSplit.splitStream(
       in.toDF.toDF("doc_id"), store, conflicts, pairsOf, cfg, "split-stream", ckpt)

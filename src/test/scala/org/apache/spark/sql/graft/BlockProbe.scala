@@ -14,3 +14,10 @@ object BlockProbe {
     sc.env.blockManager.master.getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
       .flatMap(_.asRDDId).map(_.rddId).toSet
 }
+
+/** Test-side reach into the listener bus, which is private to Spark. */
+object ListenerProbe {
+
+  /** Waits until every event posted so far has reached its listeners. */
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
