@@ -5,9 +5,17 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HadoopPath}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.hadoop.metadata.{ColumnPath, ParquetMetadata}
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnotation, IntLogicalTypeAnnotation}
+import org.apache.parquet.schema.PrimitiveType
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.SparkBridge
 import org.apache.spark.sql.types.StructType
 
 /** One data file of a table snapshot, with its zone-map stats: the key
@@ -70,12 +78,17 @@ final case class Snapshot(
   *     single-winner, no torn manifest. (On an object store this
   *     primitive would come from a conditional PUT or a catalog
   *     service; the protocol is unchanged.)
-  *   - Stats are collected by scanning ONLY the files the commit just
-  *     wrote (grouped by `input_file_name`), never the whole table.
+  *   - A commit's file stats come from the parquet footers it just
+  *     wrote (row counts, per-row-group min/max), never from reading the
+  *     data back: at 100 TB an overwrite of ~10⁵ files costs one listing
+  *     and ~10⁵ footer reads of a few KB on the driver, 8 in flight —
+  *     O(new files) in metadata. `writeFiles` says where each field
+  *     comes from and what is conservative.
   *
-  * The key column must be numeric (cast to long for zone stats) — the
-  * usual shape for an upsert key. Multi-column or string keys would
-  * store min/max as canonical strings; not needed here.
+  * The key column should be a plain integer — the usual shape for an
+  * upsert key — for its zone to prune. Any other numeric key still works
+  * (merges compare it cast to long) but its files carry the full zone,
+  * so every merge rewrites and every range read scans them.
   */
 final class VersionedTable private (
     val root: String,
@@ -227,65 +240,95 @@ final class VersionedTable private (
     }
   }
 
-  /** Write `df` under the next version's data dir and collect per-file
-    * zone stats by scanning ONLY the new files.
+  /** Write `df` as the next version's data files and build their
+    * entries from the parquet footers that write just produced — file
+    * metadata only, never a re-read of the data:
+    *  - `path`: the file's URL-encoded location, the form
+    *    `input_file_name()` gives, which `changes` and `vacuum` key on.
+    *  - `rows`: the sum of the file's row-group row counts. A 0-row file
+    *    (the schema-only file of an empty write) gets no entry.
+    *  - `minKey`/`maxKey`: min/max of the key column's row-group
+    *    statistics, read as longs (exact beyond 2^53). A file whose keys
+    *    are all NULL gets the empty zone [Long.MaxValue, Long.MinValue],
+    *    which no merge or range selects — a NULL key matches neither. A
+    *    footer with no usable key bounds (no statistics, or a key that
+    *    is not a plain integer) gets the full zone, so every merge and
+    *    range read takes the file: conservative, never wrong.
+    *  - `colStats`: the declared stats columns' footer min/max as doubles
+    *    (integers, floats, decimals scaled). A column with no usable bound
+    *    in some row group — no statistic, all NULL, NaN, or a type whose
+    *    footer order is not Spark's numeric order — gets no entry, and
+    *    the file is always scanned for it.
+    *  - `blooms`: the one part that still reads the new data, a grouped
+    *    pass over the new files, run only when bloom columns are
+    *    declared and present in `df`.
+    * CHECK constraints ride the write job itself: an `observe` counts
+    * the violations of each check (SQL semantics: only `check IS FALSE`
+    * violates, NULL passes). Any violation deletes the data dir and
+    * aborts before a manifest exists — no version, no orphan files.
     */
   private def writeFiles(df: DataFrame, version: Int): Seq[FileEntry] = {
     val dir = dataDir(version)
-    df.write.mode("errorifexists").parquet(dir)
     val spark = df.sparkSession
-    val listed = spark.read.parquet(dir)
-    // stats/bloom columns the written frame actually has (schema
-    // evolution: a pre-evolution batch legitimately lacks late-added
-    // columns)
-    val present = statsCols.filter(listed.columns.contains)
-    val presentB = bloomCols.filter(listed.columns.contains)
-    val statAggs = present.flatMap(c =>
-      Seq(min(col(c).cast("double")).as(s"__lo_$c"), max(col(c).cast("double")).as(s"__hi_$c")))
-    val bloomAggs = presentB.map(c =>
-      graft.functions.BloomSketch.sketch(col(c).cast("string"), bloomBits).as(s"__bf_$c"))
-    // CHECK constraints ride the same single stats pass: a violation
-    // count per declared check (SQL semantics — NULL passes, only
-    // check IS FALSE violates)
-    val checkAggs = checks.zipWithIndex.map { case (c, i) =>
-      sum(when(expr(c) <=> lit(false), 1L).otherwise(0L)).as(s"__ck_$i")
+    val checked = if (checks.isEmpty) None else Some(Observation())
+    val violations = checks.zipWithIndex.map { case (c, i) =>
+      count(when(expr(c) <=> lit(false), 1)).as(s"__ck_$i")
     }
-    val aggs = Seq(
-      count(lit(1)).as("rows"),
-      min(col(keyCol).cast("long")).as("minKey"),
-      max(col(keyCol).cast("long")).as("maxKey")) ++ statAggs ++ bloomAggs ++ checkAggs
-    val bloomBase = 4 + present.size * 2
-    val checkBase = bloomBase + presentB.size
-    val perFile = listed
-      .groupBy(input_file_name().as("path"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // bounded: one row per file just written
-      .filter(_.getLong(1) > 0) // an all-empty write leaves a schema-only file
-    // enforce checks BEFORE the manifest exists: a violating batch
-    // leaves no committed version and no orphan data
-    val violated = checks.zipWithIndex
-      .map { case (c, i) => c -> perFile.map(_.getLong(checkBase + i)).sum }
-      .filter(_._2 > 0)
-    if (violated.nonEmpty) {
-      VersionDirs.deleteTree(Paths.get(dir))
-      throw new IllegalArgumentException(
-        "CHECK constraint violation, commit aborted: " +
-          violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
-    }
-    perFile
-      .map { r =>
-        val stats = present.zipWithIndex.flatMap { case (c, i) =>
-          val lo = 4 + i * 2
-          if (r.isNullAt(lo) || r.isNullAt(lo + 1)) None // all-null column in this file
-          else Some(c -> (r.getDouble(lo), r.getDouble(lo + 1)))
-        }.toMap
-        val blooms = presentB.zipWithIndex.map { case (c, j) =>
-          c -> graft.functions.BloomSketch.toBase64(
-            r.getSeq[Long](bloomBase + j).toArray)
-        }.toMap
-        FileEntry(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), stats, blooms)
+    checked.fold(df)(o => df.observe(o, violations.head, violations.tail: _*))
+      .write.mode("errorifexists")
+      // the manifest is the commit record: no `_SUCCESS` marker
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(dir)
+    checked.foreach { o =>
+      val counted = o.get
+      val violated = checks.zipWithIndex
+        .map { case (c, i) => c -> counted(s"__ck_$i").asInstanceOf[Long] }
+        .filter(_._2 > 0)
+      if (violated.nonEmpty) {
+        VersionDirs.deleteTree(Paths.get(dir))
+        throw new IllegalArgumentException(
+          "CHECK constraint violation, commit aborted: " +
+            violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
       }
-      .toSeq.sortBy(_.path)
+    }
+    import VersionedTable.{doubleBound, footerZone, longBound}
+    // stats columns the written frame actually has (schema evolution: a
+    // pre-evolution batch legitimately lacks late-added columns)
+    val present = statsCols.filter(df.columns.contains)
+    val blooms = bloomsByPath(df, dir)
+    VersionedTable.footers(spark, dir).map { case (path, meta) =>
+      val (minKey, maxKey) = footerZone(meta, keyCol)(longBound) match {
+        case None => (Long.MinValue, Long.MaxValue) // unknown: every merge and range takes it
+        case Some(None) => (Long.MaxValue, Long.MinValue) // all NULL: none does
+        case Some(Some(zone)) => zone
+      }
+      val stats = present.flatMap(c => footerZone(meta, c)(doubleBound).flatten.map(c -> _))
+      FileEntry(path, VersionedTable.rows(meta), minKey, maxKey, stats.toMap, blooms(path))
+    }
+  }
+
+  /** Bloom bitsets of each new file in `dir`, by path — the one grouped
+    * pass over freshly written data left in a commit, run only when a
+    * declared bloom column is present in `df`. It reads just those
+    * columns, under `df`'s types (no schema inference).
+    */
+  private def bloomsByPath(df: DataFrame, dir: String): String => Map[String, String] = {
+    val present = bloomCols.filter(df.columns.contains)
+    if (present.isEmpty) _ => Map.empty
+    else {
+      import graft.functions.BloomSketch
+      val sketches = present.map(c => BloomSketch.sketch(col(c).cast("string"), bloomBits).as(c))
+      df.sparkSession.read
+        .schema(StructType(present.map(c => df.schema(c).copy(nullable = true))))
+        .parquet(dir)
+        .groupBy(input_file_name().as("path"))
+        .agg(sketches.head, sketches.tail: _*)
+        .collect() // bounded: one row per file just written
+        .map(r => r.getString(0) -> present.zipWithIndex.map { case (c, j) =>
+          c -> BloomSketch.toBase64(r.getSeq[Long](j + 1).toArray)
+        }.toMap)
+        .toMap
+    }
   }
 
   // ------------------------------------------------------------- writes
@@ -732,9 +775,10 @@ final class VersionedTable private (
 
 object VersionedTable {
   /** Open (or lazily create on first commit) a table rooted at `root`.
-    * `statsCols` declares additional NUMERIC columns to zone-map per
-    * file (beyond the key, which is always mapped) — each costs two
-    * doubles per file in the manifest and buys file-level pruning via
+    * `statsCols` declares additional numeric columns (integer, float,
+    * double or decimal) to zone-map per file (beyond the key, which is
+    * always mapped) — each costs two doubles per file in the manifest,
+    * read from the footers, and buys file-level pruning via
     * [[VersionedTable.readRangeOn]]; pair with [[VersionedTable.compactZOrder]]
     * to make the zones tight on every declared dimension at once.
     * `bloomCols` declares columns to bloom-index per file for
@@ -745,7 +789,7 @@ object VersionedTable {
     * `checks` are SQL boolean CHECK constraints enforced on every
     * commit's written rows (NULL passes, as in SQL); a violating batch
     * aborts BEFORE the manifest is published — no version, no orphan
-    * files. The counting rides the stats pass: zero extra jobs.
+    * files. The counting rides the write job: zero extra jobs.
     */
   def apply(
       root: String,
@@ -755,4 +799,82 @@ object VersionedTable {
       bloomBits: Int = 1 << 16,
       checks: Seq[String] = Seq.empty): VersionedTable =
     new VersionedTable(root, keyCol, statsCols, bloomCols, bloomBits, checks)
+
+  /** The data files in `dir` that hold rows, as (path, footer) sorted by
+    * path. One directory listing plus one footer read per file, on the
+    * driver, 8 at a time; the path is the form `input_file_name()` gives.
+    */
+  private def footers(spark: SparkSession, dir: String): Seq[(String, ParquetMetadata)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val d = new HadoopPath(dir)
+    val parts = d.getFileSystem(conf).listStatus(d)
+      .filter(_.getPath.getName.startsWith("part-")).toSeq
+    parts.map(SparkPath.fromFileStatus(_).urlEncoded)
+      .zip(SparkBridge.readFooters(conf, parts))
+      .filter { case (_, meta) => rows(meta) > 0 }
+      .sortBy(_._1)
+  }
+
+  private def rows(meta: ParquetMetadata): Long = meta.getBlocks.asScala.map(_.getRowCount).sum
+
+  /** `column`'s [min, max] over the file's row groups, each bound
+    * converted by `bound`. None when some row group gives no usable
+    * bound (no statistic, or a value `bound` rejects): the file's values
+    * are then unknown. Some(None) when every value is NULL.
+    */
+  private def footerZone[T: Ordering](meta: ParquetMetadata, column: String)(
+      bound: (PrimitiveType, Any) => Option[T]): Option[Option[(T, T)]] = {
+    val path = ColumnPath.get(column)
+    val groups = meta.getBlocks.asScala.toSeq.map { rg =>
+      rg.getColumns.asScala.find(_.getPath == path).flatMap { chunk =>
+        val st: Statistics[_] = chunk.getStatistics
+        val t = chunk.getPrimitiveType
+        if (st == null || st.isEmpty) None
+        else if (st.hasNonNullValue)
+          for (lo <- bound(t, st.genericGetMin); hi <- bound(t, st.genericGetMax))
+            yield Some(lo -> hi)
+        else if (st.isNumNullsSet && st.getNumNulls == rg.getRowCount) Some(None)
+        else None
+      }
+    }
+    if (groups.exists(_.isEmpty)) None
+    else {
+      val zones = groups.flatMap(_.get)
+      Some(if (zones.isEmpty) None else Some((zones.map(_._1).min, zones.map(_._2).max)))
+    }
+  }
+
+  private def signedInt(t: PrimitiveType): Boolean = t.getLogicalTypeAnnotation match {
+    case null => true
+    case i: IntLogicalTypeAnnotation => i.isSigned
+    case _ => false // dates, times, timestamps, decimals
+  }
+
+  /** A footer bound as an exact long: plain signed integer columns only. */
+  private def longBound(t: PrimitiveType, v: Any): Option[Long] = v match {
+    case i: java.lang.Integer if signedInt(t) => Some(i.longValue)
+    case l: java.lang.Long if signedInt(t) => Some(l.longValue)
+    case _ => None
+  }
+
+  /** A footer bound as the double Spark's `cast(c as double)` gives, for
+    * integers, floats and decimals; NaN has no place in an order, so it
+    * is no bound.
+    */
+  private def doubleBound(t: PrimitiveType, v: Any): Option[Double] = {
+    val d = (t.getLogicalTypeAnnotation, v) match {
+      case (dec: DecimalLogicalTypeAnnotation, u) =>
+        val unscaled = u match {
+          case i: java.lang.Integer => Some(java.math.BigInteger.valueOf(i.longValue))
+          case l: java.lang.Long => Some(java.math.BigInteger.valueOf(l))
+          case b: Binary => Some(new java.math.BigInteger(b.getBytes))
+          case _ => None
+        }
+        unscaled.map(new java.math.BigDecimal(_, dec.getScale).doubleValue)
+      case (_, f: java.lang.Float) => Some(f.doubleValue)
+      case (_, x: java.lang.Double) => Some(x.doubleValue)
+      case _ => longBound(t, v).map(_.toDouble)
+    }
+    d.filterNot(_.isNaN)
+  }
 }

@@ -1,8 +1,14 @@
 package org.apache.spark.sql.graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.util.SerializableConfiguration
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import org.apache.spark.util.{SerializableConfiguration, ThreadUtils}
 
 /** Narrow bridge to `private[spark]` utilities the engine legitimately
   * needs — same placement rationale as [[NativeExprs]] (this package
@@ -20,6 +26,18 @@ object SparkBridge {
     SerializableConfiguration.broadcast(sc)
 
   /** Unwrap on the executor. */
-  def hadoopConf(bc: Broadcast[SerializableConfiguration]): org.apache.hadoop.conf.Configuration =
+  def hadoopConf(bc: Broadcast[SerializableConfiguration]): Configuration =
     bc.value.value
+
+  /** Full parquet footers (row groups and their column statistics
+    * included) of `files`, read on the driver over Spark's own parallel
+    * map — the pool `ParquetFileFormat.readParquetFootersInParallel`
+    * uses, which itself skips the row groups (it only needs schemas).
+    * Metadata only: no data page is read and no Spark job runs.
+    */
+  def readFooters(conf: Configuration, files: Seq[FileStatus]): Seq[ParquetMetadata] =
+    ThreadUtils.parmap(files, "graft-footers", 8) { f =>
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.NO_FILTER)
+    }
 }

@@ -528,7 +528,12 @@ class PlanShapeSpec extends SparkSpec {
     // inject the dim's filter result into the fact scan's partition
     // filters, so only the matching directories are read — without it
     // the scan reads EVERY partition and the layout is wasted.
-    val dir = scratchDir("graft_dpp").toString
+    // a root longer than the 100 characters a plan string keeps of a
+    // scan's location: the fact scan is found by its relation, not by
+    // its printed path
+    val dir = java.nio.file.Files.createDirectories(scratchDir("graft_dpp")
+      .resolve("a-directory-name-long-enough-that-spark-abbreviates-the-location-of-every-scan-under-it")
+      .resolve("fact-and-dim")).toString
     try {
       val orders = spark.read.parquet(s"$sf/orders.parquet")
         .withColumn("om", date_format(col("o_orderdate").cast("date"), "yyyy-MM"))
@@ -545,8 +550,14 @@ class PlanShapeSpec extends SparkSpec {
       val dim = spark.read.parquet(s"$dir/dim").filter($"keep" === 1)
       val joined = fact.join(broadcast(dim), Seq("om")).groupBy("om")
         .agg(count(lit(1)).as("n"))
-      val scan = joined.queryExecution.executedPlan.collectLeaves()
-        .map(_.toString).find(_.contains("fact")).getOrElse("")
+      val plan = joined.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val scan = plan.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "fact") => s.toString
+      }.headOption.getOrElse("")
       assert(scan.contains("dynamicpruning"),
         s"fact scan has no dynamic partition filter:\n$scan")
     } finally {

@@ -34,9 +34,7 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** A fresh directory for the suite's scratch files (tables, stream
     * checkpoints, written outputs). All of them live under one `graft-*`
-    * tree in the temp dir, deleted after the suite. Paths stay short:
-    * plan strings abbreviate a scan's location to 100 characters, and
-    * some plan pins look for a directory name in it.
+    * tree in the temp dir, deleted after the suite.
     */
   def scratchDir(prefix: String): Path = synchronized {
     val root = scratchRoot.getOrElse {

@@ -1,7 +1,12 @@
 package graft.lake
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -500,5 +505,173 @@ class LakeSpec extends SparkSpec {
     intercept[IllegalArgumentException](t.merge(rows(1 to 5, "u")))
     t.append(rows(1 to 5, "a"))
     intercept[IllegalArgumentException](t.merge(rows(1 to 0, "u")))
+  }
+
+  /** The stats pass commits ran before they read footers, kept as the
+    * oracle: one grouped scan of the files in `version`'s data dir.
+    */
+  private def scannedEntries(t: VersionedTable, version: Int, statsCols: Seq[String]): Seq[FileEntry] = {
+    val listed = spark.read.parquet(f"${t.root}/data/v$version%05d")
+    val present = statsCols.filter(listed.columns.contains)
+    val aggs = Seq(count(lit(1)), min(col("k").cast("long")), max(col("k").cast("long"))) ++
+      present.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
+    listed.groupBy(input_file_name()).agg(aggs.head, aggs.tail: _*).collect()
+      .filter(_.getLong(1) > 0)
+      .map { r =>
+        val stats = present.zipWithIndex.collect {
+          case (c, i) if !r.isNullAt(4 + 2 * i) => c -> (r.getDouble(4 + 2 * i), r.getDouble(5 + 2 * i))
+        }
+        FileEntry(r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), stats.toMap)
+      }
+      .toSeq.sortBy(_.path)
+  }
+
+  /** The entries `version` committed for the files it wrote. */
+  private def written(t: VersionedTable, version: Int): Seq[FileEntry] =
+    t.snapshot(version).files.filter(_.path.contains(f"/data/v$version%05d/"))
+
+  private def assertFooterStatsEqualScan(t: VersionedTable, statsCols: Seq[String]): Unit =
+    (1 to t.currentVersion()).foreach { v =>
+      assert(written(t, v) == scannedEntries(t, v, statsCols), s"version $v")
+    }
+
+  test("footer stats equal a scan of the new files: keys, doubles with NULLs, decimals") {
+    val t = VersionedTable(scratchDir("graft-lake-fs").toString, "k", statsCols = Seq("v", "w"))
+    // v1: negative keys, `v` all NULL in the one file
+    t.append((-60 to -41).map(i => (i.toLong, "n", None: Option[Double], i * 0.5)).toDF("k", "tag", "v", "w"))
+    // v2: keys beyond 2^53 (a double would round them), `v` partly NULL,
+    // several files
+    val big = (1L << 60) + 1
+    t.append((Seq(-3L, 7L, big, big + 2, Long.MaxValue - 1) ++ (1L to 40L)).map(k =>
+      (k, "p", if (k % 3 == 0) None else Some(k * 1.25), k.toDouble)).toDF("k", "tag", "v", "w")
+      .repartition(3))
+    // v3: a schema-evolved append that lacks the stats column `w`
+    t.append((41 to 50).map(i => (i.toLong, "e", Some(i * 2.0))).toDF("k", "tag", "v"))
+    // v4: an empty overwrite writes only a schema file
+    t.overwrite((1 to 0).map(i => (i.toLong, "x", Some(1.0), 1.0)).toDF("k", "tag", "v", "w"))
+    assertFooterStatsEqualScan(t, Seq("v", "w"))
+    assert(written(t, 1).forall(_.colStats.keySet == Set("w")))
+    assert(written(t, 2).map(_.maxKey).max == Long.MaxValue - 1)
+    assert(written(t, 3).forall(_.colStats.keySet == Set("v")))
+    assert(written(t, 4).isEmpty)
+
+    // int keys and decimal stats columns stored as INT32, INT64 and
+    // fixed-length binary
+    val d = VersionedTable(scratchDir("graft-lake-fs").toString, "k", statsCols = Seq("d5", "d12", "d24"))
+    d.append((-30 to 30).map(i => (i, i * 1.37)).toDF("k", "x")
+      .select($"k", $"x".cast("decimal(5,2)").as("d5"), ($"x" * 1000).cast("decimal(12,3)").as("d12"),
+        ($"x" * 1e9).cast("decimal(24,4)").as("d24"))
+      .repartition(2))
+    assertFooterStatsEqualScan(d, Seq("d5", "d12", "d24"))
+    assert(written(d, 1).forall(_.colStats.keySet == Set("d5", "d12", "d24")))
+    assert(written(d, 1).map(_.minKey).min == -30L)
+  }
+
+  test("footer stats span every row group of a file") {
+    val t = VersionedTable(scratchDir("graft-lake-rg").toString, "k", statsCols = Seq("v"))
+    spark.conf.set("parquet.block.size", "2048")
+    try t.append((1 to 3000).map(i => (i.toLong, s"t$i", (i % 977) * 0.5 - 100)).toDF("k", "tag", "v")
+      .coalesce(1).sortWithinPartitions($"tag"))
+    finally spark.conf.unset("parquet.block.size")
+    val Seq(file) = written(t, 1)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file.path), conf))
+    val rowGroups = try reader.getFooter.getBlocks.size finally reader.close()
+    assert(rowGroups > 3, s"expected several row groups, got $rowGroups")
+    assertFooterStatsEqualScan(t, Seq("v"))
+    assert(file.minKey == 1L && file.maxKey == 3000L && file.colStats("v") == ((-100.0, 388.0)))
+  }
+
+  test("a NaN in a stats column leaves the file without a zone, so it is always scanned") {
+    val t = VersionedTable(scratchDir("graft-lake-nan").toString, "k", statsCols = Seq("v"))
+    t.append(Seq((1L, "a", 1.0), (2L, "a", Double.NaN), (3L, "a", 5.0)).toDF("k", "tag", "v").coalesce(1))
+    val Seq(file) = written(t, 1)
+    val Seq(scanned) = scannedEntries(t, 1, Seq("v"))
+    assert(file == scanned.copy(colStats = Map.empty), "only the NaN zone may differ")
+    assert(!file.colStats.contains("v"))
+    // the scan's zone for this file is [1.0, NaN], which prunes it from
+    // every range; without a zone it is scanned and the rows come back
+    val hit = t.readRangeOn(spark, "v", 0.5, 2.0)
+    assert(hit.inputFiles.length == 1)
+    assert(hit.select("k").as[Long].collect().toSeq == Seq(1L))
+  }
+
+  test("a batch whose keys are all NULL commits, and no range or merge selects it") {
+    val t = freshTable()
+    t.append(rows(1 to 10, "a").repartition(2))
+    val nullKeys = Seq((None: Option[Long], "n", 1.0), (None, "n", 2.0)).toDF("k", "tag", "v")
+    t.append(nullKeys.coalesce(1))
+    assert(t.currentVersion() == 2)
+    val Seq(nullFile) = written(t, 2)
+    assert(nullFile.rows == 2)
+    assert(nullFile.minKey == Long.MaxValue && nullFile.maxKey == Long.MinValue)
+    val keyed = written(t, 1).size
+    assert(t.readRange(spark, -1000, 1000).inputFiles.length == keyed)
+    assert(t.readRange(spark, 1, 10).count() == 10)
+    t.merge(rows(5 to 12, "m"))
+    assert(t.liveFiles().contains(nullFile.path), "merge rewrote the NULL-key file")
+    val all = t.read(spark)
+    assert(all.count() == 14)
+    assert(all.filter($"k".isNull).select("v").as[Double].collect().sorted.toSeq == Seq(1.0, 2.0))
+  }
+
+  /** Spark jobs in the order they start, and the ends of write commands. */
+  private class JobLog extends SparkListener {
+    private val writes = mutable.Set.empty[Long]
+    val events = mutable.ArrayBuffer.empty[String]
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized(events += "job")
+    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+      e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes += s.executionId
+        case end: SparkListenerSQLExecutionEnd if writes(end.executionId) => events += "write"
+        case _ =>
+      }
+    }
+  }
+
+  private def logJobs(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.ListenerProbe.drain(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try body
+    finally {
+      org.apache.spark.sql.graft.ListenerProbe.drain(sc)
+      sc.removeSparkListener(log)
+    }
+    log.synchronized(log.events.toSeq)
+  }
+
+  test("an append runs one Spark job; a merge runs none after its write") {
+    val t = VersionedTable(scratchDir("graft-lake-jobs").toString, "k",
+      statsCols = Seq("v"), checks = Seq("v >= 0"))
+    t.append(rows(1 to 100, "a"))
+    val append = logJobs(t.append(rows(101 to 200, "b")))
+    assert(append.count(_ == "job") == 1, s"append ran: ${append.mkString(", ")}")
+    val merge = logJobs(t.merge(rows(90 to 110, "m")))
+    assert(merge.contains("write"))
+    val afterWrite = merge.drop(merge.lastIndexOf("write") + 1)
+    assert(!afterWrite.contains("job"), s"merge ran: ${merge.mkString(", ")}")
+    assert(t.read(spark).count() == 200)
+    // the checks' counts come from the write job even when it writes no row
+    val empty = logJobs(t.overwrite(rows(1 to 0, "e")))
+    assert(empty.count(_ == "job") == 1, s"empty overwrite ran: ${empty.mkString(", ")}")
+    assert(t.tableCount() == 0)
+  }
+
+  test("lake data dirs hold no _SUCCESS marker") {
+    val t = freshTable()
+    t.overwrite(rows(1 to 50, "a").repartition(2))
+    t.merge(rows(40 to 60, "m"))
+    t.append(rows(100 to 110, "b"))
+    val data = Paths.get(t.root, "data")
+    val markers = Files.walk(data)
+    val found = try markers.iterator().asScala.filter(_.getFileName.toString == "_SUCCESS").toList
+    finally markers.close()
+    assert(found.isEmpty, s"markers: ${found.mkString(", ")}")
+    assert(t.read(spark).count() == 71)
   }
 }
