@@ -1,6 +1,7 @@
 package graft.lake
 
-import java.nio.file.{FileAlreadyExistsException, Files, Path}
+import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException, Files, Path}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 /** Versioned directories on a local or mounted filesystem: the one
@@ -38,6 +39,31 @@ private[lake] object VersionDirs {
       true
     } catch { case _: FileAlreadyExistsException => false }
     finally Files.deleteIfExists(tmp)
+  }
+
+  /** Delete the entries published under `dir` with `suffix` whose
+    * version is below `version`.
+    */
+  def dropBelow(dir: Path, suffix: String, version: Int): Unit =
+    versions(dir, suffix).filter(_ < version)
+      .foreach(v => Files.deleteIfExists(dir.resolve(f"v$v%05d$suffix")))
+
+  /** Delete the entries under `dir` (not `dir` itself) that `drop`
+    * selects, deepest first. Every entry is judged by the attributes it
+    * had in one listing taken before any delete; a selected directory
+    * goes only if it is empty by then. Returns how many regular files
+    * went.
+    */
+  def prune(dir: Path)(drop: (Path, BasicFileAttributes) => Boolean): Int = {
+    if (!Files.isDirectory(dir)) return 0
+    val paths = Files.walk(dir) // each directory before its entries
+    val listed = try paths.iterator().asScala.drop(1)
+      .map(p => p -> Files.readAttributes(p, classOf[BasicFileAttributes])).toList
+    finally paths.close()
+    listed.reverse.count { case (p, attrs) =>
+      drop(p, attrs) && (try Files.deleteIfExists(p) && attrs.isRegularFile
+      catch { case _: DirectoryNotEmptyException => false })
+    }
   }
 
   /** Delete the tree under `dir`, deepest entries first; absent is fine. */

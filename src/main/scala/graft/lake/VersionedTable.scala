@@ -750,30 +750,49 @@ final class VersionedTable private (
 
   // ------------------------------------------------------------- vacuum
 
-  /** Delete data files referenced by NO version newer than
-    * (current − retainVersions), and the manifests of the dropped
-    * versions. Time travel to dropped versions is gone; the retained
-    * window stays fully readable. Returns the deleted file count.
+  /** Drop the versions older than the last `retainVersions`: delete
+    * their manifests, and every file under `data/` that no retained
+    * manifest names. That covers the files only dropped versions name,
+    * the schema-only file of an empty write, the files of a commit that
+    * lost the publish race or crashed before publishing, and the
+    * version directories left empty. A file in the directory of a
+    * version not yet published may belong to a writer still at work:
+    * it goes only once it is older than [[VersionedTable.VacuumGraceMs]].
+    * Time travel to dropped versions is gone; the retained window stays
+    * fully readable. Returns the deleted file count.
     */
   def vacuum(retainVersions: Int = 1): Int = {
     val cur = currentVersion()
     val keepFrom = math.max(1, cur - retainVersions + 1)
-    val keep = (keepFrom to cur).flatMap(v => snapshot(v).files.map(_.path)).toSet
-    var deleted = 0
-    (1 until keepFrom).foreach { v =>
-      snapshot(v).files.foreach { f =>
-        if (!keep(f.path)) {
-          val p = Paths.get(new java.net.URI(f.path).getPath)
-          if (Files.deleteIfExists(p)) deleted += 1
-        }
-      }
-      Files.deleteIfExists(manifestPath(v))
+    val keep = (keepFrom to cur).flatMap(snapshot(_).files)
+      .map(f => Paths.get(new java.net.URI(f.path).getPath).normalize).toSet
+    val data = Paths.get(root, "data").toAbsolutePath.normalize
+    val versionDir = "v(\\d{5})".r
+    def published(p: Path): Boolean = data.relativize(p).getName(0).toString match {
+      case versionDir(v) => v.toInt <= cur
+      case _ => false
     }
+    val cutoff = System.currentTimeMillis() - VersionedTable.VacuumGraceMs
+    // a kept file keeps its checksum sidecar `.<name>.crc` too
+    def kept(p: Path): Boolean = keep(p) || {
+      val n = p.getFileName.toString
+      n.startsWith(".") && n.endsWith(".crc") && keep(p.resolveSibling(n.drop(1).dropRight(4)))
+    }
+    val deleted = VersionDirs.prune(data) { (p, attrs) =>
+      !kept(p) && (published(p) || attrs.lastModifiedTime.toMillis < cutoff)
+    }
+    VersionDirs.dropBelow(logDir, ".json", keepFrom)
     deleted
   }
 }
 
 object VersionedTable {
+  /** How old a file with no published version must be before
+    * [[VersionedTable.vacuum]] deletes it: longer than any commit's write
+    * takes, so a writer that has not published yet keeps its files.
+    */
+  val VacuumGraceMs: Long = 24L * 60 * 60 * 1000
+
   /** Open (or lazily create on first commit) a table rooted at `root`.
     * `statsCols` declares additional numeric columns (integer, float,
     * double or decimal) to zone-map per file (beyond the key, which is

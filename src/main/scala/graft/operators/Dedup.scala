@@ -1070,195 +1070,88 @@ object Dedup {
         round(col("n_leaked").cast("double") / col("n_shingles"), 6))
   }
 
-  /** EXACT near-dup clustering: connected components of the pair graph
-    * via iterative min-label propagation — each node's label becomes the
-    * minimum label among itself and its neighbors until a fixpoint.
-    * Returns (id, cluster) where cluster = the component's minimum id.
+  /** EXACT near-dup clustering, and the engine's one connected-components
+    * kernel: input (id_a, id_b) pairs, output (id, cluster) for every id
+    * that appears in a pair, cluster = the component's minimum id (an id
+    * seen only in self-pairs is its own component).
     *
-    * Scale shape: the input is the near-dup PAIR list (bounded by
-    * collision rate — far smaller than the corpus), and each iteration
-    * is one distributed join + min-agg over the edge list; convergence
-    * takes O(component diameter) iterations, and near-dup components
-    * are shallow (most are stars around a template). Labels re-share
-    * via lazy localCheckpoint per iteration so lineage doesn't grow
-    * unboundedly; the one driver-side value per iteration is the
-    * changed-label COUNT (a scalar, not data). The loop stops at the
-    * fixpoint; if `maxIter` is hit first the labels would be silently
-    * WRONG (local minima only), so the method THROWS instead — raise
-    * maxIter for pathological chain-shaped components.
+    * Alternating star contraction (the large-star/small-star algorithm
+    * of Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SoCC'14) over canonical edges (l, g), l < g. With m(u) = the least
+    * of u and its neighbors, a round is:
     *
-    * Three fixed-cost trims, all exact (round-count and per-round
-    * shuffle volume only — labels are unchanged):
-    *  - hop 0 is FUSED into initialization: seeding each node with
-    *    min(self ∪ neighbors) costs the same one shuffle as the
-    *    id-distinct it replaces but starts the loop one hop ahead, so
-    *    every closure call pays one fewer (join + agg + count) round.
-    *  - the symmetric edge list is hash-distributed by the probe key
-    *    `b` ONCE and checkpointed (LogicalRDD keeps the physical
-    *    partitioning), so each round's edge-side exchange — 2|E| rows,
-    *    the biggest movement in the loop — happens once instead of
-    *    once per round; only the |V|-row label side moves per round.
-    *  - each materialized round takes TWO propagation hops before its
-    *    checkpoint + convergence count, halving the per-round fixed
-    *    cost (job scheduling, block materialization, the count action)
-    *    that dominates when per-round data volumes are small — the
-    *    measured cost driver of the ER closure at sf0.1 (SCALE.md).
+    *  - large-star: every node u points each GREATER neighbor at m(u);
+    *  - small-star: every node u points each smaller neighbor, and
+    *    itself, at m(u).
+    *
+    * Each step swaps an edge for edges through m(u), a neighbor of u,
+    * so components never change, and no node is ever dropped. The round
+    * count grows with log(component size), not with the diameter: a
+    * 2,000-node path with shuffled ids closes in about 9 rounds, where
+    * label propagation needs hundreds. Near-dup and ER components are
+    * mostly shallow, and a clique-plus-star forest closes in one round.
+    *
+    * The loop stops as soon as the edges form a star forest: every node
+    * that is a g has one distinct neighbor. Why that is exact: such a
+    * node's one neighbor is an l, and an l that is no g has only g
+    * neighbors. So every component is one l (its center) joined to its
+    * g's, and the center is the least of them since l < g. Contraction
+    * keeps the input's components and nodes, so each node's m(u) is its
+    * component's minimum: the (id, cluster) contract.
+    *
+    * One window over the edge list, partitioned by node, gives every
+    * node its m(u), whether it breaks the star-forest shape, and one
+    * row to stand for it. That table is lazily local-checkpointed: the
+    * check (a scalar count, the one action of a round), the next
+    * contraction and the output all read its blocks, the output is a
+    * projection of it, and a round's plan starts from the last table,
+    * not from the input. Nothing deduplicates the edges: each
+    * edge becomes one edge per step, so their number never grows, and
+    * the checks compare neighbors, not counts. If `maxRounds` runs out
+    * first, the labels would be local minima, so the kernel throws
+    * rather than return them.
     */
-  def nearDupClusters(pairs: DataFrame, maxIter: Int = 25): DataFrame = {
-    val edges = pairs
+  def nearDupClusters(pairs: DataFrame, maxRounds: Int = 60): DataFrame = {
+    val ab = pairs
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .localCheckpoint(eager = false)
-    val sym = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(col("b"))
-      .localCheckpoint(eager = false)
-    // hop 0: every pair participant appears as `a` in at least one
-    // direction of sym, so this covers exactly the distinct-id set
-    var labels = sym
-      .groupBy(col("a").as("id"))
-      .agg(min(col("b")).as("__nmin"))
-      .select(col("id"), least(col("id"), col("__nmin")).as("label"))
-      .localCheckpoint(eager = false)
-    // one min-label propagation hop over the current labels (lazy — the
-    // caller decides what materializes)
-    def hop(from: DataFrame): DataFrame = {
-      val viaNeighbor = sym
-        .join(from, sym("b") === from("id"))
-        .groupBy(sym("a").as("nid"))
-        .agg(min("label").as("nlabel"))
-      from
-        .join(viaNeighbor, from("id") === viaNeighbor("nid"), "left")
-        .select(
-          from("id"),
-          least(from("label"), coalesce(col("nlabel"), from("label"))).as("label"))
-    }
-    var changed = 1L
-    var i = 0
-    while (changed > 0 && i < maxIter) {
-      // TWO hops per materialized round: propagation work is unchanged
-      // (each hop was needed anyway), but the per-round FIXED cost —
-      // checkpoint materialization, the convergence-count job, stage
-      // scheduling — is paid once per two hops instead of once per hop,
-      // halving the fixed overhead that dominates at small per-round
-      // data volumes (the q186/q192 closure-cost audit, SCALE.md r9/r10).
-      // Convergence compares hop B against hop A's labels: hop B being a
-      // no-op proves hop A's output is the fixpoint.
-      // labA appears TWICE in `updated`'s plan (under hopB and directly),
-      // so hop A's post-shuffle join+aggregate compute runs twice
-      // (exchange reuse covers the shuffle itself). Checkpointing labA
-      // to deduplicate that compute was MEASURED SLOWER — the extra
-      // materialization job costs ~0.7 s per q186 at sf0.1 (closure
-      // 2.0 -> 2.8 s, matched anchor, r11) while the duplicated
-      // compute on the label-width frame is smaller than that at every
-      // rehearsed SF; the per-round fixed cost this loop fights is
-      // exactly that kind of job, so labA stays lazy.
-      val labA = hop(labels)
-      val hopB = sym
-        .join(labA, sym("b") === labA("id"))
-        .groupBy(sym("a").as("nid"))
-        .agg(min("label").as("nlabel"))
-      val updated = labA
-        .join(hopB, labA("id") === hopB("nid"), "left")
-        .select(
-          labA("id"),
-          labA("label"),
-          least(labA("label"), coalesce(col("nlabel"), labA("label"))).as("next"))
-        .localCheckpoint(eager = false)
-      changed = updated.filter(col("next") < col("label")).count()
-      // `updated` is already block-shared; the projection reads its blocks
-      labels = updated.select(col("id"), col("next").as("label"))
-      i += 2
-    }
-    if (changed > 0)
-      throw new IllegalStateException(
-        s"nearDupClusters did not converge in $maxIter iterations " +
-          s"($changed labels still changing) — the pair graph has a component " +
-          s"of diameter > $maxIter; pass a larger maxIter")
-    labels.select(col("id"), col("label").as("cluster"))
-  }
-
-  /** Connected components by ALTERNATING star contraction (the
-    * large-star/small-star algorithm of Kiveris et al., "Connected
-    * Components in MapReduce and Beyond", SoCC'14) — the deep-graph
-    * twin of [[nearDupClusters]]. Min-label propagation converges in
-    * O(component diameter) full-edge passes and [[nearDupClusters]]
-    * THROWS past `maxIter`: correct for the shallow star/clique
-    * components near-dup pairs produce, but a 100 TB boilerplate
-    * entity reaches the closure as a salt-bucket CHAIN whose diameter
-    * grows with block size / rowCap (see
-    * [[graft.operators.EntityResolution.resolve]]) — at extreme block
-    * sizes that chain outruns any fixed iteration budget. Star
-    * contraction converges in O(log²) rounds regardless of diameter
-    * (in practice < 10 on million-node chains) because each round
-    * HALVES chain heights instead of walking them:
-    *
-    *  - large-star: every node u points each STRICTLY GREATER neighbor
-    *    at m(u) = min(Γ(u) ∪ u). Monotone (no edge to a larger node is
-    *    created), so tall chains collapse geometrically.
-    *  - small-star: every node u points each neighbor ≤ u — and itself
-    *    — at m(u). Flattens the remaining two-level trees into stars.
-    *
-    * Both rounds are one groupBy(min) + one join over the current edge
-    * set — the SAME per-round shape as a label-propagation step — but
-    * the round COUNT is logarithmic, and the edge set only shrinks
-    * (dedup per round). Fixpoint = a large+small round pair that leaves
-    * the edge set unchanged — checked EXACTLY (equal count + empty
-    * anti-join, scalars to the driver only); at fixpoint the edges ARE
-    * the star forest (child → component minimum), which is exactly the
-    * (id, cluster) contract. Per-round lineage truncates through the
-    * same lazy localCheckpoint discipline as [[nearDupClusters]].
-    *
-    * Same contract as [[nearDupClusters]]: input (id_a, id_b) pairs,
-    * output (id, cluster) for every id that appears in a pair, cluster
-    * = component minimum. Equivalence is spec-pinned on chains,
-    * cliques, forests, and random graphs; a 10k-node path — 400
-    * iterations beyond nearDupClusters' budget — closes in a handful
-    * of rounds.
-    */
-  def connectedComponentsAlternating(pairs: DataFrame, maxRounds: Int = 60): DataFrame = {
-    val idPairs = pairs
-      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
-    var edges = idPairs
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("l"), greatest(col("a"), col("b")).as("g"))
-      .distinct()
-      .localCheckpoint(eager = false)
-    // one star round: point the {greater | smaller-plus-self} neighbors
-    // of every node at min(Γ(u) ∪ u); keep the canonical (l, g) form
-    def round(e: DataFrame, large: Boolean): DataFrame = {
-      val sym = e.select(col("l").as("u"), col("g").as("v"))
+    val selfs = ab.filter(col("a") === col("b")).select(col("a").as("u"), col("b").as("v"))
+    // one row per node and neighbor (both ways of each edge, plus the
+    // self-pairs), with the node's m, its "breaks the star forest" flag
+    // (it has a smaller neighbor and a second one), and one row per node
+    // flagged first
+    def nodes(e: DataFrame): DataFrame = {
+      val byNode = Window.partitionBy("u").orderBy("v")
+      val all = byNode.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+      val nb = when(col("v") =!= col("u"), col("v"))
+      e.select(col("l").as("u"), col("g").as("v"))
         .union(e.select(col("g").as("u"), col("l").as("v")))
-      val mins = sym.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val joined = sym.join(mins, "u")
-      val pointed =
-        if (large) joined.filter(col("v") > col("u"))
-          .select(col("m").as("l"), col("v").as("g"))
-        else joined.filter(col("v") < col("u"))
-          .select(col("m").as("l"), col("v").as("g"))
-          .union(mins.select(col("m").as("l"), col("u").as("g")))
-      pointed.filter(col("l") =!= col("g")).distinct()
+        .union(selfs)
+        .select(col("u"), col("v"), min(nb).over(all).as("lo"), max(nb).over(all).as("hi"),
+          (row_number().over(byNode) === 1).as("first"))
+        .select(col("u"), col("v"), col("first"), least(col("u"), col("lo")).as("m"),
+          (col("lo") < col("u") && col("hi") > col("lo")).as("broken"))
         .localCheckpoint(eager = false)
     }
-    var n = edges.count()
-    var stable = n == 0
-    var i = 0
-    while (!stable && i < maxRounds) {
-      val next = round(round(edges, large = true), large = false)
-      val n2 = next.count()
-      stable = n2 == n &&
-        next.join(edges, Seq("l", "g"), "left_anti").isEmpty
-      edges = next; n = n2
-      i += 1
+    // large-star then small-star: every edge (u, v > u) becomes (m(u), v);
+    // grouped by g, every edge of g is one of its smaller neighbors
+    def contract(n: DataFrame): DataFrame =
+      n.filter(col("v") > col("u")).select(col("m").as("l"), col("v").as("g"))
+        .withColumn("m", min("l").over(Window.partitionBy("g")))
+        .select(col("m").as("l"),
+          when(col("l") === col("m"), col("g")).otherwise(col("l")).as("g"))
+    var table = nodes(ab.filter(col("a") =!= col("b")).select(col("a").as("l"), col("b").as("g")))
+    var rounds = 0
+    var broken = 0L
+    while ({ broken = table.filter(col("first") && col("broken")).count(); broken > 0 }) {
+      if (rounds == maxRounds)
+        throw new IllegalStateException(
+          s"nearDupClusters did not reach a star forest in maxRounds = $maxRounds " +
+            s"rounds ($broken nodes still break it)")
+      table = nodes(contract(table))
+      rounds += 1
     }
-    if (!stable)
-      throw new IllegalStateException(
-        s"connectedComponentsAlternating did not stabilize in $maxRounds rounds " +
-          "— rounds are logarithmic in component size, so this indicates a bug, " +
-          "not a large graph")
-    val ids = idPairs.select(col("a").as("id"))
-      .union(idPairs.select(col("b").as("id"))).distinct()
-    ids.join(edges.select(col("g").as("id"), col("l").as("cluster")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
+    table.filter(col("first")).select(col("u").as("id"), col("m").as("cluster"))
   }
 
   /** Exact-transitive-closure variant of [[minHashDedup]]: one

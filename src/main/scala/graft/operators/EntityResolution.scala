@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * prefix-cascade sub-blocking (see [[linkPairs]]); scoring is
   * codegen'd string expressions on
   * the joined pairs, behind a lossless length prefilter; clustering
-  * reuses the bounded min-label propagation of
+  * reuses the engine's connected-components kernel,
   * [[Dedup.nearDupClusters]]. Every stage is exact and
   * engine-replayable (levenshtein + integer lengths + one rounded
   * division), so the whole path carries a DuckDB oracle.
@@ -146,7 +146,7 @@ object EntityResolution {
     * pair unique. Bucket sizes are ≤ ~2·rowCap (home + probe load), so
     * the per-bucket pair cost stays O(budget) and the chain
     * 0→1→…→s−1 keeps the group CONNECTED: when the group is one true
-    * entity (the boilerplate case), min-label closure reassembles it
+    * entity (the boilerplate case), the closure reassembles it
     * from the found pairs alone — the recall-parity spec pins exactly
     * that. Pairs whose salts differ by ≥ 2 are the bounded loss.
     *
@@ -384,11 +384,13 @@ object EntityResolution {
   }
 
   /** End-to-end resolution: link pairs, close them transitively
-    * (min-label propagation — bounded iterations, lineage-truncated),
-    * and return every input row annotated with its `entity_id` (the
-    * smallest member id of its match cluster; singletons keep their own
-    * id). The survivor policy is the caller's — [[Dedup.nearDupSurvivors]]
-    * composes directly.
+    * ([[Dedup.nearDupClusters]]' star contraction, whose round count
+    * does not grow with the diameter, so a salted boilerplate block's
+    * bucket chain closes like any other component), and return every
+    * input row annotated with its `entity_id` (the smallest member id
+    * of its match cluster; singletons keep their own id). The survivor
+    * policy is the caller's — [[Dedup.nearDupSurvivors]] composes
+    * directly.
     *
     * Closure runs on COMPACT edges, not expanded row pairs: for each
     * passing tuple pair one representative edge (min member id to min
@@ -469,16 +471,7 @@ object EntityResolution {
           explode(transform(col("__mb"), m => m.getField("id"))).as("id_b"))
       rep.unionByName(stars).filter(col("id_a") =!= col("id_b"))
     }
-    // min-label propagation is the measured fast path (near-dup
-    // components are shallow); a salted boilerplate block whose bucket
-    // CHAIN outruns the iteration budget falls back to alternating
-    // star contraction — logarithmic rounds, any diameter — instead of
-    // failing the job (fallback correctness spec-pinned on a chain
-    // deeper than the label budget)
-    val clusters = try Dedup.nearDupClusters(edges) catch {
-      case _: IllegalStateException =>
-        Dedup.connectedComponentsAlternating(edges)
-    } // (id, cluster)
+    val clusters = Dedup.nearDupClusters(edges) // (id, cluster)
     df.join(clusters.withColumnRenamed("id", idCol), Seq(idCol), "left")
       .withColumn("entity_id", coalesce(col("cluster"), col(idCol)))
       .drop("cluster")

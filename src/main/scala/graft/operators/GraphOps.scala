@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   * lineage is truncated per step with GC-tracked `localCheckpoint`
   * blocks (never CacheManager pins), so plans stay constant-size
   * instead of doubling per iteration — the standard shape for iterative
-  * DataFrame algorithms (connected components in Dedup.nearDupClusters
-  * uses the same pattern).
+  * DataFrame algorithms (Dedup.nearDupClusters' star contraction
+  * checkpoints each round the same way, though its round count is
+  * data-dependent: it loops until the edges form a star forest).
   */
 object GraphOps {
 

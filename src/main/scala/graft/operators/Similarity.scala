@@ -662,8 +662,13 @@ object Similarity {
     * (the q145/q153 discipline) so the fusion replays bit-identically in
     * any engine — q174 carries a full DuckDB oracle.
     *
+    * Each id may appear once per pool. The rank join also pairs every
+    * row with the pool rows of its own id, and an id that meets more
+    * than itself fails the query (raise_error inside the plan, no extra
+    * job) rather than fold two rows into one inflated rank.
+    *
     * Scale note: a rank is 1 + the number of pool rows strictly ahead
-    * under (score desc, id asc), which is a row number while ids are
+    * under (score desc, id asc), which is a row number since ids are
     * unique within a pool. It is computed as a broadcast inequality
     * self-join of the pool plus an id-keyed count. No single-partition
     * window appears, so no step moves a pool to one task; the join
@@ -686,17 +691,21 @@ object Similarity {
       val pool = df.select(col(idCol), col(scoreCol).as("__s")).filter(col("__s").isNotNull)
         .localCheckpoint(eager = false)
       val peers = pool.select(col(idCol).as("__pid"), col("__s").as("__ps"))
+      val self = col("__pid") <=> col(idCol)
       pool
         .join(broadcast(peers),
-          col("__ps") > col("__s") ||
-            (col("__ps") === col("__s") && col("__pid") < col(idCol)),
-          "left")
+          self || col("__ps") > col("__s") ||
+            (col("__ps") === col("__s") && col("__pid") < col(idCol)))
         .groupBy(col(idCol))
-        .agg((count(col("__pid")) + lit(1L)).as("rank"))
+        .agg(
+          (count(when(!self, 1)) + lit(1L)).as("rank"),
+          count(when(self, 1)).as("__rows"))
         .select(
           col(idCol),
-          round(lit(1.0) / (lit(kRrf.toDouble) + col("rank")), 6)
-            .cast(DecimalType(18, 6)).as("c6"))
+          when(col("__rows") === 1,
+            round(lit(1.0) / (lit(kRrf.toDouble) + col("rank")), 6).cast(DecimalType(18, 6)))
+            .otherwise(raise_error(concat(lit(s"rrfFuse: $idCol "), col(idCol).cast("string"),
+              lit(s" appears more than once in the '$scoreCol' pool")))).as("c6"))
     }.reduce(_ union _)
     contribs
       .groupBy(idCol)

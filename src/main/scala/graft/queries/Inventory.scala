@@ -2790,9 +2790,10 @@ object Inventory {
         // (1 − 0.8⁴)³² ≈ 5e-8 — and DedupSpec's oracle-soundness test
         // re-measures every exhaustive pair at both corpora, so fixture
         // drift toward the risky 0.5–0.6 band fails loudly there, not
-        // as an opaque hash mismatch here. Clustering is min-label
-        // propagation; the oracle recomputes the transitive closure
-        // with a recursive CTE over the exhaustive pair list.
+        // as an opaque hash mismatch here. Clustering is star
+        // contraction (Dedup.nearDupClusters); the oracle recomputes the
+        // transitive closure with a recursive CTE over the exhaustive
+        // pair list.
         val docs = t(s, dir, "documents")
         val pairs = Dedup.minHashNearDups(
           docs, "doc_id", "text", k = 128, bands = 32, w = 3, threshold = 0.5)
@@ -3622,7 +3623,8 @@ object Inventory {
       (s, dir) => {
         // SemDeDup-style semantic dedup: the k-means partition is the
         // blocking function (pairs compared only WITHIN a cell), then
-        // connected components keep the min id per duplicate group.
+        // connected components (Dedup.nearDupClusters) keep the min id
+        // per duplicate group.
         // Declared with the oracle-able seed-centroid assignment (q152
         // proved the argmin replay is bit-exact cross-engine); the
         // production path swaps in kmeansCentroids, same machinery.
@@ -4079,8 +4081,8 @@ object Inventory {
 
     Q("q179_entity_resolution",
       (s, dir) =>
-        // end-to-end: link pairs → transitive closure (min-label
-        // propagation) → every part annotated with its canonical
+        // end-to-end: link pairs → transitive closure (star
+        // contraction) → every part annotated with its canonical
         // entity_id (smallest cluster member; singletons keep their
         // own key). Oracle recomputes the closure with a recursive
         // CTE, the q108 convention.

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.collection.mutable
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,6 +53,38 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit =
     try super.afterAll()
     finally synchronized(scratchRoot).foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+
+  /** The Spark jobs `body` runs, as "job" in the order they start, with
+    * a "write" at the end of each write command. Jobs that adaptive
+    * execution submits for its shuffle stages count too.
+    */
+  def logJobs(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    org.apache.spark.sql.graft.ListenerProbe.drain(sc)
+    val log = new JobLog
+    sc.addSparkListener(log)
+    try body
+    finally {
+      org.apache.spark.sql.graft.ListenerProbe.drain(sc)
+      sc.removeSparkListener(log)
+    }
+    log.synchronized(log.events.toSeq)
+  }
+
+  private class JobLog extends SparkListener {
+    private val writes = mutable.Set.empty[Long]
+    val events = mutable.ArrayBuffer.empty[String]
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized(events += "job")
+    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
+      e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writes += s.executionId
+        case end: SparkListenerSQLExecutionEnd if writes(end.executionId) => events += "write"
+        case _ =>
+      }
+    }
+  }
 
   /** Epoch seconds from the events table's `ts`, whichever physical
     * type the fixture generation stored (TIMESTAMP(NANOS) read as nanos

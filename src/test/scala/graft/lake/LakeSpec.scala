@@ -2,11 +2,8 @@ package graft.lake
 
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -96,6 +93,33 @@ class LakeSpec extends SparkSpec {
     // latest still fully readable; dropped version is gone
     assert(t.read(spark).count() == 60)
     intercept[IllegalArgumentException](t.snapshot(1))
+  }
+
+  test("vacuum keeps only retained files and unpublished writes in grace") {
+    val t = freshTable()
+    t.append(rows(1 to 20, "a").repartition(2)) // v1
+    t.deleteRange(spark, 1, 20) // v2: delete-all, a schema-only file
+    t.overwrite(rows(1 to 0, "e")) // v3: empty overwrite, the same
+    t.append(rows(30 to 40, "b")) // v4
+    val data = Paths.get(t.root, "data").toAbsolutePath
+    def put(dir: String, name: String): java.nio.file.Path =
+      Files.writeString(Files.createDirectories(data.resolve(dir)).resolve(name), "x")
+    put("v00004", "part-lost-race.parquet") // a racer that lost v4's publish
+    val crashed = put("v00005", "part-crashed.parquet") // never published
+    val stale = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis() - VersionedTable.VacuumGraceMs - 60000L)
+    Files.setLastModifiedTime(crashed, stale)
+    Files.setLastModifiedTime(crashed.getParent, stale)
+    val inFlight = put("v00006", "part-in-flight.parquet") // fresh: still writing
+    t.vacuum(retainVersions = 1)
+    val live = t.liveFiles().map(p => Paths.get(new java.net.URI(p).getPath)).toSet
+    val left = Files.walk(data)
+    val onDisk = try left.iterator().asScala.filter(_ != data).toSet finally left.close()
+    val sidecars = live.map(p => p.resolveSibling(s".${p.getFileName}.crc"))
+    val want = live ++ sidecars ++ live.map(_.getParent) + inFlight + inFlight.getParent
+    assert(onDisk == want, s"left behind: ${(onDisk -- want).toSeq.sorted.mkString(", ")}; " +
+      s"gone: ${(want -- onDisk).toSeq.sorted.mkString(", ")}")
+    assert(t.read(spark).count() == 11)
   }
 
   test("additive schema evolution: old files read back with nulls, no rewrite") {
@@ -614,35 +638,6 @@ class LakeSpec extends SparkSpec {
     val all = t.read(spark)
     assert(all.count() == 14)
     assert(all.filter($"k".isNull).select("v").as[Double].collect().sorted.toSeq == Seq(1.0, 2.0))
-  }
-
-  /** Spark jobs in the order they start, and the ends of write commands. */
-  private class JobLog extends SparkListener {
-    private val writes = mutable.Set.empty[Long]
-    val events = mutable.ArrayBuffer.empty[String]
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized(events += "job")
-    override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
-      e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
-          writes += s.executionId
-        case end: SparkListenerSQLExecutionEnd if writes(end.executionId) => events += "write"
-        case _ =>
-      }
-    }
-  }
-
-  private def logJobs(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    org.apache.spark.sql.graft.ListenerProbe.drain(sc)
-    val log = new JobLog
-    sc.addSparkListener(log)
-    try body
-    finally {
-      org.apache.spark.sql.graft.ListenerProbe.drain(sc)
-      sc.removeSparkListener(log)
-    }
-    log.synchronized(log.events.toSeq)
   }
 
   test("an append runs one Spark job; a merge runs none after its write") {

@@ -439,13 +439,14 @@ class DedupSpec extends SparkSpec {
 
   test("nearDupClusters refuses to return non-converged labels") {
     import spark.implicits._
-    // a 6-hop chain cannot converge in 2 iterations — must throw, never
-    // silently return local-minimum labels
+    // one round leaves the 6-node path as 1-2, 1-3, 2-4, 3-5, 4-6, no
+    // star forest yet — must throw, never silently return local-minimum
+    // labels
     val chain = (1L to 6L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("id_a", "id_b")
     val ex = intercept[IllegalStateException] {
-      Dedup.nearDupClusters(chain, maxIter = 2).collect()
+      Dedup.nearDupClusters(chain, maxRounds = 1).collect()
     }
-    assert(ex.getMessage.contains("maxIter"))
+    assert(ex.getMessage.contains("maxRounds"))
     // and converges fine with the default bound
     val ok = Dedup.nearDupClusters(chain).collect().map(r => r.getLong(1)).distinct
     assert(ok.toSeq == Seq(1L))
@@ -657,11 +658,28 @@ class DedupSpec extends SparkSpec {
     assert(a3 == after, "replaying the ingested batch must be a no-op")
   }
 
-  test("connectedComponentsAlternating == nearDupClusters; deep chains close in log rounds") {
+  /** Component minimum of every id in `pairs`, by union-find on the
+    * driver: the root of a set is always its least id.
+    */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    for ((a, b) <- pairs) {
+      val (ra, rb) = (find(a), find(b))
+      parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  test("nearDupClusters matches a union-find oracle") {
     import spark.implicits._
-    // same-contract equivalence on the shapes that distinguish CC
-    // algorithms: chain (diameter), clique (density), star (fan),
-    // self-pair-only singleton, and a seeded random graph
+    // the shapes that tell CC algorithms apart: chain (diameter), clique
+    // (density), star (fan), a self-pair-only id, a seeded random graph,
+    // and a 2,000-node path with shuffled ids, which label propagation
+    // needs hundreds of rounds for
     val rng = new scala.util.Random(23)
     val structured = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L),
@@ -669,24 +687,34 @@ class DedupSpec extends SparkSpec {
       (20L, 21L), (30L, 30L))
     val random = (1 to 300).map(_ =>
       (rng.nextInt(120).toLong + 100L, rng.nextInt(120).toLong + 100L))
-    val pairs = (structured ++ random).toDF("id_a", "id_b")
-    val viaLabels = Dedup.nearDupClusters(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val viaStars = Dedup.connectedComponentsAlternating(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(viaStars == viaLabels,
-      s"diff: ${viaStars.toSet.diff(viaLabels.toSet).take(5)} vs ${viaLabels.toSet.diff(viaStars.toSet).take(5)}")
-    assert(viaStars(30L) == 30L, "a self-pair-only id is its own singleton component")
+    val path = rng.shuffle((1L to 2000L).toVector).sliding(2).map(s => (s(0), s(1))).toSeq
+    for ((name, pairs) <- Seq("structured + random" -> (structured ++ random), "path" -> path)) {
+      val got = Dedup.nearDupClusters(pairs.toDF("id_a", "id_b"))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = unionFind(pairs)
+      assert(got == want,
+        s"$name: ${got.toSet.diff(want.toSet).take(5)} vs ${want.toSet.diff(got.toSet).take(5)}")
+    }
+  }
 
-    // the deep-graph case the min-label budget cannot touch: a
-    // 2 000-hop path needs 2 000 label-propagation passes (80× the
-    // default maxIter) but closes here in O(log) star rounds
-    val deep = (1L to 2000L).sliding(2).map(s => (s.head, s.last)).toSeq
-      .toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponentsAlternating(deep)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(labels.length == 2000 && labels.forall(_._2 == 1L),
-      "the whole path must collapse to component 1")
+  test("nearDupClusters closes a clique-plus-star in one round") {
+    import spark.implicits._
+    // a 5-clique and a star whose center 15 is its greatest id: one
+    // round makes both stars around their minima, so a cap of one round
+    // does not throw
+    val clique = for (a <- 1L to 5L; b <- (a + 1) to 5L) yield (a, b)
+    val forest = (clique ++ (11L to 14L).map(_ -> 15L)).toDF("id_a", "id_b")
+    var labels = Map.empty[Long, Long]
+    val jobs = logJobs {
+      labels = Dedup.nearDupClusters(forest, maxRounds = 1)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(labels == ((1L to 5L).map(_ -> 1L) ++ (11L to 15L).map(_ -> 11L)).toMap)
+    // adaptive execution runs each shuffle stage as a job of its own: the
+    // first node table's window, its count (an exchange and a result),
+    // the round's two windows, their count, and the collect, which reads
+    // the last table without an exchange
+    assert(jobs.count(_ == "job") == 8, s"jobs: ${jobs.mkString(", ")}")
   }
 
   test("minHashDedupExact keeps one representative per component (vs greedy)") {

@@ -279,24 +279,20 @@ class EntityResolutionSpec extends SparkSpec {
     }
   }
 
-  test("resolve: a chain deeper than the label budget falls back to star contraction") {
+  test("resolve: a 30-node path closes into one entity") {
     import spark.implicits._
     // 30 names where name_i has its first i chars flipped to 'z': each
     // adjacent pair is ONE edit apart (score 0.6·39/40 + 0.4 = 0.985 ≥
     // 0.98) and every distance-2 pair is two edits (0.97 < 0.98) — the
-    // pair graph is a 30-node PATH, diameter 29, past nearDupClusters'
-    // default 25-iteration budget (proven below by the row-pair closure
-    // throwing). resolve must survive via the star-contraction fallback
-    // and still close the whole chain into entity 1.
+    // pair graph is a 30-node PATH, diameter 29, the shape a salted
+    // boilerplate block's bucket chain takes. Both closure topologies
+    // must close the whole chain into entity 1.
     val base = "a" * 40
     val df = (1 to 30).map(i => (i.toLong, "B", "z" * i + base.drop(i), "mfg"))
       .toDF("id", "blk", "name", "kind")
     val fields = Seq(("name", 0.6), ("kind", 0.4))
     val pairs = linkPairs(df, "id", Seq("blk"), fields, 0.98)
     assert(pairs.count() == 29L, "the fixture must be exactly the adjacent-pair path")
-    intercept[IllegalStateException] {
-      Dedup.nearDupClusters(pairs).collect()
-    }
     for (gate <- Seq(Long.MaxValue, 0L)) { // row path AND forced compact path
       val got = resolve(df, "id", Seq("blk"), fields, 0.98,
           compactClosureMinPairs = gate)

@@ -429,6 +429,18 @@ class SimilaritySpec extends SparkSpec {
       ("n", c(2).toDouble, 1L)))
   }
 
+  test("rrfFuse refuses a pool that holds an id twice") {
+    import spark.implicits._
+    // "a" twice would otherwise merge into one group and rank 2, ahead of
+    // "b" at rank 3 — and "b" would lose a rank it holds
+    val pool = Seq(("a", 3.0), ("b", 2.0), ("a", 1.0)).toDF("id", "s")
+    val other = Seq(("b", 1.0)).toDF("id", "s")
+    val ex = intercept[Exception] {
+      Similarity.rrfFuse(Seq((other, "s"), (pool, "s")), "id").collect()
+    }
+    assert(ex.getMessage.contains("id a appears more than once"), ex.getMessage)
+  }
+
   test("hybridTopK: IVF semantic pool at nprobe=C fuses identically to brute force") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val q = emb.filter(col("vec_id") === 1).select("embedding").head.getSeq[Float](0).toArray
