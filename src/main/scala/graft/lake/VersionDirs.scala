@@ -1,6 +1,6 @@
 package graft.lake
 
-import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException, Files, Path}
+import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException, Files, Path, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
@@ -40,6 +40,13 @@ private[lake] object VersionDirs {
     } catch { case _: FileAlreadyExistsException => false }
     finally Files.deleteIfExists(tmp)
   }
+
+  /** Atomic rename of a finished directory into `target`. It fails when
+    * another writer's directory is already there (a rename never
+    * replaces a non-empty directory), so two racers get one winner.
+    */
+  def publishDir(staged: Path, target: Path): Unit =
+    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE): Unit
 
   /** Delete the entries published under `dir` with `suffix` whose
     * version is below `version`.

@@ -15,7 +15,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.SparkBridge
+import org.apache.spark.sql.graft.{NativeExprs, SparkBridge}
 import org.apache.spark.sql.types.StructType
 
 /** One data file of a table snapshot, with its zone-map stats: the key
@@ -87,8 +87,10 @@ final case class Snapshot(
   *
   * The key column should be a plain integer — the usual shape for an
   * upsert key — for its zone to prune. Any other numeric key still works
-  * (merges compare it cast to long) but its files carry the full zone,
-  * so every merge rewrites and every range read scans them.
+  * but its files carry the full zone, so every merge rewrites and every
+  * range read scans them: zones and the merge's file prune use the key
+  * cast to long, while the merge's row match compares keys in their own
+  * type.
   */
 final class VersionedTable private (
     val root: String,
@@ -264,8 +266,13 @@ final class VersionedTable private (
     *    declared and present in `df`.
     * CHECK constraints ride the write job itself: an `observe` counts
     * the violations of each check (SQL semantics: only `check IS FALSE`
-    * violates, NULL passes). Any violation deletes the data dir and
-    * aborts before a manifest exists — no version, no orphan files.
+    * violates, NULL passes). The files are written to a staging dir
+    * that is renamed to the version's data dir only after the write and
+    * its checks succeed. Any violation, like a failed write job, deletes
+    * the staging dir and aborts before a manifest exists — no version,
+    * and a retry can take the same version. (Files that the failed
+    * job's cancelled tasks write afterwards stay in the staging dir
+    * until [[vacuum]]'s grace period ends.)
     */
   private def writeFiles(df: DataFrame, version: Int): Seq[FileEntry] = {
     val dir = dataDir(version)
@@ -274,22 +281,31 @@ final class VersionedTable private (
     val violations = checks.zipWithIndex.map { case (c, i) =>
       count(when(expr(c) <=> lit(false), 1)).as(s"__ck_$i")
     }
-    checked.fold(df)(o => df.observe(o, violations.head, violations.tail: _*))
-      .write.mode("errorifexists")
-      // the manifest is the commit record: no `_SUCCESS` marker
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .parquet(dir)
-    checked.foreach { o =>
-      val counted = o.get
-      val violated = checks.zipWithIndex
-        .map { case (c, i) => c -> counted(s"__ck_$i").asInstanceOf[Long] }
-        .filter(_._2 > 0)
-      if (violated.nonEmpty) {
-        VersionDirs.deleteTree(Paths.get(dir))
-        throw new IllegalArgumentException(
-          "CHECK constraint violation, commit aborted: " +
-            violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
+    // written under a staging name, then renamed into place in one step:
+    // a version's data dir is absent or complete, and a failed write,
+    // whose cancelled tasks may still be writing, never blocks a retry
+    val staged = Paths.get(s"$dir.${java.util.UUID.randomUUID}.tmp")
+    try {
+      checked.fold(df)(o => df.observe(o, violations.head, violations.tail: _*))
+        .write.mode("errorifexists")
+        // the manifest is the commit record: no `_SUCCESS` marker
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .parquet(staged.toString)
+      checked.foreach { o =>
+        val counted = o.get
+        val violated = checks.zipWithIndex
+          .map { case (c, i) => c -> counted(s"__ck_$i").asInstanceOf[Long] }
+          .filter(_._2 > 0)
+        if (violated.nonEmpty)
+          throw new IllegalArgumentException(
+            "CHECK constraint violation, commit aborted: " +
+              violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
       }
+      VersionDirs.publishDir(staged, Paths.get(dir))
+    } catch {
+      case e: Throwable =>
+        VersionDirs.deleteTree(staged)
+        throw e
     }
     import VersionedTable.{doubleBound, footerZone, longBound}
     // stats columns the written frame actually has (schema evolution: a
@@ -354,20 +370,35 @@ final class VersionedTable private (
 
   /** Copy-on-write MERGE (upsert, latest-wins by whole row): rows of
     * `updates` replace current rows with the same key; unmatched update
-    * keys are inserted.
+    * keys are inserted, and so is every update row whose key is NULL (a
+    * NULL key matches nothing).
     *
-    * File pruning: only data files whose [minKey, maxKey] zone contains
-    * at least one update key are rewritten — the untouched files are
-    * carried into the new snapshot by reference. The distinct update
-    * keys are collected to the driver for the prune decision (bounded
-    * by the update batch, which in the daily-upsert shape is orders of
-    * magnitude smaller than the table; a batch too large to collect is
-    * a full rewrite anyway — call `overwrite`).
+    * One job before the write, with no shuffle: every update row's key
+    * is collected to the driver, once, and deduplicated there. The keys
+    * serve twice:
+    *  - File pruning, on the keys cast to long (the zone type): only
+    *    data files whose [minKey, maxKey] zone contains at least one
+    *    update key are rewritten, and the untouched files are carried
+    *    into the new snapshot by reference. A non-NULL key with no long
+    *    form says nothing about zones, so it touches every file.
+    *  - Removing the replaced rows from the touched files, by an exact
+    *    membership test in the key's own type (`NativeExprs.withKeySet`):
+    *    a filter, not a join, so the rewrite plan holds no exchange.
+    * The collect is bounded by the update batch, which in the
+    * daily-upsert shape is orders of magnitude smaller than the table.
+    * A batch of 10^6 rows with long keys holds ~100 MB of collected rows
+    * on the driver while the commit runs, plus a key set of ~50 MB of
+    * heap there and on each executor: a broadcast, shipped once per
+    * executor, not per task, and destroyed when the commit ends. A
+    * batch too large for that is a full rewrite anyway — call
+    * `overwrite`.
     */
-  def merge(updates: DataFrame): Snapshot = withBarrier(updates)(mergeTxn(_, None))
+  def merge(updates: DataFrame): Snapshot = withBarrier(updates) { u =>
+    mergeTxn(u, None).getOrElse(throw new IllegalArgumentException("empty update batch"))
+  }
 
   /** Barrier for update frames that feed SEVERAL actions of one commit
-    * (the emptiness probe, [[merge]]'s update-key collect, and the data
+    * (the emptiness probe or [[merge]]'s key collect, then the data
     * write): without it the whole upstream chain — often an expensive
     * incremental-advance computation — re-executes once per action
     * (guide §7.2 duplicate work across actions; measured on
@@ -375,8 +406,9 @@ final class VersionedTable private (
     * 2-3× per commit). Lazy localCheckpoint: materializes inside the
     * first action, later actions read the cached rows. Only `write`
     * reads them, so their blocks are released when it returns or
-    * throws. Losing an executor between the emptiness probe and the
-    * write fails the commit loudly and leaves the manifest unchanged.
+    * throws. Losing an executor between the first action and the write
+    * fails the commit loudly, leaves the manifest unchanged and leaves
+    * no data dir behind (see [[writeFiles]]), so a retry commits.
     */
   private def withBarrier(df: DataFrame)(write: DataFrame => Snapshot): Snapshot = {
     val barrier = df.localCheckpoint(eager = false)
@@ -385,14 +417,16 @@ final class VersionedTable private (
       .foreach(_.unpersist(blocking = true))
   }
 
-  private def mergeTxn(updates: DataFrame, txn: Option[(String, Long)]): Snapshot = {
+  /** [[merge]]'s commit, or None for an empty batch (nothing committed). */
+  private def mergeTxn(updates: DataFrame, txn: Option[(String, Long)]): Option[Snapshot] = {
     val spark = updates.sparkSession
     val base = latest()
     require(base.version >= 1, "merge into an empty table — use append")
 
-    val updKeys = updates.select(col(keyCol).cast("long")).distinct()
-      .collect().map(_.getLong(0)).sorted
-    require(updKeys.nonEmpty, "empty update batch")
+    val collected = updates.select(col(keyCol), col(keyCol).cast("long")).collect()
+    if (collected.isEmpty) return None
+    val updKeys = collected.filterNot(_.isNullAt(1)).map(_.getLong(1)).distinct.sorted
+    val unzoned = collected.exists(r => !r.isNullAt(0) && r.isNullAt(1))
 
     def overlaps(f: FileEntry): Boolean = {
       // any update key within the file's zone? binary search the sorted
@@ -405,19 +439,19 @@ final class VersionedTable private (
       lo < updKeys.length && updKeys(lo) <= f.maxKey
     }
 
-    val (touched, untouched) = base.files.partition(overlaps)
-    val schema = evolveSchema(base.schemaDdl, updates.schema)
-    val survivors =
-      if (touched.isEmpty) updates
-      else {
-        // touched files are read under the EVOLVED schema (columns the
-        // old files lack come back null), and evolved updates likewise
-        // fill columns they lack — additive evolution without rewrites
-        readFiles(spark, touched, Some(schema))
-          .join(updates.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-          .unionByName(updates, allowMissingColumns = true)
-      }
-    commitNext(base, untouched, survivors, txn, Some(schema))
+    val (touched, untouched) = base.files.partition(f => unzoned || overlaps(f))
+    val schema = Some(evolveSchema(base.schemaDdl, updates.schema))
+    if (touched.isEmpty) Some(commitNext(base, untouched, updates, txn, schema))
+    else NativeExprs.withKeySet(spark.sparkContext, updates.schema(keyCol).dataType,
+        collected.iterator.map(_.get(0))) { inKeys =>
+      // touched files are read under the EVOLVED schema (columns the
+      // old files lack come back null), and evolved updates likewise
+      // fill columns they lack — additive evolution without rewrites
+      val survivors = readFiles(spark, touched, schema)
+        .filter(!inKeys(col(keyCol)))
+        .unionByName(updates, allowMissingColumns = true)
+      Some(commitNext(base, untouched, survivors, txn, schema))
+    }
   }
 
   /** Copy-on-write range DELETE: remove all rows with key in [lo, hi].
@@ -435,8 +469,9 @@ final class VersionedTable private (
     require(base.version >= 1, "delete from an empty table")
     val (touched, untouched) = base.files.partition(f => f.maxKey >= lo && f.minKey <= hi)
     if (touched.isEmpty) return base // nothing in range: no new version
+    // a NULL key (or one with no long form) is in no range: it stays
     val survivors = readFiles(spark, touched, base.schemaDdl)
-      .filter(!col(keyCol).cast("long").between(lo, hi))
+      .filter(!coalesce(col(keyCol).cast("long").between(lo, hi), lit(false)))
     commitNext(base, untouched, survivors, None, base.schemaDdl)
   }
 
@@ -497,7 +532,7 @@ final class VersionedTable private (
   }
 
   /** [[ifNew]] for batches that may be empty. The barrier comes BEFORE
-    * the emptiness probe: probe, key collect and write all read the one
+    * the emptiness probe: probe and write both read the one
     * materialization (see [[withBarrier]]). An empty batch applied zero
     * times IS exactly once; skipping the commit keeps the log free of
     * no-op versions and leaves the marker where it was.
@@ -514,13 +549,16 @@ final class VersionedTable private (
     * foreachBatch after a checkpoint recovery — is detected by the txn
     * marker and skipped without a commit, making the table an
     * exactly-once streaming sink (the transactional-writer pattern:
-    * progress marker and data change in the SAME atomic commit).
+    * progress marker and data change in the SAME atomic commit). The
+    * merge's key collect is its emptiness probe: an empty batch runs
+    * that one job and commits nothing, as [[ifNewNonEmpty]] does.
     *
     * Returns the resulting (or unchanged) snapshot.
     */
   def upsertIfNew(updates: DataFrame, appId: String, batchId: Long): Snapshot =
-    ifNewNonEmpty(updates, appId, batchId) { (u, txn) =>
-      if (currentVersion() == 0) appendTxn(u, txn) else mergeTxn(u, txn)
+    if (currentVersion() == 0) ifNewNonEmpty(updates, appId, batchId)(appendTxn)
+    else ifNew(appId, batchId) { txn =>
+      withBarrier(updates)(u => mergeTxn(u, txn).getOrElse(latest()))
     }
 
   /** Idempotent append: add `df`'s rows EXACTLY ONCE per

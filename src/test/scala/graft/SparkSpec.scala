@@ -58,7 +58,14 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * a "write" at the end of each write command. Jobs that adaptive
     * execution submits for its shuffle stages count too.
     */
-  def logJobs(body: => Unit): Seq[String] = {
+  def logJobs(body: => Unit): Seq[String] = listen(body).events.toSeq
+
+  /** The physical plan of each write command `body` runs, as printed
+    * when the command starts.
+    */
+  def logWritePlans(body: => Unit): Seq[String] = listen(body).plans.toSeq
+
+  private def listen(body: => Unit): JobLog = {
     val sc = spark.sparkContext
     org.apache.spark.sql.graft.ListenerProbe.drain(sc)
     val log = new JobLog
@@ -68,18 +75,20 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       org.apache.spark.sql.graft.ListenerProbe.drain(sc)
       sc.removeSparkListener(log)
     }
-    log.synchronized(log.events.toSeq)
+    log
   }
 
   private class JobLog extends SparkListener {
     private val writes = mutable.Set.empty[Long]
     val events = mutable.ArrayBuffer.empty[String]
+    val plans = mutable.ArrayBuffer.empty[String]
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized(events += "job")
     override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized {
       e match {
         case s: SparkListenerSQLExecutionStart
             if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
           writes += s.executionId
+          plans += s.physicalPlanDescription
         case end: SparkListenerSQLExecutionEnd if writes(end.executionId) => events += "write"
         case _ =>
       }

@@ -4,7 +4,13 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.lang3.exception.ExceptionUtils
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BlockProbe
 
 import graft.SparkSpec
 
@@ -646,15 +652,146 @@ class LakeSpec extends SparkSpec {
     t.append(rows(1 to 100, "a"))
     val append = logJobs(t.append(rows(101 to 200, "b")))
     assert(append.count(_ == "job") == 1, s"append ran: ${append.mkString(", ")}")
+    // the key collect, then the write
     val merge = logJobs(t.merge(rows(90 to 110, "m")))
-    assert(merge.contains("write"))
-    val afterWrite = merge.drop(merge.lastIndexOf("write") + 1)
-    assert(!afterWrite.contains("job"), s"merge ran: ${merge.mkString(", ")}")
+    assert(merge == Seq("job", "job", "write"), s"merge ran: ${merge.mkString(", ")}")
     assert(t.read(spark).count() == 200)
     // the checks' counts come from the write job even when it writes no row
     val empty = logJobs(t.overwrite(rows(1 to 0, "e")))
     assert(empty.count(_ == "job") == 1, s"empty overwrite ran: ${empty.mkString(", ")}")
     assert(t.tableCount() == 0)
+  }
+
+  test("upsertIfNew into a committed table probes emptiness with its key collect") {
+    val t = freshTable()
+    t.append(rows(1 to 100, "a"))
+    val upsert = logJobs(t.upsertIfNew(rows(90 to 110, "u"), "up", 1L))
+    assert(upsert == Seq("job", "job", "write"), s"upsert ran: ${upsert.mkString(", ")}")
+    val empty = logJobs(t.upsertIfNew(rows(1 to 0, "e"), "up", 2L))
+    assert(empty == Seq("job"), s"empty upsert ran: ${empty.mkString(", ")}")
+    assert(t.currentVersion() == 2 && t.lastTxn("up").contains(1L))
+    assert(t.read(spark).count() == 110)
+  }
+
+  private def nullableRows(keys: Seq[Option[Long]], tag: String) =
+    keys.zipWithIndex.map { case (k, i) => (k, tag, i.toDouble) }.toDF("k", "tag", "v")
+
+  test("NULL update keys are plain inserts, in a mixed batch and in an all-NULL one") {
+    val t = freshTable()
+    t.append(rows(1 to 10, "a").repartitionByRange(2, $"k"))
+    t.merge(nullableRows(Seq(Some(5L), None, Some(20L)), "m"))
+    val cur = t.read(spark)
+    assert(cur.count() == 12)
+    assert(cur.filter($"k".isNull).select("tag").as[String].collect().toSeq == Seq("m"))
+    assert(cur.filter($"k" === 5).select("tag").as[String].collect().toSeq == Seq("m"))
+
+    // no key to prune with: every file is carried, the batch is inserted
+    val before = t.liveFiles().toSet
+    t.merge(nullableRows(Seq(None, None), "n"))
+    assert(t.currentVersion() == 3 && before.subsetOf(t.liveFiles().toSet))
+    assert(t.read(spark).filter($"k".isNull).count() == 3)
+  }
+
+  test("deleteRange keeps the NULL-key rows of the files it rewrites") {
+    val t = freshTable()
+    t.append(nullableRows(Seq(Some(1L), None, Some(5L)), "a").coalesce(1))
+    t.deleteRange(spark, 1, 2)
+    assert(t.read(spark).select("k", "v").as[(Option[Long], Double)].collect().sortBy(_._2).toSeq ==
+      Seq((None, 1.0), (Some(5L), 2.0)))
+  }
+
+  /** The merge as its rewrite once ran it, over the whole table: a left
+    * anti-join on the batch's distinct keys drops the replaced rows, and
+    * the batch is added. Rows come back as strings in `columns` order.
+    */
+  private def antiJoinMerge(before: DataFrame, updates: DataFrame, columns: Seq[String]): Seq[String] =
+    before.join(updates.select("k").distinct(), Seq("k"), "left_anti")
+      .unionByName(updates, allowMissingColumns = true)
+      .select(columns.map(col): _*).collect().map(_.toString).sorted.toSeq
+
+  /** Merges `updates` into `t` and checks the table against the anti-join
+    * formulation, and that the rewrite plan has no exchange and no join.
+    */
+  private def assertMergeParity(t: VersionedTable, updates: DataFrame): Unit = {
+    val before = t.read(spark, asOf = Some(t.currentVersion()))
+    val Seq(plan) = logWritePlans(t.merge(updates))
+    assert(!plan.contains("Exchange") && !plan.contains("Join"), plan)
+    val after = t.read(spark)
+    assert(after.collect().map(_.toString).sorted.toSeq ==
+      antiJoinMerge(before, updates, after.columns.toSeq))
+  }
+
+  test("merge matches the anti-join formulation: long, int, double and NULL keys, evolution, no touch") {
+    val long = freshTable()
+    long.append(rows(1 to 100, "a").repartitionByRange(4, $"k"))
+    assertMergeParity(long, rows(20 to 30, "m").union(rows(500 to 505, "n")))
+    // keys beyond every zone: no file is touched, every one is carried
+    val carried = long.liveFiles().toSet
+    assertMergeParity(long, rows(1000 to 1005, "far"))
+    assert(carried.subsetOf(long.liveFiles().toSet))
+    // an evolved batch: old rows read back with the new column NULL
+    assertMergeParity(long, rows(40 to 45, "w").withColumn("w", $"k" * 2))
+
+    val int = VersionedTable(scratchDir("graft-lake-int").toString, "k")
+    int.append((1 to 50).map(i => (i, "a", i.toDouble)).toDF("k", "tag", "v").repartition(2))
+    assertMergeParity(int, (45 to 60).map(i => (i, "m", -1.0)).toDF("k", "tag", "v"))
+
+    // NULL keys on both sides: a NULL matches nothing, so both stay
+    val nulls = freshTable()
+    nulls.append(nullableRows(Seq(Some(1L), None, Some(3L), Some(4L)), "a").repartition(2))
+    assertMergeParity(nulls, nullableRows(Seq(None, Some(3L), Some(9L)), "m"))
+
+    // double keys match as join keys do: -0.0 is 0.0, and NaN is NaN
+    val dbl = VersionedTable(scratchDir("graft-lake-double").toString, "k")
+    dbl.append(Seq((0.0, "a", 1.0), (1.5, "a", 2.0), (Double.NaN, "a", 3.0)).toDF("k", "tag", "v"))
+    assertMergeParity(dbl, Seq((-0.0, "m", 4.0), (Double.NaN, "m", 5.0)).toDF("k", "tag", "v"))
+  }
+
+  test("a merge that loses its barrier's blocks before the write fails, and a retry commits") {
+    val t = freshTable()
+    t.append(rows(1 to 100, "a").repartition(2))
+    val sc = spark.sparkContext
+    val cachedBefore = BlockProbe.cachedRdds(sc)
+    @volatile var dropped = Set.empty[Int]
+    // the write's planning runs on the driver between the key collect
+    // (which materialized the barrier) and the write job
+    val dropAtWrite = new SparkStrategy {
+      def apply(plan: LogicalPlan): Seq[SparkPlan] = {
+        plan match {
+          case w: InsertIntoHadoopFsRelationCommand
+              if dropped.isEmpty && w.outputPath.toString.contains(t.root) =>
+            dropped = BlockProbe.cachedRdds(sc) -- cachedBefore
+            dropped.foreach(BlockProbe.dropRdd(sc, _))
+          case _ =>
+        }
+        Nil
+      }
+    }
+    val updates = rows(90 to 110, "m").repartition(2)
+    val before = t.read(spark, asOf = Some(1))
+    val experimental = spark.sessionState.experimentalMethods
+    experimental.extraStrategies = experimental.extraStrategies :+ dropAtWrite
+    val failure =
+      try intercept[Exception](t.merge(updates))
+      finally experimental.extraStrategies = experimental.extraStrategies.filterNot(_ eq dropAtWrite)
+    assert(dropped.nonEmpty, "the merge materialized no barrier before its write")
+    assert(ExceptionUtils.getStackTrace(failure).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
+    assert(t.currentVersion() == 1, s"a failed merge committed: $failure")
+    t.merge(updates)
+    assert(t.currentVersion() == 2)
+    val after = t.read(spark)
+    assert(after.collect().map(_.toString).sorted.toSeq == antiJoinMerge(before, updates, after.columns.toSeq))
+  }
+
+  test("a write job that fails leaves no data dir, so a retry takes its version") {
+    // a CHECK that raises, instead of being counted, fails the write job
+    val t = VersionedTable(scratchDir("graft-lake-failed-write").toString, "k",
+      checks = Seq("assert_true(v >= 0) IS NULL"))
+    t.append(rows(1 to 10, "a"))
+    intercept[Exception](t.append(rows(11 to 12, "bad").withColumn("v", lit(-1.0))))
+    assert(t.currentVersion() == 1 && !Files.exists(Paths.get(t.root, "data", "v00002")))
+    t.append(rows(11 to 12, "ok"))
+    assert(t.currentVersion() == 2 && t.read(spark).count() == 12)
   }
 
   test("lake data dirs hold no _SUCCESS marker") {

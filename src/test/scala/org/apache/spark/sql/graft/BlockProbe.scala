@@ -13,6 +13,12 @@ object BlockProbe {
   def cachedRdds(sc: SparkContext): Set[Int] =
     sc.env.blockManager.master.getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
       .flatMap(_.asRDDId).map(_.rddId).toSet
+
+  /** Removes every block of RDD `id` everywhere, as losing the executors
+    * that held them would; returns when they are gone.
+    */
+  def dropRdd(sc: SparkContext, id: Int): Unit =
+    sc.env.blockManager.master.removeRdd(id, blocking = true)
 }
 
 /** Test-side reach into the listener bus, which is private to Spark. */
