@@ -1,5 +1,6 @@
 package graft.lake
 
+import java.io.IOException
 import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException, Files, Path, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
@@ -41,12 +42,13 @@ private[lake] object VersionDirs {
     finally Files.deleteIfExists(tmp)
   }
 
-  /** Atomic rename of a finished directory into `target`. It fails when
-    * another writer's directory is already there (a rename never
-    * replaces a non-empty directory), so two racers get one winner.
+  /** Atomic rename of a finished directory into `target`. Returns false
+    * when another writer's directory is already there — a rename never
+    * replaces a non-empty directory, so two racers produce one winner.
     */
-  def publishDir(staged: Path, target: Path): Unit =
-    Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE): Unit
+  def publishDir(staged: Path, target: Path): Boolean =
+    try { Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE); true }
+    catch { case _: IOException if Files.exists(target) => false }
 
   /** Delete the entries published under `dir` with `suffix` whose
     * version is below `version`.

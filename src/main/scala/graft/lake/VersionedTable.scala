@@ -72,7 +72,8 @@ final case class Snapshot(
   *   - `readRange` prunes files by zone map BEFORE Spark lists them —
   *     the same trick as parquet row-group skipping, one level up. The
   *     residual per-row filter is still pushed to the scan.
-  *   - Commits are atomic via hard-link publish (create-if-absent): two
+  *   - Commits are atomic via create-if-absent publishes: a version's
+  *     data dir appears by one rename, its manifest by a hard link. Two
   *     racing writers produce ONE winner and one clean
   *     ConcurrentModificationException — optimistic concurrency,
   *     single-winner, no torn manifest. (On an object store this
@@ -205,6 +206,9 @@ final class VersionedTable private (
 
   /** Commit the version after `base`: the `carried` files by reference
     * plus `df` written as new files. Every write commits through here.
+    * Once [[writeFiles]] has renamed the data dir into place it holds
+    * only this commit's files, so a manifest publish that fails deletes
+    * it, and a retry can take the version.
     */
   private def commitNext(
       base: Snapshot,
@@ -213,7 +217,13 @@ final class VersionedTable private (
       txn: Option[(String, Long)],
       schemaDdl: Option[String]): Snapshot = {
     val next = base.version + 1
-    commit(next, carried ++ writeFiles(df, next), base.txns ++ txn, schemaDdl)
+    val written = writeFiles(df, next)
+    try commit(next, carried ++ written, base.txns ++ txn, schemaDdl)
+    catch {
+      case e: Throwable =>
+        VersionDirs.deleteTree(Paths.get(dataDir(next)))
+        throw e
+    }
   }
 
   /** Additive schema evolution: existing fields keep their position and
@@ -266,17 +276,19 @@ final class VersionedTable private (
     *    declared and present in `df`.
     * CHECK constraints ride the write job itself: an `observe` counts
     * the violations of each check (SQL semantics: only `check IS FALSE`
-    * violates, NULL passes). The files are written to a staging dir
-    * that is renamed to the version's data dir only after the write and
-    * its checks succeed. Any violation, like a failed write job, deletes
-    * the staging dir and aborts before a manifest exists — no version,
-    * and a retry can take the same version. (Files that the failed
-    * job's cancelled tasks write afterwards stay in the staging dir
-    * until [[vacuum]]'s grace period ends.)
+    * violates, NULL passes). The files are written to a staging dir,
+    * and their entries are built there; only then is it renamed to the
+    * version's data dir. Any failure before the rename — a violation, a
+    * failed write job, a failed footer or bloom read — deletes the
+    * staging dir and aborts before a manifest exists: no version, and a
+    * retry can take the same version. (Files that a failed job's
+    * cancelled tasks write afterwards stay in the staging dir until
+    * [[vacuum]]'s grace period ends.) A rename that finds another
+    * writer's data dir for the version loses the race, as a manifest
+    * publish does.
     */
   private def writeFiles(df: DataFrame, version: Int): Seq[FileEntry] = {
-    val dir = dataDir(version)
-    val spark = df.sparkSession
+    val dir = Paths.get(dataDir(version))
     val checked = if (checks.isEmpty) None else Some(Observation())
     val violations = checks.zipWithIndex.map { case (c, i) =>
       count(when(expr(c) <=> lit(false), 1)).as(s"__ck_$i")
@@ -284,7 +296,7 @@ final class VersionedTable private (
     // written under a staging name, then renamed into place in one step:
     // a version's data dir is absent or complete, and a failed write,
     // whose cancelled tasks may still be writing, never blocks a retry
-    val staged = Paths.get(s"$dir.${java.util.UUID.randomUUID}.tmp")
+    val staged = dir.resolveSibling(s"${dir.getFileName}.${java.util.UUID.randomUUID}.tmp")
     try {
       checked.fold(df)(o => df.observe(o, violations.head, violations.tail: _*))
         .write.mode("errorifexists")
@@ -301,18 +313,28 @@ final class VersionedTable private (
             "CHECK constraint violation, commit aborted: " +
               violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
       }
-      VersionDirs.publishDir(staged, Paths.get(dir))
+      // entries name each file where the rename puts it
+      val entries = fileEntries(df, staged.toString).map(f => f.copy(path =
+        f.path.replace(s"/${staged.getFileName}/", s"/${dir.getFileName}/")))
+      if (!VersionDirs.publishDir(staged, dir))
+        throw new java.util.ConcurrentModificationException(
+          s"version $version was committed by another writer")
+      entries
     } catch {
       case e: Throwable =>
         VersionDirs.deleteTree(staged)
         throw e
     }
+  }
+
+  /** The entries of the files `df` was just written as in `dir`. */
+  private def fileEntries(df: DataFrame, dir: String): Seq[FileEntry] = {
     import VersionedTable.{doubleBound, footerZone, longBound}
     // stats columns the written frame actually has (schema evolution: a
     // pre-evolution batch legitimately lacks late-added columns)
     val present = statsCols.filter(df.columns.contains)
     val blooms = bloomsByPath(df, dir)
-    VersionedTable.footers(spark, dir).map { case (path, meta) =>
+    VersionedTable.footers(df.sparkSession, dir).map { case (path, meta) =>
       val (minKey, maxKey) = footerZone(meta, keyCol)(longBound) match {
         case None => (Long.MinValue, Long.MaxValue) // unknown: every merge and range takes it
         case Some(None) => (Long.MaxValue, Long.MinValue) // all NULL: none does
@@ -382,14 +404,14 @@ final class VersionedTable private (
     *    into the new snapshot by reference. A non-NULL key with no long
     *    form says nothing about zones, so it touches every file.
     *  - Removing the replaced rows from the touched files, by an exact
-    *    membership test in the key's own type (`NativeExprs.withKeySet`):
+    *    membership test in the key's own type (`NativeExprs.notInKeys`):
     *    a filter, not a join, so the rewrite plan holds no exchange.
     * The collect is bounded by the update batch, which in the
     * daily-upsert shape is orders of magnitude smaller than the table.
     * A batch of 10^6 rows with long keys holds ~100 MB of collected rows
     * on the driver while the commit runs, plus a key set of ~50 MB of
-    * heap there and on each executor: a broadcast, shipped once per
-    * executor, not per task, and destroyed when the commit ends. A
+    * heap. That set rides in the write plan: each executor fetches it
+    * once, and each running write task deserializes its own copy. A
     * batch too large for that is a full rewrite anyway — call
     * `overwrite`.
     */
@@ -441,17 +463,18 @@ final class VersionedTable private (
 
     val (touched, untouched) = base.files.partition(f => unzoned || overlaps(f))
     val schema = Some(evolveSchema(base.schemaDdl, updates.schema))
-    if (touched.isEmpty) Some(commitNext(base, untouched, updates, txn, schema))
-    else NativeExprs.withKeySet(spark.sparkContext, updates.schema(keyCol).dataType,
-        collected.iterator.map(_.get(0))) { inKeys =>
-      // touched files are read under the EVOLVED schema (columns the
-      // old files lack come back null), and evolved updates likewise
-      // fill columns they lack — additive evolution without rewrites
-      val survivors = readFiles(spark, touched, schema)
-        .filter(!inKeys(col(keyCol)))
-        .unionByName(updates, allowMissingColumns = true)
-      Some(commitNext(base, untouched, survivors, txn, schema))
-    }
+    val survivors =
+      if (touched.isEmpty) updates
+      else {
+        // touched files are read under the EVOLVED schema (columns the
+        // old files lack come back null), and evolved updates likewise
+        // fill columns they lack — additive evolution without rewrites
+        readFiles(spark, touched, schema)
+          .filter(NativeExprs.notInKeys(col(keyCol), updates.schema(keyCol).dataType,
+            collected.iterator.map(_.get(0))))
+          .unionByName(updates, allowMissingColumns = true)
+      }
+    Some(commitNext(base, untouched, survivors, txn, schema))
   }
 
   /** Copy-on-write range DELETE: remove all rows with key in [lo, hi].

@@ -1,13 +1,12 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, InSet, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, BooleanType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -757,46 +756,6 @@ case class BloomMightContainExpr(child: Expression, bfBc: Broadcast[BloomFilter]
     copy(child = newChild)
 }
 
-/** Exact-set membership as a filter predicate: is `child` one of the
-  * broadcast `keys` (Catalyst-internal values of `child`'s type, built
-  * by `NativeExprs.withKeySet`)? The exact-set twin of
-  * BloomMightContainExpr, with the same broadcast-unwrap-once discipline,
-  * and no literal list for the planner to walk. It matches as an
-  * equi-join key does: a NULL `child` matches nothing and yields false,
-  * never NULL, so `NOT` of it keeps NULL-key rows as a left anti-join
-  * does; a float or double zero matches either sign of zero.
-  */
-case class InKeySetExpr(child: Expression, keys: Broadcast[java.util.Set[Any]])
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = false
-  override def prettyName: String = "in_key_set"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    v != null && keys.value.contains(NativeExprs.joinKey(v))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    val bcRef = ctx.addReferenceObj("keySetBc", keys, classOf[Broadcast[_]].getName)
-    val setVar = ctx.addMutableState("java.util.Set", "graftKeySet",
-      v => s"$v = (java.util.Set) $bcRef.value();")
-    val probe = child.dataType match {
-      case FloatType | DoubleType => s"(${c.value} == 0 ? 0 : ${c.value})"
-      case _ => c.value.toString
-    }
-    ev.copy(code = code"""
-      |${c.code}
-      |boolean ${ev.value} = !${c.isNull} && $setVar.contains($probe);
-      |""".stripMargin, isNull = FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): InKeySetExpr =
-    copy(child = newChild)
-}
-
 /** Per-row char-ngram LM score with the model riding as a broadcast
   * (graft.functions.LmScore.score) — the map-only, shuffle-free twin of
   * TextAnalysis.ngramLogProbScore, which is what lets the perplexity
@@ -1057,28 +1016,27 @@ object NativeExprs {
   def bloomMightContain(key: Column, bf: Broadcast[BloomFilter]): Column =
     ExpressionUtils.column(BloomMightContainExpr(ExpressionUtils.expression(key), bf))
 
-  /** Runs `body` with a membership test against the exact set of
-    * `values`: external values of `dt`, as a collected Row holds them,
-    * NULLs dropped. The set is converted to Catalyst's internal form on
-    * the driver and ships once per executor as a broadcast (roughly 50
-    * bytes of heap per distinct long key on the driver and on each
-    * executor), which is destroyed when `body` returns or throws.
+  /** The rows a left anti-join on `key` against `keys` keeps: `key` is
+    * NULL or none of `keys` (values of type `dt` as a collected Row
+    * holds them, NULLs skipped). Spark's `InSet` holds the set, so the
+    * planner walks no literal list; the set ships in the stage's task
+    * binary, once per executor, and each task deserializes a copy.
+    * Float and double keys compare as join keys do: -0.0 is 0.0 and NaN
+    * is NaN.
     */
-  def withKeySet[T](sc: SparkContext, dt: DataType, values: Iterator[Any])(
-      body: (Column => Column) => T): T = {
+  def notInKeys(key: Column, dt: DataType, keys: Iterator[Any]): Column = {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
-    val set = new java.util.HashSet[Any]()
-    values.foreach(v => if (v != null) set.add(joinKey(toCatalyst(v))))
-    val keys = sc.broadcast[java.util.Set[Any]](set)
-    try body(key => ExpressionUtils.column(InKeySetExpr(ExpressionUtils.expression(key), keys)))
-    finally keys.destroy(blocking = true)
-  }
-
-  /** An internal key value as an equi-join compares it: -0.0 as 0.0. */
-  private[graft] def joinKey(v: Any): Any = v match {
-    case d: Double if d == 0 => 0.0d
-    case f: Float if f == 0 => 0.0f
-    case other => other
+    val set = keys.filter(_ != null).map(v => toCatalyst(v) match {
+      case d: Double if d == 0 => 0.0d
+      case f: Float if f == 0 => 0.0f
+      case k => k
+    }).toSet
+    val k = ExpressionUtils.expression(key)
+    val probe = dt match {
+      case FloatType | DoubleType => NormalizeNaNAndZero(k)
+      case _ => k
+    }
+    key.isNull || !ExpressionUtils.column(InSet(probe, set))
   }
 
   /** Column-level entry for LmScoreExpr. */

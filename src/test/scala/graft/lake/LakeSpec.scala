@@ -8,7 +8,7 @@ import org.apache.commons.lang3.exception.ExceptionUtils
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.BlockProbe
 
@@ -747,33 +747,48 @@ class LakeSpec extends SparkSpec {
     assertMergeParity(dbl, Seq((-0.0, "m", 4.0), (Double.NaN, "m", 5.0)).toDF("k", "tag", "v"))
   }
 
+  /** Runs `body` with `hook` called on each logical plan node the
+    * session plans, on the driver, before Spark's own strategies.
+    */
+  private def duringPlanning[T](hook: LogicalPlan => Unit)(body: => T): T = {
+    val strategy = new SparkStrategy {
+      def apply(plan: LogicalPlan): Seq[SparkPlan] = { hook(plan); Nil }
+    }
+    val experimental = spark.sessionState.experimentalMethods
+    experimental.extraStrategies = experimental.extraStrategies :+ strategy
+    try body
+    finally experimental.extraStrategies = experimental.extraStrategies.filterNot(_ eq strategy)
+  }
+
+  /** Is `plan` the write of a commit of `t`? */
+  private def writesTo(t: VersionedTable, plan: LogicalPlan): Boolean = plan match {
+    case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString.contains(t.root)
+    case _ => false
+  }
+
+  /** The entries of `t`'s data dir, by name. */
+  private def dataEntries(t: VersionedTable): Seq[String] = {
+    val names = Files.list(Paths.get(t.root, "data"))
+    try names.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
+    finally names.close()
+  }
+
   test("a merge that loses its barrier's blocks before the write fails, and a retry commits") {
     val t = freshTable()
     t.append(rows(1 to 100, "a").repartition(2))
     val sc = spark.sparkContext
     val cachedBefore = BlockProbe.cachedRdds(sc)
     @volatile var dropped = Set.empty[Int]
-    // the write's planning runs on the driver between the key collect
-    // (which materialized the barrier) and the write job
-    val dropAtWrite = new SparkStrategy {
-      def apply(plan: LogicalPlan): Seq[SparkPlan] = {
-        plan match {
-          case w: InsertIntoHadoopFsRelationCommand
-              if dropped.isEmpty && w.outputPath.toString.contains(t.root) =>
-            dropped = BlockProbe.cachedRdds(sc) -- cachedBefore
-            dropped.foreach(BlockProbe.dropRdd(sc, _))
-          case _ =>
-        }
-        Nil
-      }
-    }
     val updates = rows(90 to 110, "m").repartition(2)
     val before = t.read(spark, asOf = Some(1))
-    val experimental = spark.sessionState.experimentalMethods
-    experimental.extraStrategies = experimental.extraStrategies :+ dropAtWrite
-    val failure =
-      try intercept[Exception](t.merge(updates))
-      finally experimental.extraStrategies = experimental.extraStrategies.filterNot(_ eq dropAtWrite)
+    // the write's planning runs on the driver between the key collect
+    // (which materialized the barrier) and the write job
+    val failure = intercept[Exception](duringPlanning { plan =>
+      if (dropped.isEmpty && writesTo(t, plan)) {
+        dropped = BlockProbe.cachedRdds(sc) -- cachedBefore
+        dropped.foreach(BlockProbe.dropRdd(sc, _))
+      }
+    }(t.merge(updates)))
     assert(dropped.nonEmpty, "the merge materialized no barrier before its write")
     assert(ExceptionUtils.getStackTrace(failure).contains("CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"))
     assert(t.currentVersion() == 1, s"a failed merge committed: $failure")
@@ -792,6 +807,51 @@ class LakeSpec extends SparkSpec {
     assert(t.currentVersion() == 1 && !Files.exists(Paths.get(t.root, "data", "v00002")))
     t.append(rows(11 to 12, "ok"))
     assert(t.currentVersion() == 2 && t.read(spark).count() == 12)
+  }
+
+  test("a bloom pass that fails after the write leaves no data dir, so a retry takes its version") {
+    val t = VersionedTable(scratchDir("graft-lake-failed-bloom").toString, "k", bloomCols = Seq("tag"))
+    t.append(rows(1 to 10, "a"))
+    // the bloom pass is the one Spark read of the files a commit wrote
+    val failure = intercept[Exception](duringPlanning(_.foreach {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation if h.location.rootPaths.exists(_.toString.contains("/data/v00002")) =>
+          throw new IllegalStateException("bloom pass lost")
+        case _ =>
+      }
+      case _ =>
+    })(t.append(rows(11 to 20, "b"))))
+    assert(ExceptionUtils.getStackTrace(failure).contains("bloom pass lost"))
+    assert(t.currentVersion() == 1 && dataEntries(t) == Seq("v00001"))
+    t.append(rows(11 to 20, "b"))
+    assert(t.currentVersion() == 2 && t.read(spark).count() == 20)
+    // the entries built in the staging dir name the files where they are
+    val written = t.snapshot(2).files.filter(_.path.contains("/data/v00002/"))
+    assert(written.nonEmpty && written.forall(f => f.blooms.contains("tag") &&
+      Files.exists(Paths.get(new java.net.URI(f.path)))))
+    assert(t.readEquals(spark, "tag", "b").count() == 10)
+  }
+
+  test("racing writers of one version: the loser fails cleanly at the data dir or at the manifest") {
+    val t = freshTable()
+    t.append(rows(1 to 10, "a"))
+    // a racer renamed its data dir for version 2 into place first
+    val racer = Files.writeString(
+      Files.createDirectories(Paths.get(t.root, "data", "v00002")).resolve("part-racer.parquet"), "racer")
+    intercept[java.util.ConcurrentModificationException](t.append(rows(11 to 20, "b")))
+    assert(t.currentVersion() == 1 && Files.readString(racer) == "racer")
+    assert(dataEntries(t) == Seq("v00001", "v00002"), "the loser left its staging dir")
+    Files.writeString(Paths.get(t.root, "_log", "v00002.json"), "") // the racer's commit
+
+    // a racer whose manifest lands while this commit writes: the rename
+    // succeeds, the manifest publish fails, and the data dir goes
+    val manifest = Paths.get(t.root, "_log", "v00003.json")
+    intercept[java.util.ConcurrentModificationException](duringPlanning { plan =>
+      if (writesTo(t, plan) && !Files.exists(manifest)) Files.writeString(manifest, "")
+    }(t.append(rows(11 to 20, "b"))))
+    assert(t.currentVersion() == 3 && dataEntries(t) == Seq("v00001", "v00002"))
+    t.append(rows(11 to 20, "b"))
+    assert(t.currentVersion() == 4 && t.read(spark).count() == 10)
   }
 
   test("lake data dirs hold no _SUCCESS marker") {
