@@ -9,25 +9,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * aggregates the snapshot once; every later refresh applies only the
   * change feed between the last materialized table version and the
   * current one ([[IncrementalAgg]]). The state on disk is versioned by
-  * the TABLE version it reflects and published with the same atomic
-  * hard-link marker as the table's manifests, so:
+  * the TABLE version it reflects and published by the table's own
+  * write-once protocol ([[VersionDirs]]), so:
   *
   *  - a replayed refresh (streaming recovery, crashed driver) sees the
   *    cursor already at the table version and no-ops — exactly-once
   *    maintenance for free;
   *  - racing refreshers compute identical state (the cursor and feed
-  *    are deterministic) and exactly one publishes;
-  *  - a torn parquet write without its marker is invisible to readers
-  *    and simply overwritten by the next attempt.
+  *    are deterministic) and exactly one publishes; a loser deletes
+  *    only its own attempt dir, never state a reader may be reading;
+  *  - a torn write without its marker is invisible and blocks nothing.
   *
   * At scale this is the materialized-view contract: a dashboard
   * aggregate over a 100 TB table stays fresh for the cost of each
   * commit's change set, never a rescan.
   *
-  * Layout: `<root>/v00007/part-*` (state as of table version 7) +
-  * `<root>/v00007.ok` (atomic marker). The latest two state dirs are
-  * retained (current + previous, for readers mid-swap); older ones are
-  * pruned on publish.
+  * Layout: `<root>/v00007-<uuid>/part-*` (one refresh attempt's state
+  * as of table version 7) + `<root>/v00007.ok` (atomic marker whose body
+  * names the published attempt dir). The latest two states are retained
+  * (current + previous, for readers mid-swap); older ones are pruned.
   */
 final class MaterializedAgg(
     val table: VersionedTable,
@@ -35,8 +35,11 @@ final class MaterializedAgg(
     val groupCols: Seq[String],
     val sumCols: Seq[String]) {
 
-  private def dir(v: Int): String = s"$root/v${"%05d".format(v)}"
   private def marker(v: Int): Path = Paths.get(root, f"v$v%05d.ok")
+
+  /** The state of version `v`: the attempt dir its marker names. */
+  private def state(spark: SparkSession, v: Int): DataFrame =
+    spark.read.parquet(Paths.get(root, Files.readString(marker(v))).toString)
 
   /** The TABLE version the materialized state reflects (0 = none). */
   def currentVersion(): Int =
@@ -48,7 +51,7 @@ final class MaterializedAgg(
   def read(spark: SparkSession): DataFrame = {
     val v = currentVersion()
     require(v >= 1, s"no materialized state under $root — call refresh() first")
-    spark.read.parquet(dir(v))
+    state(spark, v)
   }
 
   /** Bring the state up to the table's current version and return it.
@@ -64,23 +67,32 @@ final class MaterializedAgg(
         IncrementalAgg.init(table.read(spark, Some(tv)), groupCols, sumCols)
       else
         IncrementalAgg.maintain(
-          spark.read.parquet(dir(sv)),
+          state(spark, sv),
           table.changes(spark, sv, tv, preImages = true),
           groupCols, sumCols)
-    // overwrite tolerates a torn prior attempt's leftovers; only the
-    // marker makes the state visible
-    next.write.mode("overwrite").parquet(dir(tv))
-    VersionDirs.publish(marker(tv), "") // false: a racer won with the same state
+    val attempt = VersionDirs.attemptName(tv)
+    val dir = Paths.get(root, attempt)
+    // a lost publish means a racer published the same state: drop ours
+    val won =
+      try { next.write.parquet(dir.toString); VersionDirs.publish(marker(tv), attempt) }
+      catch { case e: Throwable => VersionDirs.deleteTree(dir); throw e }
+    if (!won) VersionDirs.deleteTree(dir)
     prune()
-    spark.read.parquet(dir(tv))
+    state(spark, tv)
   }
 
-  /** Keep current + previous state; drop older (markers first, so a
-    * concurrent reader never sees a marked version vanish mid-read).
+  /** Keep current + previous state. Older markers go first, so a
+    * concurrent reader never sees a marked version vanish mid-read; then
+    * every attempt dir below the oldest kept marker: the state those
+    * markers named, and the attempts of refreshers that lost a publish
+    * or crashed.
     */
-  private def prune(): Unit =
-    VersionDirs.versions(Paths.get(root), ".ok").dropRight(2).foreach { v =>
-      Files.deleteIfExists(marker(v))
-      VersionDirs.deleteTree(Paths.get(dir(v)))
+  private def prune(): Unit = {
+    val dir = Paths.get(root)
+    val marked = VersionDirs.versions(dir, ".ok")
+    marked.dropRight(2).foreach(v => Files.deleteIfExists(marker(v)))
+    marked.takeRight(2).headOption.foreach { oldest =>
+      VersionDirs.prune(dir)((p, _) => VersionDirs.attemptVersion(dir, p).exists(_ < oldest))
     }
+  }
 }

@@ -1,15 +1,15 @@
 package graft.lake
 
-import java.io.IOException
-import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException, Files, Path, StandardCopyOption}
+import java.nio.file.{DirectoryNotEmptyException, FileAlreadyExistsException, Files, Path}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
-/** Versioned directories on a local or mounted filesystem: the one
-  * primitive under [[VersionedTable]]'s manifests and
-  * [[MaterializedAgg]]'s state markers. An entry `v00007<suffix>` is
-  * version 7; it becomes visible only through [[publish]], so a reader
-  * never sees a half-written entry.
+/** The write-once protocol under [[VersionedTable]]'s manifests and
+  * [[MaterializedAgg]]'s state markers, on a local or mounted filesystem.
+  * An entry `v00007<suffix>` is version 7; it becomes visible only through
+  * [[publish]], the one step that decides a commit. The data it names was
+  * written before into an attempt dir ([[attemptName]]) that is never
+  * renamed, so a failed or lost attempt blocks no later one.
   */
 private[lake] object VersionDirs {
 
@@ -42,20 +42,16 @@ private[lake] object VersionDirs {
     finally Files.deleteIfExists(tmp)
   }
 
-  /** Atomic rename of a finished directory into `target`. Returns false
-    * when another writer's directory is already there — a rename never
-    * replaces a non-empty directory, so two racers produce one winner.
-    */
-  def publishDir(staged: Path, target: Path): Boolean =
-    try { Files.move(staged, target, StandardCopyOption.ATOMIC_MOVE); true }
-    catch { case _: IOException if Files.exists(target) => false }
+  /** A fresh attempt dir name for version `v`: `v00007-<uuid>`. */
+  def attemptName(v: Int): String = f"v$v%05d-${java.util.UUID.randomUUID}"
 
-  /** Delete the entries published under `dir` with `suffix` whose
-    * version is below `version`.
+  private val Attempt = "v(\\d{5})-[0-9a-f-]{36}".r
+
+  /** The version of the attempt dir directly under `dir` that is or
+    * holds `p`; None when `p` is in no attempt dir.
     */
-  def dropBelow(dir: Path, suffix: String, version: Int): Unit =
-    versions(dir, suffix).filter(_ < version)
-      .foreach(v => Files.deleteIfExists(dir.resolve(f"v$v%05d$suffix")))
+  def attemptVersion(dir: Path, p: Path): Option[Int] =
+    Attempt.unapplySeq(dir.relativize(p).getName(0).toString).map(_.head.toInt)
 
   /** Delete the entries under `dir` (not `dir` itself) that `drop`
     * selects, deepest first. Every entry is judged by the attributes it

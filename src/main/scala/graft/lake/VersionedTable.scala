@@ -58,8 +58,9 @@ final case class Snapshot(
   *                                each line one FileEntry — a FULL
   *                                snapshot, so readers resolve any
   *                                version from exactly one file
-  *   <root>/data/v00001/part-*    parquet written by the commit that
-  *                                created that version (never mutated)
+  *   <root>/data/v00001-<uuid>/   parquet written by one commit attempt
+  *     part-*                     for that version (never renamed or
+  *                                mutated); the manifest names its files
   * }}}
   *
   * Scale design:
@@ -72,12 +73,14 @@ final case class Snapshot(
   *   - `readRange` prunes files by zone map BEFORE Spark lists them —
   *     the same trick as parquet row-group skipping, one level up. The
   *     residual per-row filter is still pushed to the scan.
-  *   - Commits are atomic via create-if-absent publishes: a version's
-  *     data dir appears by one rename, its manifest by a hard link. Two
-  *     racing writers produce ONE winner and one clean
-  *     ConcurrentModificationException — optimistic concurrency,
-  *     single-winner, no torn manifest. (On an object store this
-  *     primitive would come from a conditional PUT or a catalog
+  *   - Commits are atomic via one create-if-absent publish: each attempt
+  *     writes its files into a data dir of its own, and the manifest's
+  *     hard link is the one step that commits a version. Two racing
+  *     writers produce ONE winner and one clean
+  *     ConcurrentModificationException — optimistic concurrency, no torn
+  *     manifest; a lost or crashed attempt blocks no retry, and
+  *     [[vacuum]] deletes its dir. (Nothing is renamed, so on an object
+  *     store only the manifest needs a conditional PUT or a catalog
   *     service; the protocol is unchanged.)
   *   - A commit's file stats come from the parquet footers it just
   *     wrote (row counts, per-row-group min/max), never from reading the
@@ -103,7 +106,6 @@ final class VersionedTable private (
 
   private val mapper = new ObjectMapper()
   private def logDir: Path = Paths.get(root, "_log")
-  private def dataDir(v: Int): String = s"$root/data/v${"%05d".format(v)}"
   private def manifestPath(v: Int): Path = logDir.resolve(f"v$v%05d.json")
 
   // ------------------------------------------------------------ manifest
@@ -205,10 +207,11 @@ final class VersionedTable private (
   }
 
   /** Commit the version after `base`: the `carried` files by reference
-    * plus `df` written as new files. Every write commits through here.
-    * Once [[writeFiles]] has renamed the data dir into place it holds
-    * only this commit's files, so a manifest publish that fails deletes
-    * it, and a retry can take the version.
+    * plus `df` written as new files into a fresh attempt dir. Every
+    * write commits through here. The attempt dir holds only this
+    * attempt's files, so a failed write or a lost manifest publish
+    * deletes it. No retry needs that delete: the next attempt writes to
+    * a dir of its own, and [[vacuum]] removes what a crash leaves.
     */
   private def commitNext(
       base: Snapshot,
@@ -217,13 +220,9 @@ final class VersionedTable private (
       txn: Option[(String, Long)],
       schemaDdl: Option[String]): Snapshot = {
     val next = base.version + 1
-    val written = writeFiles(df, next)
-    try commit(next, carried ++ written, base.txns ++ txn, schemaDdl)
-    catch {
-      case e: Throwable =>
-        VersionDirs.deleteTree(Paths.get(dataDir(next)))
-        throw e
-    }
+    val dir = Paths.get(root, "data", VersionDirs.attemptName(next))
+    try commit(next, carried ++ writeFiles(df, dir), base.txns ++ txn, schemaDdl)
+    catch { case e: Throwable => VersionDirs.deleteTree(dir); throw e }
   }
 
   /** Additive schema evolution: existing fields keep their position and
@@ -252,9 +251,9 @@ final class VersionedTable private (
     }
   }
 
-  /** Write `df` as the next version's data files and build their
-    * entries from the parquet footers that write just produced — file
-    * metadata only, never a re-read of the data:
+  /** Write `df` as data files into the attempt dir `dir` and build their
+    * entries there from the parquet footers that write just produced —
+    * file metadata only, never a re-read of the data:
     *  - `path`: the file's URL-encoded location, the form
     *    `input_file_name()` gives, which `changes` and `vacuum` key on.
     *  - `rows`: the sum of the file's row-group row counts. A 0-row file
@@ -276,55 +275,33 @@ final class VersionedTable private (
     *    declared and present in `df`.
     * CHECK constraints ride the write job itself: an `observe` counts
     * the violations of each check (SQL semantics: only `check IS FALSE`
-    * violates, NULL passes). The files are written to a staging dir,
-    * and their entries are built there; only then is it renamed to the
-    * version's data dir. Any failure before the rename — a violation, a
-    * failed write job, a failed footer or bloom read — deletes the
-    * staging dir and aborts before a manifest exists: no version, and a
-    * retry can take the same version. (Files that a failed job's
-    * cancelled tasks write afterwards stay in the staging dir until
-    * [[vacuum]]'s grace period ends.) A rename that finds another
-    * writer's data dir for the version loses the race, as a manifest
-    * publish does.
+    * violates, NULL passes). Any failure — a violation, a failed write
+    * job, a failed footer or bloom read — aborts before a manifest
+    * exists, and [[commitNext]] deletes `dir`: no version, and a retry
+    * can take the same version. (Files that a failed job's cancelled
+    * tasks write afterwards stay until [[vacuum]]'s grace period ends.)
     */
-  private def writeFiles(df: DataFrame, version: Int): Seq[FileEntry] = {
-    val dir = Paths.get(dataDir(version))
+  private def writeFiles(df: DataFrame, dir: Path): Seq[FileEntry] = {
     val checked = if (checks.isEmpty) None else Some(Observation())
     val violations = checks.zipWithIndex.map { case (c, i) =>
       count(when(expr(c) <=> lit(false), 1)).as(s"__ck_$i")
     }
-    // written under a staging name, then renamed into place in one step:
-    // a version's data dir is absent or complete, and a failed write,
-    // whose cancelled tasks may still be writing, never blocks a retry
-    val staged = dir.resolveSibling(s"${dir.getFileName}.${java.util.UUID.randomUUID}.tmp")
-    try {
-      checked.fold(df)(o => df.observe(o, violations.head, violations.tail: _*))
-        .write.mode("errorifexists")
-        // the manifest is the commit record: no `_SUCCESS` marker
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .parquet(staged.toString)
-      checked.foreach { o =>
-        val counted = o.get
-        val violated = checks.zipWithIndex
-          .map { case (c, i) => c -> counted(s"__ck_$i").asInstanceOf[Long] }
-          .filter(_._2 > 0)
-        if (violated.nonEmpty)
-          throw new IllegalArgumentException(
-            "CHECK constraint violation, commit aborted: " +
-              violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
-      }
-      // entries name each file where the rename puts it
-      val entries = fileEntries(df, staged.toString).map(f => f.copy(path =
-        f.path.replace(s"/${staged.getFileName}/", s"/${dir.getFileName}/")))
-      if (!VersionDirs.publishDir(staged, dir))
-        throw new java.util.ConcurrentModificationException(
-          s"version $version was committed by another writer")
-      entries
-    } catch {
-      case e: Throwable =>
-        VersionDirs.deleteTree(staged)
-        throw e
+    checked.fold(df)(o => df.observe(o, violations.head, violations.tail: _*))
+      .write.mode("errorifexists")
+      // the manifest is the commit record: no `_SUCCESS` marker
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(dir.toString)
+    checked.foreach { o =>
+      val counted = o.get
+      val violated = checks.zipWithIndex
+        .map { case (c, i) => c -> counted(s"__ck_$i").asInstanceOf[Long] }
+        .filter(_._2 > 0)
+      if (violated.nonEmpty)
+        throw new IllegalArgumentException(
+          "CHECK constraint violation, commit aborted: " +
+            violated.map { case (c, n) => s"'$c' ($n rows)" }.mkString(", "))
     }
+    fileEntries(df, dir.toString)
   }
 
   /** The entries of the files `df` was just written as in `dir`. */
@@ -428,15 +405,19 @@ final class VersionedTable private (
     * 2-3× per commit). Lazy localCheckpoint: materializes inside the
     * first action, later actions read the cached rows. Only `write`
     * reads them, so their blocks are released when it returns or
-    * throws. Losing an executor between the first action and the write
-    * fails the commit loudly, leaves the manifest unchanged and leaves
-    * no data dir behind (see [[writeFiles]]), so a retry commits.
+    * throws, through [[SparkBridge.unpersistRDD]]: `RDD.unpersist` would
+    * warn on every commit that a locally checkpointed RDD cannot be
+    * recomputed once released, and a barrier done with its rows never
+    * needs to be. Losing an executor
+    * between the first action and the write fails the commit loudly,
+    * leaves the manifest unchanged and leaves no data dir behind (see
+    * [[commitNext]]), so a retry commits.
     */
   private def withBarrier(df: DataFrame)(write: DataFrame => Snapshot): Snapshot = {
     val barrier = df.localCheckpoint(eager = false)
     try write(barrier)
     finally barrier.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
-      .foreach(_.unpersist(blocking = true))
+      .foreach(rdd => SparkBridge.unpersistRDD(rdd.sparkContext, rdd.id))
   }
 
   /** [[merge]]'s commit, or None for an empty batch (nothing committed). */
@@ -770,7 +751,9 @@ final class VersionedTable private (
     val removed = from.files.filterNot(f => toPaths(f.path))
     val added = to.files.filterNot(f => fromPaths(f.path))
 
-    val dataCols = readFiles(spark, to.files, to.schemaDdl).columns.toSeq
+    // from the manifest schema: listing the files would be O(table)
+    val dataCols = to.schemaDdl.fold(readFiles(spark, to.files, None).schema)(StructType.fromDDL)
+      .fieldNames.toSeq
     def side(files: Seq[FileEntry], name: String): DataFrame =
       readFiles(spark, files, to.schemaDdl) // toV schema: evolution-aligned
         .select(col(keyCol).cast("long").as("__k"), struct(dataCols.map(col): _*).as(name))
@@ -814,11 +797,11 @@ final class VersionedTable private (
   /** Drop the versions older than the last `retainVersions`: delete
     * their manifests, and every file under `data/` that no retained
     * manifest names. That covers the files only dropped versions name,
-    * the schema-only file of an empty write, the files of a commit that
-    * lost the publish race or crashed before publishing, and the
-    * version directories left empty. A file in the directory of a
-    * version not yet published may belong to a writer still at work:
-    * it goes only once it is older than [[VersionedTable.VacuumGraceMs]].
+    * the schema-only file of an empty write, the attempt dirs of commits
+    * that lost the publish race or crashed before publishing, and the
+    * attempt dirs left empty. A file in an attempt dir of a version not
+    * yet published may belong to a writer still at work: it goes only
+    * once it is older than [[VersionedTable.VacuumGraceMs]].
     * Time travel to dropped versions is gone; the retained window stays
     * fully readable. Returns the deleted file count.
     */
@@ -828,11 +811,7 @@ final class VersionedTable private (
     val keep = (keepFrom to cur).flatMap(snapshot(_).files)
       .map(f => Paths.get(new java.net.URI(f.path).getPath).normalize).toSet
     val data = Paths.get(root, "data").toAbsolutePath.normalize
-    val versionDir = "v(\\d{5})".r
-    def published(p: Path): Boolean = data.relativize(p).getName(0).toString match {
-      case versionDir(v) => v.toInt <= cur
-      case _ => false
-    }
+    def published(p: Path): Boolean = VersionDirs.attemptVersion(data, p).exists(_ <= cur)
     val cutoff = System.currentTimeMillis() - VersionedTable.VacuumGraceMs
     // a kept file keeps its checksum sidecar `.<name>.crc` too
     def kept(p: Path): Boolean = keep(p) || {
@@ -842,7 +821,8 @@ final class VersionedTable private (
     val deleted = VersionDirs.prune(data) { (p, attrs) =>
       !kept(p) && (published(p) || attrs.lastModifiedTime.toMillis < cutoff)
     }
-    VersionDirs.dropBelow(logDir, ".json", keepFrom)
+    VersionDirs.versions(logDir, ".json").filter(_ < keepFrom)
+      .foreach(v => Files.deleteIfExists(manifestPath(v)))
     deleted
   }
 }

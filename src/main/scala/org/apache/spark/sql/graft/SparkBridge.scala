@@ -29,6 +29,12 @@ object SparkBridge {
   def hadoopConf(bc: Broadcast[SerializableConfiguration]): Configuration =
     bc.value.value
 
+  /** Drop RDD `id`'s cached blocks everywhere, blocking: the call
+    * `RDD.unpersist` makes after it warns that a locally checkpointed
+    * RDD cannot be recomputed, which a barrier done with its rows intends.
+    */
+  def unpersistRDD(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = true)
+
   /** Full parquet footers (row groups and their column statistics
     * included) of `files`, read on the driver over Spark's own parallel
     * map — the pool `ParquetFileFormat.readParquetFootersInParallel`

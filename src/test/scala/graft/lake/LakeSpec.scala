@@ -5,9 +5,13 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.lang3.exception.ExceptionUtils
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, InsertIntoHadoopFsRelationCommand, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.BlockProbe
@@ -110,13 +114,13 @@ class LakeSpec extends SparkSpec {
     val data = Paths.get(t.root, "data").toAbsolutePath
     def put(dir: String, name: String): java.nio.file.Path =
       Files.writeString(Files.createDirectories(data.resolve(dir)).resolve(name), "x")
-    put("v00004", "part-lost-race.parquet") // a racer that lost v4's publish
-    val crashed = put("v00005", "part-crashed.parquet") // never published
+    put(VersionDirs.attemptName(4), "part-lost-race.parquet") // a racer that lost v4's publish
+    val crashed = put(VersionDirs.attemptName(5), "part-crashed.parquet") // never published
     val stale = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - VersionedTable.VacuumGraceMs - 60000L)
     Files.setLastModifiedTime(crashed, stale)
     Files.setLastModifiedTime(crashed.getParent, stale)
-    val inFlight = put("v00006", "part-in-flight.parquet") // fresh: still writing
+    val inFlight = put(VersionDirs.attemptName(6), "part-in-flight.parquet") // fresh: still writing
     t.vacuum(retainVersions = 1)
     val live = t.liveFiles().map(p => Paths.get(new java.net.URI(p).getPath)).toSet
     val left = Files.walk(data)
@@ -372,7 +376,7 @@ class LakeSpec extends SparkSpec {
     assert(e.getMessage.contains("v >= 0") && e.getMessage.contains("1 rows"))
     assert(t.currentVersion() == 1)
     assert(t.read(spark).count() == 50)
-    assert(!Files.exists(java.nio.file.Paths.get(root, "data", "v00002")))
+    assert(dataVersions(t) == Seq(1))
 
     // a violating MERGE aborts the same way (survivor rewrite included)
     val e2 = intercept[IllegalArgumentException](
@@ -386,6 +390,18 @@ class LakeSpec extends SparkSpec {
       .toDF("k", "tag", "v"))
     assert(t.currentVersion() == 2)
     assert(t.read(spark).count() == 51)
+  }
+
+  test("changes reads only changed files: no Spark job builds a feed over 40 files") {
+    val t = freshTable()
+    t.append(spark.range(1, 401, 1, 40)
+      .select($"id".as("k"), lit("a").as("tag"), ($"id" * 10.0).as("v")))
+    assert(t.liveFiles().size == 40)
+    t.merge(rows(5 to 5, "m")) // touches the one file holding keys 1..10
+    var feed: DataFrame = null
+    val jobs = logJobs { feed = t.changes(spark, 1, 2) }
+    assert(jobs.isEmpty, s"building the feed ran: ${jobs.mkString(", ")}")
+    assert(feed.select("_change_type", "k", "tag").collect().map(_.toString).toSeq == Seq("[update,5,m]"))
   }
 
   test("materialized aggregate: incremental refresh tracks the table exactly") {
@@ -507,16 +523,43 @@ class LakeSpec extends SparkSpec {
       Seq((30L, "c"), (31L, "c"), (32L, "c")))
   }
 
+  /** The WARN messages that the logger named `name` logs while `body`
+    * runs, with that logger at WARN meanwhile (the suite runs at ERROR).
+    */
+  private def warnings(name: String)(body: => Unit): Seq[String] = {
+    val logger = LogManager.getLogger(name).asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("lake-spec-warnings", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    val level = logger.getLevel
+    Configurator.setLevel(name, Level.WARN)
+    try body
+    finally { Configurator.setLevel(name, level); logger.removeAppender(appender); appender.stop() }
+    lines.asScala.toSeq
+  }
+
   test("commit barriers release their cached blocks when the commit ends") {
     // RDDs holding blocks that the commits added: earlier suites' cached
     // RDDs may be cleaned meanwhile, but never added
     def cachedRdds(): Set[Int] =
       org.apache.spark.sql.graft.BlockProbe.cachedRdds(spark.sparkContext)
     val t = freshTable()
-    t.append(rows(1 to 50, "a"))
+    t.append(rows(1 to 50, "a")) // Spark's logging is set up by now
+    // `RDD.unpersist` warns about the RDD a frame's localCheckpoint keeps
+    val rddLog = "org.apache.spark.rdd.MapPartitionsRDD"
+    val control = warnings(rddLog) {
+      val cp = rows(1 to 5, "c").localCheckpoint(eager = true)
+      cp.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get.unpersist(blocking = true)
+    }
+    assert(control.exists(_.contains("was locally checkpointed")), s"not captured: $control")
     val before = cachedRdds()
     def kept(): Set[Int] = cachedRdds() -- before
-    t.merge(rows(40 to 60, "m").repartition(2))
+    val warned = warnings(rddLog)(t.merge(rows(40 to 60, "m").repartition(2)))
+    assert(warned.isEmpty, s"the merge warned: ${warned.mkString("; ")}")
     assert(kept().isEmpty, "merge kept its barrier's blocks")
     t.upsertIfNew(rows(55 to 70, "u").repartition(2), "up", 1L)
     assert(kept().isEmpty, "upsertIfNew kept its barrier's blocks")
@@ -541,7 +584,8 @@ class LakeSpec extends SparkSpec {
     * oracle: one grouped scan of the files in `version`'s data dir.
     */
   private def scannedEntries(t: VersionedTable, version: Int, statsCols: Seq[String]): Seq[FileEntry] = {
-    val listed = spark.read.parquet(f"${t.root}/data/v$version%05d")
+    val Seq(dir) = dataEntries(t).filter(_.startsWith(f"v$version%05d-"))
+    val listed = spark.read.parquet(Paths.get(t.root, "data", dir).toString)
     val present = statsCols.filter(listed.columns.contains)
     val aggs = Seq(count(lit(1)), min(col("k").cast("long")), max(col("k").cast("long"))) ++
       present.flatMap(c => Seq(min(col(c).cast("double")), max(col(c).cast("double"))))
@@ -558,7 +602,7 @@ class LakeSpec extends SparkSpec {
 
   /** The entries `version` committed for the files it wrote. */
   private def written(t: VersionedTable, version: Int): Seq[FileEntry] =
-    t.snapshot(version).files.filter(_.path.contains(f"/data/v$version%05d/"))
+    t.snapshot(version).files.filter(_.path.contains(f"/data/v$version%05d-"))
 
   private def assertFooterStatsEqualScan(t: VersionedTable, statsCols: Seq[String]): Unit =
     (1 to t.currentVersion()).foreach { v =>
@@ -766,12 +810,17 @@ class LakeSpec extends SparkSpec {
     case _ => false
   }
 
-  /** The entries of `t`'s data dir, by name. */
-  private def dataEntries(t: VersionedTable): Seq[String] = {
-    val names = Files.list(Paths.get(t.root, "data"))
+  /** The entries of `dir`, by name. */
+  private def entries(dir: java.nio.file.Path): Seq[String] = {
+    val names = Files.list(dir)
     try names.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
     finally names.close()
   }
+
+  private def dataEntries(t: VersionedTable): Seq[String] = entries(Paths.get(t.root, "data"))
+
+  /** The version of each attempt dir in `t`'s data dir, ascending. */
+  private def dataVersions(t: VersionedTable): Seq[Int] = dataEntries(t).map(_.slice(1, 6).toInt)
 
   test("a merge that loses its barrier's blocks before the write fails, and a retry commits") {
     val t = freshTable()
@@ -804,7 +853,7 @@ class LakeSpec extends SparkSpec {
       checks = Seq("assert_true(v >= 0) IS NULL"))
     t.append(rows(1 to 10, "a"))
     intercept[Exception](t.append(rows(11 to 12, "bad").withColumn("v", lit(-1.0))))
-    assert(t.currentVersion() == 1 && !Files.exists(Paths.get(t.root, "data", "v00002")))
+    assert(t.currentVersion() == 1 && dataVersions(t) == Seq(1))
     t.append(rows(11 to 12, "ok"))
     assert(t.currentVersion() == 2 && t.read(spark).count() == 12)
   }
@@ -815,43 +864,92 @@ class LakeSpec extends SparkSpec {
     // the bloom pass is the one Spark read of the files a commit wrote
     val failure = intercept[Exception](duringPlanning(_.foreach {
       case l: LogicalRelation => l.relation match {
-        case h: HadoopFsRelation if h.location.rootPaths.exists(_.toString.contains("/data/v00002")) =>
+        case h: HadoopFsRelation if h.location.rootPaths.exists(_.toString.contains("/data/v00002-")) =>
           throw new IllegalStateException("bloom pass lost")
         case _ =>
       }
       case _ =>
     })(t.append(rows(11 to 20, "b"))))
     assert(ExceptionUtils.getStackTrace(failure).contains("bloom pass lost"))
-    assert(t.currentVersion() == 1 && dataEntries(t) == Seq("v00001"))
+    assert(t.currentVersion() == 1 && dataVersions(t) == Seq(1))
     t.append(rows(11 to 20, "b"))
     assert(t.currentVersion() == 2 && t.read(spark).count() == 20)
-    // the entries built in the staging dir name the files where they are
-    val written = t.snapshot(2).files.filter(_.path.contains("/data/v00002/"))
+    // the entries name the files where the attempt wrote them
+    val written = t.snapshot(2).files.filter(_.path.contains("/data/v00002-"))
     assert(written.nonEmpty && written.forall(f => f.blooms.contains("tag") &&
       Files.exists(Paths.get(new java.net.URI(f.path)))))
     assert(t.readEquals(spark, "tag", "b").count() == 10)
   }
 
-  test("racing writers of one version: the loser fails cleanly at the data dir or at the manifest") {
+  test("racing writers of one version: the loser fails cleanly at the manifest") {
     val t = freshTable()
     t.append(rows(1 to 10, "a"))
-    // a racer renamed its data dir for version 2 into place first
-    val racer = Files.writeString(
-      Files.createDirectories(Paths.get(t.root, "data", "v00002")).resolve("part-racer.parquet"), "racer")
-    intercept[java.util.ConcurrentModificationException](t.append(rows(11 to 20, "b")))
-    assert(t.currentVersion() == 1 && Files.readString(racer) == "racer")
-    assert(dataEntries(t) == Seq("v00001", "v00002"), "the loser left its staging dir")
-    Files.writeString(Paths.get(t.root, "_log", "v00002.json"), "") // the racer's commit
-
-    // a racer whose manifest lands while this commit writes: the rename
-    // succeeds, the manifest publish fails, and the data dir goes
-    val manifest = Paths.get(t.root, "_log", "v00003.json")
+    // a racer whose manifest lands while this commit writes: the write
+    // succeeds, the manifest publish fails, and the attempt dir goes
+    val manifest = Paths.get(t.root, "_log", "v00002.json")
     intercept[java.util.ConcurrentModificationException](duringPlanning { plan =>
       if (writesTo(t, plan) && !Files.exists(manifest)) Files.writeString(manifest, "")
     }(t.append(rows(11 to 20, "b"))))
-    assert(t.currentVersion() == 3 && dataEntries(t) == Seq("v00001", "v00002"))
+    assert(t.currentVersion() == 2 && dataVersions(t) == Seq(1))
     t.append(rows(11 to 20, "b"))
-    assert(t.currentVersion() == 4 && t.read(spark).count() == 10)
+    assert(t.currentVersion() == 3 && t.read(spark).count() == 10)
+  }
+
+  test("a commit whose driver died after its write blocks no retry of its version") {
+    val t = freshTable()
+    t.append(rows(1 to 10, "a"))
+    // the driver died after writing v2's files and before publishing its
+    // manifest: the files stay, the manifest never appears
+    t.append(rows(11 to 20, "dead"))
+    Files.delete(Paths.get(t.root, "_log", "v00002.json"))
+    assert(t.currentVersion() == 1)
+    t.append(rows(11 to 15, "retry"))
+    assert(t.currentVersion() == 2)
+    assert(t.read(spark).select("k", "tag").as[(Long, String)].collect().sorted.toSeq ==
+      (1 to 10).map(i => (i.toLong, "a")) ++ (11 to 15).map(i => (i.toLong, "retry")))
+    assert(dataVersions(t) == Seq(1, 2, 2) && dataEntries(t).forall(_.matches("v\\d{5}-[0-9a-f-]{36}")))
+    // no manifest names the dead attempt's dir, so vacuum drops it at once
+    t.vacuum(retainVersions = 2)
+    assert(dataVersions(t) == Seq(1, 2) && t.read(spark).count() == 15)
+  }
+
+  test("racing refreshers: the loser leaves the winner's published state untouched") {
+    val t = freshTable()
+    t.append(rows(1 to 50, "a").union(rows(51 to 60, "b")))
+    val aggRoot = scratchDir("graft-lake-magg-race").toString
+    val winner = new MaterializedAgg(t, aggRoot, Seq("tag"), Seq("v"))
+    val loser = new MaterializedAgg(t, aggRoot, Seq("tag"), Seq("v"))
+    def recompute() = IncrementalAgg.init(t.read(spark), Seq("tag"), Seq("v"))
+    def snap(df: DataFrame) = df.select("tag", "cnt", "sum_v").collect().map(_.toString).sorted.toSeq
+    // each file a frame reads, with a hash of its bytes
+    def files(df: DataFrame): Map[String, Int] = df.inputFiles.map(f =>
+      f -> java.util.Arrays.hashCode(Files.readAllBytes(Paths.get(new java.net.URI(f))))).toMap
+    var raced = false
+    var published = Map.empty[String, Int]
+    // the winner refreshes the same table version while the loser's
+    // write is planned, after the loser has computed its state
+    val fromLoser = duringPlanning {
+      case w: InsertIntoHadoopFsRelationCommand if !raced && w.outputPath.toString.contains(aggRoot) =>
+        raced = true // before the winner's own write is planned
+        published = files(winner.refresh(spark))
+      case _ =>
+    }(loser.refresh(spark))
+    assert(published.nonEmpty, "the winner did not refresh")
+    assert(files(winner.read(spark)) == published, "the loser changed the winner's files")
+    assert(snap(fromLoser) == snap(recompute()) && snap(loser.read(spark)) == snap(recompute()))
+    def marked(v: Int): Seq[String] =
+      Seq(Files.readString(Paths.get(aggRoot, f"v$v%05d.ok")), f"v$v%05d.ok")
+    assert(entries(Paths.get(aggRoot)) == marked(1).sorted, "the loser left its attempt dir")
+
+    // a crashed refresher's attempt dir is pruned once its version falls
+    // below the oldest kept marker
+    Files.createDirectories(Paths.get(aggRoot, VersionDirs.attemptName(1)))
+    t.append(rows(61 to 70, "c"))
+    winner.refresh(spark)
+    t.merge(rows(1 to 5, "d"))
+    winner.refresh(spark)
+    assert(entries(Paths.get(aggRoot)) == (marked(2) ++ marked(3)).sorted)
+    assert(snap(loser.read(spark)) == snap(recompute()))
   }
 
   test("lake data dirs hold no _SUCCESS marker") {
