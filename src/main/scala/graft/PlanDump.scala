@@ -2,13 +2,17 @@ package graft
 
 import java.io.{File, PrintWriter}
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+
 import graft.queries.Inventory
 
 /** Dump `.explain("formatted")` for named declared queries to files —
   * the optimization round's plan-evidence artifact (plans/rN/
   * <query>_<tag>.txt). Usage:
   *
-  *   sbt 'runMain graft.PlanDump plans/r14 before q277_frontier_advance …'
+  *   sbt 'runMain graft.PlanDump plans/r16 final q277_frontier_advance …'
   *
   * SPARK_GRAFT_SF_DIR selects the fixture (default sf0.1 — plan SHAPE is
   * sf-independent for everything but AQE-decided strategies, which the
@@ -17,9 +21,13 @@ import graft.queries.Inventory
   * composites) still work: construction runs, and the dumped plan is the
   * final returned frame's.
   *
-  * Besides declared queries it knows one pseudo-query,
-  * `pagerank_iteration`: the loop body of `GraphOps.pageRank`, which the
-  * declared graph queries' barriers hide.
+  * A [[Barrier]] hides its subtree from every plan that reads it, so
+  * each file continues, after the query's plan, with the plan of every
+  * barrier the query built, in build order, each headed by the barrier's
+  * name. Barriers materialize here exactly as in a run.
+  *
+  * Exits non-zero when a requested query is unknown or throws, so a
+  * plan-evidence run cannot silently drop a query.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -27,63 +35,32 @@ object PlanDump {
     val outDir = args(0)
     val tag = args(1)
     val names = args.drop(2).toSet
+    val qs = (Inventory.all ++ Bench.productionTwins).filter(q => names(q.name))
+    val missing = names -- qs.map(_.name)
+    if (missing.nonEmpty) {
+      System.err.println(s"[plandump] unknown queries: ${missing.mkString(", ")}")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     new File(outDir).mkdirs()
     val spark = GraftSession.get("graft-plandump")
-    // `pagerank_iteration` pseudo query: the UN-checkpointed per-
-    // iteration subtree of GraphOps.pageRank over the fixture's doc-id
-    // chain edges — localCheckpoint truncates lineage, so the declared
-    // graph queries' dumps never show the loop body (r14 verdict #6);
-    // this dump is the standing plan evidence for the hoisted degree
-    // join (ONE adjacency join per iteration).
-    val pseudo: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "pagerank_iteration" -> { () =>
-        import org.apache.spark.sql.functions._
-        val d = spark.read.parquet(s"$sfDir/documents.parquet")
-        val edges = d.select(col("doc_id").as("id_a"),
-          (col("doc_id") + 1).as("id_b"))
-        val directed = edges
-          .select(col("id_a").as("src"), col("id_b").as("dst"))
-          .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-          .localCheckpoint(false)
-        val outDeg = directed.groupBy("src").agg(count(lit(1)).as("deg"))
-        val adj = directed.repartition(col("src")).join(outDeg, Seq("src"))
-          .localCheckpoint(false)
-        val nodes = adj.select(col("src").as("id")).distinct()
-          .localCheckpoint(false)
-        val n = nodes.count()
-        val rank0 = nodes.withColumn("rank", lit(1.0 / n))
-        graft.operators.GraphOps.pageRankIteration(adj, nodes, rank0, 0.85, n)
-      })
-    pseudo.foreach { case (name, build) =>
-      if (names(name)) {
-        try {
-          val plan = build().queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
-          val w = new PrintWriter(new File(outDir, s"${name}_$tag.txt"), "UTF-8")
-          try w.println(plan) finally w.close()
-          println(s"[plandump] wrote ${name}_$tag.txt")
-        } catch { case e: Throwable =>
-          System.err.println(s"[plandump] $name failed: ${e.getMessage}")
-        }
-      }
-    }
-    val qs = (Inventory.all ++ Bench.productionTwins).filter(q => names(q.name))
-    val missing = names -- qs.map(_.name).toSet -- pseudo.keySet
-    if (missing.nonEmpty)
-      System.err.println(s"[plandump] unknown queries: ${missing.mkString(", ")}")
-    qs.foreach { q =>
+    def explain(qe: QueryExecution): String = qe.explainString(FormattedMode)
+    val failed = qs.filterNot { q =>
       try {
-        val df = q.run(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode)
+        val (df, barriers) = Barrier.built(q.run(spark, sfDir))
         val w = new PrintWriter(new File(outDir, s"${q.name}_$tag.txt"), "UTF-8")
-        try w.println(plan) finally w.close()
-        println(s"[plandump] wrote ${q.name}_$tag.txt")
-      } catch { case e: Throwable =>
+        try {
+          w.println(explain(df.queryExecution))
+          barriers.foreach { case (name, qe) => w.println(s"== Barrier $name ==\n${explain(qe)}") }
+        } finally w.close()
+        println(s"[plandump] wrote ${q.name}_$tag.txt (${barriers.size} barriers)")
+        true
+      } catch { case NonFatal(e) =>
         System.err.println(s"[plandump] ${q.name} failed: ${e.getMessage}")
+        false
       }
     }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

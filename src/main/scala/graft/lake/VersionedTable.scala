@@ -13,10 +13,11 @@ import org.apache.parquet.schema.LogicalTypeAnnotation.{DecimalLogicalTypeAnnota
 import org.apache.parquet.schema.PrimitiveType
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{NativeExprs, SparkBridge}
 import org.apache.spark.sql.types.StructType
+
+import graft.Barrier
 
 /** One data file of a table snapshot, with its zone-map stats: the key
   * zone always, plus optional [lo, hi] zones for the table's declared
@@ -392,32 +393,8 @@ final class VersionedTable private (
     * batch too large for that is a full rewrite anyway — call
     * `overwrite`.
     */
-  def merge(updates: DataFrame): Snapshot = withBarrier(updates) { u =>
+  def merge(updates: DataFrame): Snapshot = Barrier.scoped(updates, "VersionedTable.merge") { u =>
     mergeTxn(u, None).getOrElse(throw new IllegalArgumentException("empty update batch"))
-  }
-
-  /** Barrier for update frames that feed SEVERAL actions of one commit
-    * (the emptiness probe or [[merge]]'s key collect, then the data
-    * write): without it the whole upstream chain — often an expensive
-    * incremental-advance computation — re-executes once per action
-    * (guide §7.2 duplicate work across actions; measured on
-    * q238_streaming_governance: the split/novelty advance chains ran
-    * 2-3× per commit). Lazy localCheckpoint: materializes inside the
-    * first action, later actions read the cached rows. Only `write`
-    * reads them, so their blocks are released when it returns or
-    * throws, through [[SparkBridge.unpersistRDD]]: `RDD.unpersist` would
-    * warn on every commit that a locally checkpointed RDD cannot be
-    * recomputed once released, and a barrier done with its rows never
-    * needs to be. Losing an executor
-    * between the first action and the write fails the commit loudly,
-    * leaves the manifest unchanged and leaves no data dir behind (see
-    * [[commitNext]]), so a retry commits.
-    */
-  private def withBarrier(df: DataFrame)(write: DataFrame => Snapshot): Snapshot = {
-    val barrier = df.localCheckpoint(eager = false)
-    try write(barrier)
-    finally barrier.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }
-      .foreach(rdd => SparkBridge.unpersistRDD(rdd.sparkContext, rdd.id))
   }
 
   /** [[merge]]'s commit, or None for an empty batch (nothing committed). */
@@ -537,14 +514,22 @@ final class VersionedTable private (
 
   /** [[ifNew]] for batches that may be empty. The barrier comes BEFORE
     * the emptiness probe: probe and write both read the one
-    * materialization (see [[withBarrier]]). An empty batch applied zero
+    * materialization. Without it the whole upstream chain — often an
+    * expensive incremental-advance computation — re-executes once per
+    * action (measured on q238_streaming_governance: the split/novelty
+    * advance chains ran 2-3× per commit); [[merge]] shares its barrier
+    * between the key collect and the write the same way. Only the
+    * commit reads the rows, so each barrier is [[graft.Barrier.scoped]]:
+    * losing an executor before the write fails the commit loudly and
+    * leaves the manifest unchanged and no data dir behind (see
+    * [[commitNext]]), so a retry commits. An empty batch applied zero
     * times IS exactly once; skipping the commit keeps the log free of
     * no-op versions and leaves the marker where it was.
     */
   private def ifNewNonEmpty(df: DataFrame, appId: String, batchId: Long)(
       write: (DataFrame, Option[(String, Long)]) => Snapshot): Snapshot =
     ifNew(appId, batchId) { txn =>
-      withBarrier(df)(d => if (d.isEmpty) latest() else write(d, txn))
+      Barrier.scoped(df, "VersionedTable.commit")(d => if (d.isEmpty) latest() else write(d, txn))
     }
 
   /** Idempotent upsert: apply `updates` as a MERGE (or the first append
@@ -562,7 +547,7 @@ final class VersionedTable private (
   def upsertIfNew(updates: DataFrame, appId: String, batchId: Long): Snapshot =
     if (currentVersion() == 0) ifNewNonEmpty(updates, appId, batchId)(appendTxn)
     else ifNew(appId, batchId) { txn =>
-      withBarrier(updates)(u => mergeTxn(u, txn).getOrElse(latest()))
+      Barrier.scoped(updates, "VersionedTable.merge")(u => mergeTxn(u, txn).getOrElse(latest()))
     }
 
   /** Idempotent append: add `df`'s rows EXACTLY ONCE per

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Distributed as-of join — for each left row, attach the single most
   * recent right row with `rightTs <= leftTs` within the same key (the
   * time-series "latest value as of" operator; Spark has no built-in).
@@ -80,9 +82,8 @@ object AsofJoin {
     // within one materialization, and BOTH branches below (the slim
     // window input and the payload re-attach) must see identical ids —
     // block sharing guarantees they read the same materialized rows.
-    val stamped = left
-      .withColumn("__lid", monotonically_increasing_id())
-      .localCheckpoint(eager = false)
+    val stamped = Barrier(left
+      .withColumn("__lid", monotonically_increasing_id()), "AsofJoin.stamped")
 
     // Identical column order on both union branches:
     //   keys…, __ts, __side, __rid, __lid, __pack

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** End-to-end training-corpus cleaning pipeline — the composite operator a
   * 100 TB LLM-data run would execute (north-star EXTENSION; the
   * reference's own pipeline is the ETL chain in graft.Pipeline, cf.
@@ -49,18 +51,11 @@ object CorpusPipeline {
     * stages, with the annotation columns retained for downstream
     * sampling/mixing decisions.
     *
-    * No result-stage job and no CacheManager pin at call time:
-    * intermediate sharing uses lazy `localCheckpoint` blocks, which the
-    * ContextCleaner frees once the result is unreferenced (a long-lived
-    * session can call clean() in a loop without accumulating caches).
-    * Under AQE (GraftSession's default) planning the checkpoint RDD
-    * materializes the UPSTREAM shuffle stage — the fingerprint exchange,
-    * with annotation and gating on its map side — as a real job when
-    * clean() is called, and downstream operators see a frozen LogicalRDD
-    * leaf at that boundary rather than the full logical subtree.
-    * localCheckpoint blocks are not recomputable after executor loss; on
-    * clusters with dynamic allocation, set a checkpoint dir and swap in
-    * reliable `Dataset.checkpoint` at this boundary.
+    * Intermediates are shared through a [[graft.Barrier]] (no
+    * result-stage job and no CacheManager pin at call time; see its doc
+    * for the executor-loss trade-off). The upstream stage it plans at
+    * the call is the fingerprint exchange, with annotation and gating on
+    * its map side.
     */
   def clean(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
       cfg: Config = Config()): DataFrame =
@@ -97,9 +92,9 @@ object CorpusPipeline {
     // Lazily block-shared: the near-dup stage scans this frame twice
     // (signature branch + the keep side of the anti-join); without the
     // sharing the annotate+window chain runs twice per materialization.
-    val exactDeduped = Dedup.exactKeepMin(
-        gatedDocs.repartition(floor, col("fingerprint")), Seq("fingerprint"), idCol)
-      .localCheckpoint(eager = false)
+    val exactDeduped = Barrier(Dedup.exactKeepMin(
+        gatedDocs.repartition(floor, col("fingerprint")), Seq("fingerprint"), idCol),
+      "CorpusPipeline.exactDeduped")
     val stopShingles = cfg.stopShingleMinDf
       .map(minDf => Dedup.hotShingles(exactDeduped, textCol, minDf = minDf))
       .getOrElse(Array.empty[Long])

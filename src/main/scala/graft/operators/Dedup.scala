@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.functions.VectorFunctions
 
 /** Deduplication operators for training-data pipelines.
@@ -467,30 +468,6 @@ object Dedup {
     df.join(over, Seq(bucketCol), "left_anti")
   }
 
-  /** Marks `df` for materialization into executor-local blocks
-    * (`localCheckpoint(eager = false)`): no result-stage job and no
-    * CacheManager pin at call time — though under AQE (on by default in
-    * GraftSession) planning the checkpoint RDD may materialize UPSTREAM
-    * shuffle stages as real jobs when the method is called, and the
-    * downstream plan sees a frozen LogicalRDD leaf rather than the
-    * original logical subtree. The blocks are written once, every later
-    * scan (including other branches of the same job) reads them instead
-    * of recomputing, and — unlike `persist` — they are RDD-level and
-    * reference-tracked, so the ContextCleaner frees them once the result
-    * is unreferenced. No CacheManager entry is ever created, so a
-    * long-lived session cannot accumulate pinned caches no matter how
-    * many operator calls it makes (the round-1 leak); and unlike an
-    * EAGER checkpoint there is no forced result-stage job at call time
-    * (the round-2 regression).
-    *
-    * Trade-off: like all localCheckpoint blocks these are not recomputable
-    * after executor loss — on a cluster with dynamic allocation /
-    * aggressive decommissioning, prefer `spark.sparkContext
-    * .setCheckpointDir` + `Dataset.checkpoint` at the call site.
-    */
-  private def shareLazily(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
-
   /** Deterministic exact dedup: keep the row with the smallest `keep`
     * value per key (dropDuplicates keeps an arbitrary first row — fine for
     * semantics, bad for reproducible tests/oracles).
@@ -625,8 +602,9 @@ object Dedup {
       excludeShingles: Array[Long] = Array.empty,
       screenMargin: Option[Double] = None): DataFrame = {
     require(k % bands == 0, s"k=$k must be divisible by bands=$bands")
-    val newSigs = shareLazily(
-      minHashSignatures(newDocs, idCol, textCol, k, w, seed, excludeShingles))
+    val newSigs = Barrier(
+      minHashSignatures(newDocs, idCol, textCol, k, w, seed, excludeShingles),
+      "Dedup.minHashNearDupsIncremental")
     val tagged = newSigs.withColumn("__new", lit(1))
       .unionByName(historySigs.select(col("id"), col("sh"), col("sig"))
         .withColumn("__new", lit(0)))
@@ -695,10 +673,10 @@ object Dedup {
     val sigCol =
       if (oneperm) graft.functions.OnePermSignatureExpr(col("sh"), k, seed)
       else graft.functions.MinHashSignatureExpr(col("sh"), k, seed)
-    val withSig = shareLazily(df
+    val withSig = Barrier(df
       .select(col(idCol).as("id"), sh.as("sh"))
       .withColumn("sig", sigCol)
-      .filter(col("sig").isNotNull))
+      .filter(col("sig").isNotNull), "Dedup.minHashCandidates")
 
     // (id, band_hash) pairs — ids ONLY: the banded self-join must not
     // carry the shingle arrays (that would shuffle |corpus|×bands×|sh|
@@ -907,8 +885,8 @@ object Dedup {
     * (the loser list is a distinct aggregate AQE broadcasts at runtime).
     * `df` is scanned by two branches (signatures + the keep side of the
     * anti-join); callers whose `df` is an expensive derived frame should
-    * pass it through `localCheckpoint(eager = false)` first so both
-    * branches share one materialization (see CorpusPipeline.clean).
+    * pass it through a [[graft.Barrier]] first so both branches share
+    * one materialization (see CorpusPipeline.clean).
     */
   def minHashDedup(
       df: DataFrame,
@@ -1112,9 +1090,9 @@ object Dedup {
     * rather than return them.
     */
   def nearDupClusters(pairs: DataFrame, maxRounds: Int = 60): DataFrame = {
-    val ab = pairs
-      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
-      .localCheckpoint(eager = false)
+    val ab = Barrier(pairs
+      .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b")),
+      "Dedup.nearDupClusters.edges")
     val selfs = ab.filter(col("a") === col("b")).select(col("a").as("u"), col("b").as("v"))
     // one row per node and neighbor (both ways of each edge, plus the
     // self-pairs), with the node's m, its "breaks the star forest" flag
@@ -1124,14 +1102,14 @@ object Dedup {
       val byNode = Window.partitionBy("u").orderBy("v")
       val all = byNode.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
       val nb = when(col("v") =!= col("u"), col("v"))
-      e.select(col("l").as("u"), col("g").as("v"))
+      Barrier(e.select(col("l").as("u"), col("g").as("v"))
         .union(e.select(col("g").as("u"), col("l").as("v")))
         .union(selfs)
         .select(col("u"), col("v"), min(nb).over(all).as("lo"), max(nb).over(all).as("hi"),
           (row_number().over(byNode) === 1).as("first"))
         .select(col("u"), col("v"), col("first"), least(col("u"), col("lo")).as("m"),
-          (col("lo") < col("u") && col("hi") > col("lo")).as("broken"))
-        .localCheckpoint(eager = false)
+          (col("lo") < col("u") && col("hi") > col("lo")).as("broken")),
+        "Dedup.nearDupClusters.nodes")
     }
     // large-star then small-star: every edge (u, v > u) becomes (m(u), v);
     // grouped by g, every edge of g is one of its smaller neighbors
@@ -1408,9 +1386,9 @@ object Dedup {
     }
     // hot-bucket policy must see the COMBINED bucket population (the
     // full pass's view) or the cap would differ between the two runs
-    val all = dropHotBuckets(
-      banded(storeFps.unionByName(batchFps)), "chunk", maxBucket)
-      .localCheckpoint(eager = false) // both join sides read it
+    val all = Barrier(dropHotBuckets(
+      banded(storeFps.unionByName(batchFps)), "chunk", maxBucket),
+      "Dedup.simHashMd5NearDupsVsStore") // both join sides read it
     val b = all.join(
       batchFps.select(col("id")), Seq("id"), "left_semi")
     all.select(col("chunk"), col("id").as("id_a"),
@@ -1538,9 +1516,8 @@ object Dedup {
     val entPairs = entityPairGraph(pairs, idToEnt)
     // tiny entity graph; consumed by the store re-key, the batch canon,
     // and the inheritance aggregate — share the closure's blocks
-    val entToCanon = nearDupClusters(entPairs)
-      .select(col("id").as("__e"), col("cluster").as("__canon"))
-      .localCheckpoint(eager = false)
+    val entToCanon = Barrier(nearDupClusters(entPairs)
+      .select(col("id").as("__e"), col("cluster").as("__canon")), "Dedup.splitByClusterIncremental")
     val storeAdv = store
       .join(entToCanon, store("cluster_rep") === col("__e"), "left")
       .withColumn("cluster_rep",
@@ -1698,10 +1675,10 @@ object Dedup {
     // own store maintenance (StreamingNovelty's touched-hash slice)
     // passes it in pre-materialized, so the batch is shingled once, not
     // once here and again for the slice
-    val merged = store
+    val merged = Barrier(store
       .unionByName(batchStore.getOrElse(noveltyStore(batch, idCol, textCol, w)))
-      .groupBy("__h").agg(min(col("__first")).as("__first"))
-      .localCheckpoint(eager = false) // feeds the persisted store AND the winner count
+      .groupBy("__h").agg(min(col("__first")).as("__first")),
+      "Dedup.ngramNoveltyIncremental") // feeds the persisted store AND the winner count
     val batchIds = batch.select(col(idCol))
     val novel = merged
       .groupBy(col("__first").as(idCol))
@@ -1936,9 +1913,9 @@ object Dedup {
       "thresholds must be in (0, 1]")
     val spark = df.sparkSession
     import spark.implicits._
-    val pairs = minHashNearDups(df, idCol, textCol, k, bands, w,
-      threshold = thresholds.min, maxBucket = maxBucket)
-      .localCheckpoint(eager = false) // pair stats + doc counts both read it
+    val pairs = Barrier(minHashNearDups(df, idCol, textCol, k, bands, w,
+      threshold = thresholds.min, maxBucket = maxBucket),
+      "Dedup.thresholdSensitivity") // pair stats + doc counts both read it
     val byT = pairs
       .select(col("id_a"), col("id_b"), col("jaccard"),
         explode(array(thresholds.sorted.map(lit): _*)).as("threshold"))
@@ -2067,9 +2044,9 @@ object Dedup {
     // Exploded once, read four times (dfreq, prefix positions, both
     // verify sides) — executor-local blocks instead of recomputing the
     // shingling per branch.
-    val toks = shareLazily(docs.select(
+    val toks = Barrier(docs.select(
       col(idCol).as("__id"),
-      explode(shingleHashes(col(textCol), w)).as("__tok")))
+      explode(shingleHashes(col(textCol), w)).as("__tok")), "Dedup.jaccardPrefixJoin")
     val sizes = toks.groupBy("__id").agg(count(lit(1)).as("__sz"))
     // The emitted filter is round(jac, roundScale) >= threshold, which
     // PROMOTES true Jaccards in [t − 0.5·10^−scale, t) — pairs the
@@ -2142,10 +2119,10 @@ object Dedup {
         lit(s"$t:"),
         VectorFunctions.hyperplaneSignature(col(vecCol), planes).cast("string"))
     }
-    val withSig = shareLazily(df.select(
+    val withSig = Barrier(df.select(
       col(idCol).as("id"),
       col(vecCol).as("v"),
-      array(sigCols.toIndexedSeq: _*).as("sigs")))
+      array(sigCols.toIndexedSeq: _*).as("sigs")), "Dedup.embeddingNearDups")
 
     // id-only bucket self-join (embedding vectors must not ride the
     // bucket shuffle — they are re-attached per candidate pair below).
@@ -2219,9 +2196,10 @@ object Dedup {
       // pair list with the production schema, never an analysis error
       return df.select(lit(0).as("cell"), col(idCol).as("id_a"),
         col(idCol).as("id_b"), lit(0.0).as("cos")).limit(0)
-    val assigned = shareLazily(
+    val assigned = Barrier(
       df.select(col(idCol).as("id"), col(vecCol).as("v"),
-        Similarity.probeCellsCol(col(vecCol), cents, probes).as("cells")))
+        Similarity.probeCellsCol(col(vecCol), cents, probes).as("cells")),
+      "Dedup.semanticNearDupPairs")
     val exploded = assigned.select(col("id"),
       posexplode(col("cells")).as(Seq("rank", "cell")))
     val ids = dropHotBuckets(
@@ -2266,16 +2244,16 @@ object Dedup {
     if (cents.isEmpty)
       return newVecs.select(lit(0).as("cell"), col(idCol).as("id_a"),
         col(idCol).as("id_b"), lit(0.0).as("cos")).limit(0)
-    val newAssigned = shareLazily(
+    val newAssigned = Barrier(
       Similarity.ivfIndex(newVecs, idCol, vecCol, cents)
         .select(col(idCol).as("id"), col(vecCol).as("v"), col("cell"))
-        .withColumn("__new", lit(1)))
+        .withColumn("__new", lit(1)), "Dedup.semanticNearDupsIncremental.assigned")
     val touched = newAssigned.select("cell").distinct()
     val hist = history
       .select(col(idCol).as("id"), col(vecCol).as("v"), col("cell"))
       .join(broadcast(touched), Seq("cell"), "left_semi")
       .withColumn("__new", lit(0))
-    val tagged = shareLazily(newAssigned.unionByName(hist))
+    val tagged = Barrier(newAssigned.unionByName(hist), "Dedup.semanticNearDupsIncremental.tagged")
     val ids = dropHotBuckets(
       tagged.select(col("cell"), col("id"), col("__new")), "cell", maxCell)
     val a = ids.select(col("cell"), col("id").as("id_a"), col("__new").as("__new_a"))

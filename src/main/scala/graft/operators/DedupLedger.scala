@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Incremental CROSS-RUN exact dedup: a persisted ledger of content
   * fingerprints that every new batch is filtered against before its own
   * fingerprints are appended — the batch-compaction complement to
@@ -84,9 +86,10 @@ object DedupLedger {
       batchId: String,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val accepted = filterNew(spark, ledgerPath, docs, idCol, textCol)
-      .localCheckpoint(eager = true) // one materialization feeds both the
-                                     // ledger append and the returned frame
+    // one materialization feeds both the ledger append and the
+    // returned frame
+    val accepted = Barrier(filterNew(spark, ledgerPath, docs, idCol, textCol),
+      "DedupLedger.accepted")
     accepted
       .select(col(FpCol), col(idCol).cast("long").as("doc_id"),
         lit(batchId).as("accepted_batch"))

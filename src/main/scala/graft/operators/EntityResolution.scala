@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Record linkage over STRUCTURED rows — the classic warehouse dedup
   * (Fellegi–Sunter shape: block, score field-wise, threshold, cluster),
   * complementing the text/embedding near-dup family which keys on
@@ -287,11 +289,10 @@ object EntityResolution {
     // row-level join would have produced — the row-level filters apply
     // unchanged after expansion.
     val vcols = fields.map { case (f, _) => col(f) }
-    val tuples = guarded
+    val tuples = Barrier(guarded
       .groupBy(col("__block") +: vcols: _*)
       .agg(collect_list(struct(col(idCol).as("id"), col("__new").as("n"),
-        col("__probe").as("p"))).as("__mb"))
-      .localCheckpoint(eager = false)
+        col("__probe").as("p"))).as("__mb")), "EntityResolution.tuples")
     val newMembers = transform(
       filter(col("__mb"), m => m.getField("n")),
       m => struct(m.getField("id").as("id"), m.getField("p").as("p")))
@@ -454,7 +455,7 @@ object EntityResolution {
         tupleStage(slim, idCol, fields, threshold, roundScale, pairBudget)
       // the scoring join feeds three consumers (rep edges, participation
       // keys ×2) — checkpoint it so the banded DP runs once
-      val tuplePairs = rawTuplePairs.localCheckpoint(eager = false)
+      val tuplePairs = Barrier(rawTuplePairs, "EntityResolution.tuplePairs")
       val minOf = (members: Column) =>
         array_min(transform(members, m => m.getField("id")))
       val rep = tuplePairs.select(

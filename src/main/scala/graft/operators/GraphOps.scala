@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Graph analytics over edge lists the engine itself produces (near-dup
   * pairs, co-occurrence joins). North-star EXTENSION: corpus curation
   * uses centrality to pick cluster representatives and to spot
@@ -11,12 +13,12 @@ import org.apache.spark.sql.functions._
   *
   * Iteration model: the DRIVER loops over a bounded, data-independent
   * iteration count; each step is one distributed join+aggregate. Rank
-  * lineage is truncated per step with GC-tracked `localCheckpoint`
-  * blocks (never CacheManager pins), so plans stay constant-size
-  * instead of doubling per iteration — the standard shape for iterative
-  * DataFrame algorithms (Dedup.nearDupClusters' star contraction
-  * checkpoints each round the same way, though its round count is
-  * data-dependent: it loops until the edges form a star forest).
+  * lineage is truncated per step by a [[graft.Barrier]], so plans stay
+  * constant-size instead of doubling per iteration, and PlanDump writes
+  * each step's plan under its barrier's name — the standard shape for
+  * iterative DataFrame algorithms (Dedup.nearDupClusters' star
+  * contraction checkpoints each round the same way, though its round
+  * count is data-dependent: it loops until the edges form a star forest).
   */
 object GraphOps {
 
@@ -40,10 +42,10 @@ object GraphOps {
       iterations: Int = 3,
       damping: Double = 0.85): DataFrame = {
     require(iterations >= 1 && iterations <= 50, "iterations must be in [1, 50]")
-    val directed = edges
+    val directed = Barrier(edges
       .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .localCheckpoint(false)
+      .unionByName(edges.select(col("id_b").as("src"), col("id_a").as("dst"))),
+      "GraphOps.pageRank.directed")
     val outDeg = directed.groupBy("src").agg(count(lit(1)).as("deg"))
     // The degree join is ITERATION-INVARIANT: deg(src) never changes, so
     // attach it to the adjacency once and checkpoint (src, dst, deg) —
@@ -52,47 +54,31 @@ object GraphOps {
     // per-iteration join re-reads an already-hash-partitioned build of
     // the graph-sized frame and only the (small) rank side shuffles —
     // the "two operations keyed the same way share one exchange" rule.
-    val adj = directed.repartition(col("src")).join(outDeg, Seq("src"))
-      .localCheckpoint(false)
-    val nodes = adj.select(col("src").as("id")).distinct()
-      .localCheckpoint(false)
+    val adj = Barrier(directed.repartition(col("src")).join(outDeg, Seq("src")),
+      "GraphOps.pageRank.adjacency")
+    val nodes = Barrier(adj.select(col("src").as("id")).distinct(), "GraphOps.pageRank.nodes")
     val n = nodes.count() // bounded driver scalar (|V|), not data movement
     if (n == 0) return nodes.withColumn("rank", lit(0.0))
 
     var rank = nodes.withColumn("rank", lit(1.0 / n))
-    for (_ <- 1 to iterations) {
-      rank = pageRankIteration(adj, nodes, rank, damping, n)
-        .localCheckpoint(false) // truncate lineage; constant-size plan per step
+    for (i <- 1 to iterations) {
+      // one join against the pre-partitioned (src, dst, deg) adjacency,
+      // one exact-decimal aggregate, one node-width left join; the
+      // barrier truncates lineage, so each step's plan is constant-size
+      val contrib = adj
+        .join(rank.withColumnRenamed("id", "src"), Seq("src"))
+        .select(col("dst").as("id"),
+          (col("rank") / col("deg")).cast("decimal(38,20)").as("c"))
+        .groupBy("id")
+        .agg(sum(col("c")).as("in")) // exact decimal sum: order-independent
+      rank = Barrier(nodes
+        .join(contrib, Seq("id"), "left")
+        .select(col("id"),
+          (lit((1 - damping) / n) +
+            lit(damping) * coalesce(col("in").cast("double"), lit(0.0))).as("rank")),
+        s"GraphOps.pageRank.iteration$i")
     }
     rank.select(col("id"), round(col("rank"), 6).as("rank"))
-  }
-
-  /** ONE PageRank iteration body, UN-checkpointed — factored out so the
-    * plan-evidence dump (graft.PlanDump's `pagerank_iteration` pseudo
-    * query) can explain the per-iteration subtree BEFORE localCheckpoint
-    * truncates lineage: the r14 plans showed only the post-barrier sort,
-    * leaving the hoisted-degree-join claim (2 joins → 1 in the loop)
-    * without plan evidence. The body is exactly what [[pageRank]]'s loop
-    * executes: one join against the pre-partitioned (src, dst, deg)
-    * adjacency, one exact-decimal aggregate, one node-width left join.
-    */
-  private[graft] def pageRankIteration(
-      adj: DataFrame,
-      nodes: DataFrame,
-      rank: DataFrame,
-      damping: Double,
-      n: Long): DataFrame = {
-    val contrib = adj
-      .join(rank.withColumnRenamed("id", "src"), Seq("src"))
-      .select(col("dst").as("id"),
-        (col("rank") / col("deg")).cast("decimal(38,20)").as("c"))
-      .groupBy("id")
-      .agg(sum(col("c")).as("in")) // exact decimal sum: order-independent
-    nodes
-      .join(contrib, Seq("id"), "left")
-      .select(col("id"),
-        (lit((1 - damping) / n) +
-          lit(damping) * coalesce(col("in").cast("double"), lit(0.0))).as("rank"))
   }
 
   /** Degree centrality of an undirected edge list: neighbors per node —
@@ -118,7 +104,7 @@ object GraphOps {
     // three structural scans of the edge list — share one
     // materialization so an expensive upstream (e.g. the LSH pair
     // pipeline) runs once, not three times
-    val e = edges.localCheckpoint(false)
+    val e = Barrier(edges, "GraphOps.triangleCount")
     val e1 = e.select(col("id_a").as("a"), col("id_b").as("b"))
     val e2 = e.select(col("id_a").as("b"), col("id_b").as("c"))
     val e3 = e.select(col("id_a").as("a"), col("id_b").as("c"))
@@ -133,7 +119,7 @@ object GraphOps {
     * collided with unrelated docs.
     */
   def localClustering(edges: DataFrame): DataFrame = {
-    val e = edges.localCheckpoint(false)
+    val e = Barrier(edges, "GraphOps.localClustering")
     val e1 = e.select(col("id_a").as("a"), col("id_b").as("b"))
     val e2 = e.select(col("id_a").as("b"), col("id_b").as("c"))
     val e3 = e.select(col("id_a").as("a"), col("id_b").as("c"))

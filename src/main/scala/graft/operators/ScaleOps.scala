@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.NativeExprs
 
+import graft.Barrier
+
 /** Scale utilities for the shuffle-heavy shapes a 100 TB run hits:
   * key-skew joins and repeated co-located joins. North-star EXTENSION —
   * the reference's only scale knob is `spark.sql.shuffle.partitions=200`
@@ -941,10 +943,9 @@ object ScaleOps {
       "shardByTokenBudget emits shard/__pid; rename the caller's columns")
     val nPart = if (parts > 0) parts
       else df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val pinned = df
+    val pinned = Barrier(df
       .repartitionByRange(nPart, col(orderCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn("__pid", spark_partition_id()), "ScaleOps.shardByTokenBudget")
     val sums = pinned.groupBy("__pid")
       .agg(sum(col(tokenCol).cast("long")).as("__t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
@@ -1144,7 +1145,7 @@ object ScaleOps {
       k: Int = 1024): DataFrame =
     pairwiseFromSketches(
       // both sides of the pair join read the sketch frame
-      kmvSketches(df, groupCol, textCol, w, k).localCheckpoint(eager = false), k)
+      Barrier(kmvSketches(df, groupCol, textCol, w, k), "ScaleOps.kmvOverlapMatrix"), k)
 
   /** The |groups|²-row pairwise stage shared by [[kmvOverlapMatrix]]
     * and [[kmvOverlapMatrixAdvance]]: same estimate arithmetic as
@@ -1225,12 +1226,11 @@ object ScaleOps {
     val batchSk = kmvSketches(batch, groupCol, textCol, w, k)
     val bottomK = org.apache.spark.sql.functions.udaf(
       new graft.functions.BottomKSketch(k, hashInput = false))
-    val merged = store.select(col("grp"), col("sk"))
+    val merged = Barrier(store.select(col("grp"), col("sk"))
       .unionByName(batchSk)
       .select(col("grp"), explode(col("sk")).as("h"))
       .groupBy("grp")
-      .agg(bottomK(col("h")).as("sk"))
-      .localCheckpoint(eager = false)
+      .agg(bottomK(col("h")).as("sk")), "ScaleOps.kmvOverlapMatrixAdvance")
     (merged, pairwiseFromSketches(merged, k))
   }
 

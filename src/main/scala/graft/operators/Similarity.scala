@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.functions.VectorFunctions
 
 /** Approximate/exact nearest-neighbor search over an embedding column
@@ -688,8 +689,8 @@ object Similarity {
     import org.apache.spark.sql.types.DecimalType
     val contribs = rankings.map { case (df, scoreCol) =>
       // rank = 1 + |rows strictly ahead| (see the scale note)
-      val pool = df.select(col(idCol), col(scoreCol).as("__s")).filter(col("__s").isNotNull)
-        .localCheckpoint(eager = false)
+      val pool = Barrier(df.select(col(idCol), col(scoreCol).as("__s")).filter(col("__s").isNotNull),
+        "Similarity.rrfFuse.pool")
       val peers = pool.select(col(idCol).as("__pid"), col("__s").as("__ps"))
       val self = col("__pid") <=> col(idCol)
       pool

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Text-analysis operators for a training-data pipeline, over a
   * `documents(doc_id, text, …)` table. All are pure column expressions
   * (whole-stage-codegen-friendly where Spark codegens them, JVM higher-order
@@ -10,17 +12,6 @@ import org.apache.spark.sql.functions._
   * map-only stage.
   */
 object TextAnalysis {
-
-  /** Lazy block-level reuse of a subtree consumed by several downstream
-    * branches — same mechanism and rationale as
-    * [[graft.operators.Dedup.shareLazily]] (lazy localCheckpoint: no
-    * CacheManager entry, no eager job; blocks freed by the
-    * ContextCleaner). Without it the winnow kernel re-fingerprints the
-    * batch once per consuming branch — measured at the sf10 rehearsal:
-    * the batch pass ran 3×, the history pass 2×, in one q193 call.
-    */
-  private def shareLazily(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = false)
 
   /** Engine-wide tokenizer whitespace: the explicit `[ \t\n\f\r]` —
     * exactly RE2's (and so DuckDB's) `\s` — NOT Java's `\s`, which
@@ -150,11 +141,10 @@ object TextAnalysis {
       df: DataFrame,
       labelCol: String,
       textCol: String): DataFrame = {
-    val cells = df
+    val cells = Barrier(df
       .select(col(labelCol).cast("string").as("label"),
         langId(col(textCol)).as("pred"))
-      .groupBy("label", "pred").agg(count(lit(1)).as("n"))
-      .localCheckpoint(eager = false)
+      .groupBy("label", "pred").agg(count(lit(1)).as("n")), "TextAnalysis.langIdConfusion")
     val margins = cells.groupBy("label").agg(sum(col("n")).as("__lt"))
     cells.join(margins, "label")
       .select(col("label"), col("pred"), col("n"),
@@ -657,12 +647,13 @@ object TextAnalysis {
       w: Int = 10,
       minShared: Long = 3L,
       maxDf: Long = 1000L): DataFrame = {
-    val fp = shareLazily(winnowFingerprints(df, idCol, textCol, k, w))
+    val fp = Barrier(winnowFingerprints(df, idCol, textCol, k, w),
+      "TextAnalysis.winnowNearDups.fingerprints")
     val hot = fp.groupBy("fp")
       .agg(countDistinct(col(idCol)).as("__df"))
       .filter(col("__df") > maxDf)
       .select("fp")
-    val kept = shareLazily(fp.join(hot, Seq("fp"), "left_anti"))
+    val kept = Barrier(fp.join(hot, Seq("fp"), "left_anti"), "TextAnalysis.winnowNearDups.kept")
     val a = kept.select(col("fp"), col(idCol).as("id_a"))
     val b = kept.select(col("fp"), col(idCol).as("id_b"))
     a.join(b, Seq("fp"))
@@ -784,7 +775,11 @@ object TextAnalysis {
       w: Int = 10,
       minShared: Long = 3L,
       maxDf: Long = 1000L): DataFrame = {
-    val newFp = shareLazily(winnowFingerprints(newDocs, idCol, textCol, k, w))
+    // without the barriers the kernel re-fingerprints the batch once
+    // per consuming branch (measured at the sf10 rehearsal: the batch
+    // pass ran 3×, the history pass 2×, in one q193 call)
+    val newFp = Barrier(winnowFingerprints(newDocs, idCol, textCol, k, w),
+      "TextAnalysis.winnowIncremental.fingerprints")
     val batchDf = newFp.groupBy("fp").agg(count(lit(1)).cast("long").as("__bdf"))
     val touchedStoreDf = historyDf
       .join(batchDf.select("fp"), Seq("fp"), "left_semi")
@@ -792,7 +787,8 @@ object TextAnalysis {
     val hot = batchDf.join(touchedStoreDf, Seq("fp"), "left")
       .filter(col("__bdf") + coalesce(col("__sdf"), lit(0L)) > maxDf)
       .select("fp")
-    val newKept = shareLazily(newFp.join(hot, Seq("fp"), "left_anti"))
+    val newKept = Barrier(newFp.join(hot, Seq("fp"), "left_anti"),
+      "TextAnalysis.winnowIncremental.kept")
     val histKept = historyFps.select(col(idCol), col("fp"))
       .join(batchDf.select("fp"), Seq("fp"), "left_semi")
       .join(hot, Seq("fp"), "left_anti")

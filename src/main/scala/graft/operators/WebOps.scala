@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Web-corpus operators: URL parsing/canonicalization, registrable
   * domains, and per-domain caps — the provenance-side half of a
   * crawl-to-corpus pipeline (dedup by canonical URL, cap any one site's
@@ -331,10 +333,9 @@ object WebOps {
     // and the crawled-set distinct each evaluate ONCE (the composition
     // rule; measured on q277: 11.1 → ~6 s at sf0.1 without it the gate
     // re-ran per consumer)
-    val newVisited = batchCrawled.select(col(urlCol)).distinct()
-      .localCheckpoint(false)
-    val gated = gatedCandidates(batchEdges, rules, urlCol)
-      .localCheckpoint(false)
+    val newVisited = Barrier(batchCrawled.select(col(urlCol)).distinct(),
+      "WebOps.frontierAdvance.visited")
+    val gated = Barrier(gatedCandidates(batchEdges, rules, urlCol), "WebOps.frontierAdvance.gated")
     val touchedKeys = gated.select(col(urlCol))
     // untouched store rows pass through; they can still have been
     // FETCHED this batch (crawled without being re-referenced)
@@ -432,9 +433,9 @@ object WebOps {
       xmlCol: String,
       maxDepth: Int = 3): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 10, "maxDepth must be in [1, 10]")
-    val base = sitemaps
-      .select(col(urlCol).as("__sm_url"), col(xmlCol).as("__sm_xml"))
-      .localCheckpoint(false) // re-joined once per level
+    val base = Barrier(sitemaps
+      .select(col(urlCol).as("__sm_url"), col(xmlCol).as("__sm_xml")),
+      "WebOps.sitemapSeeds.base") // re-joined once per level
     val allChildren = base
       .select(explode(sitemapIndexEntries(col("__sm_xml"))).as("__c"))
       .distinct()
@@ -452,9 +453,8 @@ object WebOps {
         val childLocs = frontier
           .select(explode(sitemapIndexEntries(col("__sm_xml"))).as("__c"))
           .distinct()
-        frontier = base.join(childLocs,
-            col("__sm_url") === col("__c"), "left_semi")
-          .localCheckpoint(false)
+        frontier = Barrier(base.join(childLocs,
+            col("__sm_url") === col("__c"), "left_semi"), "WebOps.sitemapSeeds.frontier")
       }
     }
     out
@@ -546,8 +546,7 @@ object WebOps {
     *    which otherwise re-run it ~4× (1.1 s vs 6.6 s warm).
     */
   def outlinkEdges(pages: DataFrame, base: Column, html: Column, keep: String*): DataFrame =
-    outlinkChain(pages, base, html, keep: _*)
-      .localCheckpoint(false)
+    Barrier(outlinkChain(pages, base, html, keep: _*), "WebOps.outlinkEdges")
       .filter(col("dst").isNotNull && col("dst") =!= "")
 
   /** [[outlinkEdges]] up to its barrier, exposed for the plan pin. */

@@ -3,6 +3,8 @@ package graft.quality
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
+
 /** Distribution-drift statistics between two corpus slices (versions,
   * sources, time windows, encoder runs) — the governance gate that
   * catches "this re-crawl silently halved document lengths" or "the
@@ -44,10 +46,9 @@ object Drift {
       .groupBy("v")
       .agg(sum(col("__a")).as("ca"), sum(col("__b")).as("cb"))
     val nPart = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val pinned = perValue
+    val pinned = Barrier(perValue
       .repartitionByRange(nPart, col("v"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(false)
+      .withColumn("__pid", spark_partition_id()), "Drift.ksDrift")
     // bounded planning step: one row per partition
     val sums = pinned.groupBy("__pid")
       .agg(sum(col("ca")).as("__ta"), sum(col("cb")).as("__tb"))
@@ -357,10 +358,9 @@ object Drift {
       df.select(col(groupCol).as("__g"),
         col(catCol).cast("string").as("cat"))
         .withColumn("__a", lit(a)).withColumn("__b", lit(b))
-    val cells = side(dfA, 1L, 0L).unionByName(side(dfB, 0L, 1L))
+    val cells = Barrier(side(dfA, 1L, 0L).unionByName(side(dfB, 0L, 1L))
       .groupBy("__g", "cat")
-      .agg(sum(col("__a")).as("n_a"), sum(col("__b")).as("n_b"))
-      .localCheckpoint(false)
+      .agg(sum(col("__a")).as("n_a"), sum(col("__b")).as("n_b")), "Drift.psiDriftByGroup")
     val totals = cells.groupBy("__g")
       .agg(sum(col("n_a")).as("__ta"), sum(col("n_b")).as("__tb"))
     // a group entirely absent from one side has a zero total: its

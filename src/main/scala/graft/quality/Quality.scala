@@ -3,6 +3,8 @@ package graft.quality
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
 
+import graft.Barrier
+
 /** Data-profile snapshot — reference validation block
   * (`scripts/...pyspark.py:86-98`): row count, column count, duplicate-row
   * count, per-column null counts. The reference logs these; we return them
@@ -283,11 +285,10 @@ object Validator {
     // product) is checkpointed, and every margin/total/MI term derives
     // from it — without this, the five consumers below would each
     // re-scan the corpus
-    val cells = df
+    val cells = Barrier(df
       .select(col(colA).cast("string").as("__a"), col(colB).cast("string").as("__b"))
       .na.drop(Seq("__a", "__b"))
-      .groupBy("__a", "__b").agg(count(lit(1)).as("__nab"))
-      .localCheckpoint(false)
+      .groupBy("__a", "__b").agg(count(lit(1)).as("__nab")), "Quality.mutualInformation")
     val ma = cells.groupBy("__a").agg(sum(col("__nab")).as("__na"))
     val mb = cells.groupBy("__b").agg(sum(col("__nab")).as("__nb"))
     val tot = cells.agg(sum(col("__nab")).as("__n"),
@@ -521,9 +522,8 @@ object Outliers {
       .agg(expr(s"percentile_disc(0.5) WITHIN GROUP (ORDER BY `$valueCol`)").as("__med"))
     // shared blocks: the MAD aggregate and the final join both consume
     // this diamond — without sharing the base scan + med join run twice
-    val withMed = attach(df, med, "__med")
-      .withColumn("__absdev", abs(col(valueCol) - col("__med")))
-      .localCheckpoint(false)
+    val withMed = Barrier(attach(df, med, "__med")
+      .withColumn("__absdev", abs(col(valueCol) - col("__med"))), "Quality.robustScale")
     val mad = withMed.groupBy(groupCols.map(col): _*)
       .agg(expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY __absdev)").as("__mad"))
     attach(withMed, mad, "__mad")

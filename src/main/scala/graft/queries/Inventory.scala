@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.functions.VectorFunctions
 import graft.multimodal.Multimodal
 import graft.operators.{Bpe, Classify, Unigram, Dedup, DedupLedger, EntityResolution, HtmlText, Packing, ScaleOps, Sessionize, Similarity, TextAnalysis, WebOps}
@@ -4024,11 +4025,10 @@ object Inventory {
         // guard, no recall parameter. Exactness over hashes: Jaccard over
         // xxhash64 shingles equals Jaccard over the trigrams themselves
         // (both engines hash injectively w.h.p.), the q83 convention.
-        Dedup.jaccardPrefixJoin(
-            t(s, dir, "documents"), "doc_id", "text", 0.3, w = 3)
+        Barrier(Dedup.jaccardPrefixJoin(
+            t(s, dir, "documents"), "doc_id", "text", 0.3, w = 3), "q177.pairs")
           // barrier before the presentation sort: the range exchange's
           // sampling pass re-executes the pair-scoring stage (q275 rule)
-          .localCheckpoint(false)
           .orderBy("id_a", "id_b"),
       Some("""WITH sh AS (
           SELECT doc_id, list_distinct(
@@ -4131,14 +4131,13 @@ object Inventory {
         // re-runs (A/B at sf0.1 was window-noise-level locally, 4.05
         // vs 4.30 s; kept for the structural win — the resolve join
         // re-ran per consumer)
-        val resolved = EntityResolution.resolve(
+        val resolved = Barrier(EntityResolution.resolve(
           t(s, dir, "part")
             .withColumn("name_noun", element_at(split(col("p_name"), " "), -1)),
           "p_partkey",
           blockCols = Seq("p_brand", "name_noun"),
           fields = Seq(("p_name", 0.6), ("p_type", 0.4)),
-          threshold = 0.85)
-          .localCheckpoint(false)
+          threshold = 0.85), "q186.resolved")
         EntityResolution.goldenRecord(
             resolved, "entity_id",
             modeFields = Seq("p_type", "p_size"),
@@ -4220,18 +4219,17 @@ object Inventory {
         // batch — q182 covers ITS incremental form). The oracle is
         // q186's full replay side-filtered to entities the batch
         // touched: state merge must be exact or the hash breaks.
-        val resolved = EntityResolution.resolve(
+        val resolved = Barrier(EntityResolution.resolve(
           t(s, dir, "part")
             .withColumn("name_noun", element_at(split(col("p_name"), " "), -1)),
           "p_partkey",
           blockCols = Seq("p_brand", "name_noun"),
           fields = Seq(("p_name", 0.6), ("p_type", 0.4)),
-          threshold = 0.85)
+          threshold = 0.85), "q192.resolved")
           // barrier: the planning percentile collect plus four state/
           // touched consumers below re-ran the resolve chain per
           // action without it (the q231 pattern; local A/B 5.51 vs
           // 6.00 s, window-noise-level — kept for the structural win)
-          .localCheckpoint(false)
         val cut = resolved.agg(expr(
           "percentile_disc(0.8) WITHIN GROUP (ORDER BY p_partkey)"))
           .head().getDouble(0).toLong
@@ -4885,7 +4883,7 @@ object Inventory {
           lit("<script>track()</script></body></html>"))
         val url = concat(lit("HTTPS://"), col("source"),
           lit(".Example.COM:443/doc/"), did, lit("?utm_source=mail"))
-        t(s, dir, "documents")
+        Barrier(t(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("text"))
           .withColumn("html", html)
           // the kept-block texts are computed ONCE per row (a non-cheap
@@ -4899,11 +4897,10 @@ object Inventory {
             HtmlText.extractTitle(col("html")).as("title"),
             array_join(col("__kept"), "\n").as("extracted"),
             size(col("__kept")).cast("long").as("n_blocks"))
-          .withColumn("n_chars_out", length(col("extracted")).cast("long"))
+          .withColumn("n_chars_out", length(col("extracted")).cast("long")), "q187.extracted")
           // barrier before the presentation sort: the range exchange's
           // sampling pass would otherwise re-execute the regex chain
           // (the q275 composition rule)
-          .localCheckpoint(false)
           .orderBy("doc_id")
       },
       Some("""WITH h AS (
@@ -5548,13 +5545,12 @@ object Inventory {
         // swings, bench min 65 s; pinned: stable 14-21 s). The
         // materialized frame is ONE BATCH's cut output — the bounded
         // daily unit, not the corpus.
-        Dedup.removeDuplicateSpansIncremental(
+        Barrier(Dedup.removeDuplicateSpansIncremental(
           t(s, dir, "documents").filter(col("doc_id") >= 250),
           Dedup.spanHashStore(
             t(s, dir, "documents").filter(col("doc_id") < 250),
             "doc_id", "text", w = 8),
-          "doc_id", "text", w = 8)
-          .localCheckpoint(false)
+          "doc_id", "text", w = 8), "q209.cut")
           .orderBy("doc_id"),
       Some("""WITH base AS (
           SELECT doc_id, string_split(text, ' ') AS t FROM documents),
@@ -7359,17 +7355,15 @@ object Inventory {
         // (linkage slim projection, idToEnt, batch survivorship state,
         // touched set) — without it the search chain re-executes per
         // consumer (guide §7.2; measured 4 evaluations at sf0.1)
-        val batch = p.filter(col("p_partkey") > cut)
-          .unionByName(synth.select(p.columns.map(col).toIndexedSeq: _*))
-          .localCheckpoint(false)
+        val batch = Barrier(p.filter(col("p_partkey") > cut)
+          .unionByName(synth.select(p.columns.map(col).toIndexedSeq: _*)), "q231.batch")
         // barrier: the resolved store feeds the survivorship state, the
         // incremental linkage, and the entity map — one materialization
-        val store = EntityResolution.resolve(
+        val store = Barrier(EntityResolution.resolve(
           base, "p_partkey",
           blockCols = Seq("p_brand", "name_noun"),
           fields = Seq(("p_name", 0.6), ("p_type", 0.4)),
-          threshold = 0.85)
-          .localCheckpoint(false)
+          threshold = 0.85), "q231.store")
         val state = EntityResolution.goldenRecordState(
           store, "entity_id", mode, long, newest)
         val (newState, remap) = EntityResolution.goldenRecordAdvance(
@@ -9413,34 +9407,30 @@ object Inventory {
         //    each multi-consumer frame is lazily checkpointed (the
         //    q264 shared-pairs idiom; executor-local blocks, no
         //    CacheManager pin).
-        val flat = TextAnalysis.c4Clean(repaired, "doc_id", "text")
+        val flat = Barrier(TextAnalysis.c4Clean(repaired, "doc_id", "text")
           .select(col("doc_id"),
-            regexp_replace(col("clean_text"), "\n", " ").as("text"))
-          .localCheckpoint(false)
+            regexp_replace(col("clean_text"), "\n", " ").as("text")), "q272.flat")
         // 4. Gopher gate (published thresholds)
-        val surv = flat.join(
+        val surv = Barrier(flat.join(
           TextAnalysis.gopherSignals(flat).filter(col("passes_gopher"))
             .select("doc_id"),
-          Seq("doc_id"), "left_semi")
-          .localCheckpoint(false)
+          Seq("doc_id"), "left_semi"), "q272.survivors")
         // 5. near-dup dedup: smaller id of each pair survives
         val pairs = Dedup.simHashMd5NearDups(
           surv, "doc_id", "text", maxDist = 3, maxBucket = 100000)
-        val deduped = surv.join(
+        val deduped = Barrier(surv.join(
           pairs.select(col("id_b").as("doc_id")).distinct(),
-          Seq("doc_id"), "left_anti")
-          .localCheckpoint(false)
+          Seq("doc_id"), "left_anti"), "q272.deduped")
         // 6. span-level decontamination vs the held-out benchmark
         val decon = Dedup.decontaminateSpans(
           deduped, bench, "doc_id", "text", w = 8)
         // 7. PII scrub + exact token count (+ lang rejoined by id)
-        val scrubbed = decon
+        val scrubbed = Barrier(decon
           .select(col("doc_id"),
             TextAnalysis.redactPii(col("text_dedup")).as("text"))
           .join(crawl.select("doc_id", "lang"), Seq("doc_id"))
           .select(col("doc_id"), col("lang"),
-            size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-          .localCheckpoint(false)
+            size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok")), "q272.scrubbed")
         // 8. temperature-α language mix to a fixed token budget
         val mixed = ScaleOps.temperatureSample(
           scrubbed, "doc_id", "lang", "n_tok", alpha = 0.3, totalTokens = 8000L)
@@ -9485,8 +9475,8 @@ object Inventory {
         val cut = crawl.agg(expr(
           "percentile_disc(0.8) WITHIN GROUP (ORDER BY doc_id)"))
           .head().getDouble(0).toLong
-        val benchStore = Dedup.heldOutShingles(bench, "doc_id", "text", w = 8)
-          .localCheckpoint(false)
+        val benchStore = Barrier(Dedup.heldOutShingles(bench, "doc_id", "text", w = 8),
+          "q279.benchStore")
         val did = col("doc_id").cast("string")
         val gA = lit("\u00C3\u00A9") // cp1252 ghost pair of U+00E9 (q272's fixture)
         val html = concat(
@@ -9529,17 +9519,14 @@ object Inventory {
           .select(col("doc_id"),
             org.apache.spark.sql.graft.NativeExprs.fixMojibake(
               HtmlText.extractText(html)).as("text"))
-        val flat = TextAnalysis.c4Clean(repaired, "doc_id", "text")
+        val flat = Barrier(TextAnalysis.c4Clean(repaired, "doc_id", "text")
           .select(col("doc_id"),
-            regexp_replace(col("clean_text"), "\n", " ").as("text"))
-          .localCheckpoint(false)
-        val surv = flat.join(
+            regexp_replace(col("clean_text"), "\n", " ").as("text")), "q279.flat")
+        val surv = Barrier(flat.join(
           TextAnalysis.gopherSignals(flat).filter(col("passes_gopher"))
             .select("doc_id"),
-          Seq("doc_id"), "left_semi")
-          .localCheckpoint(false)
-        val fps = Dedup.simHashMd5Fingerprints(surv, "doc_id", "text")
-          .localCheckpoint(false)
+          Seq("doc_id"), "left_semi"), "q279.survivors")
+        val fps = Barrier(Dedup.simHashMd5Fingerprints(surv, "doc_id", "text"), "q279.fingerprints")
         // stage 5, the ORDER-DEPENDENT advance, day by day: day 1's
         // pre-batch store is empty, day 2's is day 1's fingerprints
         // (every gopher survivor, dropped-or-not — the min-id rule
@@ -9555,11 +9542,10 @@ object Inventory {
         // two consumers inside the span cut (shingler + cut join) —
         // barrier so the pair anti-join runs once (q272's deduped
         // checkpoint)
-        val deduped = surv.join(dropped, Seq("doc_id"), "left_anti")
-          .localCheckpoint(false)
+        val deduped = Barrier(surv.join(dropped, Seq("doc_id"), "left_anti"), "q279.deduped")
         val decon = Dedup.decontaminateSpansVsStore(
           deduped, benchStore, "doc_id", "text", w = 8)
-        val ledger = decon
+        val ledger = Barrier(decon
           .select(col("doc_id"),
             TextAnalysis.redactPii(col("text_dedup")).as("text"))
           // lang joins from the raw crawl projection, NOT `batch`: the
@@ -9567,12 +9553,11 @@ object Inventory {
           // this separate action (no cross-action shuffle reuse)
           .join(crawl.select("doc_id", "lang"), Seq("doc_id"))
           .select(col("doc_id"), col("lang"),
-            size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+            size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok")), "q279.ledger")
           // the mix's planning aggregate (temperatureTargets' bounded
           // collect) AND its emission both read the ledger — barrier it
           // so the span-cut/PII chain runs once, not twice (q272's
           // `scrubbed` checkpoint; probed 3.4 s/extra pass at sf0.1)
-          .localCheckpoint(false)
         val mixed = ScaleOps.temperatureSample(
           ledger, "doc_id", "lang", "n_tok", alpha = 0.3, totalTokens = 8000L)
         ScaleOps.shardManifest(
@@ -9802,7 +9787,7 @@ object Inventory {
         val crawl = new CrawlFixture(d)
         // both advances gate against the same rule table — barrier it
         // so the line-parse windows run once, not once per day
-        val rules = crawl.rules.localCheckpoint(false)
+        val rules = Barrier(crawl.rules, "q277.rules")
         // ONE chain execution over the whole fixture, split into the
         // two days' edge frames afterwards (same edges either way; a
         // production day-2 harvest runs over day-2 pages only, which
@@ -9824,10 +9809,10 @@ object Inventory {
         // under day 2's plan
         val (f2, _) = WebOps.frontierAdvance(
           urls(col("__day") === 2), pages(b2), rules,
-          f1.localCheckpoint(false), v1.localCheckpoint(false))
+          Barrier(f1, "q277.day1Frontier"), Barrier(v1, "q277.day1Visited"))
         // barrier before emission: the cap's window + the presentation
         // range-sort would otherwise re-run the day-2 merge per pass
-        WebOps.frontierNext(f2.localCheckpoint(false), k = 3)
+        WebOps.frontierNext(Barrier(f2, "q277.day2Frontier"), k = 3)
           .select(col("host"), col("url"), col("n_refs"))
           .orderBy("url")
       },
@@ -9891,14 +9876,13 @@ object Inventory {
         val gated = WebOps.robotsDecision(cand, "dst", crawl.rules)
           .filter(col("allowed")).select("dst")
         val crawled = d.select(crawl.pageUrl.as("dst"))
-        gated.join(crawled, Seq("dst"), "left_anti")
+        Barrier(gated.join(crawled, Seq("dst"), "left_anti")
           .join(ranks.withColumnRenamed("id", "dst"), Seq("dst"))
-          .select(col("dst").as("url"), col("rank"))
+          .select(col("dst").as("url"), col("rank")), "q278.candidates")
           // barrier before the presentation sort: the range exchange's
           // sampling pass re-executes the child, which here re-runs the
           // robots gate + rank join (the q275 composition rule; probed
           // 1.5 s/extra pass at sf0.1)
-          .localCheckpoint(false)
           .orderBy("url")
       },
       Some("""WITH pages AS (
@@ -10063,7 +10047,7 @@ object Inventory {
           lit(",\"lang\":\""), col("lang"), lit("\"}"))
         val d = t(s, dir, "documents")
         def archive(body: Column) = concat(lit(warcinfo), body)
-        val files = d
+        val files = Barrier(d
           .select(col("source"), col("doc_id"),
             rec("conversion", "text/plain", col("text")).as("wet"),
             rec("metadata", "application/json", watJson).as("wat"))
@@ -10074,8 +10058,8 @@ object Inventory {
               x => x.getField("wet")), "")).as("wet_file"),
             archive(array_join(transform(
               array_sort(collect_list(struct(col("doc_id"), col("wat")))),
-              x => x.getField("wat")), "")).as("wat_file"))
-          .localCheckpoint(false) // both parses read the same fixture frame
+              x => x.getField("wat")), "")).as("wat_file")),
+          "q281.files") // both parses read the same fixture frame
         def parsed(fileCol: String, keep: String) = files
           .select(explode(
             graft.io.WarcParse.recordsCol(col(fileCol).cast("binary"))).as("r"))
@@ -10139,9 +10123,9 @@ object Inventory {
           lit("User-agent: *\nDisallow: /\nCrawl-delay: 99\n\n"),
           lit("User-agent: graftbot\nDisallow: /deep/\nAllow: /deep/pub\n"),
           lit("Disallow: /*.pdf$\n"), delayLine)
-        val robots = d.select(host.as("host"), col("source")).distinct()
-          .select(col("host"), robotsTxt.as("robots_txt"))
-          .localCheckpoint(false) // discovery + rules + delay read it
+        val robots = Barrier(d.select(host.as("host"), col("source")).distinct()
+          .select(col("host"), robotsTxt.as("robots_txt")),
+          "q282.robots") // discovery + rules + delay read it
         // per-(host, parity) urlset children + one INDEX per host +
         // one STALE root robots never lists (q280's fixture machinery)
         val lastmod = concat(lit("2026-01-"),

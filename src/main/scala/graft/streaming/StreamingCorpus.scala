@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.operators.{CorpusPipeline, TextAnalysis}
 
 /** Streaming twin of graft.operators.CorpusPipeline: continuous
@@ -305,9 +306,10 @@ object StreamingCorpus {
             when(col("__a_in").isNotNull && col("__b_in").isNull, col("id_a"))
               .otherwise(col("id_b")).as("__loser"))
           .distinct()
-        val survivors = fresh
-          .join(losers, fresh(idCol).cast("long") === col("__loser"), "left_anti")
-          .localCheckpoint() // one materialization: the append AND onSurvivors read it
+        // one materialization: the append AND onSurvivors read it
+        val survivors = Barrier(
+          fresh.join(losers, fresh(idCol).cast("long") === col("__loser"), "left_anti"),
+          "StreamingCorpus.semanticSurvivors")
         graft.operators.Similarity
           .ivfIndex(survivors, idCol, vecCol, cents)
           .write.mode("append").partitionBy("cell").parquet(storePath)
@@ -439,12 +441,13 @@ object StreamingCorpus {
         when(col("__a_in").isNotNull && col("__b_in").isNull, col("id_a"))
           .otherwise(col("id_b")).as("__loser"))
       .distinct()
-    val survivors = fresh
-      .join(losers, fresh(idCol).cast("long") === col("__loser"), "left_anti")
-      .localCheckpoint() // one materialization: both commits AND onSurvivors read it
-    val survFps = TextAnalysis
-      .winnowFingerprints(survivors, idCol, textCol, k, w)
-      .localCheckpoint() // fingerprint once; feeds both table commits
+    // one materialization: both commits AND onSurvivors read it
+    val survivors = Barrier(
+      fresh.join(losers, fresh(idCol).cast("long") === col("__loser"), "left_anti"),
+      "StreamingCorpus.winnowSurvivors")
+    // fingerprint once; feeds both table commits
+    val survFps = Barrier(TextAnalysis.winnowFingerprints(survivors, idCol, textCol, k, w),
+      "StreamingCorpus.winnowFingerprints")
     fps.appendIfNew(survFps, appId, batchId): Unit
     dfs.appendIfNew(
       TextAnalysis.winnowDfStore(survFps, idCol), appId, batchId): Unit

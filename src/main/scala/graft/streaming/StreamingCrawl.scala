@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Barrier
 import graft.lake.VersionedTable
 import graft.operators.WebOps
 
@@ -76,10 +77,10 @@ object StreamingCrawl {
     if (visited.lastTxn(appId).exists(_ >= batchId)) return
     if (batchEdges.isEmpty && batchCrawled.isEmpty) return
 
-    val gated = keyed(WebOps.gatedCandidates(batchEdges, rules))
+    // feeds the semi-join AND the union
+    val gated = Barrier(keyed(WebOps.gatedCandidates(batchEdges, rules))
       .withColumn("host", lower(WebOps.urlParts(col("url")).getField("host")))
-      .select("url_key", "url", "host", "n_refs")
-      .localCheckpoint(false) // feeds the semi-join AND the union
+      .select("url_key", "url", "host", "n_refs"), "StreamingCrawl.gated")
     val pre =
       if (ledger.currentVersion() == 0) gated.limit(0)
       else ledger.read(spark)
@@ -133,7 +134,7 @@ object StreamingCrawl {
     updates.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val b = batch.toDF().localCheckpoint() // one materialization, two slices
+        val b = Barrier(batch.toDF(), "StreamingCrawl.batch") // one materialization, two slices
         advanceBatch(ledger, visited,
           b.filter(col("kind") === "edge").select("url"),
           b.filter(col("kind") === "crawled").select("url"),

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Barrier
 import graft.lake.VersionedTable
 import graft.operators.{Dedup, ScaleOps, TextAnalysis}
 
@@ -70,8 +71,8 @@ object StreamingFlagship {
     if (fps.lastTxn(appId).exists(_ >= batchId)) return
     if (batch.isEmpty) return // zero applications IS exactly once
 
-    val batchFps = Dedup.simHashMd5Fingerprints(batch, idCol, textCol)
-      .localCheckpoint(eager = false) // pairs + the store append read it
+    val batchFps = Barrier(Dedup.simHashMd5Fingerprints(batch, idCol, textCol),
+      "StreamingFlagship.batchFingerprints") // pairs + the store append read it
     val pre =
       if (fps.currentVersion() == 0) batchFps.limit(0)
       else fps.read(spark)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.Barrier
 import graft.lake.VersionedTable
 import graft.operators.Dedup
 
@@ -73,8 +74,8 @@ object StreamingNovelty {
     // the batch's (hash, min-id) frame feeds BOTH the min-merge and the
     // touched-hash slice below — materialize it once instead of
     // shingling the batch twice (guide §7.2)
-    val batchStore = Dedup.noveltyStore(batch, idCol, textCol, w)
-      .localCheckpoint(eager = false)
+    val batchStore = Barrier(Dedup.noveltyStore(batch, idCol, textCol, w),
+      "StreamingNovelty.batchStore")
     val (merged, batchScores) =
       Dedup.ngramNoveltyIncremental(pre, batch, idCol, textCol, w,
         batchStore = Some(batchStore))

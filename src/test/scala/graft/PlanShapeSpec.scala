@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.queries.Inventory
@@ -22,6 +25,9 @@ class PlanShapeSpec extends SparkSpec {
 
   private def leaves(df: DataFrame): Seq[SparkPlan] =
     df.queryExecution.executedPlan.collectLeaves().toSeq
+
+  /** Plan traversal through adaptive plans and their query stages. */
+  private object aqe extends AdaptiveSparkPlanHelper
 
   test("q03: BETWEEN range predicate is pushed into the parquet scan") {
     val scans = leaves(run("q03_between")).map(_.toString)
@@ -1419,20 +1425,45 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q278: rank-joined frontier — no all-pairs, no global single-partition window") {
     // the link-graph chain and each PageRank iteration live behind
-    // GC-tracked checkpoints (GraphOps' constant-size-plan discipline);
-    // the final plan joins the gated candidates to the rank leaf
+    // barriers (GraphOps' constant-size-plan discipline); the final plan
+    // joins the gated candidates to the rank leaf
     // r14: the whole gate/anti-join/rank-join subtree now sits below an
     // emission barrier (the q275 composition rule — the range sort's
     // sampling pass must not re-run it), so the declared plan is
     // checkpoint-read → range sort. The anti-join + no-all-pairs shape
     // of the subtree itself stays pinned through q276 (same chain).
-    val p = planString(run("q278_pagerank_frontier"))
+    val (df, barriers) = Barrier.built(run("q278_pagerank_frontier"))
+    val p = planString(df)
     assert(p.contains("ExistingRDD") || p.contains("LogicalRDD"),
       s"q278 must read the checkpointed (gated ⋈ rank) frame:\n$p")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"q278 must not plan an all-pairs join:\n$p")
     assert(!p.contains("SinglePartition"),
       s"q278 must not plan a global single-partition exchange:\n$p")
+    // the loop body, from each iteration barrier's plan (what PlanDump
+    // writes under its name): the out-degree join is hoisted into the
+    // adjacency barrier, so an iteration joins the rank to the
+    // pre-partitioned (src, dst, deg) adjacency once, left-joins the
+    // result to the nodes, and never reads the edge list outDeg is
+    // counted from
+    val iterations = barriers.collect {
+      case (name, qe) if name.startsWith("GraphOps.pageRank.iteration") => qe.executedPlan
+    }
+    assert(iterations.size == 3, s"one barrier per iteration: ${barriers.map(_._1)}")
+    iterations.foreach { it =>
+      def scans(plan: SparkPlan, barrier: String): Int =
+        aqe.collectWithSubqueries(plan) { case s: RDDScanExec if s.rdd.name == barrier => s }.size
+      val joins = aqe.collectWithSubqueries(it) { case j: BaseJoinExec => j }
+      val inner = joins.filter(_.joinType == Inner)
+      val left = joins.filter(_.joinType == LeftOuter)
+      assert(joins.size == 2 && inner.size == 1 && left.size == 1,
+        s"an iteration plans one rank join and one node join:\n$it")
+      assert(scans(it, "GraphOps.pageRank.adjacency") == 1 &&
+        scans(inner.head, "GraphOps.pageRank.adjacency") == 1,
+        s"the rank join must read the adjacency barrier once:\n$it")
+      assert(scans(it, "GraphOps.pageRank.directed") == 0,
+        s"an iteration must not recount out-degrees from the edge list:\n$it")
+    }
   }
 
   test("q280: sitemap walk — broadcast rule gate, no all-pairs, no global window") {
@@ -1572,16 +1603,9 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("q174: rrfFuse runs each retriever once — documents scanned 2 times, not 4") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        plans.add(funcName -> qe.executedPlan)
-      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
-    }
     /** The parquet scans of a plan: as built (what `explain` shows), or
       * as run (adaptive stage reuse reruns no reused exchange).
       */
@@ -1592,11 +1616,8 @@ class PlanShapeSpec extends SparkSpec {
       case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName)
       case other => other.children.flatMap(scans(_, asRun))
     }
-    spark.listenerManager.register(listener)
-    try {
-      run("q174_hybrid_rrf").collect()
-      org.apache.spark.sql.graft.ListenerProbe.drain(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
+    val (df, barriers) = Barrier.built(run("q174_hybrid_rrf"))
+    df.collect()
     // the fused rows come from the final collect and the pool barriers
     // it reads (the corpus-statistics `head` inside bm25 and q174's
     // query-vector `head` are separate lookups). BM25 scans documents
@@ -1604,11 +1625,9 @@ class PlanShapeSpec extends SparkSpec {
     // embeddings once. Adaptive stage reuse shares BM25's exchanges
     // between the two sides of an unbarriered self-join at run time,
     // but the cosine pool has no exchange to reuse: it ran twice.
-    val fused = plans.toArray.toSeq.collect {
-      case (f: String, p: SparkPlan) if f == "collect" || f == "localCheckpoint" => f -> p
-    }
+    val fused = df.queryExecution.executedPlan +: barriers.map(_._2.executedPlan)
     def count(table: String, asRun: Boolean): Int =
-      fused.map(fp => scans(fp._2, asRun).count(_ == table)).sum
+      fused.map(scans(_, asRun).count(_ == table)).sum
     val report = Seq("documents.parquet", "embeddings.parquet").map(t =>
       s"$t: ${count(t, asRun = false)} built, ${count(t, asRun = true)} run").mkString("; ")
     assert(count("documents.parquet", asRun = false) == 2, report)
