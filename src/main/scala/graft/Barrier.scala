@@ -7,7 +7,9 @@ import scala.util.DynamicVariable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.graft.SparkBridge
 
 /** The engine's one materialization barrier: a frame that several
@@ -38,6 +40,15 @@ import org.apache.spark.sql.graft.SparkBridge
   * a barrier is identifiable by name. Naming costs O(1) on the driver
   * and adds no job.
   *
+  * The first job to finish over a barrier cuts its lineage at the
+  * blocks, and with it the driver's last reference to the SQL metrics of
+  * the plan that filled them. A stage that started before the cut (the
+  * other side of a self-join, a concurrent action) still reports those
+  * metrics when its tasks end, so the barrier holds them for as long as
+  * its RDD lives; otherwise a GC in between makes DAGScheduler log
+  * "Failed to update accumulator" and drop the updates. It holds the
+  * metrics only, not the plan, whose leaves may be earlier barriers.
+  *
   * Trade-off: local blocks are not recomputable after executor loss. On
   * a cluster with dynamic allocation or aggressive decommissioning, a
   * reliable `Dataset.checkpoint` under a checkpoint dir is the drop-in
@@ -47,7 +58,7 @@ object Barrier {
 
   def apply(df: DataFrame, name: String): DataFrame = {
     val barrier = df.localCheckpoint(eager = false)
-    rdd(barrier).setName(name)
+    sourceMetrics.put(rdd(barrier).setName(name), metrics(df.queryExecution.executedPlan))
     recorder.value.foreach(_.add(name -> df.queryExecution))
     barrier
   }
@@ -66,8 +77,10 @@ object Barrier {
 
   /** Runs `body` and returns, with its result, every barrier built while
     * it ran, in build order: the barrier's name and the query execution
-    * that planned its subtree (the plan that ran). Threads that `body`
-    * starts, such as a streaming query's, report to the same list.
+    * that planned its subtree (the plan that ran). A thread created
+    * while `body` runs, such as a streaming query's, reports to the same
+    * list, also after `built` returns; a thread created before `body`
+    * (a reused pool thread) does not report.
     */
   def built[T](body: => T): (T, Seq[(String, QueryExecution)]) = {
     val seen = new ConcurrentLinkedQueue[(String, QueryExecution)]
@@ -76,6 +89,14 @@ object Barrier {
   }
 
   private val recorder = new DynamicVariable[Option[ConcurrentLinkedQueue[(String, QueryExecution)]]](None)
+
+  private val sourceMetrics =
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[RDD[_], Seq[SQLMetric]])
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  private def metrics(plan: SparkPlan): Seq[SQLMetric] =
+    Plans.collectWithSubqueries(plan) { case p => p.metrics.values }.flatten
 
   private def rdd(barrier: DataFrame): RDD[_] =
     barrier.queryExecution.logical.asInstanceOf[LogicalRDD].rdd

@@ -4219,6 +4219,10 @@ object Inventory {
         // batch — q182 covers ITS incremental form). The oracle is
         // q186's full replay side-filtered to entities the batch
         // touched: state merge must be exact or the hash breaks.
+        // Barrier: the planning percentile collect plus four state/
+        // touched consumers below re-ran the resolve chain per
+        // action without it (the q231 pattern; local A/B 5.51 vs
+        // 6.00 s, window-noise-level — kept for the structural win).
         val resolved = Barrier(EntityResolution.resolve(
           t(s, dir, "part")
             .withColumn("name_noun", element_at(split(col("p_name"), " "), -1)),
@@ -4226,10 +4230,6 @@ object Inventory {
           blockCols = Seq("p_brand", "name_noun"),
           fields = Seq(("p_name", 0.6), ("p_type", 0.4)),
           threshold = 0.85), "q192.resolved")
-          // barrier: the planning percentile collect plus four state/
-          // touched consumers below re-ran the resolve chain per
-          // action without it (the q231 pattern; local A/B 5.51 vs
-          // 6.00 s, window-noise-level — kept for the structural win)
         val cut = resolved.agg(expr(
           "percentile_disc(0.8) WITHIN GROUP (ORDER BY p_partkey)"))
           .head().getDouble(0).toLong
@@ -9545,6 +9545,10 @@ object Inventory {
         val deduped = Barrier(surv.join(dropped, Seq("doc_id"), "left_anti"), "q279.deduped")
         val decon = Dedup.decontaminateSpansVsStore(
           deduped, benchStore, "doc_id", "text", w = 8)
+        // the mix's planning aggregate (temperatureTargets' bounded
+        // collect) AND its emission both read the ledger — barrier it
+        // so the span-cut/PII chain runs once, not twice (q272's
+        // `scrubbed` checkpoint; probed 3.4 s/extra pass at sf0.1)
         val ledger = Barrier(decon
           .select(col("doc_id"),
             TextAnalysis.redactPii(col("text_dedup")).as("text"))
@@ -9554,10 +9558,6 @@ object Inventory {
           .join(crawl.select("doc_id", "lang"), Seq("doc_id"))
           .select(col("doc_id"), col("lang"),
             size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok")), "q279.ledger")
-          // the mix's planning aggregate (temperatureTargets' bounded
-          // collect) AND its emission both read the ledger — barrier it
-          // so the span-cut/PII chain runs once, not twice (q272's
-          // `scrubbed` checkpoint; probed 3.4 s/extra pass at sf0.1)
         val mixed = ScaleOps.temperatureSample(
           ledger, "doc_id", "lang", "n_tok", alpha = 0.3, totalTokens = 8000L)
         ScaleOps.shardManifest(

@@ -1,15 +1,16 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.CountDownLatch
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
 
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.LogEvent
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.{Configurator, Property}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.logging.log4j.Level
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted, SparkListenerTaskStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ListenerProbe
 
@@ -20,25 +21,6 @@ object BarrierSpec {
 
 class BarrierSpec extends SparkSpec {
   import BarrierSpec.evaluated
-
-  /** The messages at `level` or above that the logger named `name` logs
-    * while `body` runs, with that logger at `level` meanwhile.
-    */
-  private def logged(name: String, level: Level)(body: => Unit): Seq[String] = {
-    val logger = LogManager.getLogger(name).asInstanceOf[org.apache.logging.log4j.core.Logger]
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val appender = new AbstractAppender("barrier-spec", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel.isMoreSpecificThan(level)) lines.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    logger.addAppender(appender)
-    val old = logger.getLevel
-    Configurator.setLevel(name, level)
-    try body
-    finally { Configurator.setLevel(name, old); logger.removeAppender(appender); appender.stop() }
-    lines.asScala.toSeq
-  }
 
   /** `rows` source rows in one partition, each evaluation counted and
     * slowed by `sleepMs`.
@@ -103,5 +85,31 @@ class BarrierSpec extends SparkSpec {
       assert(rows.map(_.getLong(1)).sorted.toSeq == Seq(20L, 20L))
     }
     assert(evaluated.get == 60, s"the barriers' sources ran ${evaluated.get} times for 3 × 20 rows")
+  }
+
+  test("a reader that started before the barrier's lineage was cut drops no metric update") {
+    // The first job to finish over a barrier cuts its lineage at the
+    // blocks. A stage already running keeps the old lineage in its task
+    // binary, and its tasks report the source plan's SQL metrics when they
+    // end: Dedup's self-joins run two such stages at once. If the driver
+    // has collected those metrics by then, DAGScheduler logs "Failed to
+    // update accumulator ... non-existent accumulator" for each one.
+    val b = Barrier(source(8), "spec.metrics")
+    val slow = udf { (x: Long) => Thread.sleep(250); x }
+    val started = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = started.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val errors = try logged("org.apache.spark.scheduler.DAGScheduler", Level.ERROR) {
+      val reader = Future(b.select(slow(col("k"))).collect())
+      started.await()
+      Thread.sleep(500)
+      assert(b.count() == 8)
+      (1 to 3).foreach(_ => System.gc())
+      assert(Await.result(reader, 1.minute).length == 8)
+      ListenerProbe.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(errors.isEmpty, s"dropped metric updates: ${errors.take(3).mkString("; ")}")
   }
 }

@@ -3,7 +3,12 @@ package graft
 import java.nio.file.{Files, Path}
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.LogEvent
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.{Configurator, Property}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
@@ -53,6 +58,26 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit =
     try super.afterAll()
     finally synchronized(scratchRoot).foreach(r => org.apache.commons.io.FileUtils.deleteQuietly(r.toFile))
+
+  /** The messages at `level` or above that the logger named `name` logs
+    * while `body` runs, with that logger at `level` meanwhile (the suites
+    * run at ERROR).
+    */
+  def logged(name: String, level: Level)(body: => Unit): Seq[String] = {
+    val logger = LogManager.getLogger(name).asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("spark-spec-log", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(level)) lines.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    val old = logger.getLevel
+    Configurator.setLevel(name, level)
+    try body
+    finally { Configurator.setLevel(name, old); logger.removeAppender(appender); appender.stop() }
+    lines.asScala.toSeq
+  }
 
   /** The Spark jobs `body` runs, as "job" in the order they start, with
     * a "write" at the end of each write command. Jobs that adaptive

@@ -5,10 +5,7 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.commons.lang3.exception.ExceptionUtils
-import org.apache.logging.log4j.{Level, LogManager}
-import org.apache.logging.log4j.core.LogEvent
-import org.apache.logging.log4j.core.appender.AbstractAppender
-import org.apache.logging.log4j.core.config.{Configurator, Property}
+import org.apache.logging.log4j.Level
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LogicalRDD, SparkPlan, SparkStrategy}
@@ -523,25 +520,6 @@ class LakeSpec extends SparkSpec {
       Seq((30L, "c"), (31L, "c"), (32L, "c")))
   }
 
-  /** The WARN messages that the logger named `name` logs while `body`
-    * runs, with that logger at WARN meanwhile (the suite runs at ERROR).
-    */
-  private def warnings(name: String)(body: => Unit): Seq[String] = {
-    val logger = LogManager.getLogger(name).asInstanceOf[org.apache.logging.log4j.core.Logger]
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val appender = new AbstractAppender("lake-spec-warnings", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit =
-        if (e.getLevel == Level.WARN) lines.add(e.getMessage.getFormattedMessage)
-    }
-    appender.start()
-    logger.addAppender(appender)
-    val level = logger.getLevel
-    Configurator.setLevel(name, Level.WARN)
-    try body
-    finally { Configurator.setLevel(name, level); logger.removeAppender(appender); appender.stop() }
-    lines.asScala.toSeq
-  }
-
   test("commit barriers release their cached blocks when the commit ends") {
     // RDDs holding blocks that the commits added: earlier suites' cached
     // RDDs may be cleaned meanwhile, but never added
@@ -551,14 +529,14 @@ class LakeSpec extends SparkSpec {
     t.append(rows(1 to 50, "a")) // Spark's logging is set up by now
     // `RDD.unpersist` warns about the RDD a frame's localCheckpoint keeps
     val rddLog = "org.apache.spark.rdd.MapPartitionsRDD"
-    val control = warnings(rddLog) {
+    val control = logged(rddLog, Level.WARN) {
       val cp = rows(1 to 5, "c").localCheckpoint(eager = true)
       cp.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get.unpersist(blocking = true)
     }
     assert(control.exists(_.contains("was locally checkpointed")), s"not captured: $control")
     val before = cachedRdds()
     def kept(): Set[Int] = cachedRdds() -- before
-    val warned = warnings(rddLog)(t.merge(rows(40 to 60, "m").repartition(2)))
+    val warned = logged(rddLog, Level.WARN)(t.merge(rows(40 to 60, "m").repartition(2)))
     assert(warned.isEmpty, s"the merge warned: ${warned.mkString("; ")}")
     assert(kept().isEmpty, "merge kept its barrier's blocks")
     t.upsertIfNew(rows(55 to 70, "u").repartition(2), "up", 1L)

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.logging.log4j.Level
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ListenerProbe
 
 import graft.SparkSpec
 
@@ -280,6 +282,31 @@ class DedupSpec extends SparkSpec {
     val emitted = Dedup.jaccardPrefixJoin(docs, "doc_id", "text", 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(emitted.subsetOf(candSet), "every emitted pair must be a candidate")
+  }
+
+  test("self-joins over the dedup barriers drop no metric update under GC pressure") {
+    // jaccardPrefixJoin's and minHashNearDups' self-joins run two stages
+    // over one barrier at once, and the first job to end cuts the
+    // barrier's lineage while the other stage still runs. With a
+    // collection every 50 ms, a barrier that did not hold its source's
+    // metrics made DAGScheduler log "Failed to update accumulator ...
+    // non-existent accumulator" here (Dedup.jaccardPrefixJoin,
+    // Dedup.minHashCandidates).
+    val gc = new Thread(() =>
+      try while (true) { System.gc(); Thread.sleep(50) }
+      catch { case _: InterruptedException => })
+    gc.setDaemon(true)
+    val errors = logged("org.apache.spark.scheduler.DAGScheduler", Level.ERROR) {
+      gc.start()
+      try {
+        for (_ <- 1 to 3) {
+          Dedup.jaccardPrefixJoin(docs, "doc_id", "text", 0.5).collect()
+          Dedup.minHashNearDups(docs, "doc_id", "text").collect()
+        }
+        ListenerProbe.drain(spark.sparkContext)
+      } finally { gc.interrupt(); gc.join() }
+    }
+    assert(errors.isEmpty, s"${errors.size} dropped metric updates, e.g. ${errors.headOption}")
   }
 
   test("q81 oracle soundness: banding catches EVERY exhaustive pair at both corpora") {
