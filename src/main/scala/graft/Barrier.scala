@@ -40,14 +40,11 @@ import org.apache.spark.sql.graft.SparkBridge
   * a barrier is identifiable by name. Naming costs O(1) on the driver
   * and adds no job.
   *
-  * The first job to finish over a barrier cuts its lineage at the
-  * blocks, and with it the driver's last reference to the SQL metrics of
-  * the plan that filled them. A stage that started before the cut (the
-  * other side of a self-join, a concurrent action) still reports those
-  * metrics when its tasks end, so the barrier holds them for as long as
-  * its RDD lives; otherwise a GC in between makes DAGScheduler log
-  * "Failed to update accumulator" and drop the updates. It holds the
-  * metrics only, not the plan, whose leaves may be earlier barriers.
+  * The first job to end over a barrier cuts its lineage at the blocks.
+  * A stage that started before the cut (the other side of a self-join)
+  * still reports the source plan's SQL metrics when its tasks end, so
+  * the barrier holds those metrics while its RDD lives; it does not hold
+  * the plan, whose leaves may be earlier barriers.
   *
   * Trade-off: local blocks are not recomputable after executor loss. On
   * a cluster with dynamic allocation or aggressive decommissioning, a

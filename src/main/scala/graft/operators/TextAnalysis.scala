@@ -694,7 +694,7 @@ object TextAnalysis {
       w: Int = 10,
       minShared: Long = 3L,
       maxDf: Long = 1000L): DataFrame = {
-    // no shareLazily here: this variant survives as the pinned semantic
+    // no Barrier here: this variant survives as the pinned semantic
     // twin of the mergeable path (plan-inspected by PlanShapeSpec's
     // count(distinct) sentinel, which a checkpoint would truncate away);
     // production callers use [[winnowNearDupsIncrementalMergeable]]
