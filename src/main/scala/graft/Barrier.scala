@@ -7,10 +7,10 @@ import scala.util.DynamicVariable
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, LogicalRDD, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.metric.SQLMetric
 import org.apache.spark.sql.graft.SparkBridge
+import org.apache.spark.util.AccumulatorV2
 
 /** The engine's one materialization barrier: a frame that several
   * consumers read — branches of one plan, or separate actions — is
@@ -42,9 +42,10 @@ import org.apache.spark.sql.graft.SparkBridge
   *
   * The first job to end over a barrier cuts its lineage at the blocks.
   * A stage that started before the cut (the other side of a self-join)
-  * still reports the source plan's SQL metrics when its tasks end, so
-  * the barrier holds those metrics while its RDD lives; it does not hold
-  * the plan, whose leaves may be earlier barriers.
+  * still reports the source plan's SQL metrics, and the row count of
+  * each [[Fence]] in it, when its tasks end, so the barrier holds those
+  * accumulators while its RDD lives; it does not hold the plan, whose
+  * leaves may be earlier barriers.
   *
   * Trade-off: local blocks are not recomputable after executor loss. On
   * a cluster with dynamic allocation or aggressive decommissioning, a
@@ -88,12 +89,16 @@ object Barrier {
   private val recorder = new DynamicVariable[Option[ConcurrentLinkedQueue[(String, QueryExecution)]]](None)
 
   private val sourceMetrics =
-    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[RDD[_], Seq[SQLMetric]])
+    java.util.Collections.synchronizedMap(new java.util.WeakHashMap[RDD[_], Seq[AccumulatorV2[_, _]]])
 
   private object Plans extends AdaptiveSparkPlanHelper
 
-  private def metrics(plan: SparkPlan): Seq[SQLMetric] =
-    Plans.collectWithSubqueries(plan) { case p => p.metrics.values }.flatten
+  private def metrics(plan: SparkPlan): Seq[AccumulatorV2[_, _]] =
+    Plans.collectWithSubqueries(plan) {
+      case fence: CollectMetricsExec =>
+        fence.metrics.values ++ SparkBridge.observed(fence)
+      case p => p.metrics.values
+    }.flatten
 
   private def rdd(barrier: DataFrame): RDD[_] =
     barrier.queryExecution.logical.asInstanceOf[LogicalRDD].rdd

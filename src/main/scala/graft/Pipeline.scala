@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.SparkContext
+import org.apache.spark.{JobExecutionStatus, SparkContext}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.config.LakeConfig
@@ -143,13 +143,24 @@ private final class Overlapped[A](sc: SparkContext)(body: => A) {
     outcome.fold(e => throw e, identity)
   }
 
-  /** Cancels `body`'s jobs and waits for the thread to end. The cancel
-    * repeats while the thread lives, so a job submitted after the first
-    * cancel cannot outlive this call either.
+  /** Cancels `body`'s jobs, waits for the thread to end, then waits
+    * until the status tracker reports no job of the tag running. The
+    * cancel repeats while the thread lives, so a job submitted after the
+    * first cancel cannot outlive this call either. The second wait is
+    * needed because the scheduler wakes a cancelled job's caller before
+    * it ends the job: the thread can end before its job does. The
+    * tracker learns of a job's end through the listener bus, which may
+    * drop events when full, so this wait gives up after 10 s.
     */
-  def cancel(): Unit =
+  def cancel(): Unit = {
     while (thread.isAlive) {
       sc.cancelJobsWithTag(tag)
       thread.join(50)
     }
+    val status = sc.statusTracker
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (System.nanoTime() < deadline && status.getJobIdsForTag(tag).exists(
+        status.getJobInfo(_).exists(_.status == JobExecutionStatus.RUNNING)))
+      Thread.sleep(10)
+  }
 }

@@ -138,6 +138,19 @@ object MinHash {
   private def hashLongSeeded(v: Long, seed: Long): Long =
     org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(v, seed)
 
+  /** `x` mod P in [0, P), for any signed `x`: the value of
+    * `floorMod(x, P)`, without a division or a branch. The Mersenne
+    * prime folds the high bits onto the low ones (2^61 ≡ 1 mod P), and a
+    * negative `x` is its unsigned value minus 2^64 ≡ 8. The sum then
+    * lies in [-8, P + 7], which one conditional −P and one conditional
+    * +P bring into range.
+    */
+  def modP(x: Long): Long = {
+    var r = (x & P) + (x >>> 61) - (8L & (x >> 63))
+    r -= P & ~((r - P) >> 63)
+    r + (P & (r >> 63))
+  }
+
   /** k-minimum signature of the shingle-hash array; null for empty input
     * (a doc with fewer than w tokens has no shingles, hence no signature).
     */
@@ -153,8 +166,7 @@ object MinHash {
       var m = Long.MaxValue
       var j = 0
       while (j < n) {
-        var v = (a * hashes.getLong(j) + b) % P
-        if (v < 0) v += P
+        val v = modP(a * hashes.getLong(j) + b)
         if (v < m) m = v
         j += 1
       }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
+import graft.{Barrier, Fence}
 
 /** End-to-end training-corpus cleaning pipeline — the composite operator a
   * 100 TB LLM-data run would execute (north-star EXTENSION; the
@@ -17,15 +17,9 @@ import graft.Barrier
   *       exchange, which the keep-min window reuses)
   *     → MinHash-LSH near-dup removal (signature → band join → verify)
   *
-  * THE GATE RULE. Every gate filter sits on a fence ([[gate]]) whose
-  * child computes all the columns the gate reads. Without it Catalyst
-  * pushes the filter below the projection that computes its input and
-  * copies the projected expression into each conjunct; FilterExec
-  * shares no subexpression across conjuncts or with the projection
-  * above, so the text kernels under a gate (the PII regex chain,
-  * repetition, text profile, html extraction, blocklist hits) ran once
-  * per conjunct plus once for the projection. With the fences each
-  * kernel runs once per row.
+  * Every gate filter sits on a [[graft.Fence]] ([[gate]]) whose child
+  * computes all the columns the gate reads (THE GATE RULE, in Fence's
+  * doc), so each text kernel under a gate runs once per row.
   *
   * Scale shape (measured; see SCALE.md): annotation and gating are
   * map-only; the shuffles are the fingerprint exchange, the LSH band
@@ -136,20 +130,11 @@ object CorpusPipeline {
     else gate(TextAnalysis.wordBlocklistGate(df, textCol, blocklist), "blocklist", !col("blocked"))
       .drop("bad_terms", "n_bad_tokens", "blocked")
 
-  private val fences = new java.util.concurrent.atomic.AtomicLong
-
-  /** `df` behind a fence, filtered by `keep` — the one way a corpus
-    * gate is applied (see THE GATE RULE above). The fence is a
-    * CollectMetrics node (`observe`): no pushdown rule crosses it, it
-    * materializes nothing, and it counts the rows reaching the gate.
-    * Observation names must be unique within one analyzed plan, and
-    * composed calls (a stream front feeding [[clean]], clean over
-    * clean's output) nest fences, so each name carries a sequence
-    * number.
+  /** `df` behind a [[graft.Fence]] named `CorpusPipeline.<stage>`,
+    * filtered by `keep`: the one way a corpus gate is applied.
     */
   private[graft] def gate(df: DataFrame, stage: String, keep: Column): DataFrame =
-    df.observe(s"corpus_${stage}_${fences.incrementAndGet()}", count(lit(1)).as("rows"))
-      .filter(keep)
+    Fence(df, s"CorpusPipeline.$stage").filter(keep)
 
   /** The FULL preparation pipeline — [[clean]] plus the remaining stages
     * a corpus passes on its way to a training run:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
+import graft.{Barrier, Fence}
 import graft.functions.VectorFunctions
 
 /** Deduplication operators for training-data pipelines.
@@ -16,6 +16,11 @@ import graft.functions.VectorFunctions
   * because buckets are hash-random), (3) exact verification only on
   * candidates. At 100 TB the verification join is the only quadratic-ish
   * term and it is bounded by bucket collision rate, not corpus size.
+  *
+  * A projection computing a kernel (shingle hashes, signature, md5
+  * shingle stream, cosine) that a filter reads sits below a
+  * [[graft.Fence]] named after its operator; THE GATE RULE in Fence's
+  * doc says why.
   */
 object Dedup {
 
@@ -90,10 +95,10 @@ object Dedup {
   private def tileStream(docs: DataFrame, idCol: String, textCol: String, w: Int): DataFrame =
     // aligned-tile arm of the ShingleMd5 kernel — the shingleStreamPos
     // rationale (no token-array copy per generated row, compiled pass)
-    docs
+    Fence(docs
       .select(col(idCol).as("__id"),
         org.apache.spark.sql.graft.NativeExprs
-          .md5ShingleStream(col(textCol), w, aligned = true).as("__hs"))
+          .md5ShingleStream(col(textCol), w, aligned = true).as("__hs")), "Dedup.tileStream")
       .select(col("__id"), posexplode(col("__hs")).as(Seq("tile_no", "h")))
 
   /** Map-side text reconstruction from a (__id, tile_no) dropped-tile
@@ -184,10 +189,10 @@ object Dedup {
     // per-element lambda evaluation. Values identical (kernel doc
     // proves byte-range equivalence); posexplode's 0-based pos == the
     // old sequence pos.
-    docs
+    Fence(docs
       .select(col(idCol).as("__id"),
         org.apache.spark.sql.graft.NativeExprs
-          .md5ShingleStream(col(textCol), w, aligned = false).as("__hs"))
+          .md5ShingleStream(col(textCol), w, aligned = false).as("__hs")), "Dedup.shingleStreamPos")
       .select(col("__id"), posexplode(col("__hs")).as(Seq("pos", "h")))
 
   /** Duplicated shingle occurrences: (doc, pos) whose w-shingle TEXT
@@ -562,8 +567,9 @@ object Dedup {
     val sh =
       if (excludeShingles.isEmpty) rawSh
       else array_except(rawSh, array(excludeShingles.map(lit).toIndexedSeq: _*))
-    df.select(col(idCol).as("id"), sh.as("sh"))
-      .withColumn("sig", graft.functions.MinHashSignatureExpr(col("sh"), k, seed))
+    Fence(df.select(col(idCol).as("id"), sh.as("sh"))
+      .withColumn("sig", graft.functions.MinHashSignatureExpr(col("sh"), k, seed)),
+      "Dedup.minHashSignatures")
       .filter(col("sig").isNotNull)
   }
 
@@ -673,9 +679,9 @@ object Dedup {
     val sigCol =
       if (oneperm) graft.functions.OnePermSignatureExpr(col("sh"), k, seed)
       else graft.functions.MinHashSignatureExpr(col("sh"), k, seed)
-    val withSig = Barrier(df
+    val withSig = Barrier(Fence(df
       .select(col(idCol).as("id"), sh.as("sh"))
-      .withColumn("sig", sigCol)
+      .withColumn("sig", sigCol), "Dedup.minHashCandidates")
       .filter(col("sig").isNotNull), "Dedup.minHashCandidates")
 
     // (id, band_hash) pairs — ids ONLY: the banded self-join must not
@@ -1598,9 +1604,9 @@ object Dedup {
       idCol: String,
       textCol: String,
       w: Int = 8): DataFrame = {
-    val totals = df
+    val totals = Fence(df
       .select(col(idCol),
-        size(shingleHashes(col(textCol), w)).cast("long").as("n_shingles"))
+        size(shingleHashes(col(textCol), w)).cast("long").as("n_shingles")), "Dedup.ngramNovelty")
       .filter(col("n_shingles") > 0)
     val novel = df
       .select(col(idCol), explode(shingleHashes(col(textCol), w)).as("__h"))
@@ -1684,9 +1690,10 @@ object Dedup {
       .groupBy(col("__first").as(idCol))
       .agg(count(lit(1)).as("n_novel"))
       .join(batchIds, Seq(idCol), "left_semi")
-    val totals = batch
+    val totals = Fence(batch
       .select(col(idCol),
-        size(shingleHashes(col(textCol), w)).cast("long").as("n_shingles"))
+        size(shingleHashes(col(textCol), w)).cast("long").as("n_shingles")),
+      "Dedup.ngramNoveltyIncremental")
       .filter(col("n_shingles") > 0)
     val result = totals.join(novel, Seq(idCol), "left")
       .withColumn("n_novel", coalesce(col("n_novel"), lit(0L)))
@@ -2140,10 +2147,11 @@ object Dedup {
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
     val vecs = withSig.select(col("id"), col("v"))
-    pairIds
+    Fence(pairIds
       .join(vecs.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
       .join(vecs.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-      .withColumn("cos", VectorFunctions.cosine(col("v_a"), col("v_b")))
+      .select(col("id_a"), col("id_b"), VectorFunctions.cosine(col("v_a"), col("v_b")).as("cos")),
+      "Dedup.embeddingNearDups")
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), roundScale).as("cos"))
   }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
+import graft.{Barrier, Fence}
 import graft.functions.VectorFunctions
 
 /** Approximate/exact nearest-neighbor search over an embedding column
@@ -120,7 +120,7 @@ object Similarity {
       idCol: String,
       vecCol: String,
       cents: Array[(Int, Array[Double])]): DataFrame =
-    df.withColumn("cell", cellOf(col(vecCol), cents))
+    Fence(df.withColumn("cell", cellOf(col(vecCol), cents)), "Similarity.ivfIndex")
 
   /** Persist an IVF index partitioned by cell: the on-disk layout that
     * makes probes PLANNING-TIME partition prunes — a query touches only

@@ -3,13 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
+import graft.{Barrier, Fence}
 
 /** Text-analysis operators for a training-data pipeline, over a
   * `documents(doc_id, text, …)` table. All are pure column expressions
   * (whole-stage-codegen-friendly where Spark codegens them, JVM higher-order
   * functions elsewhere) — no UDFs, no driver-side loops; each scales as a
-  * map-only stage.
+  * map-only stage. A kernel column that a caller filters on
+  * ([[gopherSignals]]' `passes_gopher`) is computed below a
+  * [[graft.Fence]] (THE GATE RULE in its doc).
   */
 object TextAnalysis {
 
@@ -1466,7 +1468,7 @@ object TextAnalysis {
     */
   def gopherSignals(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val sig = org.apache.spark.sql.graft.NativeExprs.gopherSignals(col(textCol))
-    gopherDerive(df.withColumn("__g", sig), idCol)
+    gopherDerive(Fence(df.select(col(idCol), sig.as("__g")), "TextAnalysis.gopherSignals"), idCol)
   }
 
   /** Fraction + gate derivation shared by the kernel path and the

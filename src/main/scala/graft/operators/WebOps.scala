@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
+import graft.{Barrier, Fence}
 
 /** Web-corpus operators: URL parsing/canonicalization, registrable
   * domains, and per-domain caps — the provenance-side half of a
@@ -753,7 +753,7 @@ object WebOps {
         struct(col("pattern"), col("allow"), col("plen"), col("rx"))).as("__rules")))
     val p0 = urlParts(col(urlCol)).getField("path")
     val q0 = urlParts(col(urlCol)).getField("query")
-    val out = urls
+    val matched = urls
       .withColumn("__h", lower(urlParts(col(urlCol)).getField("host")))
       .withColumn("__p", concat(
         when(p0 === "", lit("/")).otherwise(p0),
@@ -768,6 +768,7 @@ object WebOps {
           // per-task work; measured q274 ~1.9× on the decision stage)
           r => org.apache.spark.sql.graft.NativeExprs
             .rlikeCached(col("__p"), r("rx"))))
+    val out = Fence(matched, "WebOps.robotsDecision")
       .withColumn("__best",
         array_min(transform(col("__m"), r => struct(
           (r("plen") * -1L).as("np"),

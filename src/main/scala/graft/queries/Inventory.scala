@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Barrier
+import graft.{Barrier, Fence}
 import graft.functions.VectorFunctions
 import graft.multimodal.Multimodal
 import graft.operators.{Bpe, Classify, Unigram, Dedup, DedupLedger, EntityResolution, HtmlText, Packing, ScaleOps, Sessionize, Similarity, TextAnalysis, WebOps}
@@ -9391,10 +9391,10 @@ object Inventory {
           lit("<footer><a href=\"/tos\">Terms</a> <a href=\"/p\">Privacy</a></footer>"),
           lit("<script>track()</script></body></html>"))
         // 1. extraction  2. mojibake repair
-        val repaired = fannedOut(crawl.select(col("doc_id"), col("source"), col("text")))
+        val repaired = Fence(fannedOut(crawl.select(col("doc_id"), col("source"), col("text")))
           .select(col("doc_id"),
             org.apache.spark.sql.graft.NativeExprs.fixMojibake(
-              HtmlText.extractText(html)).as("text"))
+              HtmlText.extractText(html)).as("text")), "q272.repaired")
         // 3. C4 line cleaning (blocks are the lines), then flatten the
         //    line structure for the token-grain stages.
         //    Each stage frame below feeds TWO+ downstream consumers
@@ -9515,10 +9515,10 @@ object Inventory {
         // 4) without moving a single row differently; measured 13.2 →
         // ~7 s at sf0.1, ledger rows identical (OPTIMIZATION_r14.md).
         val batch = fannedOut(crawl.select("doc_id", "source", "text", "lang"))
-        val repaired = batch
+        val repaired = Fence(batch
           .select(col("doc_id"),
             org.apache.spark.sql.graft.NativeExprs.fixMojibake(
-              HtmlText.extractText(html)).as("text"))
+              HtmlText.extractText(html)).as("text")), "q279.repaired")
         val flat = Barrier(TextAnalysis.c4Clean(repaired, "doc_id", "text")
           .select(col("doc_id"),
             regexp_replace(col("clean_text"), "\n", " ").as("text")), "q279.flat")

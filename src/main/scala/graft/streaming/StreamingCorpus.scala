@@ -64,7 +64,7 @@ object StreamingCorpus {
       maxNoise: Double = 5.0,
       repairEncoding: Boolean = false,
       blocklist: Seq[String] = Nil): DataFrame = {
-    // every gate sits on its own fence (CorpusPipeline's gate rule), so
+    // every gate sits on its own fence (graft.Fence's gate rule), so
     // extraction, repair and the blocklist kernel each run once per row
     val extracted = CorpusPipeline.extracted(pages, textCol)
     val repaired =

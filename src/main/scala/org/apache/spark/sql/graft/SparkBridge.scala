@@ -7,8 +7,9 @@ import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.execution.CollectMetricsExec
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
-import org.apache.spark.util.{SerializableConfiguration, ThreadUtils}
+import org.apache.spark.util.{AccumulatorContext, AccumulatorV2, SerializableConfiguration, ThreadUtils}
 
 /** Narrow bridge to `private[spark]` utilities the engine legitimately
   * needs — same placement rationale as [[NativeExprs]] (this package
@@ -34,6 +35,12 @@ object SparkBridge {
     * RDD cannot be recomputed, which a barrier done with its rows intends.
     */
   def unpersistRDD(sc: SparkContext, id: Int): Unit = sc.unpersistRDD(id, blocking = true)
+
+  /** The accumulator an `observe` node counts into, while the driver's
+    * registry, which holds accumulators weakly, still has it.
+    */
+  def observed(node: CollectMetricsExec): Option[AccumulatorV2[_, _]] =
+    AccumulatorContext.get(node.accumulatorId)
 
   /** Full parquet footers (row groups and their column statistics
     * included) of `files`, read on the driver over Spark's own parallel

@@ -16,6 +16,7 @@ import graft.queries.Inventory
   * and single-shuffle window queries.
   */
 class PlanShapeSpec extends SparkSpec {
+  import PlanShapeSpec.KernelRepeat
 
   private def run(name: String): DataFrame =
     Inventory.all.find(_.name == name).get.run(spark, sf)
@@ -1536,6 +1537,78 @@ class PlanShapeSpec extends SparkSpec {
     assert(piiChains(crawl) == 1 && kernels(crawl, "RepetitionRatioExpr") == 1 &&
       kernels(crawl, "TextProfileExpr") == 1,
       s"the html arm must not copy the scrub, repetition or profile kernels:\n$c")
+    // through dedup: the plan of prepare's signature barrier
+    val (_, barriers) = Barrier.built(CorpusPipeline.prepare(docs))
+    val sigs = barriers.collect { case ("Dedup.minHashCandidates", qe) => qe.optimizedPlan }
+    assert(sigs.size == 1, s"one signature barrier: ${barriers.map(_._1)}")
+    assert(kernels(sigs.head, "MinHashSignatureExpr") == 1 &&
+      kernels(sigs.head, "ShingleHashesExpr") == 1,
+      s"the signature barrier must run each MinHash kernel once:\n${sigs.head}")
+  }
+
+  /** Every [[KernelRepeat]] of `plan`. Two copies are the same kernel
+    * over the same input when they are equal once each attribute that a
+    * Project aliases is replaced by the expression it names: a filter
+    * pushed below the projection computing `sig` holds
+    * `minhash_signature(shingle_hashes(text))` where the projection holds
+    * `minhash_signature(sh)`.
+    */
+  private def kernelRepeats(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      : Set[KernelRepeat] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, ExprId}
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+    val aliases: Map[ExprId, Expression] = plan.collect { case p: Project =>
+      p.projectList.collect { case a: Alias => a.exprId -> a.child }
+    }.flatten.toMap
+    def expand(e: Expression): Expression = e.transformUp {
+      case a: Attribute if aliases.contains(a.exprId) => expand(aliases(a.exprId))
+    }
+    var nodes = 0
+    def walk(node: LogicalPlan, above: List[(String, Expression)]): Set[KernelRepeat] = {
+      nodes += 1
+      val label = s"${node.nodeName}#$nodes"
+      val here = node.expressions.flatMap(_.collect {
+        case k if k.getClass.getPackageName == "org.apache.spark.sql.graft" =>
+          label -> expand(k).canonicalized
+      })
+      val path = here.toList ++ above
+      if (node.children.nonEmpty) node.children.flatMap(walk(_, path)).toSet
+      else path.groupBy(_._2).values.filter(_.size > 1)
+        .map(copies => KernelRepeat(copies.head._2.prettyName, copies.map(_._1).sorted)).toSet
+    }
+    walk(plan, Nil)
+  }
+
+  /** Kernels whose repeats without a Filter copy are accepted, and why. */
+  private val repeatAllowed = {
+    val oneProject = "copies in several columns of one Project: whole-stage codegen's " +
+      "subexpression elimination shares the copies it evaluates unconditionally"
+    Map(
+      "cosine_sim" -> ("a join condition and the Project above it (q84, q166, q168): once " +
+        "per candidate pair, and once more for each pair that passed"),
+      "lev_within" -> ("a join condition's CASE reads the capped distance in its -1 test and " +
+        "in its value, and the linkage Project does the same (q178–q192, q231); a join " +
+        "condition shares no subexpression, so a pair the length bound keeps may pay two DPs"),
+      "l2_sq" -> oneProject, "simhash_md5" -> oneProject,
+      "unicode_normalize" -> oneProject, "bpe_encode" -> oneProject)
+  }
+
+  test("every native kernel runs once per row: no filter repeats a kernel on its path") {
+    // each declared query's plan, each plan its barriers ran, and the
+    // same for CorpusPipeline.prepare: a kernel that a filter copies
+    // runs once more per copy (see graft.Fence)
+    import graft.operators.CorpusPipeline
+    def plans(name: String, body: => DataFrame) = {
+      val (df, barriers) = Barrier.built(body)
+      (name -> df.queryExecution) +: barriers.map { case (b, qe) => s"$name/$b" -> qe }
+    }
+    val all = Inventory.all.flatMap(q => plans(q.name, q.run(spark, sf))) ++
+      plans("prepare", CorpusPipeline.prepare(spark.read.parquet(s"$sf/documents.parquet")))
+    val repeats = all.flatMap { case (name, qe) => kernelRepeats(qe.optimizedPlan).map(name -> _) }
+    val bad = repeats.filter { case (_, r) => r.inFilter || !repeatAllowed.contains(r.kernel) }
+    assert(bad.isEmpty, bad.map { case (n, r) => s"$n: $r" }.mkString("\n", "\n", ""))
+    val stale = repeatAllowed.keySet -- repeats.map(_._2.kernel)
+    assert(stale.isEmpty, s"allowed repeats that no plan has: $stale")
   }
 
   test("corpus gates: the streaming twin runs text_profile and extractText once per row") {
@@ -1644,5 +1717,18 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("isFinalPlan=true"), s"plan did not finalize:\n$plan")
     // codegen'd operators print as "*(n) Op" in the final plan
     assert(plan.contains("*("), s"no codegen spans:\n$plan")
+  }
+}
+
+object PlanShapeSpec {
+
+  /** A graft native kernel (NativeExprs) that one root-to-leaf path of
+    * an optimized plan computes more than once per row: its name and
+    * the nodes holding a copy, one entry per copy (`Filter#3` is the
+    * third node of the walk; one number is one node).
+    */
+  final case class KernelRepeat(kernel: String, nodes: Seq[String]) {
+    def inFilter: Boolean = nodes.exists(_.startsWith("Filter#"))
+    override def toString: String = s"$kernel in ${nodes.mkString(", ")}"
   }
 }

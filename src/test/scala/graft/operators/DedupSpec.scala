@@ -209,6 +209,20 @@ class DedupSpec extends SparkSpec {
     assert(mismatches == 0)
   }
 
+  test("the signature kernel's Mersenne reduction equals the % form on any long") {
+    import graft.functions.MinHash.{modP, P}
+    def byRemainder(x: Long): Long = { val v = x % P; if (v < 0) v + P else v }
+    val rng = new scala.util.Random(7)
+    val edges = Seq(Long.MinValue, Long.MaxValue, 0L, 1L, -1L, 7L, -8L) ++
+      (-9L to 9L).flatMap(m => Seq(m * P - 1, m * P, m * P + 1))
+    // a·h + b as the kernel forms it: a in [1, P), b in [0, P), any h
+    def below(n: Long) = java.lang.Math.floorMod(rng.nextLong(), n)
+    val products = Seq.fill(200000)((below(P - 1) + 1) * rng.nextLong() + below(P))
+    val xs = edges ++ Seq.fill(200000)(rng.nextLong()) ++ products
+    val wrong = xs.filter(x => modP(x) != byRemainder(x))
+    assert(wrong.isEmpty, s"${wrong.size} mismatches, first ${wrong.take(5)}")
+  }
+
   test("minhash signature is deterministic and k-long") {
     val sig = docs.select(
       Dedup.minHashSignature(Dedup.shingleHashes(col("text"), 3), k = 64).as("s"))
